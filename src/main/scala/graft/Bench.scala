@@ -105,10 +105,18 @@ object Bench {
     val (l5a, c3a) = loadCpu()
     // Untimed warm-up pass: JIT compilation, whole-stage codegen,
     // parquet footer caching. Measures steady-state throughput (the
-    // 100 TB-relevant number), not single-JVM cold start.
-    queries.foreach { case (_, fn) =>
-      try { checksum(fn(spark, sfDir)) } catch { case _: Throwable => () }
+    // 100 TB-relevant number), not single-JVM cold start. A failure
+    // here is named on stderr and counted in `warmup_failed`.
+    val warmupFailed = queries.count { case (name, fn) =>
+      val failed =
+        try { checksum(fn(spark, sfDir)); false }
+        catch { case e: Throwable =>
+          System.err.println(
+            s"warm-up failed: $name: ${e.getClass.getName}")
+          true
+        }
       cleanup(spark)
+      failed
     }
     // Two timed passes, best-of per query: a single pass is exposed
     // to one-off JVM/driver stalls that hit random queries. A failed
@@ -167,7 +175,7 @@ object Bench {
     def r2(v: Double): String = f"$v%.2f"
     val noise = s""""noise":{"spin":[${r2(spin0)},${r2(spin1)}],""" +
       s""""load5":[${r2(l5a)},${r2(l5b)}],"cpu300":[${r2(c3a)},${r2(c3b)}]}"""
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},$noise,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"warmup_failed":$warmupFailed,$noise,"queries":$qs,"sf":"$sfDir"}"""
     require(line.length < 1600, s"bench JSON line too long: ${line.length}")
     println(line)
     spark.stop()

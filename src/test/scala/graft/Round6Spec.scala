@@ -21,6 +21,16 @@ class Round6Spec extends AnyFunSuite {
     }
   }
 
+  test("SPARK_GRAFT_FAST_MONEY is validated when the session is built") {
+    assert(GraftSession.fastMoneySums(None) === "true")
+    assert(GraftSession.fastMoneySums(Some("FALSE")) === "false")
+    assert(GraftSession.fastMoneySums(Some("True")) === "true")
+    val e = intercept[IllegalArgumentException](
+      GraftSession.fastMoneySums(Some("yes")))
+    assert(e.getMessage.contains("SPARK_GRAFT_FAST_MONEY"))
+    assert(e.getMessage.contains("'yes'"))
+  }
+
   test("fastMoneySums: q1/q6 value parity between DECIMAL and BIGINT routes") {
     // the two routes differ ONLY in the aggregation buffer; totals
     // must agree to the exact decimal VALUE and (since round 7) the

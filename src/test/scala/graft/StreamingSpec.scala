@@ -1,8 +1,16 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -1781,6 +1789,126 @@ class StreamingSpec extends AnyFunSuite {
     } finally {
       q.stop()
       spark.conf.set(ccKey, prevCc)
+    }
+  }
+
+  /** Feed each chunk to `f` over `mem` as one trigger, checkpointing
+    * at `ckpt`. Output is kept by batch id, so a batch that runs again
+    * after a restart replaces its first output. */
+  private def runCheckpointed(f: DataFrame => DataFrame,
+                              mem: MemoryStream[Ev], ckpt: String,
+                              chunks: Seq[Seq[Ev]],
+                              out: mutable.Map[Long, Seq[Row]]): Unit = {
+    val q = f(mem.toDF()).writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val rows = batch.collect().toSeq
+        out.synchronized { out(id) = rows }
+      }
+      .start()
+    try chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  private def withTempDir[A](body: java.io.File => A): A = {
+    val dir = Files.createTempDirectory("graft-ckpt").toFile
+    try body(dir) finally FileUtils.deleteDirectory(dir)
+  }
+
+  /** The sample in three triggers; the last one advances the
+    * watermark past every event so timed-out state flushes. */
+  private val sampleChunks = Seq(sample.take(4), sample.drop(4),
+    Seq(Ev(99, ts(100000), 99, "tick", 0.0)))
+
+  private val debounce10m: DataFrame => DataFrame =
+    df => ReactiveStreams.debounce(spark, df, 600000L).toDF()
+
+  test("checkpoint commits fork no readlink and use the FileSystem-based manager") {
+    // The FileContext-based default manager renames through
+    // RawLocalFileSystem.getFileLinkStatus, which forks `readlink`
+    // per file when libhadoop is not loaded.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    withTempDir { dir =>
+      val rec = new jdk.jfr.Recording()
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = mutable.Map.empty[Long, Seq[Row]]
+      try runCheckpointed(debounce10m, MemoryStream[Ev],
+        new java.io.File(dir, "ckpt").getPath, sampleChunks, out)
+      finally rec.stop()
+      val jfr = new java.io.File(dir, "rec.jfr").toPath
+      rec.dump(jfr)
+      rec.close()
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr)
+        .asScala.map(_.getString("command"))
+      assert(commands.count(_.startsWith("readlink")) === 0)
+      assert(out.values.flatten.map(_.getAs[Long]("event_id")).toSet -
+        99L === Set(2L, 3L, 4L, 5L, 6L, 7L))
+      val mgr = CheckpointFileManager.create(new Path(dir.getPath),
+        spark.sessionState.newHadoopConf())
+      assert(mgr.isInstanceOf[FileSystemBasedCheckpointFileManager],
+        mgr.getClass.getName)
+    }
+  }
+
+  test("restart from checkpoint after the second trigger reproduces " +
+    "the uninterrupted output on both state stores") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "debounce" -> debounce10m,
+      "streamStreamJoin" -> ReactiveStreams.streamStreamJoin)
+    def sorted(out: collection.Map[Long, Seq[Row]]) =
+      out.values.flatten.map(_.toString).toSeq.sorted
+    def check(store: String): Unit = ops.foreach { case (name, f) =>
+      withTempDir { dir =>
+        val whole = mutable.Map.empty[Long, Seq[Row]]
+        runCheckpointed(f, MemoryStream[Ev],
+          new java.io.File(dir, "whole").getPath, sampleChunks, whole)
+        val beforeStop = mutable.Map.empty[Long, Seq[Row]]
+        val afterRestart = mutable.Map.empty[Long, Seq[Row]]
+        val mem = MemoryStream[Ev]
+        val ckpt = new java.io.File(dir, "resumed").getPath
+        runCheckpointed(f, mem, ckpt, sampleChunks.take(2), beforeStop)
+        runCheckpointed(f, mem, ckpt, sampleChunks.drop(2), afterRestart)
+        // batch ids continue from the offset log instead of restarting at 0
+        assert(afterRestart.keys.min >= beforeStop.keys.max,
+          s"$name on $store")
+        assert(sorted(whole).nonEmpty, s"$name on $store")
+        assert(sorted(beforeStop ++ afterRestart) === sorted(whole),
+          s"$name on $store")
+      }
+    }
+    check("HDFS")
+    val prev = spark.conf.getOption(providerKey)
+    GraftSession.useRocksDBStateStore(spark)
+    try check("RocksDB")
+    finally {
+      prev match {
+        case Some(p) => spark.conf.set(providerKey, p)
+        case None => spark.conf.unset(providerKey)
+      }
+      spark.conf.unset("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled")
+    }
+  }
+
+  test("checkpoint manager never overwrites an existing file") {
+    // HDFSMetadataLog detects a second writer of a batch by this
+    withTempDir { dir =>
+      val target = new Path(dir.getPath, "0")
+      val mgr = CheckpointFileManager.create(target.getParent,
+        spark.sessionState.newHadoopConf())
+      val first = mgr.createAtomic(target, overwriteIfPossible = false)
+      first.write("first".getBytes("UTF-8"))
+      first.close()
+      val second = mgr.createAtomic(target, overwriteIfPossible = false)
+      second.write("second".getBytes("UTF-8"))
+      intercept[FileAlreadyExistsException](second.close())
+      assert(new String(Files.readAllBytes(
+        new java.io.File(dir, "0").toPath), "UTF-8") === "first")
     }
   }
 }
