@@ -121,13 +121,17 @@ object Bench {
     // Two timed passes, best-of per query: a single pass is exposed
     // to one-off JVM/driver stalls that hit random queries. A failed
     // run is Infinity so best-of keeps the succeeding pass; a query
-    // that fails in BOTH passes reports -1 and is excluded from the
-    // summed total.
+    // that fails in BOTH passes reports -1, is excluded from the
+    // summed total and is counted in `n_failed` and named in `failed`.
     def timedPass(): Map[String, Double] = queries.map {
       case (name, fn) =>
         val t0 = System.nanoTime()
         val ok = try { checksum(fn(spark, sfDir)); true }
-                 catch { case _: Throwable => false }
+                 catch { case e: Throwable =>
+                   System.err.println(
+                     s"timed run failed: $name: ${e.getClass.getName}")
+                   false
+                 }
         val dt = (System.nanoTime() - t0) / 1e9
         cleanup(spark) // outside the timed window
         name -> (if (ok) dt else Double.PositiveInfinity)
@@ -138,6 +142,7 @@ object Bench {
       k -> (if (best.isInfinity) -1.0 else best)
     }
     val total = results.values.filter(_ >= 0).sum
+    val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
     // local-iteration aid (driver never sets it): full per-query map
     sys.env.get("SPARK_GRAFT_DUMP").foreach { p =>
       val full = results.toSeq.sortBy(-_._2)
@@ -175,7 +180,10 @@ object Bench {
     def r2(v: Double): String = f"$v%.2f"
     val noise = s""""noise":{"spin":[${r2(spin0)},${r2(spin1)}],""" +
       s""""load5":[${r2(l5a)},${r2(l5b)}],"cpu300":[${r2(c3a)},${r2(c3b)}]}"""
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"warmup_failed":$warmupFailed,$noise,"queries":$qs,"sf":"$sfDir"}"""
+    // every failed key is on stderr; the line names the first six,
+    // which keeps it under its length limit
+    val named = failed.take(6).map("\"" + _ + "\"").mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"warmup_failed":$warmupFailed,"n_failed":${failed.size},"failed":$named,$noise,"queries":$qs,"sf":"$sfDir"}"""
     require(line.length < 1600, s"bench JSON line too long: ${line.length}")
     println(line)
     spark.stop()

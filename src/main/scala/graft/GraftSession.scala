@@ -29,6 +29,22 @@ import org.apache.spark.sql.SparkSession
   * humongous allocation. To recount the forks, start the JVM with
   * `-XX:StartFlightRecording=filename=x.jfr` and run
   * `jfr print --events jdk.ProcessStart x.jfr`.
+  *
+  * A third setting stops each stream query from compiling its
+  * generated code again. `CodeGenerator` caches compiled classes by
+  * (thread context classloader, source), and every stream query runs
+  * its batches in a cloned session with a new session UUID. With
+  * artifact isolation on (Spark's default), the executors build a new
+  * classloader for each UUID, so every projection, predicate and
+  * whole-stage class compiles once per query (143 compiles in a
+  * traced warm stream replay on a 4-core host). With
+  * `spark.sql.artifact.isolation.enabled=false` all sessions share
+  * the executor's default classloader and the cache hits (2 compiles:
+  * `runningTopK`'s state projections, whose source names its `Seq`
+  * loop variable by a per-query counter). The trade-off: jars, files and
+  * archives added to one session become visible to every session;
+  * graft adds none. To recount, read `codegen.compiles.warm` from
+  * `python3 perfbench/run.py --workload stream_replay --trace 1`.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -84,6 +100,10 @@ object GraftSession {
       // humongous regions, and peak RSS on the stream replay rose
       // ~10% once triggers got faster.
       .config("spark.broadcast.blockSize", "512k")
+      // One executor classloader for all sessions, so the codegen
+      // cache, keyed by classloader, hits across stream queries (see
+      // the scaladoc above). Read when a session is created.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** `SPARK_GRAFT_FAST_MONEY`, checked once when the session is
     * built: `true` or `false` in any case, `true` when unset. */

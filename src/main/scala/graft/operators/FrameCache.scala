@@ -140,9 +140,20 @@ object FrameCache {
     }
   }
 
-  /** Drop every entry and unpersist its blocks (test hygiene). */
+  private val scalars = mutable.HashMap.empty[String, Long]
+
+  /** Memoized scalar probe over a shared frame ([[Graph]]'s LP
+    * fan-out): computed once per `key`, which must carry the input
+    * identity ([[planKey]]) like a frame key. Holds no blocks. */
+  def scalar(key: String)(compute: => Long): Long = synchronized {
+    scalars.getOrElseUpdate(key, compute)
+  }
+
+  /** Drop every entry and scalar and unpersist the entries' blocks
+    * (test hygiene). */
   def invalidateAll(spark: SparkSession): Unit = synchronized {
     entries.values.foreach(drop(spark, _))
     entries.clear()
+    scalars.clear()
   }
 }

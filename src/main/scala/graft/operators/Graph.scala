@@ -557,16 +557,12 @@ object Graph {
   // aggregate+collect pass runs once per (dataset, cap) — each LP key
   // used to re-pay it per invocation purely to decide to do what it
   // always does at this scale (r12 ADVICE)
-  private val lpFanOutMemo =
-    scala.collection.mutable.HashMap.empty[String, Long]
   private def lpFanOut(pairs: DataFrame, cap: Int): Long =
-    lpFanOutMemo.synchronized {
-      lpFanOutMemo.getOrElseUpdate(
-        s"${FrameCache.planKey(pairs)}:$cap",
-        pairs.groupBy("supp")
-          .agg(least(count(lit(1)), lit(cap.toLong)).as("d"))
-          .agg(coalesce(sum(expr("d * (d - 1)")), lit(0L)).as("f"))
-          .collect()(0).getLong(0) / 2)
+    FrameCache.scalar(s"lpFanOut:${FrameCache.planKey(pairs)}:$cap") {
+      pairs.groupBy("supp")
+        .agg(least(count(lit(1)), lit(cap.toLong)).as("d"))
+        .agg(coalesce(sum(expr("d * (d - 1)")), lit(0L)).as("f"))
+        .collect()(0).getLong(0) / 2
     }
 
   def commonNeighbors(lineitem: DataFrame, orders: DataFrame,

@@ -49,6 +49,21 @@ class Round12Spec extends AnyFunSuite {
     FrameCache.invalidateAll(spark)
   }
 
+  test("FrameCache: a memoized scalar is gone after invalidateAll") {
+    FrameCache.invalidateAll(spark)
+    var computed = 0
+    def probe(): Long = FrameCache.scalar("r12spec:scalar") {
+      computed += 1; 40L + computed
+    }
+    assert(probe() === 41L)
+    assert(probe() === 41L)
+    assert(computed === 1, "a memoized scalar must not recompute")
+    FrameCache.invalidateAll(spark)
+    assert(probe() === 42L)
+    assert(computed === 2, "invalidateAll must drop the scalar")
+    FrameCache.invalidateAll(spark)
+  }
+
   test("FrameCache: externally unpersisted entry is detected and rebuilt") {
     FrameCache.invalidateAll(spark)
     var builds = 0

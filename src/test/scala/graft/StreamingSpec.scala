@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -1893,6 +1894,28 @@ class StreamingSpec extends AnyFunSuite {
       spark.conf.unset("spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled")
     }
+  }
+
+  test("a second stream query over the same input compiles no new " +
+    "generated code") {
+    // CodeGenerator caches classes by (context classloader, source);
+    // with artifact isolation on, each query's cloned session gets its
+    // own executor classloader and compiles every class again.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def replay(): Seq[String] = withTempDir { dir =>
+      val out = mutable.Map.empty[Long, Seq[Row]]
+      runCheckpointed(debounce10m, MemoryStream[Ev],
+        new java.io.File(dir, "ckpt").getPath, sampleChunks, out)
+      out.values.flatten.map(_.toString).toSeq.sorted
+    }
+    val first = replay()
+    val before = compiles
+    val second = replay()
+    assert(compiles - before === 0)
+    assert(first.nonEmpty)
+    assert(second === first)
   }
 
   test("checkpoint manager never overwrites an existing file") {
