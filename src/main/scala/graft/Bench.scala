@@ -136,7 +136,21 @@ object Bench {
         cleanup(spark) // outside the timed window
         name -> (if (ok) dt else Double.PositiveInfinity)
     }
+    // `jobs_total`: jobs started during the timed passes. The listener
+    // bus delivers events late, so count by each job's submission
+    // time: t0 is a clock tick after the last warm-up job, and
+    // stopping the context after the passes delivers the last events.
+    val jobsTimed = new java.util.concurrent.atomic.AtomicLong
+    val t0 = System.currentTimeMillis() + 1
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.time >= t0) jobsTimed.incrementAndGet()
+      })
+    while (System.currentTimeMillis() < t0) Thread.sleep(1)
     val (p1, p2) = (timedPass(), timedPass())
+    spark.stop()
     val results = p1.map { case (k, v) =>
       val best = math.min(v, p2(k))
       k -> (if (best.isInfinity) -1.0 else best)
@@ -183,9 +197,8 @@ object Bench {
     // every failed key is on stderr; the line names the first six,
     // which keeps it under its length limit
     val named = failed.take(6).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"warmup_failed":$warmupFailed,"n_failed":${failed.size},"failed":$named,$noise,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"warmup_failed":$warmupFailed,"n_failed":${failed.size},"failed":$named,"jobs_total":${jobsTimed.get},$noise,"queries":$qs,"sf":"$sfDir"}"""
     require(line.length < 1600, s"bench JSON line too long: ${line.length}")
     println(line)
-    spark.stop()
   }
 }

@@ -45,6 +45,22 @@ import org.apache.spark.sql.SparkSession
   * archives added to one session become visible to every session;
   * graft adds none. To recount, read `codegen.compiles.warm` from
   * `python3 perfbench/run.py --workload stream_replay --trace 1`.
+  *
+  * A fourth setting stops the `chmod` forks. Hadoop's
+  * `RawLocalFileSystem.setPermission` runs `chmod` in a child process
+  * when libhadoop is not loaded, and every file or directory that
+  * `create` or `mkdirs` makes with an explicit permission calls it:
+  * state-store files, Spark's checkpoint checksums, the `.crc` file of
+  * each, the offset and commit log entries (about 35 forks per trigger
+  * in a stream replay). `spark.hadoop.fs.file.impl` is
+  * [[NoForkLocalFileSystem]], the same `LocalFileSystem` whose raw
+  * layer sets the permission through `java.nio.file.Files` instead:
+  * the same `chmod(2)`, in process. Only a sticky-bit permission,
+  * which NIO cannot express, still forks. Checksums and permission
+  * bits stay as they were. Hadoop caches one `FileSystem` per scheme
+  * and user for the whole JVM, so the setting holds only if the
+  * session is built before anything in the JVM asks Hadoop for a
+  * `file:` file system; recount the forks as described above.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -104,6 +120,10 @@ object GraftSession {
       // cache, keyed by classloader, hits across stream queries (see
       // the scaladoc above). Read when a session is created.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Sets file and directory permissions in process; the stock
+      // local file system forks `chmod` for each checkpoint file it
+      // creates when libhadoop is missing (see the scaladoc above).
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
 
   /** `SPARK_GRAFT_FAST_MONEY`, checked once when the session is
     * built: `true` or `false` in any case, `true` when unset. */

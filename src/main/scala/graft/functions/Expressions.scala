@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
@@ -833,10 +834,14 @@ case class SimHash64Expr(child: Expression) extends UnaryExpression {
 
 /** Double → scaled BIGINT with decimal-cast rounding semantics
   * ([[Kernels.moneyScaled]]): the codegen'd per-row half of the
-  * flagged money-sum fast path. NaN/Infinity NULL out (the decimal
-  * cast's non-ANSI behavior) so the flagged route null-skips the
-  * same rows the DECIMAL route does instead of throwing. */
-case class MoneyScaledExpr(child: Expression, scale: Int)
+  * flagged money-sum fast path. NaN/Infinity NULL out, as the
+  * decimal cast does, so the flagged route null-skips the same rows
+  * the DECIMAL route does instead of throwing. A value beyond
+  * DECIMAL(18,scale) fails as that cast does: NULL with ANSI off, an
+  * `ArithmeticException` with ANSI on. Like `Cast`, the expression
+  * reads the ANSI setting when it is built. */
+case class MoneyScaledExpr(child: Expression, scale: Int,
+                           ansiEnabled: Boolean = SQLConf.get.ansiEnabled)
     extends UnaryExpression {
   require(scale >= 0 && scale <= 9, s"unsupported money scale $scale")
   override def checkInputDataTypes()
@@ -851,15 +856,25 @@ case class MoneyScaledExpr(child: Expression, scale: Int)
   override protected def nullSafeEval(input: Any): Any = {
     val d = input.asInstanceOf[Double]
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) null
-    else Kernels.moneyScaled(d, scale)
+    else if (ansiEnabled) Kernels.moneyScaled(d, scale)
+    else try Kernels.moneyScaled(d, scale)
+    catch { case _: ArithmeticException => null }
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
+    nullSafeCodeGen(ctx, ev, { c =>
+      val scaled =
+        s"${ev.value} = graft.functions.Kernels.moneyScaled($c, $scale);"
+      val body =
+        if (ansiEnabled) scaled
+        else s"""try { $scaled }
+          catch (java.lang.ArithmeticException e) { ${ev.isNull} = true; }"""
+      s"""
       if (java.lang.Double.isNaN($c) || java.lang.Double.isInfinite($c)) {
         ${ev.isNull} = true;
       } else {
-        ${ev.value} = graft.functions.Kernels.moneyScaled($c, $scale);
-      }""")
+        $body
+      }"""
+    })
   override protected def withNewChildInternal(c: Expression): MoneyScaledExpr =
     copy(child = c)
 }

@@ -64,8 +64,8 @@ object Relational {
     * double — the exactness tax drops from ~4.7× to ~1.8× (and most
     * of the residual is the shared scan). NaN/Infinity inputs NULL
     * out per row exactly like the decimal cast. */
-  private def sumExact(s: SparkSession, c: org.apache.spark.sql.Column,
-                       sc: Int) =
+  private[graft] def sumExact(s: SparkSession,
+                              c: org.apache.spark.sql.Column, sc: Int) =
     if (fastSums(s))
       (sum(graft.functions.GraftFunctions.money_scaled(c, sc)
         .cast(DecimalType(20, 0))) *

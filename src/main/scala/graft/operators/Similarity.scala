@@ -915,17 +915,18 @@ object Similarity {
     // the per-dim reductions are commutative Long sums rendered
     // through BigDecimal.doubleValue exactly like the DECIMAL(38,0)
     // column, and the normalization is the identical IEEE sequence —
-    // axis byte-equal (Round13Spec). Above the budget the scans run
-    // UNCHANGED.
+    // axis byte-equal (Round13Spec). Above the budget, or when a
+    // per-dim sum leaves the Long range, the scans run UNCHANGED.
     collectEmbsUnder(embs, driverBudget) match {
-      case Some(vecs) if vecs.nonEmpty =>
+      case Some(vecs) if vecs.nonEmpty => try {
         val dims = vecs(0)._2.length
         val n = vecs.length.toLong
         val muSum = new Array[Long](dims)
         vecs.foreach { case (_, e) =>
           var d = 0
           while (d < dims) {
-            muSum(d) += math.floor(e(d).toDouble * 1e6).toLong
+            muSum(d) = Math.addExact(muSum(d),
+              math.floor(e(d).toDouble * 1e6).toLong)
             d += 1
           }
         }
@@ -940,7 +941,8 @@ object Similarity {
             val c = graft.functions.Kernels
               .centeredPowerContrib(arr, mu, v)
             var d = 0
-            while (d < dims) { wSum(d) += c.getLong(d); d += 1 }
+            while (d < dims) {
+              wSum(d) = Math.addExact(wSum(d), c.getLong(d)); d += 1 }
           }
           val w = wSum.map(s =>
             new java.math.BigDecimal(s).doubleValue() / 1e6)
@@ -950,6 +952,7 @@ object Similarity {
           v = w.map(_ / norm)
         }
         return (mu, v)
+      } catch { case _: ArithmeticException => () }
       case _ => ()
     }
     val big = DecimalType(38, 0)

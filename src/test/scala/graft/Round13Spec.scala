@@ -156,4 +156,19 @@ class Round13Spec extends AnyFunSuite {
     assert(vD.toSeq === vX.toSeq, "axis diverges across the cutoff")
     assert(vD.nonEmpty)
   }
+
+  test("cutoff boundary: pcaAxis with per-dim sums beyond the Long " +
+      "range equals the distributed path") {
+    // dimension 0 sums 10 × floor(1e12 · 1e6) ≈ 1e19 > 2^63 micro-units
+    val embs = (0 until 10)
+      .map(i => (i.toLong, Array(1e12f, i.toFloat, (i % 3).toFloat)))
+      .toDF("vec_id", "embedding")
+    val (muD, vD) = Similarity.pcaAxis(embs, iters = 3,
+      driverBudget = DriverCutoff.budgetBytes)
+    val (muX, vX) = Similarity.pcaAxis(embs, iters = 3,
+      driverBudget = 0L)
+    assert(muD.toSeq === muX.toSeq, "means diverge across the cutoff")
+    assert(vD.toSeq === vX.toSeq, "axis diverges across the cutoff")
+    assert(muX(0) > 9e11, "the mean of dimension 0 wrapped")
+  }
 }

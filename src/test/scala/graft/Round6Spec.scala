@@ -10,8 +10,7 @@ import graft.sources.Tables
 class Round6Spec extends AnyFunSuite {
   import TestSession._
 
-  private def withFastSums[A](on: Boolean)(body: => A): A = {
-    val key = "spark.graft.fastMoneySums"
+  private def withConf[A](key: String, on: Boolean)(body: => A): A = {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, on.toString)
     try body
@@ -20,6 +19,9 @@ class Round6Spec extends AnyFunSuite {
       case None    => spark.conf.unset(key)
     }
   }
+
+  private def withFastSums[A](on: Boolean)(body: => A): A =
+    withConf("spark.graft.fastMoneySums", on)(body)
 
   test("SPARK_GRAFT_FAST_MONEY is validated when the session is built") {
     assert(GraftSession.fastMoneySums(None) === "true")
@@ -87,6 +89,40 @@ class Round6Spec extends AnyFunSuite {
     assert(got.forall { case (f, e) => f == e },
       s"NaN/Inf parity broken: ${got.mkString(", ")}")
     assert(got.count(_._1 == null) === 3)
+  }
+
+  test("money_scaled overflows like the decimal cast under either " +
+    "ANSI setting") {
+    import spark.implicits._
+    // 1e17 does not fit DECIMAL(18,2): the cast NULLs it with ANSI off
+    // and throws with ANSI on; both routes read the setting when the
+    // query is built
+    val df = Seq(1.5, 1e17, -2.25).toDF("v")
+    def perRow(fast: Boolean) = df.select(
+        if (fast) graft.functions.GraftFunctions.money_scaled(col("v"), 2)
+        else (col("v").cast(org.apache.spark.sql.types.DecimalType(18, 2))
+          * 100).cast("long"))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+      .toSeq
+    def total(fast: Boolean) = withFastSums(fast)(
+      df.agg(Relational.sumExact(spark, col("v"), 2)).head()
+        .getDecimal(0).stripTrailingZeros)
+    def withAnsi[A](on: Boolean)(body: => A): A =
+      withConf("spark.sql.ansi.enabled", on)(body)
+    withAnsi(on = false) {
+      assert(perRow(fast = true) === Seq(Some(150L), None, Some(-225L)))
+      assert(perRow(fast = true) === perRow(fast = false))
+      assert(total(fast = true) === new java.math.BigDecimal("-0.75"))
+      assert(total(fast = true) === total(fast = false))
+    }
+    def arithmetic(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+    withAnsi(on = true) {
+      for (fast <- Seq(true, false)) {
+        assert(arithmetic(intercept[Exception](perRow(fast))), s"fast=$fast")
+        assert(arithmetic(intercept[Exception](total(fast))), s"fast=$fast")
+      }
+    }
   }
 
   test("money_scaled ≡ the decimal cast, per row, on adversarial and random doubles") {

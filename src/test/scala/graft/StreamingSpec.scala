@@ -7,7 +7,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem,
+  LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.checkpointing.{
@@ -1824,32 +1827,117 @@ class StreamingSpec extends AnyFunSuite {
   private val debounce10m: DataFrame => DataFrame =
     df => ReactiveStreams.debounce(spark, df, 600000L).toDF()
 
-  test("checkpoint commits fork no readlink and use the FileSystem-based manager") {
-    // The FileContext-based default manager renames through
-    // RawLocalFileSystem.getFileLinkStatus, which forks `readlink`
-    // per file when libhadoop is not loaded.
+  /** Runs `body` on the RocksDB state store, then restores the
+    * session's provider. */
+  private def onRocksDB[A](body: => A): A = {
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(providerKey)
+    GraftSession.useRocksDBStateStore(spark)
+    try body
+    finally {
+      prev match {
+        case Some(p) => spark.conf.set(providerKey, p)
+        case None => spark.conf.unset(providerKey)
+      }
+      spark.conf.unset("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled")
+    }
+  }
+
+  /** The session's `file:` file system. Hadoop caches one per scheme
+    * and user for the whole JVM, whatever the conf, so one cached by
+    * earlier code under another conf is closed (which uncaches it)
+    * first. */
+  private def sessionLocalFs(): FileSystem = {
+    val root = new java.net.URI("file:///")
+    val conf = spark.sessionState.newHadoopConf()
+    val cached = FileSystem.get(root, conf)
+    if (cached.isInstanceOf[NoForkLocalFileSystem]) cached
+    else { cached.close(); FileSystem.get(root, conf) }
+  }
+
+  /** Commands of the processes started while `body` runs (JFR). */
+  private def processStarts(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val jfr = Files.createTempFile("graft-proc", ".jfr")
+    try {
+      rec.dump(jfr)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(jfr)
+        .asScala.map(_.getString("command")).toSeq
+    } finally { rec.close(); Files.delete(jfr) }
+  }
+
+  test("stream triggers fork no chmod or readlink on either state store") {
+    // Without libhadoop, RawLocalFileSystem forks `chmod` for each
+    // file and directory it creates with a permission, and the
+    // FileContext-based default checkpoint manager forks `readlink`
+    // for each file it renames.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    withTempDir { dir =>
-      val rec = new jdk.jfr.Recording()
-      rec.enable("jdk.ProcessStart")
-      rec.start()
+    assert(sessionLocalFs().isInstanceOf[NoForkLocalFileSystem])
+    def commands(store: String): Seq[String] = withTempDir { dir =>
       val out = mutable.Map.empty[Long, Seq[Row]]
-      try runCheckpointed(debounce10m, MemoryStream[Ev],
-        new java.io.File(dir, "ckpt").getPath, sampleChunks, out)
-      finally rec.stop()
-      val jfr = new java.io.File(dir, "rec.jfr").toPath
-      rec.dump(jfr)
-      rec.close()
-      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr)
-        .asScala.map(_.getString("command"))
-      assert(commands.count(_.startsWith("readlink")) === 0)
+      val started = processStarts(runCheckpointed(debounce10m,
+        MemoryStream[Ev], new java.io.File(dir, "ckpt").getPath,
+        sampleChunks, out))
       assert(out.values.flatten.map(_.getAs[Long]("event_id")).toSet -
-        99L === Set(2L, 3L, 4L, 5L, 6L, 7L))
+        99L === Set(2L, 3L, 4L, 5L, 6L, 7L), store)
       val mgr = CheckpointFileManager.create(new Path(dir.getPath),
         spark.sessionState.newHadoopConf())
       assert(mgr.isInstanceOf[FileSystemBasedCheckpointFileManager],
         mgr.getClass.getName)
+      started
+    }
+    assert(commands("HDFS") === Nil)
+    // RocksDB still forks outside its triggers: Spark deletes each
+    // state store's working directory with `rm -rf` when the query
+    // stops, and the RocksDB library probes for musl libc once per JVM
+    val rocks = onRocksDB(commands("RocksDB"))
+    assert(rocks.filter(c => c.startsWith("chmod") ||
+      c.startsWith("readlink")) === Nil, rocks)
+  }
+
+  test("the session's local file system sets the permissions the " +
+    "stock one does") {
+    withTempDir { dir =>
+      val ours = sessionLocalFs()
+      val stock = new LocalFileSystem()
+      stock.initialize(new java.net.URI("file:///"), new Configuration())
+      try {
+        def octal(s: String): Int = Integer.parseInt(s, 8)
+        def perm(s: String) = new FsPermission(octal(s).toShort)
+        def mode(p: Path): Int = Files.getAttribute(
+          new java.io.File(p.toUri).toPath, "unix:mode").asInstanceOf[Int] &
+          0x0fff
+        val modes = Seq(ours, stock).map { fs =>
+          val base = new Path(dir.toURI.toString, fs.getClass.getSimpleName)
+          val sub = new Path(base, "sub")
+          val file = new Path(sub, "f")
+          val secret = new Path(sub, "secret")
+          assert(fs.mkdirs(sub))
+          fs.create(file).close()
+          fs.create(secret).close()
+          fs.setPermission(secret, perm("600"))
+          Seq(mode(base), mode(sub), mode(file), mode(new Path(sub, ".f.crc")),
+            mode(secret))
+        }
+        // Hadoop's default umask is 022
+        assert(modes.head === Seq("755", "755", "644", "644", "600")
+          .map(octal))
+        assert(modes.head === modes.last)
+        // NIO cannot set the sticky bit; the shell path still does
+        val sticky = new Path(dir.toURI.toString, "sticky")
+        assert(ours.mkdirs(sticky))
+        val commands = processStarts(ours.setPermission(sticky, perm("1755")))
+        assert(commands.count(_.startsWith("chmod")) === 1, commands)
+        assert(mode(sticky) === octal("1755"))
+        val missing = new Path(dir.toURI.toString, "missing")
+        intercept[java.io.IOException](ours.setPermission(missing, perm("600")))
+        intercept[java.io.IOException](stock.setPermission(missing, perm("600")))
+      } finally stock.close()
     }
   }
 
@@ -1857,7 +1945,6 @@ class StreamingSpec extends AnyFunSuite {
     "the uninterrupted output on both state stores") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "debounce" -> debounce10m,
       "streamStreamJoin" -> ReactiveStreams.streamStreamJoin)
@@ -1883,17 +1970,7 @@ class StreamingSpec extends AnyFunSuite {
       }
     }
     check("HDFS")
-    val prev = spark.conf.getOption(providerKey)
-    GraftSession.useRocksDBStateStore(spark)
-    try check("RocksDB")
-    finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      spark.conf.unset("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled")
-    }
+    onRocksDB(check("RocksDB"))
   }
 
   test("a second stream query over the same input compiles no new " +
