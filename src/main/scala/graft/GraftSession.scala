@@ -101,7 +101,9 @@ object GraftSession {
       // which converts the raw nanos to native us precision).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // graft's Catalyst extensions: the row_number<=k -> TopKPerGroup
-      // optimizer rewrite + the planner strategy for its physical node
+      // optimizer rewrite + the planner strategy for its physical node,
+      // and lower/upper without Spark's ICU title-case table
+      // (CaseMapRule)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       // Renames checkpoint files with FileSystem.rename; the default

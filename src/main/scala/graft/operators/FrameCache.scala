@@ -140,13 +140,17 @@ object FrameCache {
     }
   }
 
-  private val scalars = mutable.HashMap.empty[String, Long]
+  private val scalars = mutable.HashMap.empty[String, Any]
 
-  /** Memoized scalar probe over a shared frame ([[Graph]]'s LP
-    * fan-out): computed once per `key`, which must carry the input
-    * identity ([[planKey]]) like a frame key. Holds no blocks. */
-  def scalar(key: String)(compute: => Long): Long = synchronized {
-    scalars.getOrElseUpdate(key, compute)
+  /** Memoized driver-side value: a scalar probe over a shared frame
+    * ([[Graph]]'s LP fan-out, [[Similarity]]'s corpus shape) or a
+    * parquet input's schema ([[graft.sources.Tables]]). Computed once
+    * per `key`, which must carry everything the value depends on
+    * (for a frame, its [[planKey]]) and name the value's kind, since
+    * one key always returns the type it was first stored with.
+    * Holds no blocks. */
+  def scalar[T](key: String)(compute: => T): T = synchronized {
+    scalars.getOrElseUpdate(key, compute).asInstanceOf[T]
   }
 
   /** Drop every entry and scalar and unpersist the entries' blocks

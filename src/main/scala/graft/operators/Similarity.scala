@@ -610,13 +610,17 @@ object Similarity {
   /** Byte-budget gate for the embedding driver twins: rows ×
     * (8 + 4·dim) packed payload against [[DriverCutoff.budgetBytes]]
     * — the kcenterSelect contract. Returns the collected corpus when
-    * it fits, None above the budget. */
+    * it fits, None above the budget. The corpus shape is a pure
+    * function of its input identity, so the count and first-row
+    * probes run once per [[FrameCache.planKey]], not on every call. */
   private def collectEmbsUnder(embs: DataFrame, budget: Long)
       : Option[Array[(Long, Array[Float])]] = {
     val corpus = embs.select(col("vec_id"), col("embedding"))
-    val nRows = corpus.count()
-    val dim = corpus.limit(1).collect().headOption
-      .map(_.getSeq[Float](1).length).getOrElse(0)
+    val (nRows, dim) = FrameCache.scalar(
+        s"embShape:${FrameCache.planKey(corpus)}") {
+      (corpus.count(), corpus.limit(1).collect().headOption
+        .map(_.getSeq[Float](1).length).getOrElse(0))
+    }
     if (nRows * (8L + 4L * dim) <= budget)
       Some(corpus.collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))

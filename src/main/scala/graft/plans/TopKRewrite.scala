@@ -72,11 +72,13 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
 }
 
 /** `SparkSessionExtensions` entry point: inject the top-k rewrite and
-  * its planner strategy into any session via
+  * its planner strategy, and the ICU case-mapping rewrite
+  * ([[CaseMapRule]]), into any session via
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => TopKRewriteRule)
+    ext.injectOptimizerRule(_ => CaseMapRule)
     ext.injectPlannerStrategy(_ => TopKStrategy)
   }
 }

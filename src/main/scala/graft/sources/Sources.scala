@@ -41,12 +41,13 @@ object Sources {
     * one micro-batch per discovered file). */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
     // The streaming file source needs a declared schema; probe the
-    // batch footer once (cheap, driver-side metadata read) to learn
-    // which ts encoding this testdata generation uses — native us
-    // timestamp, or legacy ns surfaced as LONG under
-    // spark.sql.legacy.parquet.nanosAsLong (set by GraftSession).
-    val fileSchema = spark.read
-      .option("pathGlobFilter", "events.parquet").parquet(dir).schema
+    // batch footer to learn which ts encoding this testdata
+    // generation uses — native us timestamp, or legacy ns surfaced as
+    // LONG under spark.sql.legacy.parquet.nanosAsLong (set by
+    // GraftSession). Memoized per file listing (Tables.parquetSchema),
+    // so replaying the same directory probes once.
+    val fileSchema = Tables.parquetSchema(spark, dir,
+      Map("pathGlobFilter" -> "events.parquet"))
     val tsIsLong = fileSchema("ts").dataType == LongType
     val stream = spark.readStream.schema(fileSchema)
       .option("maxFilesPerTrigger", "1")

@@ -1,12 +1,39 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import graft.operators.FrameCache
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed access to the driver-generated parquet tables.
   *
   * All loaders return lazy plans; column pruning and predicate
   * pushdown happen in Catalyst, so callers should `select`/`filter`
   * on the result rather than asking for trimmed variants here.
+  *
+  * Every load passes the table's schema to the reader explicitly.
+  * Without one, Spark infers it on each `read.parquet` by running a
+  * one-task job that reads a footer; the registry loads its tables
+  * again for every query, so a warm pass paid that job once per table
+  * per key (11 of the 22 plan-build jobs in a traced `curation_mix`
+  * warm pass on a 4-core host). [[parquetSchema]] runs Spark's own inference once and
+  * memoizes the result in [[FrameCache.scalar]], which
+  * `FrameCache.invalidateAll` clears. The relation, the file listing,
+  * pruning and pushdown are the same as without a schema. The memo
+  * key covers everything the inference reads:
+  *   - the path and each leaf file under it, with its length and
+  *     modification time, so a rewritten file or a Spark-written
+  *     directory whose part files change is inferred again;
+  *   - the reader options (`pathGlobFilter`, …);
+  *   - the session settings that change the inferred types:
+  *     `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` and
+  *     partition-column type inference.
+  * The file statuses come from `getFileStatus`/`listStatus` and only
+  * their length and modification time are read: the owner and
+  * permission fields that `listFiles` fills in fork `ls` on a local
+  * file system without libhadoop.
   */
 object Tables {
   // TPC-H-ish star schema
@@ -33,8 +60,44 @@ object Tables {
                       source: String, n_chars: Long)
   case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.options(options).parquet(path)` infers,
+    * inferred once per memo key (see the scaladoc above). A path that
+    * does not exist as written (missing, or a glob) is not memoized:
+    * Spark infers on every call and raises its own errors. */
+  def parquetSchema(spark: SparkSession, path: String,
+                    options: Map[String, String] = Map.empty): StructType = {
+    def infer = spark.read.options(options).parquet(path).schema
+    leafFiles(spark, path) match {
+      case None => infer
+      case Some(files) =>
+        val confs = spark.conf.getAll.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.") ||
+            k == "spark.sql.sources.partitionColumnTypeInference.enabled"
+        }
+        val key = Seq(path, options.toSeq.sorted.mkString(","),
+          confs.toSeq.sorted.mkString(","), files).mkString("parquetSchema|", "|", "")
+        FrameCache.scalar(key)(infer)
+    }
+  }
+
+  /** `path:length:mtime` of every file under `path`, in name order;
+    * None when `path` does not exist. */
+  private def leafFiles(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Seq[String] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
+      else Seq(s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+    try Some(walk(fs.getFileStatus(p)).mkString(","))
+    catch { case _: FileNotFoundException => None }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

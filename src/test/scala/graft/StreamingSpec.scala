@@ -16,6 +16,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1870,6 +1871,20 @@ class StreamingSpec extends AnyFunSuite {
     } finally { rec.close(); Files.delete(jfr) }
   }
 
+  /** Runs the cleanups that earlier tests left pending, so that a
+    * process-start window sees only its own body: the state stores of
+    * stopped queries are unloaded (RocksDB deletes each working
+    * directory with `rm -rf`), and the artifact directories of
+    * sessions that are now garbage are deleted (`rm -rf` on Spark's
+    * cleaner thread once a collection finds the session). Returns
+    * once a full collection is followed by 200 ms without a process
+    * start, or after 20 tries. */
+  private def settle(): Unit = {
+    StateStore.stop()
+    Iterator.continually(processStarts { System.gc(); Thread.sleep(200) })
+      .take(20).find(_.isEmpty)
+  }
+
   test("stream triggers fork no chmod or readlink on either state store") {
     // Without libhadoop, RawLocalFileSystem forks `chmod` for each
     // file and directory it creates with a permission, and the
@@ -1880,6 +1895,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(sessionLocalFs().isInstanceOf[NoForkLocalFileSystem])
     def commands(store: String): Seq[String] = withTempDir { dir =>
       val out = mutable.Map.empty[Long, Seq[Row]]
+      settle()
       val started = processStarts(runCheckpointed(debounce10m,
         MemoryStream[Ev], new java.io.File(dir, "ckpt").getPath,
         sampleChunks, out))
