@@ -80,17 +80,6 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Money sums ride the scaled-BIGINT kernel by default since
-      // r13: Kernels.moneyScaled reproduces the DECIMAL cast's exact
-      // rounding per row (Round6Spec pins value AND schema parity vs
-      // the DECIMAL route, incl. the 8.165-class traps), the agg
-      // buffer is a compact long instead of per-row BigDecimal, and
-      // the measured exactness tax drops ~4.7x -> ~1.8x (SURVEY
-      // §5.4: q1 1.0 -> 0.37 s at sf0.1). Session conf — tests and
-      // probes can still flip it off per session, and
-      // SPARK_GRAFT_FAST_MONEY=false A/Bs the DECIMAL route.
-      .config("spark.graft.fastMoneySums",
-        fastMoneySums(sys.env.get("SPARK_GRAFT_FAST_MONEY")))
       // 160+ gated queries are ~500 whole-stage-codegen stages; the
       // default 100-entry generated-class cache evicts constantly and
       // every run re-Janino-compiles nearly every stage. Static conf:
@@ -126,15 +115,6 @@ object GraftSession {
       // local file system forks `chmod` for each checkpoint file it
       // creates when libhadoop is missing (see the scaladoc above).
       .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
-
-  /** `SPARK_GRAFT_FAST_MONEY`, checked once when the session is
-    * built: `true` or `false` in any case, `true` when unset. */
-  private[graft] def fastMoneySums(env: Option[String]): String =
-    env.getOrElse("true").toLowerCase match {
-      case v @ ("true" | "false") => v
-      case _ => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_FAST_MONEY must be true or false, got '${env.get}'")
-    }
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -868,12 +868,12 @@ case class CaseMapExpr(child: Expression, upper: Boolean)
 
 /** Double → scaled BIGINT with decimal-cast rounding semantics
   * ([[Kernels.moneyScaled]]): the codegen'd per-row half of the
-  * flagged money-sum fast path. NaN/Infinity NULL out, as the
-  * decimal cast does, so the flagged route null-skips the same rows
-  * the DECIMAL route does instead of throwing. A value beyond
-  * DECIMAL(18,scale) fails as that cast does: NULL with ANSI off, an
-  * `ArithmeticException` with ANSI on. Like `Cast`, the expression
-  * reads the ANSI setting when it is built. */
+  * exact money sum ([[graft.operators.Relational.sumExact]]).
+  * NaN/Infinity NULL out, as the decimal cast does, so the sum
+  * null-skips the same rows the cast would instead of throwing. A
+  * value beyond DECIMAL(18,scale) fails as that cast does: NULL with
+  * ANSI off, an `ArithmeticException` with ANSI on. Like `Cast`, the
+  * expression reads the ANSI setting when it is built. */
 case class MoneyScaledExpr(child: Expression, scale: Int,
                            ansiEnabled: Boolean = SQLConf.get.ansiEnabled)
     extends UnaryExpression {
@@ -1243,7 +1243,7 @@ object GraftFunctions {
     toCol(DotProductExpr(toExpr(a), toExpr(b)))
 
   /** Double → scaled BIGINT with decimal-cast rounding semantics
-    * (the money-sum fast path's per-row kernel). */
+    * (the exact money sum's per-row kernel). */
   def money_scaled(c: Column, scale: Int): Column =
     toCol(MoneyScaledExpr(toExpr(c), scale))
 

@@ -557,9 +557,10 @@ object Dedup {
     * 100 TB index sizes. The plain stream-static form
     * ([[graft.streaming.ReactiveStreams.minhashAdmitStream]]) never
     * SHUFFLES the index but still SCANS it per trigger — measured
-    * per-trigger cost grows with the corpus (2.75 s → 4.62 s steady
-    * on a 10× index, tools/AdmitProbe). This form makes the trigger
-    * O(wave): the wave's band keys and the matched candidate ids —
+    * per-trigger cost grows with the corpus (steady mean 4.029 s →
+    * 4.508 s on a 10× index, ADMIT_PROBE_r11.json). This form makes
+    * the trigger O(wave): the wave's band keys and the matched
+    * candidate ids —
     * both bounded by the wave (waveSize·bands keys) — collect to the
     * driver and push into the index scans as LITERAL `isin` filters,
     * which parquet row-group min/max stats turn into whole-file

@@ -23,8 +23,9 @@ import graft.sources.{Sinks, Tables}
   *    broadcast of customer measured 15x at 10x rows, sf1→sf10);
   *  - fact-side predicates live in `filter` directly over the scan
   *    so Catalyst pushes them into parquet (PushedFilters);
-  *  - money aggregates go through DecimalType: exact, order-stable
-  *    across any cluster size;
+  *  - money aggregates are exact integer sums of scaled cents
+  *    ([[sumExact]]), returned as DecimalType: order-stable across
+  *    any cluster size;
   *  - top-k uses orderBy+limit (TakeOrderedAndProject: per-partition
   *    heap + single driver merge, no global sort shuffle).
   */
@@ -33,45 +34,29 @@ object Relational {
   private def dec4(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 4))
   private def dec6(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 6))
 
-  /** Opt-in scaled-BIGINT fast path for exact money sums — the
-    * documented ~5x exactness-tax lever (SURVEY §5.4). */
-  def fastSums(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.fastMoneySums").exists(_.toBoolean)
-
-  /** Exact sum of a scale-`sc` money measure.
+  /** Exact sum of a scale-`sc` money measure, as DECIMAL(28,sc) —
+    * the type `sum(CAST(x AS DECIMAL(18,sc)))` has, and the same value.
     *
-    * Default route: `sum(CAST(x AS DECIMAL(18,sc)))` — every partial
-    * and merge runs BigDecimal arithmetic in the agg buffer (the
-    * measured 5x over a plain double sum at sf0.1).
-    *
-    * Fast route (`spark.graft.fastMoneySums=true`): keep the SAME
-    * rounding anchor — a pure-double `floor(x*10^sc+0.5)` shortcut
-    * is NOT equivalent, because the decimal cast rounds the double's
-    * shortest-decimal rendering (8.165 → 8.17) while binary
-    * arithmetic sees 816.4999... — via
-    * [[graft.functions.Kernels.moneyScaled]], a codegen expression
-    * that renders the same `Double.toString` and parses it straight
-    * into a scaled long (no BigDecimal/Decimal allocation per row —
-    * the long→DECIMAL(20,0) widening for the sum buffer rides the
-    * compact-long path), summed as DECIMAL so a beyond-2^63 group
-    * total NULLs like the default route instead of wrapping a raw
-    * long; one decimal reconstruction per GROUP at the end (scaled
-    * integer × 10^-sc literal, re-cast to the default route's
-    * DECIMAL(28,sc) so the flag never changes the visible schema).
-    * Bit-identical totals by construction (spec-proven value AND
-    * per-row parity, incl. the 8.165-class traps). Measured at
-    * sf0.1: q1 ~1.0 s (DECIMAL) → 0.37 s (fast) vs ~0.21 s plain
-    * double — the exactness tax drops from ~4.7× to ~1.8× (and most
-    * of the residual is the shared scan). NaN/Infinity inputs NULL
-    * out per row exactly like the decimal cast. */
-  private[graft] def sumExact(s: SparkSession,
-                              c: org.apache.spark.sql.Column, sc: Int) =
-    if (fastSums(s))
-      (sum(graft.functions.GraftFunctions.money_scaled(c, sc)
-        .cast(DecimalType(20, 0))) *
-        lit(java.math.BigDecimal.ONE.movePointLeft(sc)))
-        .cast(DecimalType(28, sc))
-    else sum(c.cast(DecimalType(18, sc)))
+    * Each row becomes its scaled integer through
+    * [[graft.functions.Kernels.moneyScaled]], which keeps the decimal
+    * cast's rounding anchor: the cast rounds the double's
+    * shortest-decimal rendering (8.165 → 8.17), while a pure-double
+    * `floor(x*10^sc+0.5)` sees 816.4999... and is NOT equivalent. The
+    * kernel renders the same `Double.toString` and parses it straight
+    * into a scaled long (no BigDecimal per row), NULLs NaN/Infinity
+    * and out-of-range values (or throws under ANSI) as the cast does.
+    * The longs are summed as DECIMAL(20,0), so a group total beyond
+    * 2^63 NULLs instead of wrapping, and the decimal is rebuilt once
+    * per group (scaled integer × 10^-sc). Round6Spec pins value,
+    * schema and per-row parity with the DECIMAL cast, including the
+    * 8.165-class traps. Measured at sf0.1: q1 ~1.0 s with the
+    * per-row DECIMAL cast → 0.37 s, against ~0.21 s for a plain
+    * double sum. */
+  private[graft] def sumExact(c: org.apache.spark.sql.Column, sc: Int) =
+    (sum(graft.functions.GraftFunctions.money_scaled(c, sc)
+      .cast(DecimalType(20, 0))) *
+      lit(java.math.BigDecimal.ONE.movePointLeft(sc)))
+      .cast(DecimalType(28, sc))
 
   /** TPC-H Q1 shape: full-scan grouped aggregate with derived measures. */
   def q1PricingSummary(s: SparkSession, dir: String): DataFrame =
@@ -79,13 +64,13 @@ object Relational {
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        sumExact(s, col("l_quantity"), 2).as("sum_qty"),
-        sumExact(s, col("l_extendedprice"), 2).as("sum_base_price"),
-        sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+        sumExact(col("l_quantity"), 2).as("sum_qty"),
+        sumExact(col("l_extendedprice"), 2).as("sum_base_price"),
+        sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
           .as("sum_disc_price"),
-        sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount"))
+        sumExact(col("l_extendedprice") * (lit(1) - col("l_discount"))
           * (lit(1) + col("l_tax")), 6).as("sum_charge"),
-        (sumExact(s, col("l_quantity"), 2).cast("double") / count(lit(1)))
+        (sumExact(col("l_quantity"), 2).cast("double") / count(lit(1)))
           .as("avg_qty"),
         count(lit(1)).as("count_order"))
 
@@ -97,7 +82,7 @@ object Relational {
         col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
         col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
         col("l_quantity") < 24)
-      .agg(sumExact(s, col("l_extendedprice") * col("l_discount"), 4)
+      .agg(sumExact(col("l_extendedprice") * col("l_discount"), 4)
         .as("revenue"))
 
   /** TPC-H Q3 shape: selective dims broadcast into the fact join, top-10. */
@@ -113,7 +98,7 @@ object Relational {
         col("o_custkey") === col("c_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy("l_orderkey", "o_orderdate")
-      .agg(sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+      .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
         .as("revenue"))
       // o_orderdate is TIMESTAMP_NTZ in the parquet; pin to UTC for epoch math
       .select(col("l_orderkey"),
@@ -145,7 +130,7 @@ object Relational {
         col("c_nationkey") === col("s_nationkey"))
       .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
-      .agg(sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+      .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
         .as("revenue"))
   }
 
@@ -175,14 +160,14 @@ object Relational {
   def qRollup(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .rollup("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n"), sumExact(s, col("l_quantity"), 2).as("sum_qty"))
+      .agg(count(lit(1)).as("n"), sumExact(col("l_quantity"), 2).as("sum_qty"))
 
   /** CUBE aggregate over order dimensions. */
   def qCube(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
       .cube("o_orderstatus", "o_orderpriority")
       .agg(count(lit(1)).as("n"),
-        sumExact(s, col("o_totalprice"), 2).as("sum_price"))
+        sumExact(col("o_totalprice"), 2).as("sum_price"))
 
   /** Trailing 30-day moving average of order totals per customer: a
     * RANGE frame over epoch-day — value-based bounds, so the frame is
@@ -212,7 +197,7 @@ object Relational {
       .groupingSets(
         Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus"))),
         col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"), sumExact(s, col("l_quantity"), 2).as("sum_qty"))
+      .agg(count(lit(1)).as("n"), sumExact(col("l_quantity"), 2).as("sum_qty"))
 
   /** PIVOT: per-customer event... order-priority totals spread into
     * one column per priority (explicit value list so the output
@@ -380,7 +365,7 @@ object Relational {
         (col("supp_nation") === nationB && col("cust_nation") === nationA))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).cast("long").as("l_year"))
-      .agg(sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+      .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
         .as("revenue"))
   }
 
@@ -421,10 +406,10 @@ object Relational {
       .join(supp, col("l_suppkey") === col("s_suppkey"))
       .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
       .agg(
-        sumExact(s, natVol, 4).cast("double").as("nation_revenue"),
-        sumExact(s, volumeD, 4).cast("double").as("total_revenue"),
-        (sumExact(s, natVol, 4).cast("double") /
-          sumExact(s, volumeD, 4).cast("double")).as("mkt_share"))
+        sumExact(natVol, 4).cast("double").as("nation_revenue"),
+        sumExact(volumeD, 4).cast("double").as("total_revenue"),
+        (sumExact(natVol, 4).cast("double") /
+          sumExact(volumeD, 4).cast("double")).as("mkt_share"))
   }
 
   /** TPC-H Q9 shape: profit by supplier nation and year. Cost model
@@ -446,7 +431,7 @@ object Relational {
       .join(supp, col("l_suppkey") === col("s_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name"), year(col("o_orderdate")).cast("long").as("o_year"))
-      .agg(sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")) -
+      .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")) -
         col("p_retailprice") * col("l_quantity") * lit(0.5), 4)
         .as("sum_profit"))
   }
@@ -467,7 +452,7 @@ object Relational {
       .join(cust, col("o_custkey") === col("c_custkey"))
       .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
       .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-      .agg(sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+      .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
         .as("revenue"))
       // sort the DOUBLE representation: the DuckDB oracle orders by the
       // double-cast alias, and two revenues distinct in decimal but
@@ -508,10 +493,10 @@ object Relational {
       .otherwise(lit(0.0))
     li.join(part, col("l_partkey") === col("p_partkey"))
       .agg(
-        sumExact(s, promoVol, 4).cast("double").as("promo_revenue"),
-        sumExact(s, volumeD, 4).cast("double").as("total_revenue"),
-        (lit(100.0) * sumExact(s, promoVol, 4).cast("double") /
-          sumExact(s, volumeD, 4).cast("double")).as("promo_pct"))
+        sumExact(promoVol, 4).cast("double").as("promo_revenue"),
+        sumExact(volumeD, 4).cast("double").as("total_revenue"),
+        (lit(100.0) * sumExact(promoVol, 4).cast("double") /
+          sumExact(volumeD, 4).cast("double")).as("promo_pct"))
   }
 
   /** TPC-H Q18 shape: large-volume orders (HAVING over a fact
@@ -530,7 +515,7 @@ object Relational {
                      minQty: Double = 300.0): DataFrame = {
     val big = Tables.lineitem(s, dir)
       .groupBy("l_orderkey")
-      .agg(sumExact(s, col("l_quantity"), 2).as("sum_qty"))
+      .agg(sumExact(col("l_quantity"), 2).as("sum_qty"))
       .filter(col("sum_qty") > minQty)
     val ord = Tables.orders(s, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
@@ -561,7 +546,7 @@ object Relational {
         (col("p_brand") === "Brand#3" && col("p_size").between(20, 50) &&
           col("l_quantity").between(20, 40)))
       .agg(
-        sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+        sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
           .cast("double").as("revenue"),
         count(lit(1)).as("n_lines"))
   }
@@ -589,7 +574,7 @@ object Relational {
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
       .groupBy("l_suppkey")
-      .agg(sumExact(s, col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+      .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
         .as("total_revenue"))
     val maxRev = rev.agg(max("total_revenue").as("max_revenue"))
     rev.join(broadcast(maxRev), col("total_revenue") === col("max_revenue"))
@@ -635,11 +620,11 @@ object Relational {
       .select("l_partkey", "l_quantity", "l_extendedprice")
       .join(parts, col("l_partkey") === col("p_partkey"))
     val avgQty = li.groupBy("p_partkey")
-      .agg((sumExact(s, col("l_quantity"), 2).cast("double") / count(lit(1)))
+      .agg((sumExact(col("l_quantity"), 2).cast("double") / count(lit(1)))
         .as("avg_qty"))
     li.join(avgQty, Seq("p_partkey"))
       .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
-      .agg((sumExact(s, col("l_extendedprice"), 2).cast("double") / lit(7.0))
+      .agg((sumExact(col("l_extendedprice"), 2).cast("double") / lit(7.0))
         .as("avg_yearly"))
   }
 
@@ -648,7 +633,7 @@ object Relational {
   def q22IdleCustomers(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.customer(s, dir)
     val avgBal = cust.filter(col("c_acctbal") > 0)
-      .agg((sumExact(s, col("c_acctbal"), 2).cast("double") / count(lit(1)))
+      .agg((sumExact(col("c_acctbal"), 2).cast("double") / count(lit(1)))
         .as("avg_bal"))
     val ordKeys = Tables.orders(s, dir).select("o_custkey")
     cust.join(broadcast(avgBal))
@@ -656,7 +641,7 @@ object Relational {
       .join(ordKeys, col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("n_cust"),
-        sumExact(s, col("c_acctbal"), 2).cast("double").as("total_bal"))
+        sumExact(col("c_acctbal"), 2).cast("double").as("total_bal"))
   }
 
   /** TPC-H Q21 shape: suppliers who kept finished orders waiting —
@@ -762,7 +747,7 @@ object Relational {
       .join(broadcast(Tables.part(s, dir).filter(col("p_size") <= 10)
         .select("p_partkey")), col("l_partkey") === col("p_partkey"))
       .groupBy("l_suppkey", "l_partkey")
-      .agg(sumExact(s, col("l_quantity"), 2).as("sq"))
+      .agg(sumExact(col("l_quantity"), 2).as("sq"))
       .filter(col("sq") > minQty)
       .select("l_suppkey")
     Tables.supplier(s, dir).select("s_suppkey", "s_name")
@@ -1178,10 +1163,10 @@ object Relational {
   def qUnpivot(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .groupBy("l_returnflag")
-      .agg(sumExact(s, col("l_quantity"), 2).cast("double").as("qty"),
-        sumExact(s, col("l_extendedprice"), 2).cast("double").as("price"),
-        sumExact(s, col("l_discount"), 2).cast("double").as("disc"),
-        sumExact(s, col("l_tax"), 2).cast("double").as("tax"))
+      .agg(sumExact(col("l_quantity"), 2).cast("double").as("qty"),
+        sumExact(col("l_extendedprice"), 2).cast("double").as("price"),
+        sumExact(col("l_discount"), 2).cast("double").as("disc"),
+        sumExact(col("l_tax"), 2).cast("double").as("tax"))
       .select(col("l_returnflag"), expr(
         "stack(4, 'quantity', qty, 'extendedprice', price, " +
           "'discount', disc, 'tax', tax) AS (measure, total)"))
@@ -1239,7 +1224,7 @@ object Relational {
     val monthly = Tables.orders(s, dir)
       .groupBy((year(col("o_orderdate")) * 100 +
         month(col("o_orderdate"))).cast("long").as("ym"))
-      .agg((sumExact(s, col("o_totalprice"), 2) * 100).cast("long")
+      .agg((sumExact(col("o_totalprice"), 2) * 100).cast("long")
         .as("rev_cents"))
     monthly
       .withColumn("prev_cents",

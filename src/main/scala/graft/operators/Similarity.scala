@@ -3,9 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, Kernels}
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -523,72 +525,33 @@ object Similarity {
           col("embedding").as("c_emb")),
       nlist, rounds)
 
-  /** Driver-side replica of [[graft.functions.Kernels.cosine]]:
-    * float→double per element, ascending-dim accumulation, 0.0 for a
-    * zero norm — the identical IEEE sequence, so scores are
-    * byte-equal with the kernel's. */
-  private def cosineDrv(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
-
-  /** Driver-side replica of [[graft.functions.Kernels.cosineTopR]]'s
-    * insertion sort — cents MUST arrive id-ascending (the
-    * array_sort(collect_list(struct(id, emb))) order the kernel
-    * sees); strict `>` displacement keeps equal sims in id order,
-    * reproducing row_number() OVER (ORDER BY cos DESC, id). */
-  private def topRDrv(vec: Array[Float],
-                      cents: Array[(Long, Array[Float])],
-                      r: Int): (Array[Long], Array[Double], Int) = {
-    val keep = math.min(r, cents.length)
-    val ids = new Array[Long](keep)
-    val sims = new Array[Double](keep)
-    var filled = 0
-    var i = 0
-    while (i < cents.length) {
-      val (id, cEmb) = cents(i)
-      val sim = cosineDrv(vec, cEmb)
-      if (filled < keep || sim > sims(filled - 1)) {
-        var pos = if (filled < keep) filled else keep - 1
-        while (pos > 0 && sims(pos - 1) < sim) pos -= 1
-        var j = math.min(filled, keep - 1)
-        while (j > pos) { sims(j) = sims(j - 1); ids(j) = ids(j - 1); j -= 1 }
-        sims(pos) = sim
-        ids(pos) = id
-        if (filled < keep) filled += 1
-      }
-      i += 1
-    }
-    (ids, sims, filled)
-  }
-
   /** Driver-side deferred acceptance — the identical round semantics
     * as the distributed [[cappedAssignTo]] loop: in round r every
     * still-unassigned vector proposes to its r-th preference, each
     * centroid accepts (cos desc, vec_id asc) up to remaining
-    * capacity. Returns (vec_id, centroid_id, cos_sim, pref_used). */
-  private def assignDrv(vecs: Array[(Long, Array[Float])],
-                        cents: Array[(Long, Array[Float])],
+    * capacity. Preferences come from [[Kernels.cosineTopR]] over the
+    * id-ordered (id, emb) array the distributed path's
+    * array_sort(collect_list(struct(...))) builds. Returns (vec_id,
+    * centroid_id, cos_sim, pref_used). */
+  private def assignDrv(vecs: Array[(Long, ArrayData)],
+                        cents: Array[(Long, ArrayData)],
                         nlist: Int, rounds: Int)
       : Array[(Long, Long, Double, Long)] = {
     import scala.collection.mutable
-    val sorted = cents.sortBy(_._1)
-    val prefs = vecs.map { case (id, v) => id -> topRDrv(v, sorted, rounds) }
+    val centsArr = new GenericArrayData(cents.sortBy(_._1).map {
+      case (id, e) => new GenericInternalRow(Array[Any](id, e)) })
+    val prefs = vecs.map { case (id, v) =>
+      id -> Kernels.cosineTopR(v, centsArr, rounds) }
     val cap = (vecs.length.toLong * 5L + (4L * nlist - 1L)) / (4L * nlist)
     val rem = mutable.LongMap.empty[Long].withDefaultValue(cap)
     val out = mutable.ArrayBuffer.empty[(Long, Long, Double, Long)]
     var unassigned = prefs
     for (r <- 1 to rounds) {
       val byCent = unassigned
-        .filter { case (_, (_, _, filled)) => filled >= r }
-        .map { case (id, (ids, sims, _)) => (ids(r - 1), sims(r - 1), id) }
+        .filter { case (_, p) => p.numElements() >= r }
+        .map { case (id, p) =>
+          val pref = p.getStruct(r - 1, 2)
+          (pref.getLong(0), pref.getDouble(1), id) }
         .groupBy(_._1)
       val takenIds = mutable.LongMap.empty[Unit]
       byCent.foreach { case (cent, cands) =>
@@ -607,6 +570,11 @@ object Similarity {
     out.toArray
   }
 
+  /** A collected `array<float>` column as the [[ArrayData]] the
+    * kernels read, wrapped once per row. */
+  private def embAt(r: org.apache.spark.sql.Row, i: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](i).toArray)
+
   /** Byte-budget gate for the embedding driver twins: rows ×
     * (8 + 4·dim) packed payload against [[DriverCutoff.budgetBytes]]
     * — the kcenterSelect contract. Returns the collected corpus when
@@ -614,7 +582,7 @@ object Similarity {
     * function of its input identity, so the count and first-row
     * probes run once per [[FrameCache.planKey]], not on every call. */
   private def collectEmbsUnder(embs: DataFrame, budget: Long)
-      : Option[Array[(Long, Array[Float])]] = {
+      : Option[Array[(Long, ArrayData)]] = {
     val corpus = embs.select(col("vec_id"), col("embedding"))
     val (nRows, dim) = FrameCache.scalar(
         s"embShape:${FrameCache.planKey(corpus)}") {
@@ -622,8 +590,7 @@ object Similarity {
         .map(_.getSeq[Float](1).length).getOrElse(0))
     }
     if (nRows * (8L + 4L * dim) <= budget)
-      Some(corpus.collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
+      Some(corpus.collect().map(r => (r.getLong(0), embAt(r, 1))))
     else None
   }
 
@@ -639,9 +606,9 @@ object Similarity {
     // size-adaptive driver twin ([[DriverCutoff]]): the distributed
     // acceptance loop pays ~10 checkpoint/collect jobs per call over
     // KB-scale frames at sf0.1 (profiled: emb_capped_lloyd = 78 jobs
-    // via two of these calls). Identical arithmetic — the cosine /
-    // top-R replicas above are the kernel's own IEEE sequences, the
-    // acceptance is the same (cos desc, id) order, the capacity the
+    // via two of these calls). Identical arithmetic — the
+    // preferences are the distributed path's own cosine top-R kernel,
+    // the acceptance is the same (cos desc, id) order, the capacity the
     // same integer formula — so the assignment is byte-equal
     // (Round13Spec pins the boundary). Above the budget the
     // distributed rounds run UNCHANGED.
@@ -651,7 +618,7 @@ object Similarity {
         import spark.implicits._
         val centArr = cents
           .select(col("centroid_id").cast("long"), col("c_emb"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+          .collect().map(r => (r.getLong(0), embAt(r, 1)))
         val asg = assignDrv(vecs, centArr, nlist, rounds)
         return spark.sparkContext.parallelize(asg.toSeq, 32)
           .toDF("vec_id", "centroid_id", "cos_sim", "pref_used")
@@ -740,7 +707,7 @@ object Similarity {
     // size-adaptive driver twin for the WHOLE alternation (not just
     // the per-iteration assignment): below the byte budget the
     // corpus collects once and both halves run in memory — the
-    // assignment via the kernel-replica acceptance ([[assignDrv]]),
+    // assignment via the kernel-driven acceptance ([[assignDrv]]),
     // the mean update with the identical floor(x·1e6) long sums
     // (commutative — the distributed partial-agg order never
     // mattered) and the identical (s.toDouble / n / 1e6).toFloat
@@ -751,7 +718,6 @@ object Similarity {
         val spark = embs.sparkSession
         import spark.implicits._
         var centArr = vecs.filter(_._1 < nlist)
-          .map { case (id, v) => (id, v) }
         var asg: Array[(Long, Long, Double, Long)] = null
         val byId = vecs.toMap
         for (i <- 1 to iters) {
@@ -762,16 +728,17 @@ object Similarity {
             asg.foreach { case (vid, cent, _, _) =>
               val v = byId(vid)
               val (s, n) = sums.getOrElse(cent,
-                (new Array[Long](v.length), 0L))
+                (new Array[Long](v.numElements()), 0L))
               var d = 0
-              while (d < v.length) {
-                s(d) += math.floor(v(d).toDouble * 1e6).toLong
+              while (d < v.numElements()) {
+                s(d) += math.floor(v.getFloat(d).toDouble * 1e6).toLong
                 d += 1
               }
               sums(cent) = (s, n + 1L)
             }
             centArr = sums.toArray.map { case (cent, (s, n)) =>
-              (cent, s.map(x => (x.toDouble / n / 1e6).toFloat))
+              (cent, UnsafeArrayData.fromPrimitiveArray(
+                s.map(x => (x.toDouble / n / 1e6).toFloat)): ArrayData)
             }
           }
         }
@@ -915,35 +882,34 @@ object Similarity {
     // axis build pays 1 + iters sequential scan+collect jobs
     // (profiled: emb_pca 19 driver jobs at sf0.1). The per-row
     // contribution kernel is invoked DIRECTLY (same
-    // Kernels.centeredPowerContrib over a GenericArrayData wrapper),
+    // Kernels.centeredPowerContrib over the collected vectors),
     // the per-dim reductions are commutative Long sums rendered
     // through BigDecimal.doubleValue exactly like the DECIMAL(38,0)
     // column, and the normalization is the identical IEEE sequence —
-    // axis byte-equal (Round13Spec). Above the budget, or when a
-    // per-dim sum leaves the Long range, the scans run UNCHANGED.
+    // axis byte-equal (Round13Spec). Above the budget, when the
+    // vectors differ in length, or when a per-dim sum leaves the Long
+    // range, the scans run UNCHANGED.
     collectEmbsUnder(embs, driverBudget) match {
-      case Some(vecs) if vecs.nonEmpty => try {
-        val dims = vecs(0)._2.length
+      case Some(vecs) if vecs.nonEmpty && vecs.forall(
+          _._2.numElements() == vecs(0)._2.numElements()) => try {
+        val dims = vecs(0)._2.numElements()
         val n = vecs.length.toLong
         val muSum = new Array[Long](dims)
         vecs.foreach { case (_, e) =>
           var d = 0
           while (d < dims) {
             muSum(d) = Math.addExact(muSum(d),
-              math.floor(e(d).toDouble * 1e6).toLong)
+              math.floor(e.getFloat(d).toDouble * 1e6).toLong)
             d += 1
           }
         }
         val mu = muSum.map(s =>
           new java.math.BigDecimal(s).doubleValue() / n / 1e6)
         var v = Array.fill(dims)(1.0)
-        val wrapped = vecs.map { case (_, e) =>
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(e) }
         for (_ <- 1 to iters) {
           val wSum = new Array[Long](dims)
-          wrapped.foreach { arr =>
-            val c = graft.functions.Kernels
-              .centeredPowerContrib(arr, mu, v)
+          vecs.foreach { case (_, e) =>
+            val c = Kernels.centeredPowerContrib(e, mu, v)
             var d = 0
             while (d < dims) {
               wSum(d) = Math.addExact(wSum(d), c.getLong(d)); d += 1 }
@@ -1160,7 +1126,7 @@ object Similarity {
     // each paid a join + rank window + checkpoint (profiled: 54–60
     // driver jobs per ann_graph_search/recall execution at sf0.1) —
     // over frames the byte budget says fit on the driver whole. The
-    // walk replays EXACTLY: kernel-replica cosine ([[cosineDrv]]),
+    // walk replays EXACTLY: the kernel's own [[Kernels.cosine]],
     // (cos desc, id asc) ranks, beam ∪ out-neighbors expansion,
     // final self-drop + top-k reusing the beam's scores. Collected
     // inputs are the cached cluster membership and kNN arcs (both
@@ -1194,7 +1160,7 @@ object Similarity {
         val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
         qsArr.foreach { case (qid, qv) =>
           val routed = cents
-            .map { case (cid, ce) => (cid, cosineDrv(qv, ce)) }
+            .map { case (cid, ce) => (cid, Kernels.cosine(qv, ce)) }
             .sortWith { case ((i1, c1), (i2, c2)) =>
               val c = java.lang.Double.compare(c1, c2)
               if (c != 0) c > 0 else i1 < i2
@@ -1208,7 +1174,7 @@ object Similarity {
               beamScored.map(_._1).flatMap(v =>
                 adj.getOrElse(v, none))).distinct
             beamScored = cand
-              .map(v => (v, cosineDrv(qv, byId(v))))
+              .map(v => (v, Kernels.cosine(qv, byId(v))))
               .sortWith { case ((v1, c1), (v2, c2)) =>
                 val c = java.lang.Double.compare(c1, c2)
                 if (c != 0) c > 0 else v1 < v2
@@ -1771,7 +1737,7 @@ object Similarity {
     // selection runs over the bounded panel×pool frame, and its k−1
     // unrolled join+window+checkpoint steps cost ~25 driver jobs at
     // sf0.1 (profiled: search_mmr 33 jobs). Below the byte budget
-    // the greedy replays driver-side: kernel-replica pairwise
+    // the greedy replays driver-side: kernel ([[Kernels.cosine]]) pairwise
     // cosines, the same λ·rel − (1−λ)·maxSim IEEE sequence, (score
     // desc, id asc) picks. Byte-equal (Round13Spec). Above the
     // budget the unrolled distributed steps run UNCHANGED.
@@ -1786,8 +1752,7 @@ object Similarity {
       import spark.implicits._
       import scala.collection.mutable
       val rowsArr = withEmbLazy.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getSeq[Float](3).toArray))
+        (r.getLong(0), r.getLong(1), r.getDouble(2), embAt(r, 3)))
       val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
       rowsArr.groupBy(_._1).foreach { case (qid, cands0) =>
         val cands = cands0.map { case (_, id, rel, emb) => (id, rel, emb) }
@@ -1796,7 +1761,7 @@ object Similarity {
             val c = java.lang.Double.compare(x._2, y._2)
             if (c > 0 || (c == 0 && x._1 < y._1)) x else y
           }
-          val selected = mutable.ArrayBuffer[(Long, Array[Float])](
+          val selected = mutable.ArrayBuffer[(Long, ArrayData)](
             (firstPick._1, firstPick._3))
           out += ((qid, 1L, firstPick._1, firstPick._2 * lambda))
           for (pos <- 2 to k) {
@@ -1809,7 +1774,7 @@ object Similarity {
                 // distributed max_sim aggregate
                 var maxSim = Double.NegativeInfinity
                 selected.foreach { case (_, sEmb) =>
-                  val s = cosineDrv(emb, sEmb)
+                  val s = Kernels.cosine(emb, sEmb)
                   if (s > maxSim) maxSim = s
                 }
                 (id, rel * lambda - maxSim * (1 - lambda))

@@ -796,8 +796,9 @@ object ReactiveStreams {
     * trigger pays O(wave-matched index files), not O(corpus scan).
     * The plain stream-static form above never shuffles the index
     * but still SCANS it per trigger — measured per-trigger cost
-    * grows with the corpus (2.75 s → 4.62 s steady on a 10× index,
-    * tools/AdmitProbe); this form pushes the wave's band keys and
+    * grows with the corpus (steady mean 4.029 s → 4.508 s on a 10×
+    * index, ADMIT_PROBE_r11.json); this form pushes the wave's band
+    * keys and
     * matched candidate ids into the postings/sets scans as literal
     * `isin` filters (or a planner-chosen semi-join past
     * `pushdownCap`), which parquet row-group stats turn into

@@ -97,4 +97,26 @@ class InventorySpec extends AnyFunSuite {
       s"PLANS.md is stale — rerun `sbt \"runMain graft.Plans\"`; " +
         s"missing: ${missing.toSeq.sorted.mkString(", ")}")
   }
+
+  test("the main source defines exactly four programs") {
+    // each `def main` named by its file's package and the object
+    // declared last before it: a probe program that no harness runs
+    // fails here instead of piling up unseen
+    import scala.jdk.CollectionConverters._
+    val pkg = "(?m)^package\\s+([\\w.]+)".r
+    val obj = "(?m)^\\s*object\\s+(\\w+)".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val prefix = pkg.findFirstMatchIn(src).map(_.group(1) + ".")
+          .getOrElse("")
+        "\\bdef\\s+main\\s*\\(".r.findAllMatchIn(src).map(m =>
+          prefix + obj.findAllMatchIn(src.substring(0, m.start))
+            .map(_.group(1)).toSeq.lastOption.getOrElse("<no object>"))
+      }.toSet
+    finally walk.close()
+    assert(mains === Set("graft.Bench", "graft.Verify", "graft.Explain",
+      "graft.Plans"))
+  }
 }

@@ -171,4 +171,17 @@ class Round13Spec extends AnyFunSuite {
     assert(vD.toSeq === vX.toSeq, "axis diverges across the cutoff")
     assert(muX(0) > 9e11, "the mean of dimension 0 wrapped")
   }
+
+  test("cutoff boundary: pcaAxis on vectors of unequal length equals " +
+      "the distributed path") {
+    val embs = Seq((0L, Array(1f, 2f, 3f)), (1L, Array(4f, 5f)),
+        (2L, Array(7f, 8f, 9f)), (3L, Array(1f, 0f)))
+      .toDF("vec_id", "embedding")
+    val (muD, vD) = Similarity.pcaAxis(embs, iters = 3,
+      driverBudget = DriverCutoff.budgetBytes)
+    val (muX, vX) = Similarity.pcaAxis(embs, iters = 3,
+      driverBudget = 0L)
+    assert(muD.toSeq === muX.toSeq, "means diverge across the cutoff")
+    assert(vD.toSeq === vX.toSeq, "axis diverges across the cutoff")
+  }
 }

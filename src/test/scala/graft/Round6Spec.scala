@@ -1,12 +1,17 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.MoneyScaledExpr
 import graft.operators._
 import graft.sources.Tables
 
-/** Round-6 additions: scaled-BIGINT money-sum fast path parity. */
+/** Round-6 additions: scaled-BIGINT money-sum parity with the DECIMAL cast. */
 class Round6Spec extends AnyFunSuite {
   import TestSession._
 
@@ -20,59 +25,50 @@ class Round6Spec extends AnyFunSuite {
     }
   }
 
-  private def withFastSums[A](on: Boolean)(body: => A): A =
-    withConf("spark.graft.fastMoneySums", on)(body)
+  /** `df` with every [[Relational.sumExact]] in its plan replaced by
+    * the DECIMAL reference `sum(c.cast(DecimalType(18, sc)))` over
+    * the same input column: the per-row decimal cast and a
+    * BigDecimal sum buffer. */
+  private def withDecimalSums(df: DataFrame): DataFrame =
+    GraftColumnBridge.ofRows(spark,
+      df.queryExecution.analyzed.transformAllExpressions {
+        case c: Cast if c.dataType.isInstanceOf[DecimalType] &&
+            c.child.exists(_.isInstanceOf[MoneyScaledExpr]) =>
+          val m = c.child.collectFirst { case m: MoneyScaledExpr => m }.get
+          Sum(Cast(m.child, DecimalType(18, m.scale))).toAggregateExpression()
+      })
 
-  test("SPARK_GRAFT_FAST_MONEY is validated when the session is built") {
-    assert(GraftSession.fastMoneySums(None) === "true")
-    assert(GraftSession.fastMoneySums(Some("FALSE")) === "false")
-    assert(GraftSession.fastMoneySums(Some("True")) === "true")
-    val e = intercept[IllegalArgumentException](
-      GraftSession.fastMoneySums(Some("yes")))
-    assert(e.getMessage.contains("SPARK_GRAFT_FAST_MONEY"))
-    assert(e.getMessage.contains("'yes'"))
-  }
-
-  test("fastMoneySums: q1/q6 value parity between DECIMAL and BIGINT routes") {
-    // the two routes differ ONLY in the aggregation buffer; totals
-    // must agree to the exact decimal VALUE and (since round 7) the
-    // visible SCHEMA: the fast route re-casts its reconstruction to
-    // the default route's DECIMAL(28,sc), so flipping the flag can
-    // never change a consumer-visible dtype
-    val slowSchema = withFastSums(false)(
-      Relational.q1PricingSummary(spark, sf).schema)
-    val fastSchema = withFastSums(true)(
-      Relational.q1PricingSummary(spark, sf).schema)
-    assert(slowSchema === fastSchema, "flag must not change the schema")
-    def snapshot() = {
-      val q1 = Relational.q1PricingSummary(spark, sf)
-        .orderBy("l_returnflag", "l_linestatus").collect()
-        .map(r => (r.getString(0), r.getString(1),
-          r.getDecimal(2).stripTrailingZeros,
-          r.getDecimal(3).stripTrailingZeros,
-          r.getDecimal(4).stripTrailingZeros,
-          r.getDecimal(5).stripTrailingZeros,
-          r.getDouble(6), r.getLong(7)))
-      val q6 = Relational.q6Revenue(spark, sf).collect()
-        .map(r => r.getDecimal(0).stripTrailingZeros)
+  test("money sums: q1/q5/q6/q9/q18 equal the DECIMAL-cast reference " +
+    "in value and schema") {
+    // the scaled-BIGINT sum differs from the reference ONLY in the
+    // aggregation buffer; totals must agree to the exact decimal
+    // VALUE and the visible SCHEMA: DECIMAL(28,sc), the type the
+    // reference's sum of DECIMAL(18,sc) has
+    val queries = Seq(
+      Relational.q1PricingSummary(spark, sf)
+        .orderBy("l_returnflag", "l_linestatus") ->
+        Seq("sum_qty" -> 2, "sum_base_price" -> 2, "sum_disc_price" -> 4,
+          "sum_charge" -> 6),
+      Relational.q6Revenue(spark, sf) -> Seq("revenue" -> 4),
       // the round-7 extension keys: q5/q9 decimal-heavy star joins
-      // and q18's HAVING-on-sum, each flagged through sumExact
-      val q5 = Relational.q5LocalSupplier(spark, sf).orderBy("n_name")
-        .collect().map(r => (r.getString(0),
-          r.getDecimal(1).stripTrailingZeros))
-      val q9 = Relational.q9Profit(spark, sf).orderBy("n_name", "o_year")
-        .collect().map(r => (r.getString(0), r.getLong(1),
-          r.getDecimal(2).stripTrailingZeros))
-      val q18 = Relational.q18LargeOrders(spark, sf, minQty = 80.0)
-        .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(5)))
-      (q1.toSeq, q6.toSeq, q5.toSeq, q9.toSeq, q18.toSeq)
+      // and q18's HAVING-on-sum, each summed through sumExact
+      Relational.q5LocalSupplier(spark, sf).orderBy("n_name") ->
+        Seq("revenue" -> 4),
+      Relational.q9Profit(spark, sf).orderBy("n_name", "o_year") ->
+        Seq("sum_profit" -> 4),
+      Relational.q18LargeOrders(spark, sf, minQty = 80.0) -> Nil)
+    def sumsScaled(d: DataFrame) = d.queryExecution.analyzed.exists(
+      _.expressions.exists(_.exists(_.isInstanceOf[MoneyScaledExpr])))
+    for ((df, money) <- queries) {
+      val ref = withDecimalSums(df)
+      assert(sumsScaled(df) && !sumsScaled(ref))
+      for ((c, sc) <- money)
+        assert(df.schema(c).dataType === DecimalType(28, sc), c)
+      assert(df.schema === ref.schema)
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, "every query must produce rows at the test SF")
+      assert(rows === ref.collect().toSeq)
     }
-    val slow = withFastSums(false)(snapshot())
-    val fast = withFastSums(true)(snapshot())
-    assert(slow === fast)
-    assert(slow._1.nonEmpty && slow._1.head._8 > 0)
-    assert(slow._3.nonEmpty && slow._4.nonEmpty && slow._5.nonEmpty,
-      "extension queries must produce rows at the test SF")
   }
 
   test("money_scaled: NaN/Infinity NULL out like the decimal cast") {
@@ -104,9 +100,10 @@ class Round6Spec extends AnyFunSuite {
           * 100).cast("long"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
       .toSeq
-    def total(fast: Boolean) = withFastSums(fast)(
-      df.agg(Relational.sumExact(spark, col("v"), 2)).head()
-        .getDecimal(0).stripTrailingZeros)
+    def total(fast: Boolean) = df.agg(
+        if (fast) Relational.sumExact(col("v"), 2)
+        else sum(col("v").cast(DecimalType(18, 2))))
+      .head().getDecimal(0).stripTrailingZeros
     def withAnsi[A](on: Boolean)(body: => A): A =
       withConf("spark.sql.ansi.enabled", on)(body)
     withAnsi(on = false) {
