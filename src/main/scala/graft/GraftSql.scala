@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 
-import graft.functions.{CosineArgmaxExpr, DotProductExpr, L2ArgminExpr, CosineSimExpr, Md5MinHashBandsExpr, Md5RhpLshExpr, Md5SimHash60Expr, MinHashBandsExpr, QuantizeAuditExpr, RhpLshExpr, ShinglesExpr, SimHash64Expr, SortedJaccardExpr, SortedJaccardLongExpr}
+import graft.functions.GraftFunctions._
+import graft.functions.KmvSketch.kmv_distinct
 import graft.sources.Tables
 
 /** SQL surface of the engine: registers the custom Catalyst
@@ -11,48 +12,38 @@ import graft.sources.Tables
   * `spark.sql(...)` as well as the DataFrame API.
   */
 object GraftSql {
-  /** Register graft's custom functions for SQL use (idempotent). */
+  /** Register graft's custom functions for SQL use (idempotent). Each
+    * name calls the DataFrame function of the same name. */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64Expr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      es => CosineSimExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      es => DotProductExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("rhp_lsh",
-      es => RhpLshExpr(es(0), intArg(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      es => MinHashBandsExpr(es(0), intArg(es(1)), intArg(es(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("text_shingles",
-      es => ShinglesExpr(es(0), intArg(es(1))), "scala_udf")
+    def register(name: String)(build: Seq[Column] => Column): Unit =
+      reg.createOrReplaceTempFunction(name,
+        es => GraftColumnBridge.expression(
+          build(es.map(GraftColumnBridge.column))), "scala_udf")
+    register("simhash64")(cs => simhash64(cs(0)))
+    register("cosine_sim")(cs => cosine_sim(cs(0), cs(1)))
+    register("dot_product")(cs => dot_product(cs(0), cs(1)))
+    register("rhp_lsh")(cs => rhp_lsh(cs(0), intArg(cs(1))))
+    register("minhash_bands")(cs =>
+      minhash_bands(cs(0), intArg(cs(1)), intArg(cs(2))))
+    register("text_shingles")(cs => text_shingles(cs(0), intArg(cs(1))))
     // md5 ("auditable") hash family — buckets/signatures re-derivable
     // in any engine with md5(); the cross-engine oracle family
-    reg.createOrReplaceTempFunction("md5_simhash60",
-      es => Md5SimHash60Expr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("md5_rhp_lsh",
-      es => Md5RhpLshExpr(es(0), intArg(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("md5_minhash_bands",
-      es => Md5MinHashBandsExpr(es(0), intArg(es(1)), intArg(es(2))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_argmax",
-      es => CosineArgmaxExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("quantize_audit",
-      es => QuantizeAuditExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("l2_argmin",
-      es => L2ArgminExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_jaccard",
-      es => SortedJaccardExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_jaccard_long",
-      es => SortedJaccardLongExpr(es(0), es(1)), "scala_udf")
+    register("md5_simhash60")(cs => md5_simhash60(cs(0)))
+    register("md5_rhp_lsh")(cs => md5_rhp_lsh(cs(0), intArg(cs(1))))
+    register("md5_minhash_bands")(cs =>
+      md5_minhash_bands(cs(0), intArg(cs(1)), intArg(cs(2))))
+    register("cosine_argmax")(cs => cosine_argmax(cs(0), cs(1)))
+    register("quantize_audit")(cs => quantize_audit(cs(0)))
+    register("l2_argmin")(cs => l2_argmin(cs(0), cs(1)))
+    register("sorted_jaccard")(cs => sorted_jaccard(cs(0), cs(1)))
+    register("sorted_jaccard_long")(cs => sorted_jaccard_long(cs(0), cs(1)))
     // aggregate: mergeable KMV distinct sketch over a BIGINT hash
-    reg.createOrReplaceTempFunction("kmv_distinct",
-      es => graft.functions.KmvDistinctAgg(es(0), intArg(es(1)))
-        .toAggregateExpression(), "scala_udf")
+    register("kmv_distinct")(cs => kmv_distinct(cs(0), intArg(cs(1))))
   }
 
-  private def intArg(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-    e.eval(null) match {
+  private def intArg(c: Column): Int =
+    GraftColumnBridge.expression(c).eval(null) match {
       case i: Int => i
       case l: Long => l.toInt
       case other => throw new IllegalArgumentException(

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.GraftColumnBridge
@@ -12,10 +13,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static, codegen-callable kernels. Keeping the per-row work in
-  * static methods lets the Expressions below emit a single call in
-  * `doGenCode`, so they stay inside whole-stage codegen (no virtual
-  * `eval` dispatch per row) while the loops themselves are tight
-  * JIT-friendly Java.
+  * static methods lets each expression (a `StaticInvoke` built by
+  * [[GraftFunctions]], or one of the classes below) emit a single
+  * call in generated code, so it stays inside whole-stage codegen (no
+  * virtual `eval` dispatch per row) while the loops themselves are
+  * tight JIT-friendly Java.
   */
 object Kernels {
   private final val Seed = 42L
@@ -839,17 +841,6 @@ object Kernels {
     }
 }
 
-/** 64-bit SimHash of an array<string> token column. */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhash64($c)")
-  override protected def withNewChildInternal(c: Expression): SimHash64Expr =
-    copy(child = c)
-}
-
 /** `lower`/`upper` of a UTF8_BINARY string under ICU case mappings
   * ([[Kernels.caseMap]]); [[graft.plans.CaseMapRule]] puts it in
   * place of Spark's `Lower`/`Upper`. */
@@ -943,304 +934,53 @@ case class BloomProbeExpr(filter: org.apache.spark.util.sketch.BloomFilter,
     copy(child = c)
 }
 
-/** Cosine similarity of two array<float> columns. */
-case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.cosine($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : CosineSimExpr = copy(left = l, right = r)
-}
-
-/** Raw inner product of two array<float> columns (the MIPS score —
-  * cosine without the norm), codegen'd. */
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.dot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : DotProductExpr = copy(left = l, right = r)
-}
-
-/** Word n-gram shingles (space-joined) of an array<string> tokens
-  * column. */
-case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, "shingle width must be positive")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.shingles(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingles($c, $n)")
-  override protected def withNewChildInternal(c: Expression): ShinglesExpr =
-    copy(child = c)
-}
-
-/** MinHash-LSH band bucket keys (array<long>, one per band) of an
-  * array<string> shingle column. */
-case class MinHashBandsExpr(child: Expression, bands: Int, rows: Int)
-    extends UnaryExpression {
-  require(bands > 0 && rows > 0, "bands and rows must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.minhashBands(input.asInstanceOf[ArrayData], bands, rows)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.minhashBands($c, $bands, $rows)")
-  override protected def withNewChildInternal(c: Expression): MinHashBandsExpr =
-    copy(child = c)
-}
-
-/** Gear rolling-hash CDC cut bounds (array<int>, includes 0 and the
-  * text length) — see [[Kernels.cdcGearCuts]]. */
-case class CdcGearCutsExpr(child: Expression, divisor: Int, minSize: Int)
-    extends UnaryExpression {
-  require(divisor > 0 && (divisor & (divisor - 1)) == 0,
-    "divisor must be a power of two")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.cdcGearCuts(input.asInstanceOf[UTF8String], divisor, minSize)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.cdcGearCuts($c, $divisor, $minSize)")
-  override protected def withNewChildInternal(c: Expression): CdcGearCutsExpr =
-    copy(child = c)
-}
-
-/** md5 sliding-window CDC cut bounds (array<int>, includes 0 and the
-  * text length) — see [[Kernels.cdcMd5Cuts]]. */
-case class CdcMd5CutsExpr(child: Expression, w: Int, divisor: Int,
-                          minSize: Int)
-    extends UnaryExpression {
-  require(w > 0 && divisor > 0 && minSize > 0,
-    "window, divisor and minSize must be positive")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.cdcMd5Cuts(input.asInstanceOf[UTF8String], w, divisor, minSize)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.cdcMd5Cuts($c, $w, $divisor, $minSize)")
-  override protected def withNewChildInternal(c: Expression): CdcMd5CutsExpr =
-    copy(child = c)
-}
-
-/** Merge-based Jaccard of two sorted distinct array<string> columns. */
-case class SortedJaccardExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Kernels.sortedJaccard($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : SortedJaccardExpr = copy(left = l, right = r)
-}
-
-/** Power-iteration contribution array (see
-  * [[Kernels.centeredPowerContrib]]); μ and v ride as broadcast
-  * reference objects inside whole-stage codegen. */
-case class PowerContribExpr(child: Expression, mu: Array[Double],
-                            v: Array[Double]) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.centeredPowerContrib(input.asInstanceOf[ArrayData], mu, v)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val muRef = ctx.addReferenceObj("mu", mu, "double[]")
-    val vRef = ctx.addReferenceObj("v", v, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.centeredPowerContrib($c, $muRef, $vRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): PowerContribExpr =
-    copy(child = c)
-}
-
-/** Centered projection (see [[Kernels.centeredDot]]). */
-case class CenteredDotExpr(child: Expression, mu: Array[Double],
-                           v: Array[Double]) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.centeredDot(input.asInstanceOf[ArrayData], mu, v)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val muRef = ctx.addReferenceObj("mu", mu, "double[]")
-    val vRef = ctx.addReferenceObj("v", v, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.centeredDot($c, $muRef, $vRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): CenteredDotExpr =
-    copy(child = c)
-}
-
-/** Z-normalized subsequence distance (see [[Kernels.znDist]]). */
-case class ZnDistExpr(child: Expression, q: Array[Double])
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.znDist(input.asInstanceOf[ArrayData], q)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("q", q, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.znDist($c, $qRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): ZnDistExpr =
-    copy(child = c)
-}
-
-/** Merge-based Jaccard of two sorted distinct long (hash) arrays. */
-case class SortedJaccardLongExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sortedJaccardLong(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Kernels.sortedJaccardLong($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : SortedJaccardLongExpr = copy(left = l, right = r)
-}
-
-/** MinHash-LSH band keys (array<long>, 60-bit) over the md5 hash
-  * family — cross-engine reproducible (see Kernels.md5MinhashBands). */
-case class Md5MinHashBandsExpr(child: Expression, bands: Int, rows: Int)
-    extends UnaryExpression {
-  require(bands > 0 && rows > 0, "bands and rows must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.md5MinhashBands(input.asInstanceOf[ArrayData], bands, rows)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.md5MinhashBands($c, $bands, $rows)")
-  override protected def withNewChildInternal(c: Expression): Md5MinHashBandsExpr =
-    copy(child = c)
-}
-
-/** 60-bit SimHash over the md5 hash family (cross-engine
-  * reproducible). */
-case class Md5SimHash60Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.md5Simhash60(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.md5Simhash60($c)")
-  override protected def withNewChildInternal(c: Expression): Md5SimHash60Expr =
-    copy(child = c)
-}
-
-/** Random-hyperplane LSH signature over the md5 hash family with a
-  * scaled-integer dot product (cross-engine reproducible). */
-case class Md5RhpLshExpr(child: Expression, planes: Int)
-    extends UnaryExpression {
-  require(planes > 0 && planes <= 63, "planes must be in 1..63")
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.md5RhpBits(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.md5RhpBits($c, $planes)")
-  override protected def withNewChildInternal(c: Expression): Md5RhpLshExpr =
-    copy(child = c)
-}
-
-/** Argmax-cosine centroid id of an array<float> row against a
-  * broadcast array<struct<centroid_id:bigint, c_emb:array<float>>>. */
-/** Argmin-L2 codebook assignment: struct(code, d2) of the nearest
-  * entry in a broadcast (code, c_v) struct array, ties → lowest
-  * code. */
-case class L2ArgminExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("code", LongType, nullable = false),
-    StructField("d2", DoubleType, nullable = false)))
-  override protected def nullSafeEval(vec: Any, cents: Any): Any =
-    Kernels.l2Argmin(vec.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (v, c) => s"graft.functions.Kernels.l2Argmin($v, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : L2ArgminExpr = copy(left = l, right = r)
-}
-
-case class CosineArgmaxExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(vec: Any, cents: Any): Any =
-    Kernels.cosineArgmax(vec.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (v, c) => s"graft.functions.Kernels.cosineArgmax($v, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : CosineArgmaxExpr = copy(left = l, right = r)
-}
-
-/** Top-R centroids by cosine (rank order) for a row vector against a
-  * broadcast (centroid_id, c_emb) struct array — one narrow pass
-  * ([[Kernels.cosineTopR]]). */
-case class CosineTopRExpr(left: Expression, right: Expression, r: Int)
-    extends BinaryExpression {
-  require(r > 0, s"top-R width must be positive, got $r")
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("centroid_id", LongType, nullable = false),
-    StructField("cos_sim", DoubleType, nullable = false))),
-    containsNull = false)
-  override protected def nullSafeEval(vec: Any, cents: Any): Any =
-    Kernels.cosineTopR(vec.asInstanceOf[ArrayData],
-      cents.asInstanceOf[ArrayData], r)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (v, c) => s"graft.functions.Kernels.cosineTopR($v, $c, $r)")
-  override protected def withNewChildrenInternal(l: Expression, rr: Expression)
-      : CosineTopRExpr = copy(left = l, right = rr)
-}
-
-/** One-pass int8 quantization audit of an array<float> column:
-  * struct(nonzero, scale, abs_err_scaled, max_err_scaled). */
-case class QuantizeAuditExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("nonzero", BooleanType, nullable = false),
-    StructField("scale", DoubleType, nullable = false),
-    StructField("abs_err_scaled", LongType, nullable = false),
-    StructField("max_err_scaled", LongType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.quantAudit(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.quantAudit($c)")
-  override protected def withNewChildInternal(c: Expression): QuantizeAuditExpr =
-    copy(child = c)
-}
-
-/** Random-hyperplane LSH bucket signature of an array<float> column. */
-case class RhpLshExpr(child: Expression, planes: Int) extends UnaryExpression {
-  require(planes > 0 && planes <= 64, "planes must be in 1..64")
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.rhpBits(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.rhpBits($c, $planes)")
-  override protected def withNewChildInternal(c: Expression): RhpLshExpr =
-    copy(child = c)
-}
-
-/** Column-level API for the custom expressions. */
+/** Column-level API for the custom expressions. Every kernel function
+  * is a Spark `StaticInvoke` of its [[Kernels]] method: generated code
+  * calls `graft.functions.Kernels.<method>(…)` inside whole-stage
+  * codegen, and interpreted evaluation finds the same method by
+  * reflection. A NULL input gives NULL; a non-null input never does,
+  * so the result is nullable exactly when an input is. */
 object GraftFunctions {
   private def toExpr(c: Column): Expression = GraftColumnBridge.expression(c)
   private def toCol(e: Expression): Column = GraftColumnBridge.column(e)
 
+  private def kernel(method: String, dataType: DataType,
+                     args: Expression*): Column =
+    toCol(StaticInvoke(Kernels.getClass, dataType, method, args,
+      propagateNull = true, returnNullable = false))
+
+  /** A driver-side `double[]` (centroid, axis, query pattern) as a
+    * reference object of the generated code. */
+  private def doubles(a: Array[Double]): Expression =
+    Literal(a, ObjectType(classOf[Array[Double]]))
+
+  private val LongArray = ArrayType(LongType, containsNull = false)
+  private val IntArray = ArrayType(IntegerType, containsNull = false)
+  private val L2ArgminType = StructType(Seq(
+    StructField("code", LongType, nullable = false),
+    StructField("d2", DoubleType, nullable = false)))
+  private val CosineTopRType = ArrayType(StructType(Seq(
+    StructField("centroid_id", LongType, nullable = false),
+    StructField("cos_sim", DoubleType, nullable = false))),
+    containsNull = false)
+  private val QuantizeAuditType = StructType(Seq(
+    StructField("nonzero", BooleanType, nullable = false),
+    StructField("scale", DoubleType, nullable = false),
+    StructField("abs_err_scaled", LongType, nullable = false),
+    StructField("max_err_scaled", LongType, nullable = false)))
+
   /** 64-bit SimHash of an array<string> of tokens. */
-  def simhash64(tokens: Column): Column = toCol(SimHash64Expr(toExpr(tokens)))
+  def simhash64(tokens: Column): Column =
+    kernel("simhash64", LongType, toExpr(tokens))
 
   /** Cosine similarity of two array<float> embedding columns. */
   def cosine_sim(a: Column, b: Column): Column =
-    toCol(CosineSimExpr(toExpr(a), toExpr(b)))
+    kernel("cosine", DoubleType, toExpr(a), toExpr(b))
 
   /** Raw inner product of two array<float> embedding columns (the
     * MIPS score). */
   def dot_product(a: Column, b: Column): Column =
-    toCol(DotProductExpr(toExpr(a), toExpr(b)))
+    kernel("dot", DoubleType, toExpr(a), toExpr(b))
 
   /** Double → scaled BIGINT with decimal-cast rounding semantics
     * (the exact money sum's per-row kernel). */
@@ -1254,73 +994,100 @@ object GraftFunctions {
     toCol(BloomProbeExpr(filter, toExpr(key)))
 
   /** Random-hyperplane LSH signature (long) of an array<float>. */
-  def rhp_lsh(vec: Column, planes: Int): Column =
-    toCol(RhpLshExpr(toExpr(vec), planes))
+  def rhp_lsh(vec: Column, planes: Int): Column = {
+    require(planes > 0 && planes <= 64, "planes must be in 1..64")
+    kernel("rhpBits", LongType, toExpr(vec), Literal(planes))
+  }
 
   /** MinHash-LSH band bucket keys of an array<string> of shingles. */
-  def minhash_bands(shingles: Column, bands: Int, rows: Int): Column =
-    toCol(MinHashBandsExpr(toExpr(shingles), bands, rows))
+  def minhash_bands(shingles: Column, bands: Int, rows: Int): Column = {
+    require(bands > 0 && rows > 0, "bands and rows must be positive")
+    kernel("minhashBands", LongArray, toExpr(shingles), Literal(bands),
+      Literal(rows))
+  }
 
   /** Word n-gram shingles (space-joined) of a token array. */
-  def text_shingles(tokens: Column, n: Int): Column =
-    toCol(ShinglesExpr(toExpr(tokens), n))
+  def text_shingles(tokens: Column, n: Int): Column = {
+    require(n > 0, "shingle width must be positive")
+    kernel("shingles", ArrayType(StringType, containsNull = false),
+      toExpr(tokens), Literal(n))
+  }
 
-  /** Gear rolling-hash CDC cut bounds of a text column. */
-  def cdc_gear_cuts(text: Column, divisor: Int, minSize: Int): Column =
-    toCol(CdcGearCutsExpr(toExpr(text), divisor, minSize))
+  /** Gear rolling-hash CDC cut bounds of a text column (array<int>,
+    * includes 0 and the text length). */
+  def cdc_gear_cuts(text: Column, divisor: Int, minSize: Int): Column = {
+    require(divisor > 0 && (divisor & (divisor - 1)) == 0,
+      "divisor must be a power of two")
+    kernel("cdcGearCuts", IntArray, toExpr(text), Literal(divisor),
+      Literal(minSize))
+  }
 
-  /** md5 sliding-window CDC cut bounds of a text column. */
-  def cdc_md5_cuts(text: Column, w: Int, divisor: Int, minSize: Int): Column =
-    toCol(CdcMd5CutsExpr(toExpr(text), w, divisor, minSize))
+  /** md5 sliding-window CDC cut bounds of a text column (array<int>,
+    * includes 0 and the text length). */
+  def cdc_md5_cuts(text: Column, w: Int, divisor: Int, minSize: Int): Column = {
+    require(w > 0 && divisor > 0 && minSize > 0,
+      "window, divisor and minSize must be positive")
+    kernel("cdcMd5Cuts", IntArray, toExpr(text), Literal(w),
+      Literal(divisor), Literal(minSize))
+  }
 
   /** Merge-based Jaccard of two sorted distinct string arrays. */
   def sorted_jaccard(a: Column, b: Column): Column =
-    toCol(SortedJaccardExpr(toExpr(a), toExpr(b)))
+    kernel("sortedJaccard", DoubleType, toExpr(a), toExpr(b))
 
   /** Merge-based Jaccard of two sorted distinct long (hash) arrays. */
   def sorted_jaccard_long(a: Column, b: Column): Column =
-    toCol(SortedJaccardLongExpr(toExpr(a), toExpr(b)))
+    kernel("sortedJaccardLong", DoubleType, toExpr(a), toExpr(b))
 
   /** Quantized power-iteration contributions for PCA. */
   def power_contrib(emb: Column, mu: Array[Double], v: Array[Double]): Column =
-    toCol(PowerContribExpr(toExpr(emb), mu, v))
+    kernel("centeredPowerContrib", LongArray, toExpr(emb), doubles(mu),
+      doubles(v))
 
   /** Centered projection onto a fixed axis (for ABTT correction). */
   def centered_dot(emb: Column, mu: Array[Double], v: Array[Double]): Column =
-    toCol(CenteredDotExpr(toExpr(emb), mu, v))
+    kernel("centeredDot", DoubleType, toExpr(emb), doubles(mu), doubles(v))
 
   /** Z-normalized subsequence distance to a fixed query pattern. */
   def zn_dist(seq: Column, q: Array[Double]): Column =
-    toCol(ZnDistExpr(toExpr(seq), q))
+    kernel("znDist", DoubleType, toExpr(seq), doubles(q))
 
   /** MinHash-LSH band keys over the md5 family (auditable: any engine
     * with md5() re-derives the buckets). */
-  def md5_minhash_bands(shingles: Column, bands: Int, rows: Int): Column =
-    toCol(Md5MinHashBandsExpr(toExpr(shingles), bands, rows))
+  def md5_minhash_bands(shingles: Column, bands: Int, rows: Int): Column = {
+    require(bands > 0 && rows > 0, "bands and rows must be positive")
+    kernel("md5MinhashBands", LongArray, toExpr(shingles), Literal(bands),
+      Literal(rows))
+  }
 
   /** 60-bit SimHash over the md5 family (auditable). */
   def md5_simhash60(tokens: Column): Column =
-    toCol(Md5SimHash60Expr(toExpr(tokens)))
+    kernel("md5Simhash60", LongType, toExpr(tokens))
 
   /** Random-hyperplane LSH signature over the md5 family with exact
     * scaled-integer dot products (auditable). */
-  def md5_rhp_lsh(vec: Column, planes: Int): Column =
-    toCol(Md5RhpLshExpr(toExpr(vec), planes))
+  def md5_rhp_lsh(vec: Column, planes: Int): Column = {
+    require(planes > 0 && planes <= 63, "planes must be in 1..63")
+    kernel("md5RhpBits", LongType, toExpr(vec), Literal(planes))
+  }
 
   /** Argmax-cosine centroid id against a broadcast centroid array. */
   def cosine_argmax(vec: Column, cents: Column): Column =
-    toCol(CosineArgmaxExpr(toExpr(vec), toExpr(cents)))
+    kernel("cosineArgmax", LongType, toExpr(vec), toExpr(cents))
 
   /** Top-R (centroid_id, cos_sim) preferences in rank order. */
-  def cosine_top_r(vec: Column, cents: Column, r: Int): Column =
-    toCol(CosineTopRExpr(toExpr(vec), toExpr(cents), r))
+  def cosine_top_r(vec: Column, cents: Column, r: Int): Column = {
+    require(r > 0, s"top-R width must be positive, got $r")
+    kernel("cosineTopR", CosineTopRType, toExpr(vec), toExpr(cents),
+      Literal(r))
+  }
 
   /** Argmin-L2 (code, d2) against a broadcast PQ codebook array. */
   def l2_argmin(vec: Column, cents: Column): Column =
-    toCol(L2ArgminExpr(toExpr(vec), toExpr(cents)))
+    kernel("l2Argmin", L2ArgminType, toExpr(vec), toExpr(cents))
 
   /** One-pass int8 quantization audit
     * (struct: nonzero, scale, abs_err_scaled, max_err_scaled). */
   def quantize_audit(vec: Column): Column =
-    toCol(QuantizeAuditExpr(toExpr(vec)))
+    kernel("quantAudit", QuantizeAuditType, toExpr(vec))
 }

@@ -24,9 +24,6 @@ object Async {
       val t = new Thread(r, "graft-async"); t.setDaemon(true); t
     }))
 
-  /** Submit an action asynchronously (Rx/Future `apply`). */
-  def submit[T](action: => T): Future[T] = Future(action)(pool)
-
   /** Future.all: run every query's action concurrently, collect in
     * order. */
   def all[T](actions: Seq[() => T]): Seq[T] = {

@@ -38,16 +38,6 @@ object Dedup {
       .groupBy(md5(lower(trim(col("text")))).as("content_hash"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature as k seeded xxhash64 minima over the shingle
-    * set — composed from built-ins. Kept as the compose-first
-    * reference; the production path below uses the single-pass
-    * custom expression (Spark's higher-order functions are
-    * CodegenFallback, so a k-deep transform stack interprets k
-    * array traversals per row). */
-  def minhashSig(sh: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      seed => array_min(transform(sh, s => xxhash64(s, seed))))
-
   /** MinHash + LSH near-duplicate pairs with exact n-gram-Jaccard
     * verification of the candidates — with the [[embeddingNearDup]]
     * BUCKET-SIZE GUARD on the band-bucket pair join.

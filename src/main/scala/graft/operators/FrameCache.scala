@@ -37,7 +37,9 @@ import scala.collection.mutable
   *   - Bounded: least-recently-inserted eviction past `maxEntries`
   *     (each retained frame is a thresholded arc/projection/corner
   *     frame — KBs to a few MB even at sf10 — so the cap is a
-  *     backstop, not a working limit).
+  *     backstop, not a working limit). Eviction drops the entry, not
+  *     its blocks: a frame handed out earlier stays usable until the
+  *     boundary cleanup or Spark's ContextCleaner frees them.
   */
 object FrameCache {
   private final case class Entry(df: DataFrame, rddIds: Set[Int],
@@ -95,10 +97,6 @@ object FrameCache {
   def cached(spark: SparkSession, key: String,
              keepOnlyLast: Boolean = false)
             (build: => DataFrame): DataFrame = synchronized {
-    // measurement kill-switch (scaling probes time the UNSHARED
-    // per-key cost to quantify what the cache saves): every call
-    // builds, nothing is retained
-    if (sys.env.contains("SPARK_GRAFT_FRAMECACHE_OFF")) return build
     entries.get(key) match {
       case Some(e) if valid(spark, e) =>
         // refresh insertion order so hot keys survive eviction
@@ -122,19 +120,18 @@ object FrameCache {
         }
         entries.put(key, Entry(df, created, ctxId(spark)))
         while (entries.size > maxEntries) {
-          val (k, e) = entries.head
-          // loud, not silent: an eviction mid-pass turns sharing back
-          // into rebuilds (and can fail a composite query still
-          // holding the truncated-lineage frame) — the log line makes
-          // that diagnosable instead of a mystery slowdown (r12
-          // ADVICE). Hitting this at all means maxEntries is below
-          // the live working set; raise it.
+          val k = entries.head._1
+          // forget the entry, keep its blocks: a query still holding
+          // the frame reads them (its lineage is truncated). The
+          // boundary cleanup, which spares only protectedIds, or the
+          // ContextCleaner frees them. Loud, not silent: an eviction
+          // mid-pass turns sharing back into rebuilds.
           System.err.println(
             s"[FrameCache] EVICTING '$k' (cache full at $maxEntries " +
-              s"entries while inserting '$key') — a composite query " +
-              "still holding this frame will fail rather than " +
-              "recompute; raise maxEntries if this fires mid-pass")
-          entries.remove(k); drop(spark, e)
+              s"entries while inserting '$key') — its blocks stay " +
+              "until the next boundary cleanup; raise maxEntries if " +
+              "this fires mid-pass")
+          entries.remove(k)
         }
         df
     }

@@ -32,7 +32,6 @@ import graft.sources.{Sinks, Tables}
 object Relational {
   private def dec2(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
   private def dec4(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 4))
-  private def dec6(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 6))
 
   /** Exact sum of a scale-`sc` money measure, as DECIMAL(28,sc) —
     * the type `sum(CAST(x AS DECIMAL(18,sc)))` has, and the same value.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
 
 /** FRP-signal surface (the reference's calculator exercises):
@@ -67,8 +67,4 @@ object Signals {
   /** Attach derived signals to a DataFrame in dependency order. */
   def derive(df: DataFrame, defs: Map[String, String]): DataFrame =
     order(defs).foldLeft(df)((d, name) => d.withColumn(name, expr(defs(name))))
-
-  /** Column-based variant for a single derived chain. */
-  def derive1(df: DataFrame, name: String, c: Column): DataFrame =
-    df.withColumn(name, c)
 }

@@ -393,7 +393,7 @@ object Similarity {
     * conventions differ), and error totals are floor-scaled BIGINTs
     * so the per-dimension sum is order-independent. */
   def quantizeAudit(embs: DataFrame): DataFrame =
-    // single-pass codegen kernel (QuantizeAuditExpr): the HOF
+    // single-pass codegen kernel (`quantize_audit`): the HOF
     // (transform/aggregate) form of this audit is CodegenFallback —
     // interpreted per row — per the engine's own §5.1 finding; the
     // kernel keeps the op inside WholeStageCodegen with bit-identical
@@ -856,7 +856,7 @@ object Similarity {
     *
     * Cross-engine exactness (the kmeans contract, extended): the
     * per-row projection is ONE sequential IEEE dot (codegen
-    * [[graft.functions.PowerContribExpr]], same order as list_sum);
+    * `GraftFunctions.power_contrib`, same order as list_sum);
     * each row's contribution quantizes to BIGINT micro-units so the
     * corpus reduction is exact integer arithmetic under any
     * partitioning; the normalization is a fixed IEEE sequence per

@@ -1209,7 +1209,7 @@ object TextAnalysis {
     * are template pages, not prose.
     *
     * Shape at scale: the gram explode is a NARROW constant-factor
-    * map (per-position shingles from the codegen ShinglesExpr); doc
+    * map (per-position shingles from the codegen `text_shingles`); doc
     * frequency partial-aggregates on the gram key; the boilerplate
     * set is K rows → broadcast semi-join, so the only wide exchanges
     * move (gram, doc_id) pairs for the DF count and (doc_id) hits for
@@ -1245,7 +1245,7 @@ object TextAnalysis {
     *
     * Deliberately a ZERO-SHUFFLE op: every metric is a per-row
     * computation over the doc's own shingle arrays (codegen
-    * ShinglesExpr + size/array_distinct), so the plan is one scan
+    * `text_shingles` + size/array_distinct), so the plan is one scan
     * with no Exchange at any corpus size — asserted in the spec.
     * Fractions are integral ppm. */
   def dupNgrams(docs: DataFrame): DataFrame = {

@@ -250,13 +250,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("custom expressions run inside whole-stage codegen") {
-    val p = plan(Tables.documents(spark, sf).select(
-      graft.functions.GraftFunctions.simhash64(split(lower(col("text")), " "))))
-    // "*(n)" prefixes mark WholeStageCodegen stages; the projection
-    // evaluating the custom expression must carry one
-    assert(p.linesIterator.exists(l =>
-      l.contains("simhash64expr") && l.trim.matches(""".*\*\(\d+\) Project.*""")),
-      s"custom expr not inside a codegen stage:\n$p")
+    for (k <- KernelCases.all) {
+      val p = plan(KernelCases.input(spark).select(k.column))
+      // "*(n)" prefixes mark WholeStageCodegen stages; the projection
+      // calling the kernel (printed as
+      // `static_invoke(graft.functions.Kernels.<method>(...))`) must
+      // carry one
+      assert(p.linesIterator.exists(l =>
+        l.contains(s"static_invoke(graft.functions.Kernels.${k.method}(") &&
+          l.trim.matches(""".*\*\(\d+\) Project.*""")),
+        s"${k.name} not inside a codegen stage:\n$p")
+    }
   }
 
   test("sequence packing never reads or shuffles the text column") {
@@ -342,7 +346,8 @@ class PlanSpec extends AnyFunSuite {
       .findAllMatchIn(p).map(_.group(1)).toList
     assert(hashKeys.nonEmpty && hashKeys.forall(_ == "query_id"),
       s"corpus-side hash exchange found (keys: $hashKeys):\n$p")
-    assert(p.contains("cosineargmaxexpr"), s"argmax kernel missing:\n$p")
+    assert(p.contains("static_invoke(graft.functions.Kernels.cosineArgmax("),
+      s"argmax kernel missing:\n$p")
   }
 
   test("quantize audit is a shuffle-free codegen scan pipeline") {
@@ -351,7 +356,8 @@ class PlanSpec extends AnyFunSuite {
     // the kernel must sit inside a WholeStageCodegen stage ("*(n)")
     // — its HOF predecessor was CodegenFallback (interpreted per row)
     assert(p.linesIterator.exists(l =>
-      l.contains("quantizeauditexpr") && l.matches(""".*\*\(\d+\).*""")),
+      l.contains("static_invoke(graft.functions.Kernels.quantAudit(") &&
+        l.matches(""".*\*\(\d+\).*""")),
       s"quantize kernel not inside a codegen stage:\n$p")
   }
 

@@ -84,6 +84,18 @@ class Round12Spec extends AnyFunSuite {
     FrameCache.invalidateAll(spark)
   }
 
+  test("FrameCache: an evicted frame still runs for the query holding it") {
+    FrameCache.invalidateAll(spark)
+    val held = FrameCache.cached(spark, "r12spec:evict:held")(
+      Seq((1L, 2L), (3L, 4L)).toDF("a", "b").localCheckpoint())
+    // 48 more keys fill the cache past its cap and evict `held` first
+    (1 to 48).foreach(i => FrameCache.cached(spark, s"r12spec:evict:$i")(
+      Seq((i.toLong, 0L)).toDF("a", "b").localCheckpoint()))
+    assert(held.agg(sum("a")).head.getLong(0) === 4L,
+      "eviction must not unpersist the blocks of a frame still in use")
+    FrameCache.invalidateAll(spark)
+  }
+
   test("FrameCache: planKey separates datasets and protectedIds covers entries") {
     FrameCache.invalidateAll(spark)
     val a = Seq((1L, 1L)).toDF("x", "y")
