@@ -39,10 +39,12 @@ import org.apache.spark.sql.SparkSession
   * whole-stage class compiles once per query (143 compiles in a
   * traced warm stream replay on a 4-core host). With
   * `spark.sql.artifact.isolation.enabled=false` all sessions share
-  * the executor's default classloader and the cache hits (2 compiles:
-  * `runningTopK`'s state projections, whose source names its `Seq`
-  * loop variable by a per-query counter). The trade-off: jars, files and
-  * archives added to one session become visible to every session;
+  * the executor's default classloader and the cache hits: 0 compiles
+  * in the benchmark's stream replay. An operator whose state has an
+  * array or collection field still compiles its state decoder once per
+  * query, because the decoder names its loop variable by a JVM-wide
+  * counter (see `ReactiveStreams.Packed`). The trade-off: jars, files
+  * and archives added to one session become visible to every session;
   * graft adds none. To recount, read `codegen.compiles.warm` from
   * `python3 perfbench/run.py --workload stream_replay --trace 1`.
   *

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -10,6 +11,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static, codegen-callable kernels. Keeping the per-row work in
@@ -134,7 +136,6 @@ object Kernels {
     if (neg) -mag else mag
   }
 
-  /** Cosine similarity between two float vectors (single fused loop). */
   /** Raw inner product (MIPS score) — [[cosine]] without the norm:
     * sequential index-order left fold, bit-identical to DuckDB's
     * list_sum over the zipped products (the ann_bruteforce float
@@ -150,15 +151,38 @@ object Kernels {
     acc
   }
 
+  /** Cosine similarity between two float vectors (single fused loop).
+    * Two `UnsafeArrayData` vectors (what Spark rows hold) are read
+    * with `Platform.getFloat` from element offsets computed once: the
+    * same reads `getFloat` makes, without its per-element call and
+    * offset arithmetic. The summation order is the same on both paths,
+    * so the result is bit-identical. */
   def cosine(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
+    if (a.isInstanceOf[UnsafeArrayData] && b.isInstanceOf[UnsafeArrayData]) {
+      val ua = a.asInstanceOf[UnsafeArrayData]
+      val ub = b.asInstanceOf[UnsafeArrayData]
+      val ao = ua.getBaseObject
+      val bo = ub.getBaseObject
+      val aStart = ua.getBaseOffset +
+        UnsafeArrayData.calculateHeaderPortionInBytes(ua.numElements())
+      val bStart = ub.getBaseOffset +
+        UnsafeArrayData.calculateHeaderPortionInBytes(ub.numElements())
+      while (i < n) {
+        val x = Platform.getFloat(ao, aStart + 4L * i).toDouble
+        val y = Platform.getFloat(bo, bStart + 4L * i).toDouble
+        dot += x * y; na += x * x; nb += y * y
+        i += 1
+      }
+    } else {
+      while (i < n) {
+        val x = a.getFloat(i).toDouble
+        val y = b.getFloat(i).toDouble
+        dot += x * y; na += x * x; nb += y * y
+        i += 1
+      }
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
   }
@@ -805,6 +829,18 @@ object Kernels {
       Array[Any](true, scale, absErrScaled, math.floor(maxErr * 1e9).toLong))
   }
 
+  /** [[quantAudit]]'s `nonzero` without the audit: true when some
+    * element's magnitude is above zero (a NaN element's is not). */
+  def quantNonzero(vec: ArrayData): Boolean = {
+    val n = vec.numElements()
+    var i = 0
+    while (i < n) {
+      if (math.abs(vec.getFloat(i).toDouble) > 0.0) return true
+      i += 1
+    }
+    false
+  }
+
   /** Random-hyperplane LSH signature: bit j = sign(dot(vec, r_j)).
     * With `planes` <= 64 the signature packs into one long, so the
     * LSH bucket join is a plain long-key shuffle. */
@@ -1090,4 +1126,8 @@ object GraftFunctions {
     * (struct: nonzero, scale, abs_err_scaled, max_err_scaled). */
   def quantize_audit(vec: Column): Column =
     kernel("quantAudit", QuantizeAuditType, toExpr(vec))
+
+  /** `quantize_audit(vec).nonzero`, without computing the audit. */
+  def quantize_nonzero(vec: Column): Column =
+    kernel("quantNonzero", BooleanType, toExpr(vec))
 }

@@ -397,11 +397,14 @@ object Similarity {
     // (transform/aggregate) form of this audit is CodegenFallback —
     // interpreted per row — per the engine's own §5.1 finding; the
     // kernel keeps the op inside WholeStageCodegen with bit-identical
-    // arithmetic (same clamp order, same sequential error fold)
+    // arithmetic (same clamp order, same sequential error fold). The
+    // filter tests the vector, not `qa.nonzero`: Catalyst pushes a
+    // filter on `qa` below the projection by copying the kernel call
+    // into it, which would run the audit twice per row.
     embs
+      .filter(GraftFunctions.quantize_nonzero(col("embedding")))
       .select(col("vec_id"),
         GraftFunctions.quantize_audit(col("embedding")).as("qa"))
-      .filter(col("qa.nonzero"))
       .select(col("vec_id"), col("qa.scale").as("scale"),
         col("qa.abs_err_scaled").as("abs_err_scaled"),
         col("qa.max_err_scaled").as("max_err_scaled"))

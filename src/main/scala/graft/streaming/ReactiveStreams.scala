@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -524,28 +525,32 @@ object ReactiveStreams {
   /** Streaming running top-k per key: bounded k-element state, the
     * unbounded twin of [[graft.plans.TopKPerGroup]]. Emits each key's
     * refreshed top-k whenever a batch touches it (update-mode
-    * semantics); state is O(keys x k) regardless of stream length. */
+    * semantics); state is O(keys x k) regardless of stream length.
+    * The state is the kept values and event ids in rank order, two
+    * [[Packed]] arrays. */
   case class TopKRow(user_id: Long, rank: Int, event_id: Long, value: Double)
+  case class TopKState(values: Array[Byte], ids: Array[Byte])
   def runningTopK(spark: SparkSession, events: DataFrame, k: Int = 3)
       : Dataset[TopKRow] = {
     import spark.implicits._
     events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
       .as[Ev]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Seq[(Double, Long)], TopKRow](
+      .flatMapGroupsWithState[TopKState, TopKRow](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[Seq[(Double, Long)]]) =>
+        (uid: Long, rows: Iterator[Ev], state: GroupState[TopKState]) =>
           // keep the k largest (value, event_id) pairs; event_id is
           // the deterministic tiebreak (total order)
-          val merged = (state.getOption.getOrElse(Seq.empty) ++
-            rows.map(e => (e.value, e.event_id)))
+          val kept = state.getOption.fold(Iterator.empty[(Double, Long)])(s =>
+            Packed.doubles(s.values).iterator.zip(Packed.longs(s.ids)))
+          val merged = (kept ++ rows.map(e => (e.value, e.event_id))).toSeq
             .sortBy { case (v, id) => (-v, id) }
             .take(k)
-          state.update(merged)
-          merged.zipWithIndex.map { case ((v, id), i) =>
+          state.update(TopKState(Packed(merged.map(_._1).toArray),
+            Packed(merged.map(_._2).toArray)))
+          merged.iterator.zipWithIndex.map { case ((v, id), i) =>
             TopKRow(uid, i + 1, id, v)
-          }.iterator
+          }
       }
   }
 
@@ -1064,23 +1069,155 @@ object ReactiveStreams {
         expr("(n_tokens - covered) * 1000000 div n_tokens")
           .cast("long").as("oov_ppm"))
 
-  /** Stream-stream join: purchases joined to clicks of the same user
-    * within +-30 minutes, both sides watermarked so join state is
-    * bounded and evicted. */
+  /** Stream-stream join: each purchase paired with every click of the
+    * same user whose `ts` lies within 30 minutes of it, both ends
+    * inclusive, compared in microseconds. Append mode; the columns are
+    * `p_id`, `c_id`, `user_id` and `p_value`.
+    *
+    * One `flatMapGroupsWithState` keyed by `user_id` runs the join over
+    * the union of the purchases and the clicks, each side watermarked
+    * on `ts` on its own. The watermark is the built-in join's: each
+    * side's newest `ts` less 1 hour, the slower side's taken (Spark's
+    * `multipleWatermarkPolicy`, min by default), and 0 until both sides
+    * have had a row. A watermark node per side needs a scan per side:
+    * Spark refuses a second watermark node in one lineage. Rows at or
+    * behind the watermark are dropped before the state function sees
+    * them and are counted in `numRowsDroppedByWatermark`. Each batch
+    * pairs the new purchases with the buffered and the new clicks, and
+    * the new clicks with the buffered purchases. Then it evicts every
+    * buffered event whose `ts + 30 min` is at or behind the watermark:
+    * a row a later batch keeps is ahead of it, so such an event can
+    * never match again. An event-time timeout at the newest buffered
+    * `ts + 30 min` clears a key that gets no new rows. The state per
+    * key is the buffered events ([[JoinBuffer]]).
+    *
+    * Nulls: a row with a null `user_id` or `ts` never matches and is
+    * not buffered; a null `event_id` or `value` is passed through as a
+    * null `p_id`, `c_id` or `p_value`.
+    *
+    * Spark's built-in stream-stream join gives the same rows, and
+    * StreamingSpec checks that it does, but it cost about twice as
+    * much per trigger: it commits four state stores per partition
+    * instead of one, and every copy of its plan node broadcasts a new
+    * Hadoop conf. */
   def streamStreamJoin(events: DataFrame): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"),
-        col("ts").as("p_ts"), col("value").as("p_value"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    purchases.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-        col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"))
-      .select("p_id", "c_id", "user_id", "p_value")
+    val spark = events.sparkSession
+    import spark.implicits._
+    import JoinBuffer._
+    def flag(cond: org.apache.spark.sql.Column, bit: Byte) =
+      when(cond, lit(bit)).otherwise(lit(0.toByte))
+    def side(eventType: String, bit: Byte) = events
+      .filter(col("event_type") === eventType &&
+        col("user_id").isNotNull && col("ts").isNotNull)
+      .withWatermark("ts", "1 hour")
+      // `ts` stays in the rows: the operator drops late rows by it
+      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
+        coalesce(col("event_id"), lit(0L)).as("id"),
+        coalesce(col("value"), lit(0.0)).as("value"),
+        lit(bit).bitwiseOR(flag(col("event_id").isNull, NullId))
+          .bitwiseOR(flag(col("value").isNull, NullValue)).as("flags"))
+    side("purchase", Purchase).union(side("click", 0))
+      .as[JoinEv]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[JoinBuffer, JoinedPair](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (uid: Long, rows: Iterator[JoinEv], state: GroupState[JoinBuffer]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else joinBatch(uid, rows.toArray, state)
+      }
+      .toDF()
+  }
+
+  /** One input row of [[streamStreamJoin]]; `flags` as in [[JoinBuffer]]. */
+  case class JoinEv(user_id: Long, ts_us: Long, id: Long, value: Double,
+                    flags: Byte)
+  /** [[streamStreamJoin]]'s buffered events of one user: event `i` is
+    * `(ts_us(i), id(i), value(i), flags(i))`, the first three
+    * [[Packed]]; the flag bits are in the companion object. */
+  case class JoinBuffer(ts_us: Array[Byte], id: Array[Byte],
+                        value: Array[Byte], flags: Array[Byte])
+  object JoinBuffer {
+    val Purchase: Byte = 1
+    val NullId: Byte = 2
+    val NullValue: Byte = 4
+    val WindowUs: Long = 30L * 60 * 1000 * 1000
+  }
+  case class JoinedPair(p_id: Option[Long], c_id: Option[Long], user_id: Long,
+                        p_value: Option[Double])
+
+  private def joinBatch(uid: Long, fresh: Array[JoinEv],
+                        state: GroupState[JoinBuffer]): Iterator[JoinedPair] = {
+    import JoinBuffer._
+    val old = state.getOption
+    val oTs = old.fold(Array.emptyLongArray)(b => Packed.longs(b.ts_us))
+    val oId = old.fold(Array.emptyLongArray)(b => Packed.longs(b.id))
+    val oValue = old.fold(Array.emptyDoubleArray)(b => Packed.doubles(b.value))
+    val oFlags = old.fold(Array.emptyByteArray)(_.flags)
+    def isPurchase(f: Byte) = (f & Purchase) != 0
+    def near(a: Long, b: Long) = math.abs(a - b) <= WindowUs
+    def opt[A](f: Byte, bit: Byte, a: A) = if ((f & bit) != 0) None else Some(a)
+    val out = scala.collection.mutable.ArrayBuffer[JoinedPair]()
+    def emit(pId: Long, pValue: Double, pFlags: Byte, cId: Long, cFlags: Byte) =
+      out += JoinedPair(opt(pFlags, NullId, pId), opt(cFlags, NullId, cId), uid,
+        opt(pFlags, NullValue, pValue))
+    fresh.foreach { e =>
+      var i = 0
+      while (i < oTs.length) {
+        if (isPurchase(e.flags) != isPurchase(oFlags(i)) && near(e.ts_us, oTs(i))) {
+          if (isPurchase(e.flags)) emit(e.id, e.value, e.flags, oId(i), oFlags(i))
+          else emit(oId(i), oValue(i), oFlags(i), e.id, e.flags)
+        }
+        i += 1
+      }
+      if (isPurchase(e.flags)) fresh.foreach { c =>
+        if (!isPurchase(c.flags) && near(e.ts_us, c.ts_us))
+          emit(e.id, e.value, e.flags, c.id, c.flags)
+      }
+    }
+    // keep what a row ahead of the watermark can still match
+    val horizonUs = state.getCurrentWatermarkMs() * 1000L
+    val keepOld = oTs.indices.filter(i => oTs(i) + WindowUs > horizonUs)
+    val keepNew = fresh.filter(_.ts_us + WindowUs > horizonUs)
+    if (keepOld.isEmpty && keepNew.isEmpty) state.remove()
+    else {
+      val ts = keepOld.map(oTs).toArray ++ keepNew.map(_.ts_us)
+      state.update(JoinBuffer(Packed(ts),
+        Packed(keepOld.map(oId).toArray ++ keepNew.map(_.id)),
+        Packed(keepOld.map(oValue).toArray ++ keepNew.map(_.value)),
+        keepOld.map(oFlags).toArray ++ keepNew.map(_.flags)))
+      state.setTimeoutTimestamp(Math.floorDiv(ts.max + WindowUs, 1000L))
+    }
+    out.iterator
+  }
+
+  /** Primitive arrays as binary state columns. Spark decodes an
+    * `Array[Long]` or `Array[Double]` state field element by element
+    * in a loop whose variable is named by a JVM-wide counter, so every
+    * new query compiled its state projection again; a binary field
+    * decodes without a loop. */
+  private[streaming] object Packed {
+    def apply(xs: Array[Long]): Array[Byte] = {
+      val b = ByteBuffer.allocate(8 * xs.length)
+      b.asLongBuffer().put(xs)
+      b.array()
+    }
+    def apply(xs: Array[Double]): Array[Byte] = {
+      val b = ByteBuffer.allocate(8 * xs.length)
+      b.asDoubleBuffer().put(xs)
+      b.array()
+    }
+    def longs(b: Array[Byte]): Array[Long] = {
+      val xs = new Array[Long](b.length / 8)
+      ByteBuffer.wrap(b).asLongBuffer().get(xs)
+      xs
+    }
+    def doubles(b: Array[Byte]): Array[Double] = {
+      val xs = new Array[Double](b.length / 8)
+      ByteBuffer.wrap(b).asDoubleBuffer().get(xs)
+      xs
+    }
   }
 
   /** Streaming ordered funnel: the unbounded twin of

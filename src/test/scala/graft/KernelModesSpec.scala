@@ -87,7 +87,8 @@ object KernelCases {
       c("cosine_top_r", "cosineTopR", cosine_top_r(a, cs, 2)),
       c("l2_argmin", "l2Argmin", l2_argmin(a, cs), "l2_argmin(a, cents)"),
       c("quantize_audit", "quantAudit", quantize_audit(a),
-        "quantize_audit(a)"))
+        "quantize_audit(a)"),
+      c("quantize_nonzero", "quantNonzero", quantize_nonzero(a)))
   }
 }
 
@@ -116,7 +117,7 @@ class KernelModesSpec extends AnyFunSuite {
 
   test("every kernel function gives the same rows interpreted as codegen'd") {
     val cases = KernelCases.all
-    assert(cases.map(_.name).distinct.size === 20)
+    assert(cases.map(_.name).distinct.size === 21)
     for (k <- cases) {
       def query = KernelCases.input(spark).select(col("id"), k.column.as("r"))
       val (compiled, compiledPlan) = run(query)

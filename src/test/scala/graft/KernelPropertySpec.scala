@@ -199,6 +199,36 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("property: Kernels.cosine over unsafe arrays equals the generic " +
+    "path bit for bit (random, zero and NaN vectors)") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.Kernels
+    val wide: Gen[Array[Float]] = Gen.choose(0, 70).flatMap(n =>
+      Gen.listOfN(n, Gen.chooseNum(-1e3f, 1e3f)).map(_.toArray))
+    val zeros = Array(Array.fill(64)(0.0f), Array.fill(64)(-0.0f), Array.empty[Float])
+    val nans = Array(Array.fill(64)(Float.NaN),
+      Array.tabulate(64)(i => if (i == 7) Float.NaN else i.toFloat),
+      Array.tabulate(64)(i => if (i == 3) Float.PositiveInfinity else 1.0f))
+    val vecs = sample(wide, 200, 47L).toArray ++ zeros ++ nans
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    val pairs = vecs.indices.flatMap(i =>
+      Seq(i, (i * 7 + 3) % vecs.length, vecs.length - 1 - i).map(j => (vecs(i), vecs(j))))
+    pairs.foreach { case (a, b) =>
+      val generic = Kernels.cosine(new GenericArrayData(a.map(x => x: Any)),
+        new GenericArrayData(b.map(x => x: Any)))
+      val unsafe = Kernels.cosine(UnsafeArrayData.fromPrimitiveArray(a),
+        UnsafeArrayData.fromPrimitiveArray(b))
+      val mixed = Kernels.cosine(UnsafeArrayData.fromPrimitiveArray(a),
+        new GenericArrayData(b.map(x => x: Any)))
+      assert(bits(unsafe) === bits(generic), s"a=${a.toSeq} b=${b.toSeq}")
+      assert(bits(mixed) === bits(generic), s"a=${a.toSeq} b=${b.toSeq}")
+    }
+    assert(pairs.exists { case (a, b) =>
+      Kernels.cosine(UnsafeArrayData.fromPrimitiveArray(a),
+        UnsafeArrayData.fromPrimitiveArray(b)).isNaN })
+  }
+
   test("property: CMS bucket family lands in range with distinct per-depth constants") {
     import graft.functions.Kernels
     val P = 2147483647L

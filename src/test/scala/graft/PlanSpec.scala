@@ -359,6 +359,10 @@ class PlanSpec extends AnyFunSuite {
       l.contains("static_invoke(graft.functions.Kernels.quantAudit(") &&
         l.matches(""".*\*\(\d+\).*""")),
       s"quantize kernel not inside a codegen stage:\n$p")
+    // once per row: Catalyst copies the call into any filter on its
+    // result that it pushes below the projection
+    assert("Kernels\\.quantAudit\\(".r.findAllMatchIn(p).size === 1,
+      s"quantize kernel called more than once:\n$p")
   }
 
   test("snapshot diff shuffles only (key, hash) — payloads never ship") {

@@ -15,9 +15,11 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileSystemBasedCheckpointFileManager}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream,
+  StreamingQueryWrapper}
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.ReactiveStreams
@@ -1798,13 +1800,16 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Feed each chunk to `f` over `mem` as one trigger, checkpointing
-    * at `ckpt`. Output is kept by batch id, so a batch that runs again
-    * after a restart replaces its first output. */
-  private def runCheckpointed(f: DataFrame => DataFrame,
-                              mem: MemoryStream[Ev], ckpt: String,
-                              chunks: Seq[Seq[Ev]],
-                              out: mutable.Map[Long, Seq[Row]]): Unit = {
+    * at `ckpt`, and return the stopped query. Output is kept by batch
+    * id, so a batch that runs again after a restart replaces its first
+    * output. */
+  private def runCheckpointed[T](f: DataFrame => DataFrame,
+                                 mem: MemoryStream[T], ckpt: String,
+                                 chunks: Seq[Seq[T]],
+                                 out: mutable.Map[Long, Seq[Row]],
+                                 mode: String = "append"): StreamingQuery = {
     val q = f(mem.toDF()).writeStream
+      .outputMode(mode)
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val rows = batch.collect().toSeq
@@ -1813,6 +1818,7 @@ class StreamingSpec extends AnyFunSuite {
       .start()
     try chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
     finally q.stop()
+    q
   }
 
   private def withTempDir[A](body: java.io.File => A): A = {
@@ -1989,6 +1995,112 @@ class StreamingSpec extends AnyFunSuite {
     onRocksDB(check("RocksDB"))
   }
 
+  /** Spark's built-in stream-stream inner join, which
+    * `ReactiveStreams.streamStreamJoin` replaced: the reference its
+    * rows are checked against. */
+  private def builtInJoin(events: DataFrame): DataFrame = {
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("p_id"), col("user_id"),
+        col("ts").as("p_ts"), col("value").as("p_value"))
+      .withWatermark("p_ts", "1 hour")
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
+        col("ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    purchases.join(clicks,
+      col("user_id") === col("c_user") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
+        col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"))
+      .select("p_id", "c_id", "user_id", "p_value")
+  }
+
+  test("stream-stream join equals the built-in join under random batch " +
+    "splits, late rows and nulls, on both state stores") {
+    import StreamingSpec.NEv
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val minuteUs = 60L * 1000 * 1000
+    def at(us: Long): Timestamp = {
+      val t = new Timestamp(Math.floorDiv(us, 1000L))
+      t.setNanos((Math.floorMod(us, 1000000L) * 1000).toInt)
+      t
+    }
+    val t0 = 1704067200L * 1000 * 1000 // 2024-01-01 00:00 UTC
+    // (arrival order, row): each event type arrives in event-time order,
+    // so only the late chunk below is behind the watermark. With seed 2
+    // purchases run 80 minutes behind clicks: the watermark follows the
+    // slower side, so they are not late either.
+    def lag(seed: Int) = if (seed == 2) 80 * minuteUs else 0L
+    def events(seed: Int): Seq[(Long, NEv)] = {
+      val rnd = new scala.util.Random(seed)
+      var t = t0
+      (0L until 160L).map { i =>
+        t += rnd.nextInt(8) * minuteUs + rnd.nextInt(1000000)
+        def sometimes[A](a: A, oneIn: Int) =
+          if (rnd.nextInt(oneIn) == 0) None else Some(a)
+        val kind = Seq("purchase", "click", "click", "view")(rnd.nextInt(4))
+        val ts = if (kind == "purchase") t - lag(seed) else t
+        t -> NEv(sometimes(i, 12), sometimes(at(ts), 25),
+          sometimes(1L + rnd.nextInt(4), 20), kind,
+          sometimes(rnd.nextInt(100).toDouble, 12))
+      }
+    }
+    // user 9: one purchase, clicks exactly 30 min away on either side
+    // (kept) and 1 us further (dropped); null ids and values pass
+    val tb = t0 + 300 * minuteUs
+    val window = 30 * minuteUs
+    def edges(seed: Int) = Seq(
+      (tb + lag(seed)) -> NEv(Some(1000L), Some(at(tb)), Some(9L), "purchase", None),
+      (tb - window) -> NEv(None, Some(at(tb - window)), Some(9L), "click", Some(1.0)),
+      (tb + window) -> NEv(Some(1002L), Some(at(tb + window)), Some(9L), "click", None),
+      (tb - window - 1) -> NEv(Some(1003L), Some(at(tb - window - 1)), Some(9L), "click", None),
+      (tb + window + 1) -> NEv(Some(1004L), Some(at(tb + window + 1)), Some(9L), "click", None))
+    // a closing chunk hours behind the watermark: 3 purchase or click
+    // rows to drop; a view and a null-user row are filtered, not dropped
+    val early = t0 - 600 * minuteUs
+    val late = Seq(
+      NEv(Some(2000L), Some(at(early)), Some(1L), "purchase", Some(5.0)),
+      NEv(Some(2001L), Some(at(early + minuteUs)), Some(1L), "click", Some(5.0)),
+      NEv(Some(2002L), Some(at(early + minuteUs)), Some(2L), "click", Some(5.0)),
+      NEv(Some(2003L), Some(at(early)), Some(2L), "view", Some(5.0)),
+      NEv(Some(2004L), Some(at(early)), None, "click", Some(5.0)))
+    def sorted(out: collection.Map[Long, Seq[Row]]) =
+      out.values.flatten.map(_.toString).toSeq.sorted
+    def dropped(q: StreamingQuery) = q.recentProgress
+      .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    def check(store: String): Unit = Seq(1, 2).foreach { seed =>
+      val rows = (events(seed) ++ edges(seed)).sortBy(_._1).map(_._2)
+      val rnd = new scala.util.Random(seed * 31)
+      val cuts = (rnd.shuffle((1 until rows.size).toList).take(2) :+ 0 :+
+        rows.size).sorted
+      val chunks = cuts.zip(cuts.tail).map { case (a, b) => rows.slice(a, b) } :+
+        late
+      val what = s"$store, seed $seed, cuts $cuts"
+      withTempDir { dir =>
+        val ours = mutable.Map.empty[Long, Seq[Row]]
+        val ref = mutable.Map.empty[Long, Seq[Row]]
+        val q = runCheckpointed(ReactiveStreams.streamStreamJoin,
+          MemoryStream[NEv], new java.io.File(dir, "ours").getPath, chunks, ours)
+        val refQ = runCheckpointed(builtInJoin, MemoryStream[NEv],
+          new java.io.File(dir, "ref").getPath, chunks, ref)
+        assert(sorted(ours) === sorted(ref), what)
+        assert(dropped(q) === 3, what)
+        assert(dropped(refQ) === 3, what)
+        val edgeRows = ours.values.flatten
+          .filter(_.getAs[Long]("user_id") == 9L).map(_.toString).toSeq.sorted
+        assert(edgeRows === Seq("[1000,1002,9,null]", "[1000,null,9,null]"), what)
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan.toString
+        assert(!plan.contains("StreamingSymmetricHashJoin"), what)
+        assert(q.lastProgress.stateOperators.map(_.numStateStoreInstances)
+          .toSeq === Seq(spark.conf.get("spark.sql.shuffle.partitions").toInt),
+          what)
+      }
+    }
+    check("HDFS")
+    onRocksDB(check("RocksDB"))
+  }
+
   test("a second stream query over the same input compiles no new " +
     "generated code") {
     // CodeGenerator caches classes by (context classloader, source);
@@ -1996,19 +2108,27 @@ class StreamingSpec extends AnyFunSuite {
     // own executor classloader and compiles every class again.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
+    // runningTopK and the join hold fixed-shape state: a `Seq` state's
+    // encoder names its loop variable by a per-query counter
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def replay(): Seq[String] = withTempDir { dir =>
-      val out = mutable.Map.empty[Long, Seq[Row]]
-      runCheckpointed(debounce10m, MemoryStream[Ev],
-        new java.io.File(dir, "ckpt").getPath, sampleChunks, out)
-      out.values.flatten.map(_.toString).toSeq.sorted
+    val ops: Seq[(String, DataFrame => DataFrame, String)] = Seq(
+      ("debounce", debounce10m, "append"),
+      ("runningTopK", df => ReactiveStreams.runningTopK(spark, df).toDF(), "update"),
+      ("streamStreamJoin", ReactiveStreams.streamStreamJoin, "append"))
+    ops.foreach { case (name, f, mode) =>
+      def replay(): Seq[String] = withTempDir { dir =>
+        val out = mutable.Map.empty[Long, Seq[Row]]
+        runCheckpointed(f, MemoryStream[Ev],
+          new java.io.File(dir, "ckpt").getPath, sampleChunks, out, mode)
+        out.values.flatten.map(_.toString).toSeq.sorted
+      }
+      val first = replay()
+      val before = compiles
+      val second = replay()
+      assert(compiles - before === 0, name)
+      assert(first.nonEmpty, name)
+      assert(second === first, name)
     }
-    val first = replay()
-    val before = compiles
-    val second = replay()
-    assert(compiles - before === 0)
-    assert(first.nonEmpty)
-    assert(second === first)
   }
 
   test("checkpoint manager never overwrites an existing file") {
@@ -2027,4 +2147,11 @@ class StreamingSpec extends AnyFunSuite {
         new java.io.File(dir, "0").toPath), "UTF-8") === "first")
     }
   }
+}
+
+object StreamingSpec {
+  /** An events row whose every column but the type may be null. */
+  case class NEv(event_id: Option[Long], ts: Option[Timestamp],
+                 user_id: Option[Long], event_type: String,
+                 value: Option[Double])
 }
