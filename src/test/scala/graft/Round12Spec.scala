@@ -325,6 +325,48 @@ class Round12Spec extends AnyFunSuite {
     assert(run(0L) == run(DriverCutoff.weightedArcRows))
   }
 
+  /** `driverCutoff = 0` (distributed) against the default (driver
+    * twin), each run from an empty FrameCache: the shared frames'
+    * keys carry the cutoff, so a run must not read the other's. */
+  private def keyedBoundary(op: Option[Long] => DataFrame): Unit = {
+    def rows(cut: Option[Long]) = {
+      FrameCache.invalidateAll(spark)
+      op(cut).orderBy("node").collect().map(_.toSeq).toSeq
+    }
+    val distributed = rows(Some(0L))
+    val driver = rows(None)
+    assert(driver == distributed,
+      "driver twin must equal the distributed loop")
+    assert(driver.nonEmpty)
+    FrameCache.invalidateAll(spark)
+  }
+
+  test("cutoff boundary: sccKeysTrade byte-equal across paths") {
+    val (li, ord) = fixture
+    keyedBoundary {
+      case Some(cut) => Graph.sccKeysTrade(li, ord, driverCutoff = cut)
+      case None => Graph.sccKeysTrade(li, ord)
+    }
+  }
+
+  test("cutoff boundary: topoLayersKeysTrade byte-equal across paths") {
+    val (li, ord) = fixture
+    keyedBoundary {
+      case Some(cut) =>
+        Graph.topoLayersKeysTrade(li, ord, driverCutoff = cut)
+      case None => Graph.topoLayersKeysTrade(li, ord)
+    }
+  }
+
+  test("cutoff boundary: harmonicKeysTrade byte-equal across paths") {
+    val (li, ord) = fixture
+    keyedBoundary {
+      case Some(cut) =>
+        Graph.harmonicKeysTrade(li, ord, driverCutoff = cut)
+      case None => Graph.harmonicKeysTrade(li, ord)
+    }
+  }
+
   // ---------------- arc-free guards ----------------
 
   test("pageRankKeys/pprKeys: arc-free graph returns empty, not div-by-zero") {
