@@ -935,77 +935,79 @@ object Dedup {
     // the outputs are byte-equal (spec-pinned); above the cutoff —
     // billions of pairs at 100 TB — the distributed path-halving
     // loop runs unchanged.
-    if (edges.count() <= driverCutoff) {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) {
+            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+          }
+          r
         }
-        r
-      }
-      edges.select("a", "b").collect().foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra != rb) { // min root keeps the component-min label
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        rows.foreach { row =>
+          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+          if (ra != rb) { // min root keeps the component-min label
+            if (ra < rb) parent(rb) = ra else parent(ra) = rb
+          }
         }
-      }
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val labelRows = parent.keys.toSeq.map(n => (n, find(n)))
-      return nodes.select(col("doc_id"))
-        .join(labelRows.toDF("node", "label"),
-          col("doc_id") === col("node"), "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("cluster_id"))
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        val labelRows = parent.keys.toSeq.map(n => (n, find(n)))
+        nodes.select(col("doc_id"))
+          .join(labelRows.toDF("node", "label"),
+            col("doc_id") === col("node"), "left")
+          .select(col("doc_id"),
+            coalesce(col("label"), col("doc_id")).as("cluster_id"))
+      case None =>
+        var labels = edges.select(col("a").as("node")).distinct()
+          .select(col("node"), col("node").as("label")).localCheckpoint()
+        var converged = false
+        var i = 0
+        while (!converged && i < maxIter) {
+          val prop = edges.join(labels, col("a") === col("node"))
+            .select(col("b").as("node"), col("label"), lit(0).as("is_self"))
+          // fold the convergence check into the round's groupBy: the
+          // node's own row carries the old label, so "did anything
+          // change" is a filter on the grouped result — no extra join
+          val merged = labels.select(col("node"), col("label"),
+              lit(1).as("is_self"))
+            .unionByName(prop)
+            .groupBy("node").agg(min("label").as("label"),
+              max(when(col("is_self") === 1, col("label"))).as("old_label"))
+          val next = if (i < 3) merged.localCheckpoint()
+          else {
+            // pointer jump (path halving): label := label(label). Labels
+            // are always node ids present in the frame, so the self-join
+            // hits; left join keeps already-minimal nodes unchanged. The
+            // pre-join checkpoint stops the propagate+groupBy subtree
+            // from evaluating once per join side.
+            val m = merged.localCheckpoint()
+            m.join(m.select(col("node").as("_jn"), col("label").as("_jl")),
+                col("label") === col("_jn"), "left")
+              .select(col("node"),
+                least(col("label"), coalesce(col("_jl"), col("label")))
+                  .as("label"),
+                col("old_label"))
+              .localCheckpoint()
+          }
+          converged = next.filter(col("label") =!= col("old_label")).isEmpty
+          labels = next.select(col("node"), col("label"))
+          i += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"connectedComponents did not converge in $maxIter rounds; " +
+              "a component's min-label needs more doubling rounds — raise " +
+              "maxIter (returning partial labels would silently corrupt " +
+              "clusters)")
+        nodes.select(col("doc_id"))
+          .join(labels, col("doc_id") === col("node"), "left")
+          .select(col("doc_id"),
+            coalesce(col("label"), col("doc_id")).as("cluster_id"))
     }
-    var labels = edges.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = edges.join(labels, col("a") === col("node"))
-        .select(col("b").as("node"), col("label"), lit(0).as("is_self"))
-      // fold the convergence check into the round's groupBy: the
-      // node's own row carries the old label, so "did anything
-      // change" is a filter on the grouped result — no extra join
-      val merged = labels.select(col("node"), col("label"),
-          lit(1).as("is_self"))
-        .unionByName(prop)
-        .groupBy("node").agg(min("label").as("label"),
-          max(when(col("is_self") === 1, col("label"))).as("old_label"))
-      val next = if (i < 3) merged.localCheckpoint()
-      else {
-        // pointer jump (path halving): label := label(label). Labels
-        // are always node ids present in the frame, so the self-join
-        // hits; left join keeps already-minimal nodes unchanged. The
-        // pre-join checkpoint stops the propagate+groupBy subtree
-        // from evaluating once per join side.
-        val m = merged.localCheckpoint()
-        m.join(m.select(col("node").as("_jn"), col("label").as("_jl")),
-            col("label") === col("_jn"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("_jl"), col("label")))
-              .as("label"),
-            col("old_label"))
-          .localCheckpoint()
-      }
-      converged = next.filter(col("label") =!= col("old_label")).isEmpty
-      labels = next.select(col("node"), col("label"))
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds; " +
-          "a component's min-label needs more doubling rounds — raise " +
-          "maxIter (returning partial labels would silently corrupt " +
-          "clusters)")
-    nodes.select(col("doc_id"))
-      .join(labels, col("doc_id") === col("node"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("cluster_id"))
   }
 
   /** Duplicate-cluster size histogram: from a (doc_id, cluster_id)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
+
 /** The shared DRIVER-MATERIALIZATION budget behind every
   * size-adaptive graph/dedup operator — cutoffs are BYTES, not a
   * per-op magic row count.
@@ -15,13 +17,16 @@ package graft.operators
   * projection-shaped frame inherit the right bound instead of
   * needing its own incident.
   *
-  * Budget: 128 MiB of PACKED row payload. The collected Row objects
-  * transiently cost a few× that on the driver heap (boxing + object
-  * headers), which the 48 GiB driver absorbs; on a thin 4 GiB
-  * cluster driver, scale `budgetBytes` down, not the per-op widths.
-  * Above the cutoff every operator runs its distributed loop
-  * unchanged — outputs are spec-pinned byte-equal across the
-  * boundary (Round12Spec), so the cutoff is pure execution policy.
+  * Budget: 128 MiB of PACKED row payload, a constant. The collected
+  * Row objects transiently cost a few× that on the driver heap
+  * (boxing + object headers): a 48 GiB driver absorbs it, while the
+  * benchmark runs a 4 GB heap with this same budget. Sizing the
+  * budget from the driver heap belongs to the planner-node route
+  * decision (ROADMAP item 4), which replaces [[collectUnder]]; until
+  * then nothing sets it. Above the cutoff every operator runs its
+  * distributed loop unchanged — outputs are spec-pinned byte-equal
+  * across the boundary (Round12Spec, Round13Spec), so the cutoff is
+  * pure execution policy.
   */
 object DriverCutoff {
   val budgetBytes: Long = 128L << 20
@@ -30,7 +35,7 @@ object DriverCutoff {
   def rows(rowBytes: Long): Long = budgetBytes / rowBytes
 
   /** (long, long) id-pair frames: dedup/cosource union-find edges,
-    * SCC/topo arc + condensation frames, harmonic BFS arcs. */
+    * SCC/topo arc + condensation frames, landmark BFS arcs. */
   val pairRows: Long = rows(16)
 
   /** (long, long, long) weighted-arc frames: SSSP's (a, b, cost). */
@@ -48,4 +53,15 @@ object DriverCutoff {
     * frames (the key-level family, ≤ tens of k rows at sf10) keep
     * the plain byte budget. */
   val bipartiteCollectRows: Long = math.min(2000000L, pairRows)
+
+  /** The route gate of every size-adaptive Graph/Dedup operator:
+    * `frame`'s rows when it has at most `maxRows` of them (the
+    * operator then runs its driver twin over them), else None (it
+    * runs its distributed loop). Callers fold any extra bound into
+    * `maxRows`, e.g. an exactness cap. Two jobs, a count and then a
+    * collect: a one-job `limit(maxRows + 1).collect()` is not
+    * cheaper over a multi-partition frame, because Spark's
+    * `executeTake` scans 1 partition and then 4× more per job. */
+  def collectUnder(frame: DataFrame, maxRows: Long): Option[Array[Row]] =
+    if (frame.count() <= maxRows) Some(frame.collect()) else None
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics beyond clustering —
@@ -40,61 +42,45 @@ object Graph {
     val edges = rawEdges.join(outw, "src")
       .select(col("src"), col("dst"),
         expr("w * 1000000 div ow").as("frac_ppm"))
-    val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-    val n = nodes.count()
-    val base = ((S / n) * 15L) / 100L
-    if (edges.count() <= driverCutoff) {
-      // size-adaptive driver twin ([[DriverCutoff]]): the nation
-      // graph is ≤ V² arcs; all arithmetic is the identical integer
-      // ppm recurrence (commutative BIGINT sums, floor divisions in
-      // the same order), so ranks are byte-equal; Round12Spec pins
-      // the boundary. Above the cutoff the distributed rounds run
-      // unchanged.
-      import scala.collection.mutable
-      val arcs = edges
-        .select(col("src").cast("long"), col("dst").cast("long"),
-          col("frac_ppm").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val natRows = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      val pr = mutable.LongMap.empty[Long]
-      natRows.foreach { case (v, _) => pr(v) = S / n }
-      for (_ <- 0 until iters) {
-        val c = mutable.LongMap.empty[Long].withDefaultValue(0L)
-        arcs.foreach { case (s2, d2, f) =>
-          // arcs whose src is outside the rank frame contribute
-          // nothing (the distributed join drops them)
-          pr.get(s2).foreach(p => c(d2) += (p * f) / 1000000L)
+    // size-adaptive driver twin ([[DriverCutoff]]): the nation graph
+    // is ≤ V² arcs, ranked by [[pageRankPpm]], the rounds below
+    DriverCutoff.collectUnder(edges.select(col("src").cast("long"),
+        col("dst").cast("long"), col("frac_ppm").cast("long")),
+      driverCutoff) match {
+      case Some(rows) =>
+        val natRows = nation
+          .select(col("n_nationkey").cast("long"), col("n_name"))
+          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val pr = pageRankPpm(longTriples(rows), natRows.map(_._1), iters)
+        val out = natRows.sortBy(_._1).map { case (v, name) =>
+          (name, pr(v), pr(v).toDouble / 1e12) }
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(out.toSeq, 32)
+          .toDF("n_name", "rank_scaled", "rank_norm")
+      case None =>
+        val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
+        val n = nodes.count()
+        val base = ((S / n) * 15L) / 100L
+        var ranks = nodes.withColumn("pr", lit(S / n))
+        for (_ <- 0 until iters) {
+          val contrib = edges
+            .join(ranks, edges("src") === ranks("node"))
+            .select(col("dst").as("node"),
+              expr("(pr * frac_ppm) div 1000000").as("term"))
+            .groupBy("node").agg(sum("term").as("c"))
+          ranks = nodes
+            .join(contrib, Seq("node"), "left")
+            .select(col("node"),
+              (lit(base) + expr("(coalesce(c, 0L) * 85) div 100"))
+                .as("pr"))
         }
-        natRows.foreach { case (v, _) =>
-          pr(v) = base + (c(v) * 85L) / 100L }
-      }
-      val out = natRows.sortBy(_._1).map { case (v, name) =>
-        (name, pr(v), pr(v).toDouble / 1e12) }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "rank_scaled", "rank_norm")
+        ranks
+          .join(broadcast(nation),
+            ranks("node") === nation("n_nationkey").cast("long"))
+          .select(col("n_name"), col("pr").as("rank_scaled"),
+            (col("pr").cast("double") / lit(1e12)).as("rank_norm"))
     }
-    var ranks = nodes.withColumn("pr", lit(S / n))
-    for (_ <- 0 until iters) {
-      val contrib = edges
-        .join(ranks, edges("src") === ranks("node"))
-        .select(col("dst").as("node"),
-          expr("(pr * frac_ppm) div 1000000").as("term"))
-        .groupBy("node").agg(sum("term").as("c"))
-      ranks = nodes
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr("(coalesce(c, 0L) * 85) div 100"))
-            .as("pr"))
-    }
-    ranks
-      .join(broadcast(nation),
-        ranks("node") === nation("n_nationkey").cast("long"))
-      .select(col("n_name"), col("pr").as("rank_scaled"),
-        (col("pr").cast("double") / lit(1e12)).as("rank_norm"))
   }
 
   /** Triangle enumeration over the undirected nation trade graph
@@ -262,60 +248,44 @@ object Graph {
       .join(broadcast(srcNation), col("s_nationkey") === col("n_nationkey"))
       .select((col("s_suppkey") * 2 + 1).as("node"))
       .distinct()
-    // symmetrized frame = 2 × 16-byte rows per pair in the budget
-    if (pairs.count() * 2 <= driverCutoff) {
-      // size-adaptive driver BFS ([[DriverCutoff]]; the landmark/
-      // harmonic fast-path pattern): the 4 distributed hops ran ~3
-      // driver jobs each over KB frontiers at sf0.1 (2.3 s of pure
-      // per-job fixed cost). Value-equal by construction (hop sets
-      // of an unweighted BFS are unique); Round12Spec pins the
-      // boundary byte-equal.
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      e0.collect().foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
-        adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty[Long]) += a
-      }
-      val none = mutable.ArrayBuffer.empty[Long]
-      val hop = mutable.LongMap.empty[Long]
-      seeds.collect().foreach(r => hop(r.getLong(0)) = 0L)
-      var frontier = hop.keys.toList
-      for (h <- 1 to maxHops) {
-        frontier = frontier.flatMap { v =>
-          adj.getOrElse(v, none).filterNot(hop.contains).map { w =>
-            hop(w) = h.toLong; w
+    // size-adaptive driver BFS ([[DriverCutoff]]; [[hopBfs]]): the 4
+    // distributed hops ran ~3 driver jobs each over KB frontiers at
+    // sf0.1 (2.3 s of pure per-job fixed cost). The symmetrized frame
+    // is 2 × 16-byte rows per pair in the budget.
+    DriverCutoff.collectUnder(e0, driverCutoff / 2) match {
+      case Some(rows) =>
+        val pairs = longPairs(rows)
+        val hop = hopBfs(adjacency(pairs ++ pairs.map(_.swap)),
+          seeds.collect().map(_.getLong(0)), maxHops)
+        val byHop = hop.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (h, ns) =>
+            (h, ns.count(_._1 % 2 == 0).toLong,
+              ns.count(_._1 % 2 == 1).toLong)
           }
-        }.distinct
-      }
-      val byHop = hop.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
-        .map { case (h, ns) =>
-          (h, ns.count(_._1 % 2 == 0).toLong,
-            ns.count(_._1 % 2 == 1).toLong)
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(byHop, 32)
+          .toDF("hop", "n_customers", "n_suppliers")
+      case None =>
+        val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
+          .localCheckpoint()
+        var dist = seeds
+          .withColumn("hop", lit(0L))
+          .localCheckpoint()
+        var frontier = dist.select("node")
+        for (h <- 1 to maxHops) {
+          val next = frontier.join(edges, col("node") === col("a"))
+            .select(col("b").as("node")).distinct()
+            .join(dist, Seq("node"), "left_anti")
+            .withColumn("hop", lit(h.toLong))
+            .localCheckpoint()
+          dist = dist.union(next).localCheckpoint()
+          frontier = next.select("node")
         }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(byHop, 32)
-        .toDF("hop", "n_customers", "n_suppliers")
+        dist.groupBy("hop")
+          .agg(count(when(col("node") % 2 === 0, 1)).as("n_customers"),
+            count(when(col("node") % 2 === 1, 1)).as("n_suppliers"))
     }
-    val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    var dist = seeds
-      .withColumn("hop", lit(0L))
-      .localCheckpoint()
-    var frontier = dist.select("node")
-    for (h <- 1 to maxHops) {
-      val next = frontier.join(edges, col("node") === col("a"))
-        .select(col("b").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .withColumn("hop", lit(h.toLong))
-        .localCheckpoint()
-      dist = dist.union(next).localCheckpoint()
-      frontier = next.select("node")
-    }
-    dist.groupBy("hop")
-      .agg(count(when(col("node") % 2 === 0, 1)).as("n_customers"),
-        count(when(col("node") % 2 === 1, 1)).as("n_suppliers"))
   }
 
   /** Label-propagation communities (Raghavan et al. 2007) over the
@@ -667,49 +637,50 @@ object Graph {
                  driverCutoff: Long = DriverCutoff.bipartiteCollectRows)
       : DataFrame = {
     var e = bipartitePairs(lineitem, orders)
-    if (e.count() <= driverCutoff) {
-      // size-adaptive driver peel ([[DriverCutoff]]): each of the 4
-      // distributed rounds paid a checkpoint job + trace aggregates
-      // over a KB-scale shrinking frame at sf0.1 — semi-synchronous
-      // peeling is a pair-list filter the driver runs in
-      // microseconds once the memoized pair collapse is in hand.
-      // Value-equal by construction (the round trace is determined
-      // by the peel rule); Round12Spec pins the boundary byte-equal.
-      import scala.collection.mutable
-      var pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val trace = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long)]
-      for (r <- 1 to rounds) {
-        val dc = mutable.LongMap.empty[Int].withDefaultValue(0)
-        val ds = mutable.LongMap.empty[Int].withDefaultValue(0)
-        pairs.foreach { case (c, s) => dc(c) += 1; ds(s) += 1 }
-        pairs = pairs.filter { case (c, s) => dc(c) >= k && ds(s) >= k }
-        val nc = mutable.LongMap.empty[Unit]
-        val ns = mutable.LongMap.empty[Unit]
-        pairs.foreach { case (c, s) => nc(c) = (); ns(s) = () }
-        trace += ((r.toLong, nc.size.toLong, ns.size.toLong,
-          pairs.length.toLong))
-      }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(trace.toSeq, 32)
-        .toDF("round", "n_customers", "n_suppliers", "n_edges")
+    DriverCutoff.collectUnder(e, driverCutoff) match {
+      case Some(rows) =>
+        // size-adaptive driver peel ([[DriverCutoff]]): each of the 4
+        // distributed rounds paid a checkpoint job + trace aggregates
+        // over a KB-scale shrinking frame at sf0.1 — semi-synchronous
+        // peeling is a pair-list filter the driver runs in
+        // microseconds once the memoized pair collapse is in hand.
+        // Value-equal by construction (the round trace is determined
+        // by the peel rule); Round12Spec pins the boundary byte-equal.
+        var pairs = longPairs(rows)
+        val trace = mutable.ArrayBuffer
+          .empty[(Long, Long, Long, Long)]
+        for (r <- 1 to rounds) {
+          val dc = mutable.LongMap.empty[Int].withDefaultValue(0)
+          val ds = mutable.LongMap.empty[Int].withDefaultValue(0)
+          pairs.foreach { case (c, s) => dc(c) += 1; ds(s) += 1 }
+          pairs = pairs.filter { case (c, s) => dc(c) >= k && ds(s) >= k }
+          val nc = mutable.LongMap.empty[Unit]
+          val ns = mutable.LongMap.empty[Unit]
+          pairs.foreach { case (c, s) => nc(c) = (); ns(s) = () }
+          trace += ((r.toLong, nc.size.toLong, ns.size.toLong,
+            pairs.length.toLong))
+        }
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(trace.toSeq, 32)
+          .toDF("round", "n_customers", "n_suppliers", "n_edges")
+      case None =>
+        val trace = mutable.ArrayBuffer.empty[DataFrame]
+        for (r <- 1 to rounds) {
+          val keepC = e.groupBy("cust").agg(count(lit(1)).as("dc"))
+            .filter(col("dc") >= k).select("cust")
+          val keepS = e.groupBy("supp").agg(count(lit(1)).as("ds"))
+            .filter(col("ds") >= k).select("supp")
+          e = e.join(keepC, "cust").join(keepS, "supp").localCheckpoint()
+          trace += e.agg(
+            countDistinct("cust").as("n_customers"),
+            countDistinct("supp").as("n_suppliers"),
+            count(lit(1)).as("n_edges"))
+            .select(lit(r.toLong).as("round"), col("n_customers"),
+              col("n_suppliers"), col("n_edges"))
+        }
+        trace.reduce(_ unionByName _)
     }
-    val trace = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val keepC = e.groupBy("cust").agg(count(lit(1)).as("dc"))
-        .filter(col("dc") >= k).select("cust")
-      val keepS = e.groupBy("supp").agg(count(lit(1)).as("ds"))
-        .filter(col("ds") >= k).select("supp")
-      e = e.join(keepC, "cust").join(keepS, "supp").localCheckpoint()
-      trace += e.agg(
-        countDistinct("cust").as("n_customers"),
-        countDistinct("supp").as("n_suppliers"),
-        count(lit(1)).as("n_edges"))
-        .select(lit(r.toLong).as("round"), col("n_customers"),
-          col("n_suppliers"), col("n_edges"))
-    }
-    trace.reduce(_ unionByName _)
   }
 
   /** k-truss peeling over the capped co-sourcing projection
@@ -742,73 +713,73 @@ object Graph {
                   driverCutoff: Long = DriverCutoff.pairRows): DataFrame = {
     val eSrc = coSourceEdges(lineitem, orders, cap, minShared)
       .select("u", "v")
-    if (eSrc.count() <= driverCutoff) {
-      // size-adaptive driver peel ([[DriverCutoff]]): per-edge
-      // support on a u<v edge set is |N(u) ∩ N(v)| — exactly what
-      // the distributed round's triangle-credit explode counts
-      // (each closed triangle credits its three member edges once),
-      // so the trace is value-equal by construction; Round12Spec
-      // pins the boundary byte-equal. The 3 distributed rounds paid
-      // 2 checkpoint jobs + 3 aggregates each over the KB-scale
-      // projection at sf0.1.
-      import scala.collection.mutable
-      var edges = eSrc.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val trace = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long)]
-      for (r <- 1 to rounds) {
-        val adj = mutable.LongMap.empty[mutable.Set[Long]]
-        edges.foreach { case (u, v) =>
-          adj.getOrElseUpdate(u, mutable.Set.empty[Long]) += v
-          adj.getOrElseUpdate(v, mutable.Set.empty[Long]) += u
+    DriverCutoff.collectUnder(eSrc, driverCutoff) match {
+      case Some(rows) =>
+        // size-adaptive driver peel ([[DriverCutoff]]): per-edge
+        // support on a u<v edge set is |N(u) ∩ N(v)| — exactly what
+        // the distributed round's triangle-credit explode counts
+        // (each closed triangle credits its three member edges once),
+        // so the trace is value-equal by construction; Round12Spec
+        // pins the boundary byte-equal. The 3 distributed rounds paid
+        // 2 checkpoint jobs + 3 aggregates each over the KB-scale
+        // projection at sf0.1.
+        var edges = longPairs(rows).toSeq
+        val trace = mutable.ArrayBuffer
+          .empty[(Long, Long, Long, Long)]
+        for (r <- 1 to rounds) {
+          val adj = mutable.LongMap.empty[mutable.Set[Long]]
+          edges.foreach { case (u, v) =>
+            adj.getOrElseUpdate(u, mutable.Set.empty[Long]) += v
+            adj.getOrElseUpdate(v, mutable.Set.empty[Long]) += u
+          }
+          val sup = edges.map { case (u, v) =>
+            ((u, v), (adj(u) & adj(v)).size.toLong) }.toMap
+          val nTri = sup.values.sum / 3
+          // the distributed peel inner-joins the support frame, which
+          // only carries sup ≥ 1 edges — so the effective threshold is
+          // max(k−2, 1) even for k ≤ 2
+          edges = edges.filter(e => sup(e) >= k - 2 && sup(e) >= 1)
+          val nNodes = edges.flatMap(e => Seq(e._1, e._2))
+            .distinct.size.toLong
+          trace += ((r.toLong, edges.size.toLong, nNodes, nTri))
         }
-        val sup = edges.map { case (u, v) =>
-          ((u, v), (adj(u) & adj(v)).size.toLong) }.toMap
-        val nTri = sup.values.sum / 3
-        // the distributed peel inner-joins the support frame, which
-        // only carries sup ≥ 1 edges — so the effective threshold is
-        // max(k−2, 1) even for k ≤ 2
-        edges = edges.filter(e => sup(e) >= k - 2 && sup(e) >= 1)
-        val nNodes = edges.flatMap(e => Seq(e._1, e._2))
-          .distinct.size.toLong
-        trace += ((r.toLong, edges.size.toLong, nNodes, nTri))
-      }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(trace.toSeq, 32)
-        .toDF("round", "n_edges", "n_customers", "n_triangles")
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(trace.toSeq, 32)
+          .toDF("round", "n_edges", "n_customers", "n_triangles")
+      case None =>
+        var e = eSrc.localCheckpoint()
+        val trace = mutable.ArrayBuffer.empty[DataFrame]
+        for (r <- 1 to rounds) {
+          // one row per (triangle, member edge), edges normalized u < v
+          val credits = closedTriangles(e)
+            .select(explode(array(
+              struct(least(col("apex"), col("b")).as("eu"),
+                greatest(col("apex"), col("b")).as("ev")),
+              struct(least(col("apex"), col("c")).as("eu"),
+                greatest(col("apex"), col("c")).as("ev")),
+              struct(least(col("b"), col("c")).as("eu"),
+                greatest(col("b"), col("c")).as("ev")))).as("m"))
+            .select(col("m.eu").as("u"), col("m.ev").as("v"))
+          val support = credits.groupBy("u", "v")
+            .agg(count(lit(1)).as("sup")).localCheckpoint()
+          e = e.join(support.filter(col("sup") >= k - 2)
+            .select("u", "v"), Seq("u", "v")).localCheckpoint()
+          // each triangle credits exactly 3 edges, so Σsup ≡ 0 (mod 3)
+          // and the integer div is exact (never the float `/`)
+          val triAgg = support.agg(
+            expr("CAST(coalesce(sum(sup), 0) div 3 AS BIGINT)")
+              .as("n_triangles"))
+          val nodeAgg = e.select(col("u").as("nd"))
+            .unionAll(e.select(col("v").as("nd")))
+            .agg(countDistinct("nd").as("n_customers"))
+          trace += e.agg(count(lit(1)).as("n_edges"))
+            .crossJoin(nodeAgg).crossJoin(triAgg)
+            .select(lit(r.toLong).as("round"), col("n_edges"),
+              col("n_customers"), col("n_triangles"))
+        }
+        trace.reduce(_ unionByName _)
     }
-    var e = eSrc.localCheckpoint()
-    val trace = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      // one row per (triangle, member edge), edges normalized u < v
-      val credits = closedTriangles(e)
-        .select(explode(array(
-          struct(least(col("apex"), col("b")).as("eu"),
-            greatest(col("apex"), col("b")).as("ev")),
-          struct(least(col("apex"), col("c")).as("eu"),
-            greatest(col("apex"), col("c")).as("ev")),
-          struct(least(col("b"), col("c")).as("eu"),
-            greatest(col("b"), col("c")).as("ev")))).as("m"))
-        .select(col("m.eu").as("u"), col("m.ev").as("v"))
-      val support = credits.groupBy("u", "v")
-        .agg(count(lit(1)).as("sup")).localCheckpoint()
-      e = e.join(support.filter(col("sup") >= k - 2)
-        .select("u", "v"), Seq("u", "v")).localCheckpoint()
-      // each triangle credits exactly 3 edges, so Σsup ≡ 0 (mod 3)
-      // and the integer div is exact (never the float `/`)
-      val triAgg = support.agg(
-        expr("CAST(coalesce(sum(sup), 0) div 3 AS BIGINT)")
-          .as("n_triangles"))
-      val nodeAgg = e.select(col("u").as("nd"))
-        .unionAll(e.select(col("v").as("nd")))
-        .agg(countDistinct("nd").as("n_customers"))
-      trace += e.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(nodeAgg).crossJoin(triAgg)
-        .select(lit(r.toLong).as("round"), col("n_edges"),
-          col("n_customers"), col("n_triangles"))
-    }
-    trace.reduce(_ unionByName _)
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over the bipartite
@@ -839,76 +810,77 @@ object Graph {
     // that bound must fall through to the distributed DECIMAL(38,0)
     // path instead of silently overflowing (r12 ADVICE)
     val exactnessCap = Long.MaxValue / S // 9 223 372 edges
-    if (e.count() <= math.min(driverCutoff, exactnessCap)) {
-      // size-adaptive driver twin ([[DriverCutoff]]): the 3
-      // Gauss-Seidel rounds each paid 2 checkpoint jobs + 2
-      // broadcast-total subqueries over one-row-per-node frames
-      // (2.5 s of fixed cost at sf0.1). Identical arithmetic: raw
-      // sums in BigInt (≙ the DECIMAL(38,0) column), normalize =
-      // raw·1e12 div tot as exact integer floor, ties to the
-      // smaller id. Round12Spec pins the boundary byte-equal.
-      import scala.collection.mutable
-      val edges = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      if (edges.isEmpty)
-        return Seq.empty[(String, Long, Long)]
+    DriverCutoff.collectUnder(e, math.min(driverCutoff, exactnessCap)) match {
+      case Some(rows) =>
+        // size-adaptive driver twin ([[DriverCutoff]]): the 3
+        // Gauss-Seidel rounds each paid 2 checkpoint jobs + 2
+        // broadcast-total subqueries over one-row-per-node frames
+        // (2.5 s of fixed cost at sf0.1). Identical arithmetic: raw
+        // sums in BigInt (≙ the DECIMAL(38,0) column), normalize =
+        // raw·1e12 div tot as exact integer floor, ties to the
+        // smaller id. Round12Spec pins the boundary byte-equal.
+        val edges = longPairs(rows)
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        if (edges.isEmpty)
+          return Seq.empty[(String, Long, Long)]
+            .toDF("role", "node", "score")
+        val hubM = mutable.LongMap.empty[Long]
+        val authM = mutable.LongMap.empty[Long]
+        edges.foreach { case (c, _) => hubM(c) = S }
+        edges.foreach { case (_, s) => authM(s) = S }
+        // per-node raw sums stay in Long: scores are ≤ 1e12 and the
+        // edge count is ≤ DriverCutoff.pairRows (8.39M), so any raw
+        // sum and the grand total are ≤ 8.39e18 < 2⁶³−1 — the Long
+        // accumulation is exact, matching the DECIMAL(38,0) column;
+        // only the per-node normalize raw·1e12 needs BigInt headroom
+        for (_ <- 0 until iters) {
+          val ar = mutable.LongMap.empty[Long].withDefaultValue(0L)
+          var tot = 0L
+          edges.foreach { case (c, s) =>
+            ar(s) += hubM(c); tot += hubM(c) }
+          ar.foreach { case (s, raw) =>
+            authM(s) = (BigInt(raw) * S / tot).toLong }
+          val hr = mutable.LongMap.empty[Long].withDefaultValue(0L)
+          var tot2 = 0L
+          edges.foreach { case (c, s) =>
+            hr(c) += authM(s); tot2 += authM(s) }
+          hr.foreach { case (c, raw) =>
+            hubM(c) = (BigInt(raw) * S / tot2).toLong }
+        }
+        val topA = authM.toSeq.sortBy { case (s, a) => (-a, s) }.take(k)
+          .map { case (s, a) => ("authority", s, a) }
+        val topH = hubM.toSeq.sortBy { case (c, h) => (-h, c) }.take(k)
+          .map { case (c, h) => ("hub", c, h) }
+        spark.sparkContext.parallelize(topA ++ topH, 32)
           .toDF("role", "node", "score")
-      val hubM = mutable.LongMap.empty[Long]
-      val authM = mutable.LongMap.empty[Long]
-      edges.foreach { case (c, _) => hubM(c) = S }
-      edges.foreach { case (_, s) => authM(s) = S }
-      // per-node raw sums stay in Long: scores are ≤ 1e12 and the
-      // edge count is ≤ DriverCutoff.pairRows (8.39M), so any raw
-      // sum and the grand total are ≤ 8.39e18 < 2⁶³−1 — the Long
-      // accumulation is exact, matching the DECIMAL(38,0) column;
-      // only the per-node normalize raw·1e12 needs BigInt headroom
-      for (_ <- 0 until iters) {
-        val ar = mutable.LongMap.empty[Long].withDefaultValue(0L)
-        var tot = 0L
-        edges.foreach { case (c, s) =>
-          ar(s) += hubM(c); tot += hubM(c) }
-        ar.foreach { case (s, raw) =>
-          authM(s) = (BigInt(raw) * S / tot).toLong }
-        val hr = mutable.LongMap.empty[Long].withDefaultValue(0L)
-        var tot2 = 0L
-        edges.foreach { case (c, s) =>
-          hr(c) += authM(s); tot2 += authM(s) }
-        hr.foreach { case (c, raw) =>
-          hubM(c) = (BigInt(raw) * S / tot2).toLong }
-      }
-      val topA = authM.toSeq.sortBy { case (s, a) => (-a, s) }.take(k)
-        .map { case (s, a) => ("authority", s, a) }
-      val topH = hubM.toSeq.sortBy { case (c, h) => (-h, c) }.take(k)
-        .map { case (c, h) => ("hub", c, h) }
-      return spark.sparkContext.parallelize(topA ++ topH, 32)
-        .toDF("role", "node", "score")
+      case None =>
+        var hub = e.select("cust").distinct().withColumn("h", lit(S))
+        var auth = e.select("supp").distinct().withColumn("a", lit(S))
+        for (_ <- 0 until iters) {
+          val ar = e.join(hub, "cust").groupBy("supp")
+            .agg(sum(col("h").cast("decimal(38,0)")).as("raw"))
+          auth = ar.crossJoin(broadcast(ar.agg(sum("raw").as("tot"))))
+            .select(col("supp"),
+              expr("CAST(raw * 1000000000000 div tot AS BIGINT)").as("a"))
+            .localCheckpoint()
+          val hr = e.join(auth, "supp").groupBy("cust")
+            .agg(sum(col("a").cast("decimal(38,0)")).as("raw"))
+          hub = hr.crossJoin(broadcast(hr.agg(sum("raw").as("tot"))))
+            .select(col("cust"),
+              expr("CAST(raw * 1000000000000 div tot AS BIGINT)").as("h"))
+            .localCheckpoint()
+        }
+        val topAuth = auth
+          .orderBy(col("a").desc, col("supp")).limit(k)
+          .select(lit("authority").as("role"), col("supp").as("node"),
+            col("a").as("score"))
+        val topHub = hub
+          .orderBy(col("h").desc, col("cust")).limit(k)
+          .select(lit("hub").as("role"), col("cust").as("node"),
+            col("h").as("score"))
+        topAuth.unionByName(topHub)
     }
-    var hub = e.select("cust").distinct().withColumn("h", lit(S))
-    var auth = e.select("supp").distinct().withColumn("a", lit(S))
-    for (_ <- 0 until iters) {
-      val ar = e.join(hub, "cust").groupBy("supp")
-        .agg(sum(col("h").cast("decimal(38,0)")).as("raw"))
-      auth = ar.crossJoin(broadcast(ar.agg(sum("raw").as("tot"))))
-        .select(col("supp"),
-          expr("CAST(raw * 1000000000000 div tot AS BIGINT)").as("a"))
-        .localCheckpoint()
-      val hr = e.join(auth, "supp").groupBy("cust")
-        .agg(sum(col("a").cast("decimal(38,0)")).as("raw"))
-      hub = hr.crossJoin(broadcast(hr.agg(sum("raw").as("tot"))))
-        .select(col("cust"),
-          expr("CAST(raw * 1000000000000 div tot AS BIGINT)").as("h"))
-        .localCheckpoint()
-    }
-    val topAuth = auth
-      .orderBy(col("a").desc, col("supp")).limit(k)
-      .select(lit("authority").as("role"), col("supp").as("node"),
-        col("a").as("score"))
-    val topHub = hub
-      .orderBy(col("h").desc, col("cust")).limit(k)
-      .select(lit("hub").as("role"), col("cust").as("node"),
-        col("h").as("score"))
-    topAuth.unionByName(topHub)
   }
 
   /** Resource-allocation link prediction over the capped bipartite
@@ -1119,89 +1091,67 @@ object Graph {
                 driverCutoff: Long = DriverCutoff.weightedArcRows)
       : DataFrame = {
     val edges = weightedNationEdges(lineitem, orders, customer, supplier)
-    if (edges.count() <= driverCutoff) {
-      // size-adaptive driver Bellman–Ford ([[DriverCutoff]]): the
-      // nation arc frame is ≤ V² rows and each distributed round
-      // paid 2 driver jobs; the twin runs the identical SYNCHRONOUS
-      // rounds (round-start distances only), convergence test and
-      // maxIter guard — the min-plus fixpoint is unique, so values
-      // are byte-equal.
-      import scala.collection.mutable
-      val arcs = edges.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val natRows = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      val dist = mutable.LongMap.empty[Long] // value ⇔ reached
-      // the distributed frame starts with every NATION node present
-      // (d null) and seeds d = 0 only when src is one of them; its
-      // convergence check inner-joins on node, so only rows PRESENT
-      // at round start can register an improvement (null → value
-      // counts; a node first appearing this round does not)
-      val present = mutable.Set[Long](natRows.map(_._1): _*)
-      if (present(src)) dist(src) = 0L
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter + 1) {
-        val relaxed = dist.clone()
-        arcs.foreach { case (a, b, c) =>
-          dist.get(a).foreach { da =>
-            if (!relaxed.contains(b) || da + c < relaxed(b))
-              relaxed(b) = da + c
-          }
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        // size-adaptive driver Bellman–Ford ([[DriverCutoff]]): the
+        // nation arc frame is ≤ V² rows and each distributed round
+        // paid 2 driver jobs; [[bellmanFord]] runs the same rounds.
+        // The distributed frame starts with every NATION node present
+        // (d null) and seeds d = 0 only when src is one of them.
+        val natRows = nation
+          .select(col("n_nationkey").cast("long"), col("n_name"))
+          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val dist = mutable.LongMap.empty[Long] // value ⇔ reached
+        val present = mutable.Set.from(natRows.map(_._1))
+        if (present(src)) dist(src) = 0L
+        if (!bellmanFord(longTriples(rows), Seq((dist, present)), maxIter))
+          throw new IllegalStateException(
+            s"ssspTrade did not converge in $maxIter rounds " +
+              "(negative-cost cycle cannot exist with positive costs; " +
+              "raise maxIter for a graph of larger diameter)")
+        val out = natRows.sortBy(_._1).map { case (n, name) =>
+          (name, n, dist.getOrElse(n, -1L)) }
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(out.toSeq, 32)
+          .toDF("n_name", "node", "dist")
+      case None =>
+        val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
+        var dist = nodes.select(col("node"),
+            when(col("node") === src, 0L).as("d"))
+          .localCheckpoint()
+        var converged = false
+        var i = 0
+        // maxIter bounds IMPROVING rounds; the +1 is the no-improvement
+        // confirming round, so a diameter-exactly-maxIter graph
+        // converges instead of throwing (oracle: fixed maxIter sweeps)
+        while (!converged && i < maxIter + 1) {
+          val relaxed = edges
+            .join(dist.filter(col("d").isNotNull), col("esrc") === col("node"))
+            .select(col("edst").as("node"), (col("d") + col("cost")).as("d"))
+            .unionByName(dist)
+            .groupBy("node").agg(min("d").as("d"))
+            .localCheckpoint()
+          val improved = relaxed.as("a")
+            .join(dist.as("b"), col("a.node") === col("b.node"))
+            .filter(col("a.d").isNotNull &&
+              (col("b.d").isNull || col("a.d") < col("b.d")))
+            .count()
+          converged = improved == 0
+          dist = relaxed
+          i += 1
         }
-        converged = !relaxed.exists { case (n, d) =>
-          present(n) && dist.get(n).forall(_ > d) }
-        relaxed.foreach { case (n, d) => dist(n) = d; present += n }
-        i += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"ssspTrade did not converge in $maxIter rounds " +
-            "(negative-cost cycle cannot exist with positive costs; " +
-            "raise maxIter for a graph of larger diameter)")
-      val out = natRows.sortBy(_._1).map { case (n, name) =>
-        (name, n, dist.getOrElse(n, -1L)) }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "node", "dist")
+        if (!converged)
+          throw new IllegalStateException(
+            s"ssspTrade did not converge in $maxIter rounds " +
+              "(negative-cost cycle cannot exist with positive costs; " +
+              "raise maxIter for a graph of larger diameter)")
+        dist
+          .join(broadcast(nation),
+            dist("node") === nation("n_nationkey").cast("long"))
+          .select(col("n_name"), col("node"),
+            coalesce(col("d"), lit(-1L)).as("dist"))
     }
-    val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-    var dist = nodes.select(col("node"),
-        when(col("node") === src, 0L).as("d"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    // maxIter bounds IMPROVING rounds; the +1 is the no-improvement
-    // confirming round, so a diameter-exactly-maxIter graph
-    // converges instead of throwing (oracle: fixed maxIter sweeps)
-    while (!converged && i < maxIter + 1) {
-      val relaxed = edges
-        .join(dist.filter(col("d").isNotNull), col("esrc") === col("node"))
-        .select(col("edst").as("node"), (col("d") + col("cost")).as("d"))
-        .unionByName(dist)
-        .groupBy("node").agg(min("d").as("d"))
-        .localCheckpoint()
-      val improved = relaxed.as("a")
-        .join(dist.as("b"), col("a.node") === col("b.node"))
-        .filter(col("a.d").isNotNull &&
-          (col("b.d").isNull || col("a.d") < col("b.d")))
-        .count()
-      converged = improved == 0
-      dist = relaxed
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"ssspTrade did not converge in $maxIter rounds " +
-          "(negative-cost cycle cannot exist with positive costs; " +
-          "raise maxIter for a graph of larger diameter)")
-    dist
-      .join(broadcast(nation),
-        dist("node") === nation("n_nationkey").cast("long"))
-      .select(col("n_name"), col("node"),
-        coalesce(col("d"), lit(-1L)).as("dist"))
   }
 
   /** Strongly connected components of the DIRECTED trade graph:
@@ -1271,65 +1221,72 @@ object Graph {
   private def sccFromEdges(edges: DataFrame, nation: DataFrame,
                            maxIter: Int,
                            driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
-    if (edges.count() <= driverCutoff) {
-      // size-adaptive driver closure ([[DriverCutoff]]): the nation
-      // graph is ≤ V² ≤ 625 pairs and the squaring loop paid 2
-      // driver jobs per round — the driver twin runs the IDENTICAL
-      // rounds (same squaring recurrence, same convergence test,
-      // same maxIter guard) on an in-memory pair set.
-      import scala.collection.mutable
-      var reach = edges.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter + 1) {
-        val byA = reach.groupBy(_._1)
-        val nxt = reach ++ reach.flatMap { case (a, b) =>
-          byA.getOrElse(b, Nil).map { case (_, c) => (a, c) } }
-        converged = nxt.size == reach.size
-        reach = nxt
-        i += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"sccTrade closure did not converge in $maxIter rounds")
-      val sccId = mutable.LongMap.empty[Long]
-      nation.select(col("n_nationkey").cast("long")).collect()
-        .map(_.getLong(0)).foreach { v =>
-          val peers = reach.collect {
-            case (a, b) if a == v && reach.contains((b, a)) => b }
-          sccId(v) = (peers + v).min
+      : DataFrame =
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        val keys = nation.select(col("n_nationkey").cast("long")).collect()
+          .map(_.getLong(0))
+        val sccId = sccClosure(longPairs(rows), keys, maxIter)
+        val spark = edges.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(
+          sccId.toSeq.sortBy(_._1), 32).toDF("node", "scc_id")
+      case None =>
+        var reach = edges
+        var converged = false
+        var i = 0
+        // improving rounds ≤ maxIter; +1 is the confirming round
+        while (!converged && i < maxIter + 1) {
+          val nxt = reach.unionByName(
+              reach.as("x").join(reach.as("y"), col("x.b") === col("y.a"))
+                .select(col("x.a").as("a"), col("y.b").as("b")))
+            .distinct().localCheckpoint()
+          converged = nxt.count() == reach.count()
+          reach = nxt
+          i += 1
         }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(
-        sccId.toSeq.sortBy(_._1), 32).toDF("node", "scc_id")
+        if (!converged)
+          throw new IllegalStateException(
+            s"sccTrade closure did not converge in $maxIter rounds")
+        val mutual = reach.as("f").join(reach.as("r"),
+            col("f.a") === col("r.b") && col("f.b") === col("r.a"))
+          .select(col("f.a").as("node"), col("f.b").as("peer"))
+        val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
+        nodes.join(mutual, Seq("node"), "left")
+          .groupBy("node")
+          .agg(coalesce(least(min("peer"), col("node")), col("node"))
+            .as("scc_id"))
     }
-    var reach = edges
+
+  /** [[sccFromEdges]]' driver twin over the collected arcs
+    * ([[DriverCutoff]]): the nation graph is ≤ V² ≤ 625 pairs and the
+    * squaring loop paid 2 driver jobs per round, so this runs the
+    * IDENTICAL rounds (same squaring recurrence, same convergence
+    * test, same maxIter guard) on an in-memory pair set. Returns
+    * scc(v) = min of v and its mutually reachable peers, per node. */
+  private def sccClosure(arcs: Array[(Long, Long)], nodes: Array[Long],
+                         maxIter: Int): mutable.LongMap[Long] = {
+    var reach = arcs.toSet
     var converged = false
     var i = 0
-    // improving rounds ≤ maxIter; +1 is the confirming round
     while (!converged && i < maxIter + 1) {
-      val nxt = reach.unionByName(
-          reach.as("x").join(reach.as("y"), col("x.b") === col("y.a"))
-            .select(col("x.a").as("a"), col("y.b").as("b")))
-        .distinct().localCheckpoint()
-      converged = nxt.count() == reach.count()
+      val byA = reach.groupBy(_._1)
+      val nxt = reach ++ reach.flatMap { case (a, b) =>
+        byA.getOrElse(b, Nil).map { case (_, c) => (a, c) } }
+      converged = nxt.size == reach.size
       reach = nxt
       i += 1
     }
     if (!converged)
       throw new IllegalStateException(
         s"sccTrade closure did not converge in $maxIter rounds")
-    val mutual = reach.as("f").join(reach.as("r"),
-        col("f.a") === col("r.b") && col("f.b") === col("r.a"))
-      .select(col("f.a").as("node"), col("f.b").as("peer"))
-    val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-    nodes.join(mutual, Seq("node"), "left")
-      .groupBy("node")
-      .agg(coalesce(least(min("peer"), col("node")), col("node"))
-        .as("scc_id"))
+    val sccId = mutable.LongMap.empty[Long]
+    nodes.foreach { v =>
+      val peers = reach.collect {
+        case (a, b) if a == v && reach.contains((b, a)) => b }
+      sccId(v) = (peers + v).min
+    }
+    sccId
   }
 
   def sccTrade(lineitem: DataFrame, orders: DataFrame,
@@ -1384,89 +1341,88 @@ object Graph {
                       driverCutoff: Long = DriverCutoff.pairRows)
       : DataFrame = {
     val edges = tradeEdges(lineitem, orders, customer, supplier)
-    if (edges.count() <= driverCutoff) {
-      // size-adaptive driver layering ([[DriverCutoff]]): the
-      // condensation is ≤ V ≤ 25 components here and the max-relax
-      // loop paid 2 driver jobs per depth round; the driver twin
-      // runs the identical synchronous rounds + maxIter guard.
-      import scala.collection.mutable
-      val sccRows = sccFromEdges(edges, nation, maxIter, driverCutoff)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val sccOf = sccRows.toMap
-      // endpoints absent from the scc frame (no FK integrity) are
-      // DROPPED, mirroring the distributed path's inner join on scc —
-      // Map.apply here would crash where the cluster path silently
-      // drops the arc, diverging across the size cutoff (r12 ADVICE)
-      val condPairs = edges.collect()
-        .flatMap { r =>
-          for {
-            sa <- sccOf.get(r.getLong(0))
-            sb <- sccOf.get(r.getLong(1))
-          } yield (sa, sb)
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        // size-adaptive driver layering ([[DriverCutoff]]): the
+        // condensation is ≤ V ≤ 25 components here and the max-relax
+        // loop paid 2 driver jobs per depth round; the driver twin
+        // runs the identical synchronous rounds + maxIter guard, on
+        // [[sccClosure]] of the same collected arcs.
+        val arcs = longPairs(rows)
+        val natRows = nation
+          .select(col("n_nationkey").cast("long"), col("n_name"))
+          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val sccOf = sccClosure(arcs, natRows.map(_._1), maxIter)
+        val sccRows = sccOf.toSeq.sortBy(_._1)
+        // endpoints absent from the scc map (no FK integrity) are
+        // DROPPED, mirroring the distributed path's inner join on scc —
+        // Map.apply here would crash where the cluster path silently
+        // drops the arc, diverging across the size cutoff (r12 ADVICE)
+        val condPairs = arcs
+          .flatMap { case (a, b) =>
+            for (sa <- sccOf.get(a); sb <- sccOf.get(b)) yield (sa, sb) }
+          .filter { case (sa, sb) => sa != sb }.toSet
+        val layer = mutable.LongMap.empty[Long]
+        sccRows.foreach { case (_, s) => layer(s) = 0L }
+        var converged = false
+        var i = 0
+        while (!converged && i < maxIter + 1) {
+          val relaxed = layer.clone()
+          condPairs.foreach { case (sa, sb) =>
+            if (layer(sa) + 1L > relaxed(sb)) relaxed(sb) = layer(sa) + 1L }
+          converged = sccRows.forall { case (_, s) =>
+            relaxed(s) == layer(s) }
+          relaxed.foreach { case (s, l) => layer(s) = l }
+          i += 1
         }
-        .filter { case (sa, sb) => sa != sb }.toSet
-      val layer = mutable.LongMap.empty[Long]
-      sccRows.foreach { case (_, s) => layer(s) = 0L }
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter + 1) {
-        val relaxed = layer.clone()
-        condPairs.foreach { case (sa, sb) =>
-          if (layer(sa) + 1L > relaxed(sb)) relaxed(sb) = layer(sa) + 1L }
-        converged = sccRows.forall { case (_, s) =>
-          relaxed(s) == layer(s) }
-        relaxed.foreach { case (s, l) => layer(s) = l }
-        i += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"topoLayersTrade did not converge in $maxIter rounds " +
-            "(the condensation is a DAG; raise maxIter for deeper ones)")
-      val names = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val out = sccRows.sortBy(_._1).map { case (n, s) =>
-        (names(n), n, s, layer(s)) }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "node", "scc_id", "layer")
+        if (!converged)
+          throw new IllegalStateException(
+            s"topoLayersTrade did not converge in $maxIter rounds " +
+              "(the condensation is a DAG; raise maxIter for deeper ones)")
+        val names = natRows.toMap
+        val out = sccRows.map { case (n, s) =>
+          (names(n), n, s, layer(s)) }
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(out, 32)
+          .toDF("n_name", "node", "scc_id", "layer")
+      case None =>
+        val scc = sccFromEdges(edges, nation, maxIter, driverCutoff)
+          .localCheckpoint()
+        val cond = edges
+          .join(scc.select(col("node").as("a"), col("scc_id").as("sa")), "a")
+          .join(scc.select(col("node").as("b"), col("scc_id").as("sb")), "b")
+          .filter(col("sa") =!= col("sb"))
+          .select("sa", "sb").distinct()
+          .localCheckpoint()
+        var layers = scc.select(col("scc_id")).distinct()
+          .withColumn("layer", lit(0L)).localCheckpoint()
+        var converged = false
+        var i = 0
+        // improving rounds ≤ maxIter; +1 is the confirming round
+        while (!converged && i < maxIter + 1) {
+          val relaxed = cond
+            .join(layers, col("sa") === col("scc_id"))
+            .select(col("sb").as("scc_id"), (col("layer") + 1L).as("layer"))
+            .unionByName(layers)
+            .groupBy("scc_id").agg(max("layer").as("layer"))
+            .localCheckpoint()
+          val improved = relaxed.as("x")
+            .join(layers.as("y"), Seq("scc_id"))
+            .filter(col("x.layer") > col("y.layer")).count()
+          converged = improved == 0
+          layers = relaxed
+          i += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"topoLayersTrade did not converge in $maxIter rounds " +
+              "(the condensation is a DAG; raise maxIter for deeper ones)")
+        scc.join(layers, "scc_id")
+          .join(broadcast(nation),
+            col("node") === nation("n_nationkey").cast("long"))
+          .select(col("n_name"), col("node"), col("scc_id"), col("layer"))
     }
-    val scc = sccFromEdges(edges, nation, maxIter, driverCutoff)
-      .localCheckpoint()
-    val cond = edges
-      .join(scc.select(col("node").as("a"), col("scc_id").as("sa")), "a")
-      .join(scc.select(col("node").as("b"), col("scc_id").as("sb")), "b")
-      .filter(col("sa") =!= col("sb"))
-      .select("sa", "sb").distinct()
-      .localCheckpoint()
-    var layers = scc.select(col("scc_id")).distinct()
-      .withColumn("layer", lit(0L)).localCheckpoint()
-    var converged = false
-    var i = 0
-    // improving rounds ≤ maxIter; +1 is the confirming round
-    while (!converged && i < maxIter + 1) {
-      val relaxed = cond
-        .join(layers, col("sa") === col("scc_id"))
-        .select(col("sb").as("scc_id"), (col("layer") + 1L).as("layer"))
-        .unionByName(layers)
-        .groupBy("scc_id").agg(max("layer").as("layer"))
-        .localCheckpoint()
-      val improved = relaxed.as("x")
-        .join(layers.as("y"), Seq("scc_id"))
-        .filter(col("x.layer") > col("y.layer")).count()
-      converged = improved == 0
-      layers = relaxed
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"topoLayersTrade did not converge in $maxIter rounds " +
-          "(the condensation is a DAG; raise maxIter for deeper ones)")
-    scc.join(layers, "scc_id")
-      .join(broadcast(nation),
-        col("node") === nation("n_nationkey").cast("long"))
-      .select(col("n_name"), col("node"), col("scc_id"), col("layer"))
   }
 
   /** Out-closeness centrality over the weighted trade graph: for
@@ -1491,100 +1447,72 @@ object Graph {
                      driverCutoff: Long = DriverCutoff.weightedArcRows)
       : DataFrame = {
     val edges = weightedNationEdges(lineitem, orders, customer, supplier)
-    if (edges.count() <= driverCutoff) {
-      // size-adaptive driver all-sources Bellman–Ford — the
-      // [[ssspTrade]] twin per source over the ≤ V² arc frame, same
-      // synchronous rounds / convergence semantics / maxIter guard.
-      import scala.collection.mutable
-      val arcs = edges.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val natRows = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      // dist(src) maps node → d (value ⇔ reached); every (src, node)
-      // NATION pair starts present-with-null per the crossJoin init,
-      // so first-reach of a nation node counts as an improvement,
-      // while a non-nation node first appearing this round does not
-      // (the distributed check inner-joins on the round-start frame)
-      val dist = mutable.LongMap.empty[mutable.LongMap[Long]]
-      val present = mutable.LongMap.empty[mutable.Set[Long]]
-      val natKeys = natRows.map(_._1)
-      natRows.foreach { case (s, _) =>
-        val m = mutable.LongMap.empty[Long]; m(s) = 0L; dist(s) = m
-        present(s) = mutable.Set[Long](natKeys: _*) }
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter + 1) {
-        var improvedExisting = false
-        dist.foreach { case (s, m) =>
-          val pres = present(s)
-          val relaxed = m.clone()
-          arcs.foreach { case (a, b, c) =>
-            m.get(a).foreach { da =>
-              if (!relaxed.contains(b) || da + c < relaxed(b))
-                relaxed(b) = da + c
-            }
-          }
-          if (relaxed.exists { case (n, d) =>
-              pres(n) && m.get(n).forall(_ > d) })
-            improvedExisting = true
-          relaxed.foreach { case (n, d) => m(n) = d; pres += n }
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        // size-adaptive driver all-sources Bellman–Ford
+        // ([[bellmanFord]], one state per source in lockstep) over the
+        // ≤ V² arc frame. Every (src, node) NATION pair starts
+        // present-with-null per the crossJoin init.
+        val natRows = nation
+          .select(col("n_nationkey").cast("long"), col("n_name"))
+          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val natKeys = natRows.map(_._1)
+        val dist = mutable.LongMap.empty[mutable.LongMap[Long]]
+        natKeys.foreach(s => dist(s) = mutable.LongMap(s -> 0L))
+        if (!bellmanFord(longTriples(rows), dist.values.toSeq.map(m =>
+            (m, mutable.Set.from(natKeys))), maxIter))
+          throw new IllegalStateException(
+            s"closenessTrade did not converge in $maxIter rounds")
+        val out = natRows.sortBy(_._1).map { case (s, name) =>
+          // the distributed aggregate counts EVERY reached row of the
+          // (src, node) frame — including nodes relax added beyond the
+          // nation init — so the twin counts the whole map
+          val m = dist(s)
+          (name, s, m.size.toLong, m.values.sum)
         }
-        converged = !improvedExisting
-        i += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"closenessTrade did not converge in $maxIter rounds")
-      val out = natRows.sortBy(_._1).map { case (s, name) =>
-        // the distributed aggregate counts EVERY reached row of the
-        // (src, node) frame — including nodes relax added beyond the
-        // nation init — so the twin counts the whole map
-        val m = dist(s)
-        (name, s, m.size.toLong, m.values.sum)
-      }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "node", "n_reachable", "total_dist")
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext.parallelize(out.toSeq, 32)
+          .toDF("n_name", "node", "n_reachable", "total_dist")
+      case None =>
+        val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
+        var dist = nodes.select(col("node").as("src"))
+          .crossJoin(nodes)
+          .select(col("src"), col("node"),
+            when(col("src") === col("node"), 0L).as("d"))
+          .localCheckpoint()
+        var converged = false
+        var i = 0
+        // improving rounds ≤ maxIter; +1 is the confirming round
+        while (!converged && i < maxIter + 1) {
+          val relaxed = edges
+            .join(dist.filter(col("d").isNotNull), col("esrc") === col("node"))
+            .select(col("src"), col("edst").as("node"),
+              (col("d") + col("cost")).as("d"))
+            .unionByName(dist)
+            .groupBy("src", "node").agg(min("d").as("d"))
+            .localCheckpoint()
+          val improved = relaxed.as("a")
+            .join(dist.as("b"), Seq("src", "node"))
+            .filter(col("a.d").isNotNull &&
+              (col("b.d").isNull || col("a.d") < col("b.d")))
+            .count()
+          converged = improved == 0
+          dist = relaxed
+          i += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"closenessTrade did not converge in $maxIter rounds")
+        dist.groupBy("src")
+          .agg(coalesce(sum(when(col("d").isNotNull, 1L)), lit(0L))
+              .as("n_reachable"),
+            coalesce(sum("d"), lit(0L)).as("total_dist"))
+          .join(broadcast(nation),
+            col("src") === nation("n_nationkey").cast("long"))
+          .select(col("n_name"), col("src").as("node"),
+            col("n_reachable"), col("total_dist"))
     }
-    val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-    var dist = nodes.select(col("node").as("src"))
-      .crossJoin(nodes)
-      .select(col("src"), col("node"),
-        when(col("src") === col("node"), 0L).as("d"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    // improving rounds ≤ maxIter; +1 is the confirming round
-    while (!converged && i < maxIter + 1) {
-      val relaxed = edges
-        .join(dist.filter(col("d").isNotNull), col("esrc") === col("node"))
-        .select(col("src"), col("edst").as("node"),
-          (col("d") + col("cost")).as("d"))
-        .unionByName(dist)
-        .groupBy("src", "node").agg(min("d").as("d"))
-        .localCheckpoint()
-      val improved = relaxed.as("a")
-        .join(dist.as("b"), Seq("src", "node"))
-        .filter(col("a.d").isNotNull &&
-          (col("b.d").isNull || col("a.d") < col("b.d")))
-        .count()
-      converged = improved == 0
-      dist = relaxed
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"closenessTrade did not converge in $maxIter rounds")
-    dist.groupBy("src")
-      .agg(coalesce(sum(when(col("d").isNotNull, 1L)), lit(0L))
-          .as("n_reachable"),
-        coalesce(sum("d"), lit(0L)).as("total_dist"))
-      .join(broadcast(nation),
-        col("src") === nation("n_nationkey").cast("long"))
-      .select(col("n_name"), col("src").as("node"),
-        col("n_reachable"), col("total_dist"))
   }
 
   /** The directed REPEAT-BUSINESS key-level trade graph shared by
@@ -1725,168 +1653,169 @@ object Graph {
     // milliseconds; min-member ids make the outputs byte-equal
     // (spec-pinned). Above the cutoff — a denser graph at 100 TB —
     // the distributed decomposition below runs unchanged.
-    if (edges0.count() <= driverCutoff) {
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      // node universe as a LongMap + one array sort — a SortedSet's
-      // per-insert tree rebalance was ~10 s of the sf10 pass alone
-      val seen = mutable.LongMap.empty[Unit]
-      edges0.collect().foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
-        seen(a) = (); seen(b) = ()
-      }
-      val nodeSet = seen.keys.toArray
-      java.util.Arrays.sort(nodeSet)
-      val empty = mutable.ArrayBuffer.empty[Long]
-      val index = mutable.LongMap.empty[Int]
-      val low = mutable.LongMap.empty[Int]
-      val onStk = mutable.HashSet.empty[Long]
-      val stk = mutable.ArrayBuffer.empty[Long]
-      val comp = mutable.LongMap.empty[Long]
-      var idx = 0
-      // iterative Tarjan (explicit call stack: a 2M-arc chain would
-      // blow the JVM stack recursive)
-      val call = mutable.ArrayBuffer.empty[(Long, Iterator[Long])]
-      def enter(v: Long): Unit = {
-        index(v) = idx; low(v) = idx; idx += 1
-        stk += v; onStk += v
-        call += ((v, adj.getOrElse(v, empty).iterator))
-      }
-      for (v0 <- nodeSet if !index.contains(v0)) {
-        enter(v0)
-        while (call.nonEmpty) {
-          val (v, it) = call.last
-          if (it.hasNext) {
-            val w = it.next()
-            if (!index.contains(w)) enter(w)
-            else if (onStk(w)) low(v) = math.min(low(v), index(w))
-          } else {
-            call.remove(call.length - 1)
-            if (call.nonEmpty) {
-              val p = call.last._1
-              low(p) = math.min(low(p), low(v))
-            }
-            if (low(v) == index(v)) {
-              val members = mutable.ArrayBuffer.empty[Long]
-              var w = 0L
-              do {
-                w = stk.remove(stk.length - 1); onStk -= w
-                members += w
-              } while (w != v)
-              val m = members.min
-              members.foreach(comp(_) = m)
+    DriverCutoff.collectUnder(edges0, driverCutoff) match {
+      case Some(rows) =>
+        val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+        // node universe as a LongMap + one array sort — a SortedSet's
+        // per-insert tree rebalance was ~10 s of the sf10 pass alone
+        val seen = mutable.LongMap.empty[Unit]
+        rows.foreach { r =>
+          val (a, b) = (r.getLong(0), r.getLong(1))
+          adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
+          seen(a) = (); seen(b) = ()
+        }
+        val nodeSet = seen.keys.toArray
+        java.util.Arrays.sort(nodeSet)
+        val empty = mutable.ArrayBuffer.empty[Long]
+        val index = mutable.LongMap.empty[Int]
+        val low = mutable.LongMap.empty[Int]
+        val onStk = mutable.HashSet.empty[Long]
+        val stk = mutable.ArrayBuffer.empty[Long]
+        val comp = mutable.LongMap.empty[Long]
+        var idx = 0
+        // iterative Tarjan (explicit call stack: a 2M-arc chain would
+        // blow the JVM stack recursive)
+        val call = mutable.ArrayBuffer.empty[(Long, Iterator[Long])]
+        def enter(v: Long): Unit = {
+          index(v) = idx; low(v) = idx; idx += 1
+          stk += v; onStk += v
+          call += ((v, adj.getOrElse(v, empty).iterator))
+        }
+        for (v0 <- nodeSet if !index.contains(v0)) {
+          enter(v0)
+          while (call.nonEmpty) {
+            val (v, it) = call.last
+            if (it.hasNext) {
+              val w = it.next()
+              if (!index.contains(w)) enter(w)
+              else if (onStk(w)) low(v) = math.min(low(v), index(w))
+            } else {
+              call.remove(call.length - 1)
+              if (call.nonEmpty) {
+                val p = call.last._1
+                low(p) = math.min(low(p), low(v))
+              }
+              if (low(v) == index(v)) {
+                val members = mutable.ArrayBuffer.empty[Long]
+                var w = 0L
+                do {
+                  w = stk.remove(stk.length - 1); onStk -= w
+                  members += w
+                } while (w != v)
+                val m = members.min
+                members.foreach(comp(_) = m)
+              }
             }
           }
         }
-      }
-      val sizes = mutable.LongMap.empty[Long].withDefaultValue(0L)
-      comp.values.foreach(id => sizes(id) = sizes(id) + 1L)
-      val spark = session
-      import spark.implicits._
-      // ship the result as a parallelized RDD, not a LocalRelation:
-      // LocalRelation encodes every row ON THE DRIVER per execution
-      // (~60 s of the 890k-node sf10 pass); parallelize slices the
-      // raw tuples and converts on executors
-      return spark.sparkContext
-        .parallelize(nodeSet.toSeq.map(n =>
-          (n, comp(n), sizes(comp(n)))), 32)
-        .toDF("node", "scc_id", "scc_size")
-    }
-    val allNodes = edges0.select(col("a").as("node"))
-      .unionByName(edges0.select(col("b").as("node"))).distinct()
-      .localCheckpoint()
-    var members = List.empty[DataFrame] // (node, color) per found SCC
-    var edges = edges0
-    var nEdges = edges.count()
-    var outer = 0
-    while (nEdges > 0 && outer < maxIter) {
-      // 1. TRIM: keep only arcs whose tail has an in-arc and whose
-      // head has an out-arc; fixpoint = every survivor is on a path
-      // through a cycle candidate
-      var trimming = true
-      while (trimming && nEdges > 0) {
-        val e2 = edges
-          .join(edges.select(col("b").as("a")).distinct(),
-            Seq("a"), "left_semi")
-          .join(edges.select(col("a").as("b")).distinct(),
-            Seq("b"), "left_semi")
+        val sizes = mutable.LongMap.empty[Long].withDefaultValue(0L)
+        comp.values.foreach(id => sizes(id) = sizes(id) + 1L)
+        val spark = session
+        import spark.implicits._
+        // ship the result as a parallelized RDD, not a LocalRelation:
+        // LocalRelation encodes every row ON THE DRIVER per execution
+        // (~60 s of the 890k-node sf10 pass); parallelize slices the
+        // raw tuples and converts on executors
+        spark.sparkContext
+          .parallelize(nodeSet.toSeq.map(n =>
+            (n, comp(n), sizes(comp(n)))), 32)
+          .toDF("node", "scc_id", "scc_size")
+      case None =>
+        val allNodes = edges0.select(col("a").as("node"))
+          .unionByName(edges0.select(col("b").as("node"))).distinct()
           .localCheckpoint()
-        val n2 = e2.count()
-        trimming = n2 < nEdges
-        edges = e2
-        nEdges = n2
-      }
-      if (nEdges > 0) {
-        // 2. FW max-color propagation to fixpoint
-        val nodes = edges.select(col("a").as("node"))
-          .unionByName(edges.select(col("b").as("node"))).distinct()
-        var colors = nodes.withColumn("color", col("node"))
-          .localCheckpoint()
-        var changed = 1L
-        var it = 0
-        // improving rounds ≤ maxIter; +1 is the confirming round
-        while (changed > 0 && it < maxIter + 1) {
-          val upd = edges.join(colors, edges("a") === colors("node"))
-            .select(col("b").as("node"), col("color"))
-            .unionByName(colors)
-            .groupBy("node").agg(max("color").as("color"))
-            .localCheckpoint()
-          changed = upd.as("x").join(colors.as("y"), Seq("node"))
-            .filter(col("x.color") > col("y.color")).count()
-          colors = upd
-          it += 1
+        var members = List.empty[DataFrame] // (node, color) per found SCC
+        var edges = edges0
+        var nEdges = edges.count()
+        var outer = 0
+        while (nEdges > 0 && outer < maxIter) {
+          // 1. TRIM: keep only arcs whose tail has an in-arc and whose
+          // head has an out-arc; fixpoint = every survivor is on a path
+          // through a cycle candidate
+          var trimming = true
+          while (trimming && nEdges > 0) {
+            val e2 = edges
+              .join(edges.select(col("b").as("a")).distinct(),
+                Seq("a"), "left_semi")
+              .join(edges.select(col("a").as("b")).distinct(),
+                Seq("b"), "left_semi")
+              .localCheckpoint()
+            val n2 = e2.count()
+            trimming = n2 < nEdges
+            edges = e2
+            nEdges = n2
+          }
+          if (nEdges > 0) {
+            // 2. FW max-color propagation to fixpoint
+            val nodes = edges.select(col("a").as("node"))
+              .unionByName(edges.select(col("b").as("node"))).distinct()
+            var colors = nodes.withColumn("color", col("node"))
+              .localCheckpoint()
+            var changed = 1L
+            var it = 0
+            // improving rounds ≤ maxIter; +1 is the confirming round
+            while (changed > 0 && it < maxIter + 1) {
+              val upd = edges.join(colors, edges("a") === colors("node"))
+                .select(col("b").as("node"), col("color"))
+                .unionByName(colors)
+                .groupBy("node").agg(max("color").as("color"))
+                .localCheckpoint()
+              changed = upd.as("x").join(colors.as("y"), Seq("node"))
+                .filter(col("x.color") > col("y.color")).count()
+              colors = upd
+              it += 1
+            }
+            if (changed > 0)
+              throw new IllegalStateException(
+                s"sccKeysTrade coloring did not converge in $maxIter rounds")
+            // 3. BW multi-source reach inside each color class
+            var found = colors.filter(col("color") === col("node"))
+              .localCheckpoint()
+            var frontier = found
+            var fcount = frontier.count()
+            while (fcount > 0) {
+              val nxt = edges
+                .join(frontier, edges("b") === frontier("node"))
+                .select(col("a").as("node"), col("color"))
+                .distinct()
+                .join(colors.withColumnRenamed("color", "ncolor"),
+                  Seq("node"))
+                .filter(col("color") === col("ncolor"))
+                .select("node", "color")
+                .join(found, Seq("node"), "left_anti")
+                .localCheckpoint()
+              found = found.unionByName(nxt).localCheckpoint()
+              frontier = nxt
+              fcount = nxt.count()
+            }
+            members ::= found
+            // 4. remove the resolved components and go again
+            val fa = found.select(col("node").as("a"))
+            val fb = found.select(col("node").as("b"))
+            edges = edges.join(fa, Seq("a"), "left_anti")
+              .join(fb, Seq("b"), "left_anti")
+              .localCheckpoint()
+            nEdges = edges.count()
+          }
+          outer += 1
         }
-        if (changed > 0)
+        if (nEdges > 0)
           throw new IllegalStateException(
-            s"sccKeysTrade coloring did not converge in $maxIter rounds")
-        // 3. BW multi-source reach inside each color class
-        var found = colors.filter(col("color") === col("node"))
-          .localCheckpoint()
-        var frontier = found
-        var fcount = frontier.count()
-        while (fcount > 0) {
-          val nxt = edges
-            .join(frontier, edges("b") === frontier("node"))
-            .select(col("a").as("node"), col("color"))
-            .distinct()
-            .join(colors.withColumnRenamed("color", "ncolor"),
-              Seq("node"))
-            .filter(col("color") === col("ncolor"))
-            .select("node", "color")
-            .join(found, Seq("node"), "left_anti")
-            .localCheckpoint()
-          found = found.unionByName(nxt).localCheckpoint()
-          frontier = nxt
-          fcount = nxt.count()
-        }
-        members ::= found
-        // 4. remove the resolved components and go again
-        val fa = found.select(col("node").as("a"))
-        val fb = found.select(col("node").as("b"))
-        edges = edges.join(fa, Seq("a"), "left_anti")
-          .join(fb, Seq("b"), "left_anti")
-          .localCheckpoint()
-        nEdges = edges.count()
-      }
-      outer += 1
+            s"sccKeysTrade did not resolve all components in $maxIter passes")
+        val nontrivial = members.reduceOption(_.unionByName(_))
+          .getOrElse(allNodes.filter(lit(false))
+            .withColumn("color", col("node")))
+        val assigned = nontrivial
+          .join(nontrivial.groupBy("color").agg(min("node").as("scc_id")),
+            "color")
+          .select("node", "scc_id")
+        val scc = allNodes.join(assigned, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("scc_id"), col("node")).as("scc_id"))
+        scc.join(scc.groupBy("scc_id").agg(count(lit(1)).as("scc_size")),
+          "scc_id")
+          .select("node", "scc_id", "scc_size")
     }
-    if (nEdges > 0)
-      throw new IllegalStateException(
-        s"sccKeysTrade did not resolve all components in $maxIter passes")
-    val nontrivial = members.reduceOption(_.unionByName(_))
-      .getOrElse(allNodes.filter(lit(false))
-        .withColumn("color", col("node")))
-    val assigned = nontrivial
-      .join(nontrivial.groupBy("color").agg(min("node").as("scc_id")),
-        "color")
-      .select("node", "scc_id")
-    val scc = allNodes.join(assigned, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("scc_id"), col("node")).as("scc_id"))
-    scc.join(scc.groupBy("scc_id").agg(count(lit(1)).as("scc_size")),
-      "scc_id")
-      .select("node", "scc_id", "scc_size")
   }
 
   /** Weighted single-source-set shortest paths over the KEY-LEVEL
@@ -1942,15 +1871,14 @@ object Graph {
         .select("sa", "sb").distinct()
         .localCheckpoint()
     }
-    val layers =
-      if (cond.count() <= driverCutoff) {
-        import scala.collection.mutable
+    val layers = DriverCutoff.collectUnder(cond, driverCutoff) match {
+      case Some(rows) =>
         val succs = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
         val indeg = mutable.LongMap.empty[Int].withDefaultValue(0)
         val comps = mutable.SortedSet.empty[Long]
         scc.select("scc_id").distinct().collect()
           .foreach(r => comps += r.getLong(0))
-        cond.collect().foreach { r =>
+        rows.foreach { r =>
           val (sa, sb) = (r.getLong(0), r.getLong(1))
           succs.getOrElseUpdate(sa,
             mutable.ArrayBuffer.empty[Long]) += sb
@@ -1986,7 +1914,7 @@ object Graph {
         spark.sparkContext
           .parallelize(comps.toSeq.map(c => (c, layer(c))), 32)
           .toDF("scc_id", "layer")
-      } else {
+      case None =>
         var lay = scc.select("scc_id").distinct()
           .withColumn("layer", lit(0L)).localCheckpoint()
         var converged = false
@@ -2015,7 +1943,7 @@ object Graph {
               "rounds (the condensation is a DAG; raise sweepBound " +
               "and the oracle bound for deeper ones)")
         lay
-      }
+    }
     scc.join(layers, "scc_id").select("node", "scc_id", "layer")
   }
 
@@ -2026,97 +1954,24 @@ object Graph {
     * (the smallest md5("hl:"+node) edge-bearing nodes — id-pattern-
     * free, engine-re-derivable, the capped-adjacency salt
     * convention), run ONE multi-source BFS keyed (landmark, node) —
-    * O(landmarks·reached) frame, one arc⋈frontier join + min-hop
-    * per round, never all-sources — and report each reached node's
-    * harmonic estimate Σ 10⁶ div hops over the landmarks that reach
-    * it (integral by construction; Boldi–Vigna's in-harmonic
-    * sampling). Size-adaptive: driver BFS under the arc cutoff,
-    * the distributed min-hop loop above it; both assert hops ≤
-    * `maxIter`, the oracle's fixed sweep bound. Output:
-    * (node, n_reach, harmonic_ppm) for nodes ≥1 landmark reaches. */
+    * [[landmarkDistKeys]] with the 'hl:' salt, size-adaptive and
+    * FrameCache'd like the 'bw:' family — and report each reached
+    * node's harmonic estimate Σ 10⁶ div hops over the landmarks that
+    * reach it (integral by construction; Boldi–Vigna's in-harmonic
+    * sampling). Hops are asserted ≤ `maxIter`, the oracle's fixed
+    * sweep bound. Output: (node, n_reach, harmonic_ppm) for nodes
+    * ≥1 landmark reaches. */
   def harmonicKeysTrade(lineitem: DataFrame, orders: DataFrame,
                         minTrades: Int = 2, minReturns: Int = 2,
                         landmarks: Int = 8, maxIter: Int = 60,
                         driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
-    val edges = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
-      .select("a", "b") // narrow projection of a cached frame — the
-                        // eager re-checkpoint here cost a job/call
-    val nodes = edges.select(col("a").as("node"))
-      .unionByName(edges.select(col("b").as("node"))).distinct()
-    val lms = nodes
-      .orderBy(md5(concat(lit("hl:"), col("node").cast("string"))),
-        col("node"))
-      .limit(landmarks)
-      .select(col("node").as("lm"))
-      .localCheckpoint()
-    if (edges.count() <= driverCutoff) {
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      edges.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0),
-          mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-      }
-      val none = mutable.ArrayBuffer.empty[Long]
-      val nReach = mutable.LongMap.empty[Long].withDefaultValue(0L)
-      val harmonic = mutable.LongMap.empty[Long].withDefaultValue(0L)
-      var maxHop = 0L
-      lms.collect().map(_.getLong(0)).foreach { lm =>
-        val hop = mutable.LongMap.empty[Long]
-        hop(lm) = 0L
-        var frontier = List(lm)
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap { v =>
-            adj.getOrElse(v, none).filterNot(hop.contains).map { w =>
-              hop(w) = hop(v) + 1L; w
-            }
-          }
-        }
-        hop.foreach { case (n, h) =>
-          if (h >= 1L) {
-            nReach(n) += 1L; harmonic(n) += 1000000L / h
-            if (h > maxHop) maxHop = h
-          }
-        }
-      }
-      if (maxHop > maxIter)
-        throw new IllegalStateException(
-          s"harmonicKeysTrade hops exceed $maxIter — raise maxIter " +
-            "(and the oracle's sweep bound)")
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(nReach.keys.toSeq.sorted
-          .map(n => (n, nReach(n), harmonic(n))), 32)
-        .toDF("node", "n_reach", "harmonic_ppm")
-    }
-    var dist = lms.select(col("lm"), col("lm").as("node"))
-      .withColumn("h", lit(0L)).localCheckpoint()
-    var improved = 1L
-    var i = 0
-    // improving rounds ≤ maxIter; +1 is the confirming round — a
-    // hop-diameter-exactly-maxIter graph converges here just as it
-    // passes the driver BFS's '> maxIter' assert
-    while (improved > 0 && i < maxIter + 1) {
-      val relaxed = edges.join(dist, edges("a") === dist("node"))
-        .select(col("lm"), col("b").as("node"), (col("h") + 1L).as("h"))
-        .unionByName(dist)
-        .groupBy("lm", "node").agg(min("h").as("h"))
-        .localCheckpoint()
-      improved = relaxed.as("x")
-        .join(dist.as("y"), Seq("lm", "node"), "left_outer")
-        .filter(col("y.h").isNull || col("x.h") < col("y.h")).count()
-      dist = relaxed
-      i += 1
-    }
-    if (improved > 0)
-      throw new IllegalStateException(
-        s"harmonicKeysTrade did not converge in $maxIter rounds — " +
-          "raise maxIter (and the oracle's sweep bound)")
-    dist.filter(col("h") >= 1L)
+      : DataFrame =
+    landmarkDistKeys(lineitem, orders, "hl:", minTrades, minReturns,
+        landmarks, maxIter, driverCutoff)
+      .filter(col("h") >= 1L)
       .groupBy("node")
       .agg(count(lit(1)).as("n_reach"),
         sum(expr("1000000 div h")).as("harmonic_ppm"))
-  }
 
   def ssspKeysTrade(lineitem: DataFrame, orders: DataFrame,
                     customer: DataFrame, nation: DataFrame,
@@ -2138,90 +1993,91 @@ object Graph {
     // non-negative costs — same min-plus fixpoint the loop computes)
     // replaces ~80 tiny-frame relaxation jobs; byte-equal outputs,
     // spec-pinned. Above it the Bellman–Ford loop runs unchanged.
-    if (edges.count() <= driverCutoff) {
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long)]]
-      edges.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0),
-          mutable.ArrayBuffer.empty[(Long, Long)]) +=
-          ((r.getLong(1), r.getLong(2)))
-      }
-      val d = mutable.LongMap.empty[Long]
-      // hop counts along the accepted relaxations: if every optimal
-      // distance is realized by a path of ≤ maxIter hops, a
-      // maxIter-sweep Bellman–Ford (the oracle) has converged — the
-      // driver path must enforce the same parity bound the
-      // distributed loop's convergence throw enforces
-      val hops = mutable.LongMap.empty[Int]
-      val pq = mutable.PriorityQueue.empty[(Long, Long)](
-        Ordering.by[(Long, Long), Long](_._1).reverse)
-      seeds.collect().foreach { r =>
-        d(r.getLong(0)) = 0L; hops(r.getLong(0)) = 0
-        pq.enqueue((0L, r.getLong(0)))
-      }
-      while (pq.nonEmpty) {
-        val (dv, v) = pq.dequeue()
-        if (dv == d(v))
-          for ((w, c) <- adj.getOrElse(v, mutable.ArrayBuffer.empty))
-            if (!d.contains(w) || dv + c < d(w)) {
-              d(w) = dv + c; hops(w) = hops(v) + 1
-              pq.enqueue((dv + c, w))
-            } else if (dv + c == d(w) && hops(v) + 1 < hops(w)) {
-              // tie-break on (distance, hops): among equal-cost
-              // paths record the MIN-hop witness, else the parity
-              // assert below can fire on a graph whose min-hop
-              // optimal paths the oracle's fixed sweeps do handle
-              // (the re-enqueue propagates the shorter witness
-              // downstream; hops only decreases, so it terminates)
-              hops(w) = hops(v) + 1
-              pq.enqueue((dv + c, w))
-            }
-      }
-      if (hops.values.nonEmpty && hops.values.max > maxIter)
-        throw new IllegalStateException(
-          s"ssspKeysTrade optimal paths exceed $maxIter hops — " +
-            "raise maxIter (and the oracle's sweep bound)")
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      // parallelized, not LocalRelation (the reached set is
-      // corpus-proportional under wide seed nations)
-      return spark.sparkContext.parallelize(d.toSeq
-          .map { case (n, dd) =>
-            (if (n % 2 == 0) "cust" else "supp", n, dd)
-          }, 32)
-        .toDF("node_type", "node", "dist")
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long)]]
+        rows.foreach { r =>
+          adj.getOrElseUpdate(r.getLong(0),
+            mutable.ArrayBuffer.empty[(Long, Long)]) +=
+            ((r.getLong(1), r.getLong(2)))
+        }
+        val d = mutable.LongMap.empty[Long]
+        // hop counts along the accepted relaxations: if every optimal
+        // distance is realized by a path of ≤ maxIter hops, a
+        // maxIter-sweep Bellman–Ford (the oracle) has converged — the
+        // driver path must enforce the same parity bound the
+        // distributed loop's convergence throw enforces
+        val hops = mutable.LongMap.empty[Int]
+        val pq = mutable.PriorityQueue.empty[(Long, Long)](
+          Ordering.by[(Long, Long), Long](_._1).reverse)
+        seeds.collect().foreach { r =>
+          d(r.getLong(0)) = 0L; hops(r.getLong(0)) = 0
+          pq.enqueue((0L, r.getLong(0)))
+        }
+        while (pq.nonEmpty) {
+          val (dv, v) = pq.dequeue()
+          if (dv == d(v))
+            for ((w, c) <- adj.getOrElse(v, mutable.ArrayBuffer.empty))
+              if (!d.contains(w) || dv + c < d(w)) {
+                d(w) = dv + c; hops(w) = hops(v) + 1
+                pq.enqueue((dv + c, w))
+              } else if (dv + c == d(w) && hops(v) + 1 < hops(w)) {
+                // tie-break on (distance, hops): among equal-cost
+                // paths record the MIN-hop witness, else the parity
+                // assert below can fire on a graph whose min-hop
+                // optimal paths the oracle's fixed sweeps do handle
+                // (the re-enqueue propagates the shorter witness
+                // downstream; hops only decreases, so it terminates)
+                hops(w) = hops(v) + 1
+                pq.enqueue((dv + c, w))
+              }
+        }
+        if (hops.values.nonEmpty && hops.values.max > maxIter)
+          throw new IllegalStateException(
+            s"ssspKeysTrade optimal paths exceed $maxIter hops — " +
+              "raise maxIter (and the oracle's sweep bound)")
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        // parallelized, not LocalRelation (the reached set is
+        // corpus-proportional under wide seed nations)
+        spark.sparkContext.parallelize(d.toSeq
+            .map { case (n, dd) =>
+              (if (n % 2 == 0) "cust" else "supp", n, dd)
+            }, 32)
+          .toDF("node_type", "node", "dist")
+      case None =>
+        var dist = seeds
+          .withColumn("d", lit(0L))
+          .localCheckpoint()
+        var improved = 1L
+        var i = 0
+        // maxIter bounds IMPROVING rounds, the +1 is the no-improvement
+        // confirming round: a graph whose hop-diameter equals maxIter
+        // exactly converges on the distributed path just as it passes
+        // the driver Dijkstra's 'hops > maxIter' assert and the
+        // oracle's fixed maxIter-sweep Bellman–Ford
+        while (improved > 0 && i < maxIter + 1) {
+          val relaxed = edges.join(dist, edges("a") === dist("node"))
+            .select(col("b").as("node"), (col("d") + col("cost")).as("d"))
+            .unionByName(dist)
+            .groupBy("node").agg(min("d").as("d"))
+            .localCheckpoint()
+          improved = relaxed.as("x")
+            .join(dist.as("y"), Seq("node"), "left_outer")
+            .filter(col("y.d").isNull || col("x.d") < col("y.d")).count()
+          dist = relaxed
+          i += 1
+        }
+        if (improved > 0)
+          throw new IllegalStateException(
+            s"ssspKeysTrade did not converge in $maxIter rounds — " +
+              "raise maxIter (and the oracle's sweep bound) for a graph " +
+              "of larger hop diameter")
+        dist.select(
+          when(col("node") % 2 === 0, "cust").otherwise("supp")
+            .as("node_type"),
+          col("node"), col("d").as("dist"))
     }
-    var dist = seeds
-      .withColumn("d", lit(0L))
-      .localCheckpoint()
-    var improved = 1L
-    var i = 0
-    // maxIter bounds IMPROVING rounds, the +1 is the no-improvement
-    // confirming round: a graph whose hop-diameter equals maxIter
-    // exactly converges on the distributed path just as it passes
-    // the driver Dijkstra's 'hops > maxIter' assert and the
-    // oracle's fixed maxIter-sweep Bellman–Ford
-    while (improved > 0 && i < maxIter + 1) {
-      val relaxed = edges.join(dist, edges("a") === dist("node"))
-        .select(col("b").as("node"), (col("d") + col("cost")).as("d"))
-        .unionByName(dist)
-        .groupBy("node").agg(min("d").as("d"))
-        .localCheckpoint()
-      improved = relaxed.as("x")
-        .join(dist.as("y"), Seq("node"), "left_outer")
-        .filter(col("y.d").isNull || col("x.d") < col("y.d")).count()
-      dist = relaxed
-      i += 1
-    }
-    if (improved > 0)
-      throw new IllegalStateException(
-        s"ssspKeysTrade did not converge in $maxIter rounds — " +
-          "raise maxIter (and the oracle's sweep bound) for a graph " +
-          "of larger hop diameter")
-    dist.select(
-      when(col("node") % 2 === 0, "cust").otherwise("supp")
-        .as("node_type"),
-      col("node"), col("d").as("dist"))
   }
 
   /** Deterministic PageRank over the KEY-LEVEL repeat-business
@@ -2250,9 +2106,9 @@ object Graph {
     val S = 1000000000000L
     val arcs = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
       .select("a", "b")
-    // size-adaptive driver twin ([[DriverCutoff]], the r12
-    // pageRankTrade pattern at key level): each distributed round is
-    // an arc⋈rank join + groupBy whose AQE stages cost ~20 driver
+    // size-adaptive driver twin ([[DriverCutoff]], [[pageRankPpm]]
+    // like pageRankTrade's): each distributed round is an arc⋈rank
+    // join + groupBy whose AQE stages cost ~20 driver
     // jobs over KB-scale frames at sf0.1 (profiled: 23 jobs,
     // 1.10 s wall for 7.6 s of tiny-task time). All arithmetic is
     // the identical integer-ppm recurrence — commutative BIGINT
@@ -2261,69 +2117,62 @@ object Graph {
     // sums are exact while arcs·S < 2⁶³ (the hitsTrade exactness
     // cap); past min(cutoff, cap) the distributed loop runs
     // UNCHANGED — the 100 TB path.
-    if (arcs.count() <= math.min(driverCutoff, Long.MaxValue / S)) {
-      import scala.collection.mutable
-      val pairs = arcs.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      if (pairs.isEmpty)
-        return Seq.empty[(String, Long, Long)]
+    DriverCutoff.collectUnder(arcs,
+        math.min(driverCutoff, Long.MaxValue / S)) match {
+      case Some(rows) =>
+        val pairs = longPairs(rows)
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        if (pairs.isEmpty)
+          return Seq.empty[(String, Long, Long)]
+            .toDF("node_type", "node", "pr_scaled")
+        val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
+        pairs.foreach { case (a, _) => od(a) += 1L }
+        val nodeArr = (pairs.map(_._1) ++ pairs.map(_._2)).distinct
+        val pr = pageRankPpm(
+          pairs.map { case (a, b) => (a, b, 1000000L / od(a)) },
+          nodeArr, iters)
+        val out = nodeArr.sorted.map(v =>
+          (if (v % 2 == 0) "cust" else "supp", v, pr(v)))
+        spark.sparkContext.parallelize(out.toSeq, 32)
           .toDF("node_type", "node", "pr_scaled")
-      val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
-      pairs.foreach { case (a, _) => od(a) += 1L }
-      val seen = mutable.LongMap.empty[Unit]
-      pairs.foreach { case (a, b) => seen(a) = (); seen(b) = () }
-      val nodeArr = seen.keys.toArray
-      val n = nodeArr.length.toLong
-      val base = ((S / n) * 15L) / 100L
-      val pr = mutable.LongMap.empty[Long]
-      nodeArr.foreach(v => pr(v) = S / n)
-      for (_ <- 0 until iters) {
-        val c = mutable.LongMap.empty[Long].withDefaultValue(0L)
-        pairs.foreach { case (a, b) =>
-          c(b) += (pr(a) * (1000000L / od(a))) / 1000000L }
-        nodeArr.foreach(v => pr(v) = base + (c(v) * 85L) / 100L)
-      }
-      val out = nodeArr.sorted.map(v =>
-        (if (v % 2 == 0) "cust" else "supp", v, pr(v)))
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("node_type", "node", "pr_scaled")
+      case None =>
+        val nodes = arcs.select(col("a").as("node"))
+          .unionByName(arcs.select(col("b").as("node"))).distinct()
+          .localCheckpoint()
+        val outd = arcs.groupBy("a").agg(count(lit(1)).as("od"))
+        val edges = arcs.join(outd, "a")
+          .select(col("a").as("src"), col("b").as("dst"),
+            expr("1000000 div od").as("frac_ppm"))
+          .localCheckpoint()
+        val n = nodes.count()
+        // arc-free graph (tight thresholds / tiny SF): S div 0 would die
+        // with ArithmeticException mid-plan; an empty frame with the
+        // declared schema is the honest answer (and matches the oracle,
+        // whose per-node divisions never run when no node rows exist)
+        if (n == 0L)
+          return nodes.select(
+            lit("cust").as("node_type"), col("node"),
+            col("node").as("pr_scaled")).limit(0)
+        val base = ((S / n) * 15L) / 100L
+        var ranks = nodes.withColumn("pr", lit(S / n))
+        for (_ <- 0 until iters) {
+          val contrib = edges
+            .join(ranks, edges("src") === ranks("node"))
+            .select(col("dst").as("node"),
+              expr("(pr * frac_ppm) div 1000000").as("term"))
+            .groupBy("node").agg(sum("term").as("c"))
+          ranks = nodes
+            .join(contrib, Seq("node"), "left")
+            .select(col("node"),
+              (lit(base) + expr("(coalesce(c, 0L) * 85) div 100"))
+                .as("pr"))
+        }
+        ranks.select(
+          when(col("node") % 2 === 0, "cust").otherwise("supp")
+            .as("node_type"),
+          col("node"), col("pr").as("pr_scaled"))
     }
-    val nodes = arcs.select(col("a").as("node"))
-      .unionByName(arcs.select(col("b").as("node"))).distinct()
-      .localCheckpoint()
-    val outd = arcs.groupBy("a").agg(count(lit(1)).as("od"))
-    val edges = arcs.join(outd, "a")
-      .select(col("a").as("src"), col("b").as("dst"),
-        expr("1000000 div od").as("frac_ppm"))
-      .localCheckpoint()
-    val n = nodes.count()
-    // arc-free graph (tight thresholds / tiny SF): S div 0 would die
-    // with ArithmeticException mid-plan; an empty frame with the
-    // declared schema is the honest answer (and matches the oracle,
-    // whose per-node divisions never run when no node rows exist)
-    if (n == 0L)
-      return nodes.select(
-        lit("cust").as("node_type"), col("node"),
-        col("node").as("pr_scaled")).limit(0)
-    val base = ((S / n) * 15L) / 100L
-    var ranks = nodes.withColumn("pr", lit(S / n))
-    for (_ <- 0 until iters) {
-      val contrib = edges
-        .join(ranks, edges("src") === ranks("node"))
-        .select(col("dst").as("node"),
-          expr("(pr * frac_ppm) div 1000000").as("term"))
-        .groupBy("node").agg(sum("term").as("c"))
-      ranks = nodes
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr("(coalesce(c, 0L) * 85) div 100"))
-            .as("pr"))
-    }
-    ranks.select(
-      when(col("node") % 2 === 0, "cust").otherwise("supp")
-        .as("node_type"),
-      col("node"), col("pr").as("pr_scaled"))
   }
 
   /** Arc reciprocity over the KEY-LEVEL repeat-business graph —
@@ -2534,86 +2383,89 @@ object Graph {
         col("c_nationkey") === col("n_nationkey"))
       .select((col("c_custkey") * 2).cast("long").as("node"))
       .join(nodes, Seq("node"), "left_semi")
-    // size-adaptive driver twin ([[DriverCutoff]], the
-    // pageRankKeysTrade pattern with the seed-teleport recurrence):
-    // profiled at sf0.1 the distributed loop's 33 AQE stage jobs
-    // cost 1.28 s wall. Identical integer-ppm arithmetic —
-    // commutative Long sums (exact below the hitsTrade cap), floor
-    // divisions in the same order, the full-outer seed merge
-    // replicated as "seeds keep their base, reached non-seeds get
-    // contribution only" — byte-equal (Round13Spec pins the
+    // size-adaptive driver twin ([[DriverCutoff]]) with its own
+    // seed-teleport recurrence: [[pageRankPpm]] keeps a fixed node
+    // set, while here the rank map is rebuilt each round from the
+    // seeds and the reached nodes. Profiled at sf0.1 the distributed
+    // loop's 33 AQE stage jobs cost 1.28 s wall. Identical integer-ppm
+    // arithmetic — commutative Long sums (exact below the hitsTrade
+    // cap), floor divisions in the same order, the full-outer seed
+    // merge replicated as "seeds keep their base, reached non-seeds
+    // get contribution only" — byte-equal (Round13Spec pins the
     // boundary). Above min(cutoff, cap) the distributed loop runs
     // UNCHANGED.
-    if (arcs.count() <= math.min(driverCutoff, Long.MaxValue / S)) {
-      import scala.collection.mutable
-      val pairs = arcs.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val seedArr = seedsLazy.collect().map(_.getLong(0))
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      if (seedArr.isEmpty)
-        return Seq.empty[(String, Long, Long)]
-          .toDF("node_type", "node", "ppr_scaled")
-      val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
-      pairs.foreach { case (a, _) => od(a) += 1L }
-      val nSeeds = seedArr.length.toLong
-      val base = ((S / nSeeds) * 15L) / 100L
-      val isSeed = mutable.LongMap.empty[Unit]
-      seedArr.foreach(v => isSeed(v) = ())
-      var pr = mutable.LongMap.empty[Long]
-      seedArr.foreach(v => pr(v) = S / nSeeds)
-      for (_ <- 0 until iters) {
-        val c = mutable.LongMap.empty[Long].withDefaultValue(0L)
-        pairs.foreach { case (a, b) =>
-          pr.get(a).foreach(p => c(b) += (p * (1000000L / od(a))) / 1000000L)
+    DriverCutoff.collectUnder(arcs,
+        math.min(driverCutoff, Long.MaxValue / S)) match {
+      case Some(rows) =>
+        val pairs = longPairs(rows)
+        val seedArr = seedsLazy.collect().map(_.getLong(0))
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        if (seedArr.isEmpty)
+          return Seq.empty[(String, Long, Long)]
+            .toDF("node_type", "node", "ppr_scaled")
+        val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
+        pairs.foreach { case (a, _) => od(a) += 1L }
+        val nSeeds = seedArr.length.toLong
+        val base = ((S / nSeeds) * 15L) / 100L
+        val isSeed = mutable.LongMap.empty[Unit]
+        seedArr.foreach(v => isSeed(v) = ())
+        var pr = mutable.LongMap.empty[Long]
+        seedArr.foreach(v => pr(v) = S / nSeeds)
+        for (_ <- 0 until iters) {
+          val c = mutable.LongMap.empty[Long].withDefaultValue(0L)
+          pairs.foreach { case (a, b) =>
+            pr.get(a).foreach(p => c(b) += (p * (1000000L / od(a))) / 1000000L)
+          }
+          val next = mutable.LongMap.empty[Long]
+          seedArr.foreach(v => next(v) = base + (c(v) * 85L) / 100L)
+          c.foreach { case (v, cv) =>
+            if (!isSeed.contains(v)) next(v) = (cv * 85L) / 100L }
+          pr = next
         }
-        val next = mutable.LongMap.empty[Long]
-        seedArr.foreach(v => next(v) = base + (c(v) * 85L) / 100L)
-        c.foreach { case (v, cv) =>
-          if (!isSeed.contains(v)) next(v) = (cv * 85L) / 100L }
-        pr = next
-      }
-      val out = pr.toSeq.filter(_._2 > 0L).sortBy(_._1).map { case (v, p) =>
-        (if (v % 2 == 0) "cust" else "supp", v, p) }
-      return spark.sparkContext.parallelize(out, 32)
-        .toDF("node_type", "node", "ppr_scaled")
+        val out = pr.toSeq.filter(_._2 > 0L).sortBy(_._1).map { case (v, p) =>
+          (if (v % 2 == 0) "cust" else "supp", v, p) }
+        spark.sparkContext.parallelize(out, 32)
+          .toDF("node_type", "node", "ppr_scaled")
+      case None =>
+        val seeds = seedsLazy.localCheckpoint()
+        val outd = arcs.groupBy("a").agg(count(lit(1)).as("od"))
+        val edges = arcs.join(outd, "a")
+          .select(col("a").as("src"), col("b").as("dst"),
+            expr("1000000 div od").as("frac_ppm"))
+          .localCheckpoint()
+        val nSeeds = seeds.count()
+        // seed-free market (the source nation's customers carry no arc
+        // at this threshold): S div 0 would die mid-plan; with no seed
+        // there is no teleport mass and no propagation — empty frame
+        // with the declared schema (oracle-aligned: its per-seed
+        // divisions never run over zero seed rows)
+        if (nSeeds == 0L)
+          return seeds.select(
+            lit("cust").as("node_type"), col("node"),
+            col("node").as("ppr_scaled")).limit(0)
+        val base = ((S / nSeeds) * 15L) / 100L
+        val seedBase = seeds.withColumn("b", lit(base))
+        var ranks = seeds.withColumn("pr", lit(S / nSeeds))
+        for (_ <- 0 until iters) {
+          val contrib = edges
+            .join(ranks, edges("src") === ranks("node"))
+            .select(col("dst").as("node"),
+              expr("(pr * frac_ppm) div 1000000").as("term"))
+            .groupBy("node").agg(sum("term").as("c"))
+          ranks = seedBase
+            .join(contrib, Seq("node"), "full_outer")
+            .select(col("node"),
+              (coalesce(col("b"), lit(0L)) +
+                expr("(coalesce(c, 0L) * 85) div 100")).as("pr"))
+            .localCheckpoint()
+        }
+        ranks.filter(col("pr") > 0L)
+          .select(
+            when(col("node") % 2 === 0, "cust").otherwise("supp")
+              .as("node_type"),
+            col("node"), col("pr").as("ppr_scaled"))
     }
-    val seeds = seedsLazy.localCheckpoint()
-    val outd = arcs.groupBy("a").agg(count(lit(1)).as("od"))
-    val edges = arcs.join(outd, "a")
-      .select(col("a").as("src"), col("b").as("dst"),
-        expr("1000000 div od").as("frac_ppm"))
-      .localCheckpoint()
-    val nSeeds = seeds.count()
-    // seed-free market (the source nation's customers carry no arc
-    // at this threshold): S div 0 would die mid-plan; with no seed
-    // there is no teleport mass and no propagation — empty frame
-    // with the declared schema (oracle-aligned: its per-seed
-    // divisions never run over zero seed rows)
-    if (nSeeds == 0L)
-      return seeds.select(
-        lit("cust").as("node_type"), col("node"),
-        col("node").as("ppr_scaled")).limit(0)
-    val base = ((S / nSeeds) * 15L) / 100L
-    val seedBase = seeds.withColumn("b", lit(base))
-    var ranks = seeds.withColumn("pr", lit(S / nSeeds))
-    for (_ <- 0 until iters) {
-      val contrib = edges
-        .join(ranks, edges("src") === ranks("node"))
-        .select(col("dst").as("node"),
-          expr("(pr * frac_ppm) div 1000000").as("term"))
-        .groupBy("node").agg(sum("term").as("c"))
-      ranks = seedBase
-        .join(contrib, Seq("node"), "full_outer")
-        .select(col("node"),
-          (coalesce(col("b"), lit(0L)) +
-            expr("(coalesce(c, 0L) * 85) div 100")).as("pr"))
-        .localCheckpoint()
-    }
-    ranks.filter(col("pr") > 0L)
-      .select(
-        when(col("node") % 2 === 0, "cust").otherwise("supp")
-          .as("node_type"),
-        col("node"), col("pr").as("ppr_scaled"))
   }
 
   /** Customer MARKET SEGMENTS: connected components of the capped
@@ -2677,23 +2529,24 @@ object Graph {
   }
 
   /** Family-shared landmark distance frame over the KEY-LEVEL
-    * repeat-business graph: (lm, node, h) for 8 md5-chosen 'bw:'
-    * pivots — ONE multi-source BFS keyed (landmark, node), the same
-    * fixed-point loop as [[harmonicKeysTrade]]'s distributed path
-    * (one arc⋈dist join + per-(lm,node) min per round, O(landmarks·
-    * reached) rows, never all-sources). FrameCache'd so the whole
-    * landmark family ([[eccentricityKeysTrade]],
-    * [[betweennessKeysTrade]]) pays the BFS once per (dataset,
-    * params) — the r12 cross-query sharing contract. maxIter is the
-    * engine↔oracle parity bound: the oracle sweeps a fixed 60
-    * rounds; the engine throws past it (loud, never silently
-    * unequal). */
+    * repeat-business graph: (lm, node, h) for `landmarks`
+    * md5(salt+node)-chosen pivots — ONE multi-source BFS keyed
+    * (landmark, node): one arc⋈dist join + per-(lm,node) min per
+    * round, O(landmarks·reached) rows, never all-sources. The 'bw:'
+    * salt serves [[eccentricityKeysTrade]], [[betweennessKeysTrade]]
+    * and [[hopHistogramKeysTrade]], the 'hl:' salt
+    * [[harmonicKeysTrade]]; the salt is part of the FrameCache key,
+    * so each family pays its BFS once per (dataset, params) — the r12
+    * cross-query sharing contract. maxIter is the engine↔oracle
+    * parity bound: the oracle sweeps a fixed 60 rounds; the engine
+    * throws past it (loud, never silently unequal). */
   private def landmarkDistKeys(lineitem: DataFrame, orders: DataFrame,
+                               salt: String,
                                minTrades: Int, minReturns: Int,
                                landmarks: Int, maxIter: Int,
-                               driverCutoff: Long = DriverCutoff.pairRows)
+                               driverCutoff: Long)
       : DataFrame = FrameCache.cached(lineitem.sparkSession,
-    s"lbfs:${FrameCache.planKey(lineitem, orders)}:" +
+    s"lbfs:$salt${FrameCache.planKey(lineitem, orders)}:" +
       s"$minTrades:$minReturns:$landmarks:$maxIter:$driverCutoff",
     // the BFS loop checkpoints every round; only the converged
     // frame (the max created id) may be pinned — pinning the loop
@@ -2707,73 +2560,55 @@ object Graph {
     val nodes = edges.select(col("a").as("node"))
       .unionByName(edges.select(col("b").as("node"))).distinct()
     val lms = nodes
-      .orderBy(md5(concat(lit("bw:"), col("node").cast("string"))),
+      .orderBy(md5(concat(lit(salt), col("node").cast("string"))),
         col("node"))
       .limit(landmarks)
       .select(col("node").as("lm"))
       .localCheckpoint()
-    if (edges.count() <= driverCutoff) {
-      // size-adaptive driver BFS (the [[harmonicKeysTrade]] fast
-      // path, [[DriverCutoff]] byte budget): the sf0.1 BFS runs 47
-      // distributed rounds × 2 driver jobs on KB-scale frontiers —
-      // pure per-job fixed cost. Value-equal to the loop below by
-      // construction (min-hop BFS is unique); Round12Spec pins the
-      // family byte-equal across the cutoff.
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      edges.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0),
-          mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-      }
-      val none = mutable.ArrayBuffer.empty[Long]
-      val rows = mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      var maxHop = 0L
-      lms.collect().map(_.getLong(0)).foreach { lm =>
-        val hop = mutable.LongMap.empty[Long]
-        hop(lm) = 0L
-        var frontier = List(lm)
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap { v =>
-            adj.getOrElse(v, none).filterNot(hop.contains).map { w =>
-              hop(w) = hop(v) + 1L; w
-            }
-          }
+    def stuck = new IllegalStateException(
+      s"landmarkDistKeys did not converge in $maxIter rounds — " +
+        "raise maxIter (and the oracle's sweep bound)")
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        // size-adaptive driver BFS ([[hopBfs]], [[DriverCutoff]] byte
+        // budget): the sf0.1 BFS runs 47 distributed rounds × 2 driver
+        // jobs on KB-scale frontiers — pure per-job fixed cost.
+        // Round12Spec pins both families byte-equal across the cutoff.
+        // A node past maxIter hops shows up at hop maxIter + 1.
+        val adj = adjacency(longPairs(rows))
+        val out = lms.collect().flatMap { r =>
+          val lm = r.getLong(0)
+          hopBfs(adj, Seq(lm), maxIter + 1L)
+            .map { case (n, h) => (lm, n, h) }
         }
-        hop.foreach { case (n, h) =>
-          rows += ((lm, n, h))
-          if (h > maxHop) maxHop = h
+        if (out.exists(_._3 > maxIter)) throw stuck
+        val spark = lineitem.sparkSession
+        import spark.implicits._
+        spark.sparkContext
+          .parallelize(out.sortBy(r => (r._1, r._2)).toSeq, 32)
+          .toDF("lm", "node", "h").localCheckpoint()
+      case None =>
+        var dist = lms.select(col("lm"), col("lm").as("node"))
+          .withColumn("h", lit(0L)).localCheckpoint()
+        var improved = 1L
+        var i = 0
+        // improving rounds ≤ maxIter; +1 is the confirming round — a
+        // hop-diameter-exactly-maxIter graph converges here just as it
+        // passes the driver BFS's '> maxIter' assert
+        while (improved > 0 && i < maxIter + 1) {
+          val relaxed = edges.join(dist, edges("a") === dist("node"))
+            .select(col("lm"), col("b").as("node"), (col("h") + 1L).as("h"))
+            .unionByName(dist)
+            .groupBy("lm", "node").agg(min("h").as("h"))
+            .localCheckpoint()
+          improved = relaxed.as("x")
+            .join(dist.as("y"), Seq("lm", "node"), "left_outer")
+            .filter(col("y.h").isNull || col("x.h") < col("y.h")).count()
+          dist = relaxed
+          i += 1
         }
-      }
-      if (maxHop > maxIter)
-        throw new IllegalStateException(
-          s"landmarkDistKeys did not converge in $maxIter rounds — " +
-            "raise maxIter (and the oracle's sweep bound)")
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      spark.sparkContext.parallelize(rows.sortBy(r => (r._1, r._2)).toSeq, 32)
-        .toDF("lm", "node", "h").localCheckpoint()
-    } else {
-      var dist = lms.select(col("lm"), col("lm").as("node"))
-        .withColumn("h", lit(0L)).localCheckpoint()
-      var improved = 1L
-      var i = 0
-      while (improved > 0 && i < maxIter + 1) {
-        val relaxed = edges.join(dist, edges("a") === dist("node"))
-          .select(col("lm"), col("b").as("node"), (col("h") + 1L).as("h"))
-          .unionByName(dist)
-          .groupBy("lm", "node").agg(min("h").as("h"))
-          .localCheckpoint()
-        improved = relaxed.as("x")
-          .join(dist.as("y"), Seq("lm", "node"), "left_outer")
-          .filter(col("y.h").isNull || col("x.h") < col("y.h")).count()
-        dist = relaxed
-        i += 1
-      }
-      if (improved > 0)
-        throw new IllegalStateException(
-          s"landmarkDistKeys did not converge in $maxIter rounds — " +
-            "raise maxIter (and the oracle's sweep bound)")
-      dist
+        if (improved > 0) throw stuck
+        dist
     }
   }
 
@@ -2794,7 +2629,7 @@ object Graph {
                             landmarks: Int = 8, maxIter: Int = 60,
                             driverCutoff: Long = DriverCutoff.pairRows)
       : DataFrame = {
-    landmarkDistKeys(lineitem, orders, minTrades, minReturns,
+    landmarkDistKeys(lineitem, orders, "bw:", minTrades, minReturns,
       landmarks, maxIter, driverCutoff)
       .groupBy("node")
       .agg(max("h").as("ecc_lb"), count(lit(1)).as("n_lm"))
@@ -2818,7 +2653,7 @@ object Graph {
                             landmarks: Int = 8, maxIter: Int = 60,
                             driverCutoff: Long = DriverCutoff.pairRows)
       : DataFrame = {
-    landmarkDistKeys(lineitem, orders, minTrades, minReturns,
+    landmarkDistKeys(lineitem, orders, "bw:", minTrades, minReturns,
       landmarks, maxIter, driverCutoff)
       .groupBy("h")
       .agg(count(lit(1)).as("n_pairs"),
@@ -2862,80 +2697,83 @@ object Graph {
     val spark = lineitem.sparkSession
     val edges = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
       .select("a", "b") // cached parent — no eager re-checkpoint
-    if (edges.count() <= driverCutoff)
-      return betweennessDriver(spark, edges,
-        landmarkDistKeys(lineitem, orders, minTrades, minReturns,
-          landmarks, maxIter, driverCutoff),
-        horizon, cap)
-    val nodes = edges.select(col("a").as("node"))
-      .unionByName(edges.select(col("b").as("node"))).distinct()
-    val dd = landmarkDistKeys(lineitem, orders, minTrades, minReturns,
-        landmarks, maxIter, driverCutoff)
-      .filter(col("h") <= horizon).localCheckpoint()
-    // checkpoint FIRST, then read the max off the materialized
-    // blocks — check-then-checkpoint would compute every level's
-    // plan twice (once for the guard aggregate, once to persist)
-    def guarded(df: DataFrame, what: String): DataFrame = {
-      val ck = df.localCheckpoint()
-      val m = ck.agg(max(col(what))).collect()(0)
-      if (!m.isNullAt(0) &&
-          m.getDecimal(0).compareTo(new java.math.BigDecimal(cap)) > 0)
-        throw new IllegalStateException(
-          s"betweennessKeysTrade $what exceeds $cap — integer-exact " +
-            "ppm accumulation would overflow; shrink horizon/landmarks")
-      ck.withColumn(what, col(what).cast("long"))
+    DriverCutoff.collectUnder(edges, driverCutoff) match {
+      case Some(rows) =>
+        betweennessDriver(spark, longPairs(rows),
+          landmarkDistKeys(lineitem, orders, "bw:", minTrades, minReturns,
+            landmarks, maxIter, driverCutoff),
+          horizon, cap)
+      case None =>
+        val nodes = edges.select(col("a").as("node"))
+          .unionByName(edges.select(col("b").as("node"))).distinct()
+        val dd = landmarkDistKeys(lineitem, orders, "bw:", minTrades,
+            minReturns, landmarks, maxIter, driverCutoff)
+          .filter(col("h") <= horizon).localCheckpoint()
+        // checkpoint FIRST, then read the max off the materialized
+        // blocks — check-then-checkpoint would compute every level's
+        // plan twice (once for the guard aggregate, once to persist)
+        def guarded(df: DataFrame, what: String): DataFrame = {
+          val ck = df.localCheckpoint()
+          val m = ck.agg(max(col(what))).collect()(0)
+          if (!m.isNullAt(0) &&
+              m.getDecimal(0).compareTo(new java.math.BigDecimal(cap)) > 0)
+            throw new IllegalStateException(
+              s"betweennessKeysTrade $what exceeds $cap — integer-exact " +
+                "ppm accumulation would overflow; shrink horizon/landmarks")
+          ck.withColumn(what, col(what).cast("long"))
+        }
+        // forward: per-level σ frames, level k+1 gated by the distance
+        // frame (DAG arcs only — no anti-join against the visited set)
+        val byLevel = mutable.ArrayBuffer(
+          dd.filter(col("h") === 0)
+            .select(col("lm"), col("node"), lit(1L).as("sigma"))
+            .localCheckpoint())
+        for (k <- 0 until horizon) {
+          val nxt = byLevel(k).join(edges,
+              byLevel(k)("node") === edges("a"))
+            .select(col("lm"), col("b").as("node"), col("sigma"))
+            .join(dd.filter(col("h") === (k + 1)).select("lm", "node"),
+              Seq("lm", "node"), "left_semi")
+            .groupBy("lm", "node")
+            .agg(sum(col("sigma").cast("decimal(38,0)")).as("sigma"))
+          byLevel += guarded(nxt, "sigma")
+        }
+        // backward: δ from the horizon down; δ at the deepest level is 0
+        var del = byLevel(horizon)
+          .select(col("lm"), col("node"), lit(0L).as("del"))
+          .localCheckpoint()
+        val acc = mutable.ArrayBuffer(del)
+        for (k <- (horizon - 1) to 0 by -1) {
+          val contribSrc = byLevel(k + 1).join(del, Seq("lm", "node"))
+            .join(edges, col("node") === edges("b"))
+            .select(col("lm"), edges("a").as("node"),
+              col("sigma").as("sigma_w"), col("del").as("del_w"))
+          val cur = byLevel(k).join(contribSrc, Seq("lm", "node"), "left")
+            .select(col("lm"), col("node"),
+              coalesce(
+                expr("((sigma * 1000000 div sigma_w) * (1000000 + del_w))" +
+                  " div 1000000"),
+                lit(0L)).as("c"))
+            .groupBy("lm", "node")
+            .agg(sum(col("c").cast("decimal(38,0)")).as("del"))
+          del = guarded(cur, "del")
+          acc += del
+        }
+        val allDel =
+          acc.reduce(_ unionByName _).filter(col("lm") =!= col("node"))
+            .groupBy("node").agg(sum("del").as("btw_ppm"))
+        nodes.join(allDel, Seq("node"), "left")
+          .select(
+            when(col("node") % 2 === 0, "cust").otherwise("supp")
+              .as("node_type"),
+            col("node"),
+            coalesce(col("btw_ppm"), lit(0L)).as("btw_ppm"))
     }
-    // forward: per-level σ frames, level k+1 gated by the distance
-    // frame (DAG arcs only — no anti-join against the visited set)
-    val byLevel = scala.collection.mutable.ArrayBuffer(
-      dd.filter(col("h") === 0)
-        .select(col("lm"), col("node"), lit(1L).as("sigma"))
-        .localCheckpoint())
-    for (k <- 0 until horizon) {
-      val nxt = byLevel(k).join(edges,
-          byLevel(k)("node") === edges("a"))
-        .select(col("lm"), col("b").as("node"), col("sigma"))
-        .join(dd.filter(col("h") === (k + 1)).select("lm", "node"),
-          Seq("lm", "node"), "left_semi")
-        .groupBy("lm", "node")
-        .agg(sum(col("sigma").cast("decimal(38,0)")).as("sigma"))
-      byLevel += guarded(nxt, "sigma")
-    }
-    // backward: δ from the horizon down; δ at the deepest level is 0
-    var del = byLevel(horizon)
-      .select(col("lm"), col("node"), lit(0L).as("del"))
-      .localCheckpoint()
-    val acc = scala.collection.mutable.ArrayBuffer(del)
-    for (k <- (horizon - 1) to 0 by -1) {
-      val contribSrc = byLevel(k + 1).join(del, Seq("lm", "node"))
-        .join(edges, col("node") === edges("b"))
-        .select(col("lm"), edges("a").as("node"),
-          col("sigma").as("sigma_w"), col("del").as("del_w"))
-      val cur = byLevel(k).join(contribSrc, Seq("lm", "node"), "left")
-        .select(col("lm"), col("node"),
-          coalesce(
-            expr("((sigma * 1000000 div sigma_w) * (1000000 + del_w))" +
-              " div 1000000"),
-            lit(0L)).as("c"))
-        .groupBy("lm", "node")
-        .agg(sum(col("c").cast("decimal(38,0)")).as("del"))
-      del = guarded(cur, "del")
-      acc += del
-    }
-    val allDel =
-      acc.reduce(_ unionByName _).filter(col("lm") =!= col("node"))
-        .groupBy("node").agg(sum("del").as("btw_ppm"))
-    nodes.join(allDel, Seq("node"), "left")
-      .select(
-        when(col("node") % 2 === 0, "cust").otherwise("supp")
-          .as("node_type"),
-        col("node"),
-        coalesce(col("btw_ppm"), lit(0L)).as("btw_ppm"))
   }
 
   /** Size-adaptive driver twin of [[betweennessKeysTrade]]'s
-    * distributed loops ([[DriverCutoff]] byte budget — the
-    * harmonic/SSSP/SCC fast-path pattern): same depth-bounded
+    * distributed loops over the arcs [[DriverCutoff.collectUnder]]
+    * collected, and the [[landmarkDistKeys]] frame: same depth-bounded
     * Brandes, same integer-floor ppm arithmetic, same σ/δ ≤ cap
     * guards on exact (BigInt ≙ DECIMAL(38,0)) per-level sums before
     * narrowing to long — value-equal by construction, pinned
@@ -2946,17 +2784,11 @@ object Graph {
     * rows); the driver twin computes the same levels in
     * milliseconds once the memoized arc collapse is in hand. */
   private def betweennessDriver(
-      spark: org.apache.spark.sql.SparkSession, edges: DataFrame,
-                                ddFrame: DataFrame, horizon: Int,
-                                cap: Long): DataFrame = {
-    import scala.collection.mutable
-    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+      spark: org.apache.spark.sql.SparkSession, arcs: Array[(Long, Long)],
+      ddFrame: DataFrame, horizon: Int, cap: Long): DataFrame = {
+    val adj = adjacency(arcs)
     val nodeSet = mutable.SortedSet.empty[Long]
-    edges.collect().foreach { r =>
-      val a = r.getLong(0); val b = r.getLong(1)
-      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
-      nodeSet += a; nodeSet += b
-    }
+    arcs.foreach { case (a, b) => nodeSet += a; nodeSet += b }
     val none = mutable.ArrayBuffer.empty[Long]
     // (lm, node, h ≤ horizon) off the FrameCache-shared BFS frame
     val hops = mutable.LongMap.empty[mutable.LongMap[Long]]
@@ -3115,5 +2947,107 @@ object Graph {
         col("n_customers"), col("n_suppliers"),
         when(col("mk") === m0, lit(null).cast("long"))
           .otherwise(col("l1_drift")).as("l1_drift"))
+  }
+
+  // ---- driver-twin kernels: each is the arithmetic of one
+  // distributed loop, shared by every twin of that loop ----
+
+  private def longPairs(rows: Array[Row]): Array[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1)))
+
+  private def longTriples(rows: Array[Row]): Array[(Long, Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+
+  /** Out-adjacency lists of directed (a, b) arcs. */
+  private def adjacency(arcs: Array[(Long, Long)])
+      : mutable.LongMap[mutable.ArrayBuffer[Long]] = {
+    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+    arcs.foreach { case (a, b) =>
+      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b }
+    adj
+  }
+
+  /** Min-hop distances from `sources` along `adj`, out to `maxHops`:
+    * the fixpoint of the distributed frontier⋈arcs loops of
+    * [[bfsTrade]] and [[landmarkDistKeys]] (min-hop BFS distances are
+    * unique, so the twins are value-equal by construction). */
+  private def hopBfs(adj: mutable.LongMap[mutable.ArrayBuffer[Long]],
+                     sources: Iterable[Long], maxHops: Long)
+      : mutable.LongMap[Long] = {
+    val none = mutable.ArrayBuffer.empty[Long]
+    val hop = mutable.LongMap.empty[Long]
+    sources.foreach(hop(_) = 0L)
+    var frontier = hop.keys.toList
+    var h = 0L
+    while (frontier.nonEmpty && h < maxHops) {
+      h += 1
+      frontier = frontier.flatMap { v =>
+        adj.getOrElse(v, none).filterNot(hop.contains).map { w =>
+          hop(w) = h; w
+        }
+      }
+    }
+    hop
+  }
+
+  /** The synchronous Bellman–Ford rounds of [[ssspTrade]] and
+    * [[closenessTrade]] over (a, b, cost) arcs, all sources in
+    * lockstep: one (dist, present) state per source, dist holding a
+    * value only for reached nodes. Each round relaxes from
+    * round-start distances; only a node PRESENT at round start (a
+    * row of the distributed frame, which the convergence check
+    * inner-joins) registers an improvement, first reach included.
+    * Rounds stop when no source improves, after at most maxIter + 1
+    * (the +1 is the confirming round); returns whether they
+    * converged. Per-source runs would differ: a source whose round
+    * only adds a non-present node keeps relaxing while others
+    * improve. */
+  private def bellmanFord(arcs: Array[(Long, Long, Long)],
+                          states: Seq[(mutable.LongMap[Long], mutable.Set[Long])],
+                          maxIter: Int): Boolean = {
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter + 1) {
+      converged = !states.map { case (dist, present) =>
+        val relaxed = dist.clone()
+        arcs.foreach { case (a, b, c) =>
+          dist.get(a).foreach { da =>
+            if (!relaxed.contains(b) || da + c < relaxed(b))
+              relaxed(b) = da + c
+          }
+        }
+        val improved = relaxed.exists { case (n, d) =>
+          present(n) && dist.get(n).forall(_ > d) }
+        relaxed.foreach { case (n, d) => dist(n) = d; present += n }
+        improved
+      }.contains(true)
+      i += 1
+    }
+    converged
+  }
+
+  /** The integer-ppm PageRank rounds of [[pageRankTrade]] and
+    * [[pageRankKeysTrade]] over (src, dst, frac_ppm) arcs: ranks at
+    * scale 1e12 start at S div n over `nodes`; each round a node
+    * takes base + 85% of its floored in-flow, base = (S div n)·15
+    * div 100. Arcs whose src is not a node carry nothing, as the
+    * distributed join drops them. Long sums are commutative and every
+    * division floors in the distributed order, so ranks are
+    * byte-equal. */
+  private def pageRankPpm(arcs: Array[(Long, Long, Long)],
+                          nodes: Array[Long], iters: Int)
+      : mutable.LongMap[Long] = {
+    val S = 1000000000000L
+    val n = nodes.length.toLong
+    val base = ((S / n) * 15L) / 100L
+    val pr = mutable.LongMap.empty[Long]
+    nodes.foreach(v => pr(v) = S / n)
+    for (_ <- 0 until iters) {
+      val c = mutable.LongMap.empty[Long].withDefaultValue(0L)
+      arcs.foreach { case (s, d, f) =>
+        pr.get(s).foreach(p => c(d) += (p * f) / 1000000L) }
+      nodes.foreach(v => pr(v) = base + (c(v) * 85L) / 100L)
+    }
+    pr
   }
 }

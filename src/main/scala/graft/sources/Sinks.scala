@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Subscription surface (Rx `subscribe`/observers), Spark-first:
   * batch writers with layout control and streaming sinks.
@@ -103,14 +103,6 @@ object Sinks {
     * predicate-pushdown / column-pruning behavior at the scan). */
   def orc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
-
-  /** Streaming append sink to parquet with checkpointing. */
-  def streamToParquet(df: DataFrame, path: String, checkpoint: String,
-                      intervalMs: Long = 1000L): StreamingQuery =
-    df.writeStream.outputMode("append")
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .option("checkpointLocation", checkpoint)
-      .format("parquet").option("path", path).start()
 
   /** Rx `subscribe(onNext)`: per-micro-batch callback with exactly
     * the batch DataFrame + batch id (foreachBatch). */

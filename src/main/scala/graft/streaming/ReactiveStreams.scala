@@ -1284,22 +1284,8 @@ object ReactiveStreams {
     * an unmatched purchase is held exactly until its join window
     * expires, then emitted and evicted — bounded state, no lost
     * rows, the unbounded form of an outer interval join. */
-  def streamStreamLeftJoin(events: DataFrame): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id"),
-        col("ts").as("p_ts"), col("value").as("p_value"))
-      .withWatermark("p_ts", "10 minutes")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    purchases.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-        col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"),
-      "left_outer")
-      .select("p_id", "c_id", "user_id", "p_value")
-  }
+  def streamStreamLeftJoin(events: DataFrame): DataFrame =
+    outerJoin(events, "left_outer")
 
   /** Stream-stream RIGHT OUTER join: every click emits — paired with
     * in-window purchases when they exist, null-paired once the

@@ -98,6 +98,35 @@ class InventorySpec extends AnyFunSuite {
         s"missing: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
+  test("only DriverCutoff compares a count against a cutoff in the operators") {
+    // the driver-or-distributed decision lives in
+    // DriverCutoff.collectUnder; an operator that counts a frame
+    // against its own cutoff decides the route a second way
+    import scala.jdk.CollectionConverters._
+    val gate = ("\\.count\\(\\)(\\s*[-+*/]\\s*\\w+)*\\s*<=?\\s*" +
+      "[\\w.(]*(?i:cutoff)").r
+    assert(gate.findFirstIn("if (edges.count() <= driverCutoff) {").nonEmpty)
+    assert(gate.findFirstIn("if (pairs.count() * 2 <= driverCutoff)").nonEmpty)
+    assert(gate.findFirstIn(
+      "if (e.count() <= math.min(driverCutoff, exactnessCap))").nonEmpty)
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    val walk = java.nio.file.Files.list(dir)
+    val files = try walk.iterator().asScala.toList finally walk.close()
+    assert(files.exists(_.getFileName.toString == "Graph.scala"))
+    val offenders = files
+      .filter(f => f.toString.endsWith(".scala") &&
+        f.getFileName.toString != "DriverCutoff.scala")
+      .flatMap { f =>
+        scala.io.Source.fromFile(f.toFile)("UTF-8").getLines()
+          .zipWithIndex
+          .collect { case (l, i) if gate.findFirstIn(l).nonEmpty =>
+            s"${f.getFileName}:${i + 1}: ${l.trim}" }
+          .toList
+      }
+    assert(offenders.isEmpty,
+      "route through DriverCutoff.collectUnder:\n" + offenders.mkString("\n"))
+  }
+
   test("the main source defines exactly four programs") {
     // each `def main` named by its file's package and the object
     // declared last before it: a probe program that no harness runs

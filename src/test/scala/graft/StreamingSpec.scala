@@ -79,6 +79,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.subsetOf(got))
   }
 
+  test("streaming session windows equal the batch session_window " +
+      "groupBy across a batch split") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val mem = MemoryStream[Ev]
+    val qName = s"sess_${System.nanoTime()}"
+    val q = ReactiveStreams.sessionAgg(mem.toDF()).writeStream
+      .format("memory").queryName(qName).outputMode("append").start()
+    try {
+      // user 1's session opened at minute 65 gains minute 80 in the
+      // second batch
+      mem.addData(sample.take(4)); q.processAllAvailable()
+      mem.addData(sample.drop(4)); q.processAllAvailable()
+      // the tick moves the watermark past every session; the batch
+      // after it closes them
+      mem.addData(Ev(99, ts(100000), 99, "tick", 0.0))
+      q.processAllAvailable()
+      mem.addData(Ev(100, ts(200000), 99, "tick", 0.0))
+      q.processAllAvailable()
+      def rows(df: DataFrame) = df.collect()
+        .map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2),
+          r.getDouble(3))).toSet
+      val got = rows(spark.table(qName).filter(col("user_id") =!= 99L))
+      val batch = rows(sample.toDF()
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("s"))
+        .select(col("session_window.start"), col("user_id"), col("n"),
+          col("s")))
+      assert(got === batch)
+      assert(got.contains((ts(65).getTime, 1L, 2L, 27.0)),
+        "the session split across batches must merge")
+    } finally q.stop()
+  }
+
   test("streaming distinctUntilChanged matches batch twin") {
     import spark.implicits._
     val got = run(df =>
