@@ -43,7 +43,7 @@ object Graph {
       .select(col("src"), col("dst"),
         expr("w * 1000000 div ow").as("frac_ppm"))
     // size-adaptive driver twin ([[DriverCutoff]]): the nation graph
-    // is ≤ V² arcs, ranked by [[pageRankPpm]], the rounds below
+    // is ≤ V² arcs, and [[pageRankPpm]] runs the rounds below on them
     DriverCutoff.collectUnder(edges.select(col("src").cast("long"),
         col("dst").cast("long"), col("frac_ppm").cast("long")),
       driverCutoff) match {
@@ -254,8 +254,8 @@ object Graph {
     // is 2 × 16-byte rows per pair in the budget.
     DriverCutoff.collectUnder(e0, driverCutoff / 2) match {
       case Some(rows) =>
-        val pairs = longPairs(rows)
-        val hop = hopBfs(adjacency(pairs ++ pairs.map(_.swap)),
+        val arcs = longPairs(rows)
+        val hop = hopBfs(adjacency(arcs ++ arcs.map(_.swap)),
           seeds.collect().map(_.getLong(0)), maxHops)
         val byHop = hop.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (h, ns) =>
