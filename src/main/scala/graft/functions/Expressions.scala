@@ -453,8 +453,6 @@ object Kernels {
 
   private final val MersenneP = 2147483647L // 2^31 - 1
 
-  /** First 15 hex chars of md5(s) as a 60-bit long — the same value
-    * SQL's ('0x' || substr(md5(s), 1, 15))::BIGINT yields. */
   /** First 60 bits of md5(s) as a non-negative long — the engine's
     * auditable uniform hash (SQL twin: ('0x'||substr(md5(s),1,15))
     * ::BIGINT). Public: the streaming sketch ops feed it directly. */
@@ -677,15 +675,6 @@ object Kernels {
     out
   }
 
-  /** Argmax-cosine centroid assignment in ONE narrow pass: given a row
-    * vector and the (broadcast) array of (centroid_id, c_emb) structs,
-    * return the centroid id with the highest cosine (ties to the
-    * lowest id — same total order as
-    * row_number() OVER (ORDER BY sim DESC, centroid_id)). Replaces the
-    * crossJoin + groupBy-argmax IVF assignment, which expanded the
-    * corpus n×nlist and re-shuffled every vector to reduce the argmax
-    * — at 100 TB that is a full-dataset exchange per assignment pass;
-    * this is zero exchanges. */
   /** Argmin-L2 codebook assignment in one narrow pass: given a row
     * vector slice and the (broadcast) array of (code, c_v) structs,
     * return (code, d2) of the nearest entry, ties to the lowest
@@ -730,6 +719,15 @@ object Kernels {
       Array[Any](bestCode, bestD2))
   }
 
+  /** Argmax-cosine centroid assignment in ONE narrow pass: given a row
+    * vector and the (broadcast) array of (centroid_id, c_emb) structs,
+    * return the centroid id with the highest cosine (ties to the
+    * lowest id — same total order as
+    * row_number() OVER (ORDER BY sim DESC, centroid_id)). Replaces the
+    * crossJoin + groupBy-argmax IVF assignment, which expanded the
+    * corpus n×nlist and re-shuffled every vector to reduce the argmax
+    * — at 100 TB that is a full-dataset exchange per assignment pass;
+    * this is zero exchanges. */
   def cosineArgmax(vec: ArrayData, cents: ArrayData): Long = {
     val n = cents.numElements()
     var bestId = -1L

@@ -712,33 +712,6 @@ object Dedup {
         (coalesce(col("n_dup"), lit(0L)) === 0L).as("admitted"))
   }
 
-  /** Per-source dedup telemetry: the curation dashboard's first
-    * page — for every source, how many documents are exact
-    * duplicates (their normalized fingerprint occurs more than once
-    * ANYWHERE in the corpus, not just in-source — cross-source
-    * copying is the signal) and how many sit in at least one
-    * near-dup pair (the auditable MinHash-LSH pair set, which
-    * includes exact copies of any shingle-bearing (≥3-token) doc by
-    * construction — near ⊇ exact above the shingle floor), with
-    * exact ppm rates. Composes the existing
-    * fingerprint rollup and LSH machinery: the corpus collapses to
-    * (fingerprint, count) partials and (pair-id) frames before any
-    * rollup — text never rides a shuffle; the per-source report is
-    * |sources| rows. */
-  /** CANONICAL-SURVIVOR selection — the keep-best half of dedup
-    * that [[connectedComponents]]' docstring promises (cluster_id ==
-    * doc_id marks A canonical; production pipelines keep the BEST
-    * member, not the min-id one): per near-dup cluster
-    * ([[graft.operators.TextAnalysis.ngramJaccard]] pairs → CC), the
-    * survivor is the member with the MOST tokens (near-dups differ
-    * by truncation/boilerplate more than by content, so longest ≈
-    * most complete), ties to the smallest doc_id — fully
-    * deterministic under any partitioning via ONE grouped
-    * max(struct(n_tok, −doc_id)) — no rank window, no second pass.
-    * Output one row per cluster (singletons included: a clean doc
-    * is its own survivor): (cluster_id, n_members, canon_tokens,
-    * canonical_doc, n_dropped). Text never rides a shuffle — token
-    * counts collapse per doc before the cluster join. */
   /** FrameCache-shared near-dup cluster labels over the exact
     * 3-gram Jaccard pair set — re-derived by FOUR gated keys
     * (dedup_cluster / keep_best / cluster_stats / canonical), each
@@ -755,6 +728,20 @@ object Dedup {
         .localCheckpoint()
     }
 
+  /** CANONICAL-SURVIVOR selection — the keep-best half of dedup
+    * that [[connectedComponents]]' docstring promises (cluster_id ==
+    * doc_id marks A canonical; production pipelines keep the BEST
+    * member, not the min-id one): per near-dup cluster
+    * ([[graft.operators.TextAnalysis.ngramJaccard]] pairs → CC), the
+    * survivor is the member with the MOST tokens (near-dups differ
+    * by truncation/boilerplate more than by content, so longest ≈
+    * most complete), ties to the smallest doc_id — fully
+    * deterministic under any partitioning via ONE grouped
+    * max(struct(n_tok, −doc_id)) — no rank window, no second pass.
+    * Output one row per cluster (singletons included: a clean doc
+    * is its own survivor): (cluster_id, n_members, canon_tokens,
+    * canonical_doc, n_dropped). Text never rides a shuffle — token
+    * counts collapse per doc before the cluster join. */
   def canonicalSelection(docs: DataFrame,
                          minJaccard: Double = 0.2): DataFrame = {
     val clusters = jaccardClusters(docs, minJaccard)
@@ -770,6 +757,19 @@ object Dedup {
         (col("n_members") - 1L).as("n_dropped"))
   }
 
+  /** Per-source dedup telemetry: the curation dashboard's first
+    * page — for every source, how many documents are exact
+    * duplicates (their normalized fingerprint occurs more than once
+    * ANYWHERE in the corpus, not just in-source — cross-source
+    * copying is the signal) and how many sit in at least one
+    * near-dup pair (the auditable MinHash-LSH pair set, which
+    * includes exact copies of any shingle-bearing (≥3-token) doc by
+    * construction — near ⊇ exact above the shingle floor), with
+    * exact ppm rates. Composes the existing
+    * fingerprint rollup and LSH machinery: the corpus collapses to
+    * (fingerprint, count) partials and (pair-id) frames before any
+    * rollup — text never rides a shuffle; the per-source report is
+    * |sources| rows. */
   def dedupReport(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val fp = docs.select(col("doc_id"), col("source"),
       md5(lower(trim(col("text")))).as("fp"))

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The shared DRIVER-MATERIALIZATION budget behind every
   * size-adaptive graph/dedup operator — cutoffs are BYTES, not a
@@ -64,4 +67,15 @@ object DriverCutoff {
     * `executeTake` scans 1 partition and then 4× more per job. */
   def collectUnder(frame: DataFrame, maxRows: Long): Option[Array[Row]] =
     if (frame.count() <= maxRows) Some(frame.collect()) else None
+
+  /** A driver twin's result `rows` as a frame of columns `cols`,
+    * parallelized rather than a LocalRelation: a LocalRelation
+    * encodes every row on the driver per execution (~60 s of the
+    * 890k-node sf10 SCC pass), an RDD of tuples converts on the
+    * executors. */
+  private[operators] def twinFrame[T <: Product : ClassTag : TypeTag](
+      spark: SparkSession, rows: Seq[T], cols: String*): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, 32).toDF(cols: _*)
+  }
 }

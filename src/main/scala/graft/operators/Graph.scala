@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics beyond clustering —
@@ -32,7 +32,6 @@ object Graph {
                     nation: DataFrame, iters: Int = 3,
                     driverCutoff: Long = DriverCutoff.weightedArcRows)
       : DataFrame = {
-    val S = 1000000000000L // rank scale
     // the arc counts are the FrameCache-shared nation fact collapse
     // (one build for pagerank + sssp + closeness); fractions derive
     // lazily from the cached counts
@@ -48,33 +47,15 @@ object Graph {
         col("dst").cast("long"), col("frac_ppm").cast("long")),
       driverCutoff) match {
       case Some(rows) =>
-        val natRows = nation
-          .select(col("n_nationkey").cast("long"), col("n_name"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val natRows = nationNames(nation)
         val pr = pageRankPpm(longTriples(rows), natRows.map(_._1), iters)
         val out = natRows.sortBy(_._1).map { case (v, name) =>
           (name, pr(v), pr(v).toDouble / 1e12) }
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(out.toSeq, 32)
-          .toDF("n_name", "rank_scaled", "rank_norm")
+        DriverCutoff.twinFrame(lineitem.sparkSession, out.toSeq,
+          "n_name", "rank_scaled", "rank_norm")
       case None =>
         val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-        val n = nodes.count()
-        val base = ((S / n) * 15L) / 100L
-        var ranks = nodes.withColumn("pr", lit(S / n))
-        for (_ <- 0 until iters) {
-          val contrib = edges
-            .join(ranks, edges("src") === ranks("node"))
-            .select(col("dst").as("node"),
-              expr("(pr * frac_ppm) div 1000000").as("term"))
-            .groupBy("node").agg(sum("term").as("c"))
-          ranks = nodes
-            .join(contrib, Seq("node"), "left")
-            .select(col("node"),
-              (lit(base) + expr("(coalesce(c, 0L) * 85) div 100"))
-                .as("pr"))
-        }
+        val ranks = pageRankRounds(nodes, nodes.count(), edges, iters)
         ranks
           .join(broadcast(nation),
             ranks("node") === nation("n_nationkey").cast("long"))
@@ -83,22 +64,6 @@ object Graph {
     }
   }
 
-  /** Triangle enumeration over the undirected nation trade graph
-    * (an edge joins two nations with any lineitem trade in either
-    * direction). Triangles are the clustering/community primitive —
-    * the output is the sorted node triple set, one row per triangle.
-    *
-    * Scale shape: the classic compact-forward orientation — every
-    * undirected edge is oriented from the (degree, id)-SMALLER
-    * endpoint to the larger, so each wedge is enumerated at exactly
-    * one apex and the per-node fan-out in the wedge self-join is
-    * bounded by O(sqrt(|E|)) on any graph (arboricity bound) — a
-    * hub with degree m contributes min(m, sqrt E)² wedges instead of
-    * m². The closing check is one more equi-join on the oriented
-    * edge list. Node ids never carry payloads; the whole iteration
-    * frame is (src, dst) pairs. Orientation changes only the
-    * intermediate size — the emitted triple set is identical, so the
-    * oracle re-derives it with the plain id-ordered 3-way join. */
   /** FrameCache-shared inter-nation undirected edge frame (u < v,
     * distinct; ≤ 300 rows at any scale) — [[trianglesTrade]] used to
     * replay the 4-table fact join for every one of its FOUR uses of
@@ -122,6 +87,22 @@ object Graph {
       .localCheckpoint()
   }
 
+  /** Triangle enumeration over the undirected nation trade graph
+    * (an edge joins two nations with any lineitem trade in either
+    * direction). Triangles are the clustering/community primitive —
+    * the output is the sorted node triple set, one row per triangle.
+    *
+    * Scale shape: the classic compact-forward orientation — every
+    * undirected edge is oriented from the (degree, id)-SMALLER
+    * endpoint to the larger, so each wedge is enumerated at exactly
+    * one apex and the per-node fan-out in the wedge self-join is
+    * bounded by O(sqrt(|E|)) on any graph (arboricity bound) — a
+    * hub with degree m contributes min(m, sqrt E)² wedges instead of
+    * m². The closing check is one more equi-join on the oriented
+    * edge list. Node ids never carry payloads; the whole iteration
+    * frame is (src, dst) pairs. Orientation changes only the
+    * intermediate size — the emitted triple set is identical, so the
+    * oracle re-derives it with the plain id-ordered 3-way join. */
   def trianglesTrade(lineitem: DataFrame, orders: DataFrame,
                      customer: DataFrame, supplier: DataFrame): DataFrame = {
     val und = nationEdges(lineitem, orders, customer, supplier)
@@ -262,10 +243,8 @@ object Graph {
             (h, ns.count(_._1 % 2 == 0).toLong,
               ns.count(_._1 % 2 == 1).toLong)
           }
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(byHop, 32)
-          .toDF("hop", "n_customers", "n_suppliers")
+        DriverCutoff.twinFrame(lineitem.sparkSession, byHop,
+          "hop", "n_customers", "n_suppliers")
       case None =>
         val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
           .localCheckpoint()
@@ -490,27 +469,6 @@ object Graph {
     modularityOf(sym, lpaLabels(sym, iters))
   }
 
-  /** Common-neighbor link prediction over the bipartite
-    * customer↔supplier purchase graph: the top-k customer pairs by
-    * Jaccard of their (capped) supplier-shared neighborhoods — "these
-    * two customers buy from the same suppliers but never from each
-    * other" is the classic recommendation/entity-resolution signal,
-    * and the neighbor-set Jaccard beats the raw common count because
-    * it normalizes away the megacustomer that co-occurs with
-    * everyone.
-    *
-    * Scale contract: the pair fan-out of a posting self-join is
-    * Σ deg(supplier)² — quadratic in the hottest supplier. Each
-    * supplier's customer list is therefore CAPPED at `cap` members
-    * (smallest md5("cn:"+supp+":"+cust) first, so the kept sublist is
-    * deterministic, engine-re-derivable, and stable under
-    * resharding), which bounds the fan-out at cap²·|suppliers|/2 —
-    * linear in suppliers at any SF. Degrees and Jaccard are defined
-    * over the SAME capped adjacency, so the score is exact for the
-    * capped graph (the documented estimator, like
-    * [[graft.operators.TextAnalysis.ngramJaccardCapped]]). The
-    * global top-k is TakeOrderedAndProject (per-partition heaps +
-    * driver merge of k rows), never a global sort. */
   /** Capped pair fan-out Σ min(deg, cap)·(min(deg, cap)−1)/2 of the
     * LP family — one cheap aggregate over the memoized pair frame.
     * Decides whether the τ̂ certificate can possibly pay for itself:
@@ -535,6 +493,27 @@ object Graph {
         .collect()(0).getLong(0) / 2
     }
 
+  /** Common-neighbor link prediction over the bipartite
+    * customer↔supplier purchase graph: the top-k customer pairs by
+    * Jaccard of their (capped) supplier-shared neighborhoods — "these
+    * two customers buy from the same suppliers but never from each
+    * other" is the classic recommendation/entity-resolution signal,
+    * and the neighbor-set Jaccard beats the raw common count because
+    * it normalizes away the megacustomer that co-occurs with
+    * everyone.
+    *
+    * Scale contract: the pair fan-out of a posting self-join is
+    * Σ deg(supplier)² — quadratic in the hottest supplier. Each
+    * supplier's customer list is therefore CAPPED at `cap` members
+    * (smallest md5("cn:"+supp+":"+cust) first, so the kept sublist is
+    * deterministic, engine-re-derivable, and stable under
+    * resharding), which bounds the fan-out at cap²·|suppliers|/2 —
+    * linear in suppliers at any SF. Degrees and Jaccard are defined
+    * over the SAME capped adjacency, so the score is exact for the
+    * capped graph (the documented estimator, like
+    * [[graft.operators.TextAnalysis.ngramJaccardCapped]]). The
+    * global top-k is TakeOrderedAndProject (per-partition heaps +
+    * driver merge of k rows), never a global sort. */
   def commonNeighbors(lineitem: DataFrame, orders: DataFrame,
                       cap: Int = 64, k: Int = 50,
                       certificateFloor: Long = DriverCutoff.pairRows)
@@ -660,10 +639,8 @@ object Graph {
           trace += ((r.toLong, nc.size.toLong, ns.size.toLong,
             pairs.length.toLong))
         }
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(trace.toSeq, 32)
-          .toDF("round", "n_customers", "n_suppliers", "n_edges")
+        DriverCutoff.twinFrame(lineitem.sparkSession, trace.toSeq,
+          "round", "n_customers", "n_suppliers", "n_edges")
       case None =>
         val trace = mutable.ArrayBuffer.empty[DataFrame]
         for (r <- 1 to rounds) {
@@ -743,10 +720,8 @@ object Graph {
             .distinct.size.toLong
           trace += ((r.toLong, edges.size.toLong, nNodes, nTri))
         }
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(trace.toSeq, 32)
-          .toDF("round", "n_edges", "n_customers", "n_triangles")
+        DriverCutoff.twinFrame(lineitem.sparkSession, trace.toSeq,
+          "round", "n_edges", "n_customers", "n_triangles")
       case None =>
         var e = eSrc.localCheckpoint()
         val trace = mutable.ArrayBuffer.empty[DataFrame]
@@ -820,11 +795,9 @@ object Graph {
         // raw·1e12 div tot as exact integer floor, ties to the
         // smaller id. Round12Spec pins the boundary byte-equal.
         val edges = longPairs(rows)
-        val spark = lineitem.sparkSession
-        import spark.implicits._
         if (edges.isEmpty)
-          return Seq.empty[(String, Long, Long)]
-            .toDF("role", "node", "score")
+          return DriverCutoff.twinFrame(lineitem.sparkSession,
+            Seq.empty[(String, Long, Long)], "role", "node", "score")
         val hubM = mutable.LongMap.empty[Long]
         val authM = mutable.LongMap.empty[Long]
         edges.foreach { case (c, _) => hubM(c) = S }
@@ -852,8 +825,8 @@ object Graph {
           .map { case (s, a) => ("authority", s, a) }
         val topH = hubM.toSeq.sortBy { case (c, h) => (-h, c) }.take(k)
           .map { case (c, h) => ("hub", c, h) }
-        spark.sparkContext.parallelize(topA ++ topH, 32)
-          .toDF("role", "node", "score")
+        DriverCutoff.twinFrame(lineitem.sparkSession, topA ++ topH,
+          "role", "node", "score")
       case None =>
         var hub = e.select("cust").distinct().withColumn("h", lit(S))
         var auth = e.select("supp").distinct().withColumn("a", lit(S))
@@ -1091,6 +1064,10 @@ object Graph {
                 driverCutoff: Long = DriverCutoff.weightedArcRows)
       : DataFrame = {
     val edges = weightedNationEdges(lineitem, orders, customer, supplier)
+    def stuck = new IllegalStateException(
+      s"ssspTrade did not converge in $maxIter rounds " +
+        "(negative-cost cycle cannot exist with positive costs; " +
+        "raise maxIter for a graph of larger diameter)")
     DriverCutoff.collectUnder(edges, driverCutoff) match {
       case Some(rows) =>
         // size-adaptive driver Bellman–Ford ([[DriverCutoff]]): the
@@ -1098,54 +1075,22 @@ object Graph {
         // paid 2 driver jobs; [[bellmanFord]] runs the same rounds.
         // The distributed frame starts with every NATION node present
         // (d null) and seeds d = 0 only when src is one of them.
-        val natRows = nation
-          .select(col("n_nationkey").cast("long"), col("n_name"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val natRows = nationNames(nation)
         val dist = mutable.LongMap.empty[Long] // value ⇔ reached
         val present = mutable.Set.from(natRows.map(_._1))
         if (present(src)) dist(src) = 0L
         if (!bellmanFord(longTriples(rows), Seq((dist, present)), maxIter))
-          throw new IllegalStateException(
-            s"ssspTrade did not converge in $maxIter rounds " +
-              "(negative-cost cycle cannot exist with positive costs; " +
-              "raise maxIter for a graph of larger diameter)")
+          throw stuck
         val out = natRows.sortBy(_._1).map { case (n, name) =>
           (name, n, dist.getOrElse(n, -1L)) }
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(out.toSeq, 32)
-          .toDF("n_name", "node", "dist")
+        DriverCutoff.twinFrame(lineitem.sparkSession, out.toSeq,
+          "n_name", "node", "dist")
       case None =>
         val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-        var dist = nodes.select(col("node"),
-            when(col("node") === src, 0L).as("d"))
-          .localCheckpoint()
-        var converged = false
-        var i = 0
-        // maxIter bounds IMPROVING rounds; the +1 is the no-improvement
-        // confirming round, so a diameter-exactly-maxIter graph
-        // converges instead of throwing (oracle: fixed maxIter sweeps)
-        while (!converged && i < maxIter + 1) {
-          val relaxed = edges
-            .join(dist.filter(col("d").isNotNull), col("esrc") === col("node"))
-            .select(col("edst").as("node"), (col("d") + col("cost")).as("d"))
-            .unionByName(dist)
-            .groupBy("node").agg(min("d").as("d"))
-            .localCheckpoint()
-          val improved = relaxed.as("a")
-            .join(dist.as("b"), col("a.node") === col("b.node"))
-            .filter(col("a.d").isNotNull &&
-              (col("b.d").isNull || col("a.d") < col("b.d")))
-            .count()
-          converged = improved == 0
-          dist = relaxed
-          i += 1
-        }
-        if (!converged)
-          throw new IllegalStateException(
-            s"ssspTrade did not converge in $maxIter rounds " +
-              "(negative-cost cycle cannot exist with positive costs; " +
-              "raise maxIter for a graph of larger diameter)")
+        val dist = relaxPresent(edges,
+          nodes.select(col("node"), when(col("node") === src, 0L).as("d"))
+            .localCheckpoint(),
+          Seq("node"), maxIter, stuck)
         dist
           .join(broadcast(nation),
             dist("node") === nation("n_nationkey").cast("long"))
@@ -1154,21 +1099,6 @@ object Graph {
     }
   }
 
-  /** Strongly connected components of the DIRECTED trade graph:
-    * scc(v) = the minimum node mutually reachable with v (self
-    * included) — the prerequisite for condensation-DAG analytics
-    * (cycle detection, topological layering of trade flows).
-    *
-    * Exact transitive closure by ITERATED SQUARING: each round
-    * extends reach pairs with one join hop and dedups, so the
-    * reachable path length DOUBLES per round — log₂(diameter)
-    * rounds of one pair-join + distinct, the CC convergence-action
-    * pattern. The closure frame is ≤ V² pairs — the right call for
-    * the small/medium dense graphs this gate carries (V = 25 ⇒ 625
-    * rows); billion-node sparse graphs swap in FW-BW-trim
-    * decomposition (forward/backward reachability coloring from
-    * pivots), which keeps the same per-round join shape without
-    * materializing the closure. */
   /** The distinct directed nation trade edge frame (a → b), self
     * loops dropped — shared by the SCC / layering / reciprocity
     * family so composites pay the 4-table fact join once. */
@@ -1215,50 +1145,7 @@ object Graph {
       .select(col("esrc"), col("edst"),
         greatest(lit(1L), expr("1000000 div w")).as("cost"))
 
-  /** [[sccTrade]]'s core over an already-built edge frame — the
-    * composition point [[topoLayersTrade]] uses to avoid paying the
-    * fact join twice. */
-  private def sccFromEdges(edges: DataFrame, nation: DataFrame,
-                           maxIter: Int,
-                           driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame =
-    DriverCutoff.collectUnder(edges, driverCutoff) match {
-      case Some(rows) =>
-        val keys = nation.select(col("n_nationkey").cast("long")).collect()
-          .map(_.getLong(0))
-        val sccId = sccClosure(longPairs(rows), keys, maxIter)
-        val spark = edges.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(
-          sccId.toSeq.sortBy(_._1), 32).toDF("node", "scc_id")
-      case None =>
-        var reach = edges
-        var converged = false
-        var i = 0
-        // improving rounds ≤ maxIter; +1 is the confirming round
-        while (!converged && i < maxIter + 1) {
-          val nxt = reach.unionByName(
-              reach.as("x").join(reach.as("y"), col("x.b") === col("y.a"))
-                .select(col("x.a").as("a"), col("y.b").as("b")))
-            .distinct().localCheckpoint()
-          converged = nxt.count() == reach.count()
-          reach = nxt
-          i += 1
-        }
-        if (!converged)
-          throw new IllegalStateException(
-            s"sccTrade closure did not converge in $maxIter rounds")
-        val mutual = reach.as("f").join(reach.as("r"),
-            col("f.a") === col("r.b") && col("f.b") === col("r.a"))
-          .select(col("f.a").as("node"), col("f.b").as("peer"))
-        val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-        nodes.join(mutual, Seq("node"), "left")
-          .groupBy("node")
-          .agg(coalesce(least(min("peer"), col("node")), col("node"))
-            .as("scc_id"))
-    }
-
-  /** [[sccFromEdges]]' driver twin over the collected arcs
+  /** [[sccSquaring]]'s driver twin over the collected arcs
     * ([[DriverCutoff]]): the nation graph is ≤ V² ≤ 625 pairs and the
     * squaring loop paid 2 driver jobs per round, so this runs the
     * IDENTICAL rounds (same squaring recurrence, same convergence
@@ -1289,11 +1176,34 @@ object Graph {
     sccId
   }
 
+  /** Strongly connected components of the DIRECTED trade graph:
+    * scc(v) = the minimum node mutually reachable with v (self
+    * included) — the prerequisite for condensation-DAG analytics
+    * (cycle detection, topological layering of trade flows).
+    *
+    * Exact transitive closure by ITERATED SQUARING: each round
+    * extends reach pairs with one join hop and dedups, so the
+    * reachable path length DOUBLES per round — log₂(diameter)
+    * rounds of one pair-join + distinct, the CC convergence-action
+    * pattern. The closure frame is ≤ V² pairs — the right call for
+    * the small/medium dense graphs this gate carries (V = 25 ⇒ 625
+    * rows); billion-node sparse graphs swap in FW-BW-trim
+    * decomposition (forward/backward reachability coloring from
+    * pivots), which keeps the same per-round join shape without
+    * materializing the closure. */
   def sccTrade(lineitem: DataFrame, orders: DataFrame,
                customer: DataFrame, supplier: DataFrame,
                nation: DataFrame, maxIter: Int = 10): DataFrame = {
-    val scc = sccFromEdges(
-      tradeEdges(lineitem, orders, customer, supplier), nation, maxIter)
+    val edges = tradeEdges(lineitem, orders, customer, supplier)
+    val scc = DriverCutoff.collectUnder(edges, DriverCutoff.pairRows) match {
+      case Some(rows) =>
+        val keys = nation.select(col("n_nationkey").cast("long")).collect()
+          .map(_.getLong(0))
+        DriverCutoff.twinFrame(lineitem.sparkSession,
+          sccClosure(longPairs(rows), keys, maxIter).toSeq.sortBy(_._1),
+          "node", "scc_id")
+      case None => sccSquaring(edges, nation, maxIter)
+    }
     val sizes = scc.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
     scc.join(sizes, "scc_id")
       .join(broadcast(nation),
@@ -1341,6 +1251,9 @@ object Graph {
                       driverCutoff: Long = DriverCutoff.pairRows)
       : DataFrame = {
     val edges = tradeEdges(lineitem, orders, customer, supplier)
+    def stuck = new IllegalStateException(
+      s"topoLayersTrade did not converge in $maxIter rounds " +
+        "(the condensation is a DAG; raise maxIter for deeper ones)")
     DriverCutoff.collectUnder(edges, driverCutoff) match {
       case Some(rows) =>
         // size-adaptive driver layering ([[DriverCutoff]]): the
@@ -1349,9 +1262,7 @@ object Graph {
         // runs the identical synchronous rounds + maxIter guard, on
         // [[sccClosure]] of the same collected arcs.
         val arcs = longPairs(rows)
-        val natRows = nation
-          .select(col("n_nationkey").cast("long"), col("n_name"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val natRows = nationNames(nation)
         val sccOf = sccClosure(arcs, natRows.map(_._1), maxIter)
         val sccRows = sccOf.toSeq.sortBy(_._1)
         // endpoints absent from the scc map (no FK integrity) are
@@ -1375,50 +1286,21 @@ object Graph {
           relaxed.foreach { case (s, l) => layer(s) = l }
           i += 1
         }
-        if (!converged)
-          throw new IllegalStateException(
-            s"topoLayersTrade did not converge in $maxIter rounds " +
-              "(the condensation is a DAG; raise maxIter for deeper ones)")
+        if (!converged) throw stuck
         val names = natRows.toMap
         val out = sccRows.map { case (n, s) =>
           (names(n), n, s, layer(s)) }
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(out, 32)
-          .toDF("n_name", "node", "scc_id", "layer")
+        DriverCutoff.twinFrame(lineitem.sparkSession, out,
+          "n_name", "node", "scc_id", "layer")
       case None =>
-        val scc = sccFromEdges(edges, nation, maxIter, driverCutoff)
-          .localCheckpoint()
+        val scc = sccSquaring(edges, nation, maxIter).localCheckpoint()
         val cond = edges
           .join(scc.select(col("node").as("a"), col("scc_id").as("sa")), "a")
           .join(scc.select(col("node").as("b"), col("scc_id").as("sb")), "b")
           .filter(col("sa") =!= col("sb"))
           .select("sa", "sb").distinct()
           .localCheckpoint()
-        var layers = scc.select(col("scc_id")).distinct()
-          .withColumn("layer", lit(0L)).localCheckpoint()
-        var converged = false
-        var i = 0
-        // improving rounds ≤ maxIter; +1 is the confirming round
-        while (!converged && i < maxIter + 1) {
-          val relaxed = cond
-            .join(layers, col("sa") === col("scc_id"))
-            .select(col("sb").as("scc_id"), (col("layer") + 1L).as("layer"))
-            .unionByName(layers)
-            .groupBy("scc_id").agg(max("layer").as("layer"))
-            .localCheckpoint()
-          val improved = relaxed.as("x")
-            .join(layers.as("y"), Seq("scc_id"))
-            .filter(col("x.layer") > col("y.layer")).count()
-          converged = improved == 0
-          layers = relaxed
-          i += 1
-        }
-        if (!converged)
-          throw new IllegalStateException(
-            s"topoLayersTrade did not converge in $maxIter rounds " +
-              "(the condensation is a DAG; raise maxIter for deeper ones)")
-        scc.join(layers, "scc_id")
+        scc.join(maxRelaxLayers(cond, scc, maxIter, stuck), "scc_id")
           .join(broadcast(nation),
             col("node") === nation("n_nationkey").cast("long"))
           .select(col("n_name"), col("node"), col("scc_id"), col("layer"))
@@ -1447,22 +1329,21 @@ object Graph {
                      driverCutoff: Long = DriverCutoff.weightedArcRows)
       : DataFrame = {
     val edges = weightedNationEdges(lineitem, orders, customer, supplier)
+    def stuck = new IllegalStateException(
+      s"closenessTrade did not converge in $maxIter rounds")
     DriverCutoff.collectUnder(edges, driverCutoff) match {
       case Some(rows) =>
         // size-adaptive driver all-sources Bellman–Ford
         // ([[bellmanFord]], one state per source in lockstep) over the
         // ≤ V² arc frame. Every (src, node) NATION pair starts
         // present-with-null per the crossJoin init.
-        val natRows = nation
-          .select(col("n_nationkey").cast("long"), col("n_name"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
+        val natRows = nationNames(nation)
         val natKeys = natRows.map(_._1)
         val dist = mutable.LongMap.empty[mutable.LongMap[Long]]
         natKeys.foreach(s => dist(s) = mutable.LongMap(s -> 0L))
         if (!bellmanFord(longTriples(rows), dist.values.toSeq.map(m =>
             (m, mutable.Set.from(natKeys))), maxIter))
-          throw new IllegalStateException(
-            s"closenessTrade did not converge in $maxIter rounds")
+          throw stuck
         val out = natRows.sortBy(_._1).map { case (s, name) =>
           // the distributed aggregate counts EVERY reached row of the
           // (src, node) frame — including nodes relax added beyond the
@@ -1470,41 +1351,17 @@ object Graph {
           val m = dist(s)
           (name, s, m.size.toLong, m.values.sum)
         }
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext.parallelize(out.toSeq, 32)
-          .toDF("n_name", "node", "n_reachable", "total_dist")
+        DriverCutoff.twinFrame(lineitem.sparkSession, out.toSeq,
+          "n_name", "node", "n_reachable", "total_dist")
       case None =>
         val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-        var dist = nodes.select(col("node").as("src"))
-          .crossJoin(nodes)
-          .select(col("src"), col("node"),
-            when(col("src") === col("node"), 0L).as("d"))
-          .localCheckpoint()
-        var converged = false
-        var i = 0
-        // improving rounds ≤ maxIter; +1 is the confirming round
-        while (!converged && i < maxIter + 1) {
-          val relaxed = edges
-            .join(dist.filter(col("d").isNotNull), col("esrc") === col("node"))
-            .select(col("src"), col("edst").as("node"),
-              (col("d") + col("cost")).as("d"))
-            .unionByName(dist)
-            .groupBy("src", "node").agg(min("d").as("d"))
-            .localCheckpoint()
-          val improved = relaxed.as("a")
-            .join(dist.as("b"), Seq("src", "node"))
-            .filter(col("a.d").isNotNull &&
-              (col("b.d").isNull || col("a.d") < col("b.d")))
-            .count()
-          converged = improved == 0
-          dist = relaxed
-          i += 1
-        }
-        if (!converged)
-          throw new IllegalStateException(
-            s"closenessTrade did not converge in $maxIter rounds")
-        dist.groupBy("src")
+        relaxPresent(edges, nodes.select(col("node").as("src"))
+            .crossJoin(nodes)
+            .select(col("src"), col("node"),
+              when(col("src") === col("node"), 0L).as("d"))
+            .localCheckpoint(),
+          Seq("src", "node"), maxIter, stuck)
+          .groupBy("src")
           .agg(coalesce(sum(when(col("d").isNotNull, 1L)), lit(0L))
               .as("n_reachable"),
             coalesce(sum("d"), lit(0L)).as("total_dist"))
@@ -1513,6 +1370,25 @@ object Graph {
           .select(col("n_name"), col("src").as("node"),
             col("n_reachable"), col("total_dist"))
     }
+  }
+
+  /** The DISTINCT bipartite (cust, supp) purchase pair frame —
+    * the corpus collapse six operators used to re-pay independently
+    * (HITS, k-core, common-neighbors, the RA/AA witness generator,
+    * preferential attachment, the co-sourcing projection), memoized
+    * like [[repeatKeyEdges]]: one map-side-partial distinct per
+    * (dataset), every consumer caps/weights it downstream with its
+    * own md5 seed family. */
+  private def bipartitePairs(lineitem: DataFrame, orders: DataFrame)
+      : DataFrame = FrameCache.cached(lineitem.sparkSession,
+    s"bpp:${FrameCache.planKey(lineitem, orders)}") {
+    lineitem.select(col("l_orderkey"), col("l_suppkey"))
+      .join(orders.select(col("o_orderkey"), col("o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").cast("long").as("cust"),
+        col("l_suppkey").cast("long").as("supp"))
+      .distinct()
+      .localCheckpoint()
   }
 
   /** The directed REPEAT-BUSINESS key-level trade graph shared by
@@ -1534,25 +1410,6 @@ object Graph {
     * arcs and 1.3k→1.4k return arcs across sf0.01→sf0.1, a 10×
     * corpus). Every iterative consumer runs on that sparse frame —
     * never on the corpus. */
-  /** The DISTINCT bipartite (cust, supp) purchase pair frame —
-    * the corpus collapse six operators used to re-pay independently
-    * (HITS, k-core, common-neighbors, the RA/AA witness generator,
-    * preferential attachment, the co-sourcing projection), memoized
-    * like [[repeatKeyEdges]]: one map-side-partial distinct per
-    * (dataset), every consumer caps/weights it downstream with its
-    * own md5 seed family. */
-  private def bipartitePairs(lineitem: DataFrame, orders: DataFrame)
-      : DataFrame = FrameCache.cached(lineitem.sparkSession,
-    s"bpp:${FrameCache.planKey(lineitem, orders)}") {
-    lineitem.select(col("l_orderkey"), col("l_suppkey"))
-      .join(orders.select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").cast("long").as("cust"),
-        col("l_suppkey").cast("long").as("supp"))
-      .distinct()
-      .localCheckpoint()
-  }
-
   private def repeatKeyEdges(lineitem: DataFrame, orders: DataFrame,
                              minTrades: Int, minReturns: Int)
       : DataFrame = FrameCache.cached(lineitem.sparkSession,
@@ -1635,9 +1492,9 @@ object Graph {
 
   /** [[sccKeysTrade]]'s core over an already-built arc frame — the
     * composition point [[topoLayersKeysTrade]] uses so the layering
-    * composite pays the corpus fact collapse ONCE (the r9
-    * sccFromEdges lesson, applied at key level: the nation layering
-    * used to pay the 4-table join twice, 9.24 -> 4.95 s at sf10). */
+    * composite pays the corpus fact collapse ONCE (the r9 nation
+    * lesson, applied at key level: the nation layering used to pay
+    * the 4-table join twice, 9.24 -> 4.95 s at sf10). */
   private def sccKeysCore(edges0: DataFrame,
                           session: org.apache.spark.sql.SparkSession,
                           maxIter: Int,
@@ -1710,16 +1567,9 @@ object Graph {
         }
         val sizes = mutable.LongMap.empty[Long].withDefaultValue(0L)
         comp.values.foreach(id => sizes(id) = sizes(id) + 1L)
-        val spark = session
-        import spark.implicits._
-        // ship the result as a parallelized RDD, not a LocalRelation:
-        // LocalRelation encodes every row ON THE DRIVER per execution
-        // (~60 s of the 890k-node sf10 pass); parallelize slices the
-        // raw tuples and converts on executors
-        spark.sparkContext
-          .parallelize(nodeSet.toSeq.map(n =>
-            (n, comp(n), sizes(comp(n)))), 32)
-          .toDF("node", "scc_id", "scc_size")
+        DriverCutoff.twinFrame(session,
+          nodeSet.toSeq.map(n => (n, comp(n), sizes(comp(n)))),
+          "node", "scc_id", "scc_size")
       case None =>
         val allNodes = edges0.select(col("a").as("node"))
           .unionByName(edges0.select(col("b").as("node"))).distinct()
@@ -1818,23 +1668,6 @@ object Graph {
     }
   }
 
-  /** Weighted single-source-set shortest paths over the KEY-LEVEL
-    * repeat-business trade graph ([[repeatKeyEdges]] — integer
-    * friction costs), seeded from every edge-bearing customer of
-    * the lexicographically first nation: "how cheaply can this
-    * market's sustained demand reach each entity through repeat
-    * trade and return flows". Plain distributed Bellman–Ford, the
-    * [[ssspTrade]] loop on the O(arcs) key-level frame: each round
-    * one arc⋈distance join + per-node min, stop at the first round
-    * that improves nothing (≤ hop-diameter rounds, convergence
-    * check is the one action per round). The distance frame starts
-    * at the seed set and grows with the REACHED set only — the
-    * full node universe never materializes. Unreached nodes are
-    * simply absent (the billion-node contract: output is
-    * O(reached), not O(V)). maxIter is the engine↔oracle parity
-    * bound: the oracle relaxes a fixed `maxIter` sweeps, the engine
-    * throws if convergence needs more — loud, never silently
-    * unequal. */
   /** Condensation-DAG topological layers of the KEY-LEVEL
     * repeat-business graph — [[topoLayersTrade]] lifted off the
     * nation roll-up: collapse to SCCs ([[sccKeysTrade]]), build the
@@ -1846,7 +1679,7 @@ object Graph {
     * (the oracle relaxes a fixed `sweepBound` max-sweeps — the
     * ssspKeysTrade parity-bound pattern: a deeper DAG fails loud,
     * never silently unequal); above it the distributed max-relax
-    * loop ([[topoLayersTrade]]'s) runs on the O(#SCCs) frame.
+    * loop ([[maxRelaxLayers]]) runs on the O(#SCCs) frame.
     * Output: (node, scc_id, layer) for every edge-bearing node. */
   def topoLayersKeysTrade(lineitem: DataFrame, orders: DataFrame,
                           minTrades: Int = 2, minReturns: Int = 2,
@@ -1906,43 +1739,15 @@ object Graph {
           throw new IllegalStateException(
             s"topoLayersKeysTrade depth exceeds $sweepBound — raise " +
               "sweepBound (and the oracle's sweep bound)")
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        // parallelized, not LocalRelation — same driver-encoding
-        // trap as the SCC result (the frame is every scc_id,
-        // singletons included)
-        spark.sparkContext
-          .parallelize(comps.toSeq.map(c => (c, layer(c))), 32)
-          .toDF("scc_id", "layer")
+        DriverCutoff.twinFrame(lineitem.sparkSession,
+          comps.toSeq.map(c => (c, layer(c))), "scc_id", "layer")
       case None =>
-        var lay = scc.select("scc_id").distinct()
-          .withColumn("layer", lit(0L)).localCheckpoint()
-        var converged = false
-        var i = 0
-        // improving rounds ≤ sweepBound; +1 is the confirming
-        // round — a depth-exactly-sweepBound DAG converges here
-        // just as it passes the driver path's '> sweepBound' assert
-        while (!converged && i < sweepBound + 1) {
-          val relaxed = cond
-            .join(lay, col("sa") === col("scc_id"))
-            .select(col("sb").as("scc_id"),
-              (col("layer") + 1L).as("layer"))
-            .unionByName(lay)
-            .groupBy("scc_id").agg(max("layer").as("layer"))
-            .localCheckpoint()
-          val improved = relaxed.as("x")
-            .join(lay.as("y"), Seq("scc_id"))
-            .filter(col("x.layer") > col("y.layer")).count()
-          converged = improved == 0
-          lay = relaxed
-          i += 1
-        }
-        if (!converged)
-          throw new IllegalStateException(
-            s"topoLayersKeysTrade did not converge in $sweepBound " +
-              "rounds (the condensation is a DAG; raise sweepBound " +
-              "and the oracle bound for deeper ones)")
-        lay
+        // a depth-exactly-sweepBound DAG converges here just as it
+        // passes the driver path's '> sweepBound' assert
+        maxRelaxLayers(cond, scc, sweepBound, new IllegalStateException(
+          s"topoLayersKeysTrade did not converge in $sweepBound " +
+            "rounds (the condensation is a DAG; raise sweepBound " +
+            "and the oracle bound for deeper ones)"))
     }
     scc.join(layers, "scc_id").select("node", "scc_id", "layer")
   }
@@ -1973,6 +1778,23 @@ object Graph {
       .agg(count(lit(1)).as("n_reach"),
         sum(expr("1000000 div h")).as("harmonic_ppm"))
 
+  /** Weighted single-source-set shortest paths over the KEY-LEVEL
+    * repeat-business trade graph ([[repeatKeyEdges]] — integer
+    * friction costs), seeded from every edge-bearing customer of
+    * the lexicographically first nation: "how cheaply can this
+    * market's sustained demand reach each entity through repeat
+    * trade and return flows". Plain distributed Bellman–Ford
+    * ([[relaxReached]]) on the O(arcs) key-level frame: each round
+    * one arc⋈distance join + per-node min, stop at the first round
+    * that improves nothing (≤ hop-diameter rounds, convergence
+    * check is the one action per round). The distance frame starts
+    * at the seed set and grows with the REACHED set only — the
+    * full node universe never materializes. Unreached nodes are
+    * simply absent (the billion-node contract: output is
+    * O(reached), not O(V)). maxIter is the engine↔oracle parity
+    * bound: the oracle relaxes a fixed `maxIter` sweeps, the engine
+    * throws if convergence needs more — loud, never silently
+    * unequal. */
   def ssspKeysTrade(lineitem: DataFrame, orders: DataFrame,
                     customer: DataFrame, nation: DataFrame,
                     minTrades: Int = 2, minReturns: Int = 2,
@@ -2036,44 +1858,23 @@ object Graph {
           throw new IllegalStateException(
             s"ssspKeysTrade optimal paths exceed $maxIter hops — " +
               "raise maxIter (and the oracle's sweep bound)")
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        // parallelized, not LocalRelation (the reached set is
-        // corpus-proportional under wide seed nations)
-        spark.sparkContext.parallelize(d.toSeq
-            .map { case (n, dd) =>
-              (if (n % 2 == 0) "cust" else "supp", n, dd)
-            }, 32)
-          .toDF("node_type", "node", "dist")
+        DriverCutoff.twinFrame(lineitem.sparkSession,
+          d.toSeq.map { case (n, dd) =>
+            (if (n % 2 == 0) "cust" else "supp", n, dd) },
+          "node_type", "node", "dist")
       case None =>
-        var dist = seeds
-          .withColumn("d", lit(0L))
-          .localCheckpoint()
-        var improved = 1L
-        var i = 0
-        // maxIter bounds IMPROVING rounds, the +1 is the no-improvement
-        // confirming round: a graph whose hop-diameter equals maxIter
-        // exactly converges on the distributed path just as it passes
-        // the driver Dijkstra's 'hops > maxIter' assert and the
-        // oracle's fixed maxIter-sweep Bellman–Ford
-        while (improved > 0 && i < maxIter + 1) {
-          val relaxed = edges.join(dist, edges("a") === dist("node"))
-            .select(col("b").as("node"), (col("d") + col("cost")).as("d"))
-            .unionByName(dist)
-            .groupBy("node").agg(min("d").as("d"))
-            .localCheckpoint()
-          improved = relaxed.as("x")
-            .join(dist.as("y"), Seq("node"), "left_outer")
-            .filter(col("y.d").isNull || col("x.d") < col("y.d")).count()
-          dist = relaxed
-          i += 1
-        }
-        if (improved > 0)
-          throw new IllegalStateException(
+        // a graph whose hop-diameter equals maxIter exactly converges
+        // here just as it passes the driver Dijkstra's
+        // 'hops > maxIter' assert and the oracle's fixed maxIter-sweep
+        // Bellman–Ford
+        relaxReached(edges,
+          seeds.withColumn("d", lit(0L)).localCheckpoint(),
+          Seq("node"), "d", col("cost"), maxIter,
+          new IllegalStateException(
             s"ssspKeysTrade did not converge in $maxIter rounds — " +
               "raise maxIter (and the oracle's sweep bound) for a graph " +
-              "of larger hop diameter")
-        dist.select(
+              "of larger hop diameter"))
+          .select(
           when(col("node") % 2 === 0, "cust").otherwise("supp")
             .as("node_type"),
           col("node"), col("d").as("dist"))
@@ -2121,11 +1922,9 @@ object Graph {
         math.min(driverCutoff, Long.MaxValue / S)) match {
       case Some(rows) =>
         val pairs = longPairs(rows)
-        val spark = lineitem.sparkSession
-        import spark.implicits._
         if (pairs.isEmpty)
-          return Seq.empty[(String, Long, Long)]
-            .toDF("node_type", "node", "pr_scaled")
+          return DriverCutoff.twinFrame(lineitem.sparkSession,
+            Seq.empty[(String, Long, Long)], "node_type", "node", "pr_scaled")
         val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
         pairs.foreach { case (a, _) => od(a) += 1L }
         val nodeArr = (pairs.map(_._1) ++ pairs.map(_._2)).distinct
@@ -2134,8 +1933,8 @@ object Graph {
           nodeArr, iters)
         val out = nodeArr.sorted.map(v =>
           (if (v % 2 == 0) "cust" else "supp", v, pr(v)))
-        spark.sparkContext.parallelize(out.toSeq, 32)
-          .toDF("node_type", "node", "pr_scaled")
+        DriverCutoff.twinFrame(lineitem.sparkSession, out.toSeq,
+          "node_type", "node", "pr_scaled")
       case None =>
         val nodes = arcs.select(col("a").as("node"))
           .unionByName(arcs.select(col("b").as("node"))).distinct()
@@ -2154,21 +1953,7 @@ object Graph {
           return nodes.select(
             lit("cust").as("node_type"), col("node"),
             col("node").as("pr_scaled")).limit(0)
-        val base = ((S / n) * 15L) / 100L
-        var ranks = nodes.withColumn("pr", lit(S / n))
-        for (_ <- 0 until iters) {
-          val contrib = edges
-            .join(ranks, edges("src") === ranks("node"))
-            .select(col("dst").as("node"),
-              expr("(pr * frac_ppm) div 1000000").as("term"))
-            .groupBy("node").agg(sum("term").as("c"))
-          ranks = nodes
-            .join(contrib, Seq("node"), "left")
-            .select(col("node"),
-              (lit(base) + expr("(coalesce(c, 0L) * 85) div 100"))
-                .as("pr"))
-        }
-        ranks.select(
+        pageRankRounds(nodes, n, edges, iters).select(
           when(col("node") % 2 === 0, "cust").otherwise("supp")
             .as("node_type"),
           col("node"), col("pr").as("pr_scaled"))
@@ -2399,11 +2184,9 @@ object Graph {
       case Some(rows) =>
         val pairs = longPairs(rows)
         val seedArr = seedsLazy.collect().map(_.getLong(0))
-        val spark = lineitem.sparkSession
-        import spark.implicits._
         if (seedArr.isEmpty)
-          return Seq.empty[(String, Long, Long)]
-            .toDF("node_type", "node", "ppr_scaled")
+          return DriverCutoff.twinFrame(lineitem.sparkSession,
+            Seq.empty[(String, Long, Long)], "node_type", "node", "ppr_scaled")
         val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
         pairs.foreach { case (a, _) => od(a) += 1L }
         val nSeeds = seedArr.length.toLong
@@ -2425,8 +2208,8 @@ object Graph {
         }
         val out = pr.toSeq.filter(_._2 > 0L).sortBy(_._1).map { case (v, p) =>
           (if (v % 2 == 0) "cust" else "supp", v, p) }
-        spark.sparkContext.parallelize(out, 32)
-          .toDF("node_type", "node", "ppr_scaled")
+        DriverCutoff.twinFrame(lineitem.sparkSession, out,
+          "node_type", "node", "ppr_scaled")
       case None =>
         val seeds = seedsLazy.localCheckpoint()
         val outd = arcs.groupBy("a").agg(count(lit(1)).as("od"))
@@ -2582,33 +2365,16 @@ object Graph {
             .map { case (n, h) => (lm, n, h) }
         }
         if (out.exists(_._3 > maxIter)) throw stuck
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        spark.sparkContext
-          .parallelize(out.sortBy(r => (r._1, r._2)).toSeq, 32)
-          .toDF("lm", "node", "h").localCheckpoint()
+        DriverCutoff.twinFrame(lineitem.sparkSession,
+          out.sortBy(r => (r._1, r._2)).toSeq, "lm", "node", "h")
+          .localCheckpoint()
       case None =>
-        var dist = lms.select(col("lm"), col("lm").as("node"))
-          .withColumn("h", lit(0L)).localCheckpoint()
-        var improved = 1L
-        var i = 0
-        // improving rounds ≤ maxIter; +1 is the confirming round — a
-        // hop-diameter-exactly-maxIter graph converges here just as it
-        // passes the driver BFS's '> maxIter' assert
-        while (improved > 0 && i < maxIter + 1) {
-          val relaxed = edges.join(dist, edges("a") === dist("node"))
-            .select(col("lm"), col("b").as("node"), (col("h") + 1L).as("h"))
-            .unionByName(dist)
-            .groupBy("lm", "node").agg(min("h").as("h"))
-            .localCheckpoint()
-          improved = relaxed.as("x")
-            .join(dist.as("y"), Seq("lm", "node"), "left_outer")
-            .filter(col("y.h").isNull || col("x.h") < col("y.h")).count()
-          dist = relaxed
-          i += 1
-        }
-        if (improved > 0) throw stuck
-        dist
+        // a hop-diameter-exactly-maxIter graph converges here just as
+        // it passes the driver BFS's '> maxIter' assert
+        relaxReached(edges,
+          lms.select(col("lm"), col("lm").as("node"))
+            .withColumn("h", lit(0L)).localCheckpoint(),
+          Seq("lm", "node"), "h", lit(1L), maxIter, stuck)
     }
   }
 
@@ -2840,11 +2606,9 @@ object Graph {
       }
       del.foreach { case (n, d) => if (n != lm) btw(n) += d }
     }
-    import spark.implicits._
-    val out = nodeSet.toSeq.map(n =>
-      (if (n % 2 == 0) "cust" else "supp", n, btw(n)))
-    spark.sparkContext.parallelize(out, 32)
-      .toDF("node_type", "node", "btw_ppm")
+    DriverCutoff.twinFrame(spark, nodeSet.toSeq.map(n =>
+        (if (n % 2 == 0) "cust" else "supp", n, btw(n))),
+      "node_type", "node", "btw_ppm")
   }
 
   /** Degree-mixing matrix over the KEY-LEVEL repeat-business graph —
@@ -2949,6 +2713,160 @@ object Graph {
           .otherwise(col("l1_drift")).as("l1_drift"))
   }
 
+  // ---- distributed round loops: the one copy of each loop that
+  // several operators run above their cutoff ----
+
+  /** The integer-ppm PageRank rounds of [[pageRankTrade]] and
+    * [[pageRankKeysTrade]]: ranks (node, pr) at scale 1e12 over the
+    * `n` (> 0) rows of `nodes`, flowing along `edges` (src, dst,
+    * frac_ppm) for `iters` rounds. [[pageRankPpm]] is the driver
+    * twin. */
+  private def pageRankRounds(nodes: DataFrame, n: Long, edges: DataFrame,
+                             iters: Int): DataFrame = {
+    val S = 1000000000000L
+    val base = ((S / n) * 15L) / 100L
+    var ranks = nodes.withColumn("pr", lit(S / n))
+    for (_ <- 0 until iters) {
+      val contrib = edges
+        .join(ranks, edges("src") === ranks("node"))
+        .select(col("dst").as("node"),
+          expr("(pr * frac_ppm) div 1000000").as("term"))
+        .groupBy("node").agg(sum("term").as("c"))
+      ranks = nodes
+        .join(contrib, Seq("node"), "left")
+        .select(col("node"),
+          (lit(base) + expr("(coalesce(c, 0L) * 85) div 100")).as("pr"))
+    }
+    ranks
+  }
+
+  /** The distributed SCC route of [[sccTrade]] and
+    * [[topoLayersTrade]], each of which has already counted `edges`
+    * (a, b) in its own gate: the iterated-squaring closure, then
+    * scc(v) = min of v and its mutually reachable peers, per nation
+    * node. [[sccClosure]] is the driver twin. */
+  private def sccSquaring(edges: DataFrame, nation: DataFrame,
+                          maxIter: Int): DataFrame = {
+    var reach = edges
+    var converged = false
+    var i = 0
+    // improving rounds ≤ maxIter; +1 is the confirming round
+    while (!converged && i < maxIter + 1) {
+      val nxt = reach.unionByName(
+          reach.as("x").join(reach.as("y"), col("x.b") === col("y.a"))
+            .select(col("x.a").as("a"), col("y.b").as("b")))
+        .distinct().localCheckpoint()
+      converged = nxt.count() == reach.count()
+      reach = nxt
+      i += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"sccTrade closure did not converge in $maxIter rounds")
+    val mutual = reach.as("f").join(reach.as("r"),
+        col("f.a") === col("r.b") && col("f.b") === col("r.a"))
+      .select(col("f.a").as("node"), col("f.b").as("peer"))
+    val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
+    nodes.join(mutual, Seq("node"), "left")
+      .groupBy("node")
+      .agg(coalesce(least(min("peer"), col("node")), col("node"))
+        .as("scc_id"))
+  }
+
+  /** The max-relax layering of [[topoLayersTrade]] and
+    * [[topoLayersKeysTrade]]: every component of `scc` (scc_id)
+    * starts at layer 0 and takes 1 + the max over its predecessors in
+    * the condensation arcs `cond` (sa, sb). At most `bound` improving
+    * rounds plus one confirming round, else `stuck` is thrown.
+    * Returns (scc_id, layer). */
+  private def maxRelaxLayers(cond: DataFrame, scc: DataFrame, bound: Int,
+                             stuck: => IllegalStateException): DataFrame = {
+    var layers = scc.select("scc_id").distinct()
+      .withColumn("layer", lit(0L)).localCheckpoint()
+    var converged = false
+    var i = 0
+    while (!converged && i < bound + 1) {
+      val relaxed = cond
+        .join(layers, col("sa") === col("scc_id"))
+        .select(col("sb").as("scc_id"), (col("layer") + 1L).as("layer"))
+        .unionByName(layers)
+        .groupBy("scc_id").agg(max("layer").as("layer"))
+        .localCheckpoint()
+      val improved = relaxed.as("x")
+        .join(layers.as("y"), Seq("scc_id"))
+        .filter(col("x.layer") > col("y.layer")).count()
+      converged = improved == 0
+      layers = relaxed
+      i += 1
+    }
+    if (!converged) throw stuck
+    layers
+  }
+
+  /** The min-plus relaxation of [[ssspTrade]] and [[closenessTrade]]
+    * over `edges` (esrc, edst, cost), on a distance frame keyed by
+    * `keys` (the last is "node") whose d is null until reached. Only
+    * a row present in the previous frame registers an improvement,
+    * the rule [[bellmanFord]] (the driver twin) documents. At most
+    * `maxIter` improving rounds plus one confirming round, else
+    * `stuck` is thrown. */
+  private def relaxPresent(edges: DataFrame, dist0: DataFrame,
+                           keys: Seq[String], maxIter: Int,
+                           stuck: => IllegalStateException): DataFrame = {
+    var dist = dist0
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter + 1) {
+      val relaxed = edges
+        .join(dist.filter(col("d").isNotNull), col("esrc") === col("node"))
+        .select(keys.init.map(col) :+ col("edst").as("node") :+
+          (col("d") + col("cost")).as("d"): _*)
+        .unionByName(dist)
+        .groupBy(keys.map(col): _*).agg(min("d").as("d"))
+        .localCheckpoint()
+      val improved = relaxed.as("a")
+        .join(dist.as("b"), keys)
+        .filter(col("a.d").isNotNull &&
+          (col("b.d").isNull || col("a.d") < col("b.d")))
+        .count()
+      converged = improved == 0
+      dist = relaxed
+      i += 1
+    }
+    if (!converged) throw stuck
+    dist
+  }
+
+  /** The min-plus relaxation of [[ssspKeysTrade]] and
+    * [[landmarkDistKeys]] over `edges` (a, b, …), on a distance frame
+    * keyed by `keys` (the last is "node") holding reached rows only:
+    * an arc adds `step` to value column `v`, and any new or shorter
+    * row is an improvement. At most `maxIter` improving rounds plus
+    * one confirming round, else `stuck` is thrown. */
+  private def relaxReached(edges: DataFrame, dist0: DataFrame,
+                           keys: Seq[String], v: String, step: Column,
+                           maxIter: Int,
+                           stuck: => IllegalStateException): DataFrame = {
+    var dist = dist0
+    var improved = 1L
+    var i = 0
+    while (improved > 0 && i < maxIter + 1) {
+      val relaxed = edges.join(dist, edges("a") === dist("node"))
+        .select(keys.init.map(col) :+ col("b").as("node") :+
+          (col(v) + step).as(v): _*)
+        .unionByName(dist)
+        .groupBy(keys.map(col): _*).agg(min(v).as(v))
+        .localCheckpoint()
+      improved = relaxed.as("x")
+        .join(dist.as("y"), keys, "left_outer")
+        .filter(col(s"y.$v").isNull || col(s"x.$v") < col(s"y.$v")).count()
+      dist = relaxed
+      i += 1
+    }
+    if (improved > 0) throw stuck
+    dist
+  }
+
   // ---- driver-twin kernels: each is the arithmetic of one
   // distributed loop, shared by every twin of that loop ----
 
@@ -2957,6 +2875,11 @@ object Graph {
 
   private def longTriples(rows: Array[Row]): Array[(Long, Long, Long)] =
     rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+
+  /** The nation dimension as (n_nationkey, n_name) on the driver. */
+  private def nationNames(nation: DataFrame): Array[(Long, String)] =
+    nation.select(col("n_nationkey").cast("long"), col("n_name"))
+      .collect().map(r => (r.getLong(0), r.getString(1)))
 
   /** Out-adjacency lists of directed (a, b) arcs. */
   private def adjacency(arcs: Array[(Long, Long)])

@@ -1584,22 +1584,6 @@ object Reactive {
           .otherwise("in").as("band"))
   }
 
-  /** Theil–Sen robust trend per key: the (lower) median of all
-    * pairwise slopes over the last `n` points — the estimator that
-    * shrugs off the outliers OLS chases (breakdown point ~29%), and
-    * the standard robust drift detector next to [[rxTrendCorrelation]]
-    * 's parametric slope. The last-`n` cap is the scale contract:
-    * pairwise slopes are O(n²) per key BY DEFINITION, so the window
-    * bounds the fan-out at n(n−1)/2 = 496 doubles per key regardless
-    * of stream length (the capped-adjacency rule applied to time
-    * series). Slopes use event_id as the time axis (unique integers
-    * — no zero denominators), each slope is ONE double division (the
-    * same IEEE result on any engine), and the median is an order
-    * statistic of the sorted slope array — deterministic throughout.
-    *
-    * Scale shape: one rank window to keep the last n, one
-    * collect-to-array per key (bounded at n), then per-row HOFs;
-    * only (user, event_id, value) triples shuffle. */
   /** Arrival-cadence regularity per key: the squared coefficient of
     * variation of inter-arrival gaps in exact ppm — CV² ≈ 0 flags
     * metronome/bot cadence, ≈ 10⁶ is Poisson, ≫ 10⁶ is bursty — via
@@ -1694,6 +1678,22 @@ object Reactive {
       .agg(count(lit(1)).as("n"), sums: _*)
   }
 
+  /** Theil–Sen robust trend per key: the (lower) median of all
+    * pairwise slopes over the last `n` points — the estimator that
+    * shrugs off the outliers OLS chases (breakdown point ~29%), and
+    * the standard robust drift detector next to [[rxTrendCorrelation]]
+    * 's parametric slope. The last-`n` cap is the scale contract:
+    * pairwise slopes are O(n²) per key BY DEFINITION, so the window
+    * bounds the fan-out at n(n−1)/2 = 496 doubles per key regardless
+    * of stream length (the capped-adjacency rule applied to time
+    * series). Slopes use event_id as the time axis (unique integers
+    * — no zero denominators), each slope is ONE double division (the
+    * same IEEE result on any engine), and the median is an order
+    * statistic of the sorted slope array — deterministic throughout.
+    *
+    * Scale shape: one rank window to keep the last n, one
+    * collect-to-array per key (bounded at n), then per-row HOFs;
+    * only (user, event_id, value) triples shuffle. */
   def rxTheilSen(events: DataFrame, n: Int = 32): DataFrame = {
     val lastN = events
       .withColumn("rn", row_number().over(

@@ -1279,18 +1279,6 @@ object Relational {
       .select("p_partkey", "p_retailprice", "p_size")
   }
 
-  /** Market-basket pair mining (the support-counting round of
-    * frequent-itemset/association-rule mining): parts co-ordered in
-    * the same order, top-k pairs by support. Grouped emission, not
-    * the textbook self-join: per-order DISTINCT item sets collapse
-    * on the orderkey shuffle FIRST, pairs are generated narrowly
-    * from each (sorted, capped) set, and only (p1,p2) count keys —
-    * partial-aggregated — ride the second exchange. The self-join
-    * form shuffles the fact twice and materializes the same pairs as
-    * join output rows; grouped emission bounds the blowup at
-    * C(cap,2) per order (TPC-H baskets hold ≤7 distinct parts; the
-    * cap guards adversarial baskets the same way ngramJaccardCapped
-    * caps posting lists). */
   /** The per-order basket collapse shared by [[qBasketPairs]] and
     * [[qBasketRules]] — a pure function of (dataset, basketCap), and
     * the dominant cost of BOTH keys (the fact groupBy + collect_set).
@@ -1310,6 +1298,18 @@ object Relational {
     }
   }
 
+  /** Market-basket pair mining (the support-counting round of
+    * frequent-itemset/association-rule mining): parts co-ordered in
+    * the same order, top-k pairs by support. Grouped emission, not
+    * the textbook self-join: per-order DISTINCT item sets collapse
+    * on the orderkey shuffle FIRST, pairs are generated narrowly
+    * from each (sorted, capped) set, and only (p1,p2) count keys —
+    * partial-aggregated — ride the second exchange. The self-join
+    * form shuffles the fact twice and materializes the same pairs as
+    * join output rows; grouped emission bounds the blowup at
+    * C(cap,2) per order (TPC-H baskets hold ≤7 distinct parts; the
+    * cap guards adversarial baskets the same way ngramJaccardCapped
+    * caps posting lists). */
   def qBasketPairs(s: SparkSession, dir: String, k: Int = 100,
                    basketCap: Int = 64): DataFrame =
     qBasketPairsFrom(basketSets(s, dir, basketCap), k)

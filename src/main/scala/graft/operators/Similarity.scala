@@ -88,21 +88,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"), sum("nsq").as("sum_nsq"))
   }
 
-  /** IVF (inverted-file) ANN: the corpus is coarse-quantized to its
-    * nearest of `nlist` centroids; each query probes only the
-    * `nprobe` nearest centroid lists. The second classic ANN scale
-    * path next to LSH: recall is tuned by nprobe instead of
-    * hamming-probe width, and list sizes adapt to the data
-    * distribution (LSH buckets don't).
-    *
-    * Centroids here are the `nlist` lowest-id corpus vectors —
-    * deterministic and cheap; swap in k-means iterations offline for
-    * better list balance (the plan shape is identical). Assignment is
-    * a NARROW per-row argmax against the broadcast centroid array
-    * ([[assignCentroids]]) — the corpus never shuffles; the probe
-    * join is a broadcast of the (tiny) query probes, so the only
-    * exchange in the whole plan is the per-query top-k window over
-    * the candidate lists. */
   /** Lloyd-refined coarse centroids for IVF: seed with the first
     * nlist vectors, then `iters` rounds of assign → recompute-mean.
     * Means are computed with the scaled-integer trick (floor(x*1e6)
@@ -159,6 +144,21 @@ object Similarity {
           .as("centroid_id"))
   }
 
+  /** IVF (inverted-file) ANN: the corpus is coarse-quantized to its
+    * nearest of `nlist` centroids; each query probes only the
+    * `nprobe` nearest centroid lists. The second classic ANN scale
+    * path next to LSH: recall is tuned by nprobe instead of
+    * hamming-probe width, and list sizes adapt to the data
+    * distribution (LSH buckets don't).
+    *
+    * Centroids here are the `nlist` lowest-id corpus vectors —
+    * deterministic and cheap; swap in k-means iterations offline for
+    * better list balance (the plan shape is identical). Assignment is
+    * a NARROW per-row argmax against the broadcast centroid array
+    * ([[assignCentroids]]) — the corpus never shuffles; the probe
+    * join is a broadcast of the (tiny) query probes, so the only
+    * exchange in the whole plan is the per-query top-k window over
+    * the candidate lists. */
   def ivfTopK(embs: DataFrame, queries: DataFrame, nlist: Int = 16,
               nprobe: Int = 4, k: Int = 5): DataFrame =
     ivfTopKWith(embs, queries,
@@ -617,14 +617,12 @@ object Similarity {
     // distributed rounds run UNCHANGED.
     collectEmbsUnder(embs, driverBudget) match {
       case Some(vecs) =>
-        val spark = embs.sparkSession
-        import spark.implicits._
         val centArr = cents
           .select(col("centroid_id").cast("long"), col("c_emb"))
           .collect().map(r => (r.getLong(0), embAt(r, 1)))
         val asg = assignDrv(vecs, centArr, nlist, rounds)
-        return spark.sparkContext.parallelize(asg.toSeq, 32)
-          .toDF("vec_id", "centroid_id", "cos_sim", "pref_used")
+        return DriverCutoff.twinFrame(embs.sparkSession, asg.toSeq,
+          "vec_id", "centroid_id", "cos_sim", "pref_used")
       case None => ()
     }
     val centsRow = cents.agg(
@@ -718,8 +716,6 @@ object Similarity {
     // distributed alternation below runs UNCHANGED.
     collectEmbsUnder(embs, driverBudget) match {
       case Some(vecs) =>
-        val spark = embs.sparkSession
-        import spark.implicits._
         var centArr = vecs.filter(_._1 < nlist)
         var asg: Array[(Long, Long, Double, Long)] = null
         val byId = vecs.toMap
@@ -745,8 +741,8 @@ object Similarity {
             }
           }
         }
-        return spark.sparkContext.parallelize(asg.toSeq, 32)
-          .toDF("vec_id", "centroid_id", "cos_sim", "pref_used")
+        return DriverCutoff.twinFrame(embs.sparkSession, asg.toSeq,
+          "vec_id", "centroid_id", "cos_sim", "pref_used")
       case None => ()
     }
     var cents = embs.filter(col("vec_id") < nlist)
@@ -1139,8 +1135,6 @@ object Similarity {
       collectEmbsUnder(queries.select(col("vec_id"), col("embedding")),
         driverBudget / 2)) match {
       case (Some(vecs), Some(qsArr)) =>
-        val spark = embs.sparkSession
-        import spark.implicits._
         import scala.collection.mutable
         val byId = vecs.toMap
         val n = vecs.length.toLong
@@ -1188,8 +1182,8 @@ object Similarity {
             .zipWithIndex.foreach { case ((v, cs), idx) =>
               out += ((qid, idx + 1L, v, cs)) }
         }
-        return spark.sparkContext.parallelize(out.toSeq, 32)
-          .toDF("query_id", "rank", "neighbor_id", "cos_sim")
+        return DriverCutoff.twinFrame(embs.sparkSession, out.toSeq,
+          "query_id", "rank", "neighbor_id", "cos_sim")
       case _ => ()
     }
     val q = queries.select(col("vec_id").as("query_id"),
@@ -1614,22 +1608,6 @@ object Similarity {
     pqDistortion(sliced, k)
   }
 
-  /** 1-bit (sign) quantization audit: pack each embedding's sign
-    * bits into ⌈d/64⌉ BIGINT words (×256 smaller than raw floats at
-    * d=64 — the cheapest rerank-tier compression there is) and score
-    * a bounded query panel: Hamming top-k recall against the exact
-    * cosine top-k, the Hamming mass of the true top-k, and the
-    * panel-wide minimum Hamming distance. The packed scan is the
-    * 100 TB read path — XOR + bit_count per word via codegen'd
-    * builtins, the raw floats never leave the exact-side columns —
-    * and the audit tells a deployment whether sign bits alone carry
-    * enough of the neighborhood structure to prune before exact
-    * rerank.
-    *
-    * Scale shape: queries are a bounded panel (broadcast); the
-    * corpus scans once, packs narrowly, and only (query, neighbor,
-    * hamming, cos) tuples reach the per-query rank windows — the
-    * [[bruteForceTopK]] exact-baseline contract. */
   /** ⌈d/64⌉-word packed sign bits of the embedding column — shared
     * by [[binaryQuantAudit]] and [[binaryRerank]]. */
   private def packedSignBits = expr(
@@ -1646,6 +1624,22 @@ object Similarity {
       |  (a, b) -> bit_count(a ^ b)), 0, (x, y) -> x + y)""".stripMargin)
     .cast("long")
 
+  /** 1-bit (sign) quantization audit: pack each embedding's sign
+    * bits into ⌈d/64⌉ BIGINT words (×256 smaller than raw floats at
+    * d=64 — the cheapest rerank-tier compression there is) and score
+    * a bounded query panel: Hamming top-k recall against the exact
+    * cosine top-k, the Hamming mass of the true top-k, and the
+    * panel-wide minimum Hamming distance. The packed scan is the
+    * 100 TB read path — XOR + bit_count per word via codegen'd
+    * builtins, the raw floats never leave the exact-side columns —
+    * and the audit tells a deployment whether sign bits alone carry
+    * enough of the neighborhood structure to prune before exact
+    * rerank.
+    *
+    * Scale shape: queries are a bounded panel (broadcast); the
+    * corpus scans once, packs narrowly, and only (query, neighbor,
+    * hamming, cos) tuples reach the per-query rank windows — the
+    * [[bruteForceTopK]] exact-baseline contract. */
   def binaryQuantAudit(embs: DataFrame, queries: DataFrame, k: Int = 10)
       : DataFrame = {
     val scored = binaryScored(embs, queries)
@@ -1751,8 +1745,6 @@ object Similarity {
       nQ * pool * (24L + 4L * dim)
     }
     if (poolBytes <= driverBudget) {
-      val spark = embs.sparkSession
-      import spark.implicits._
       import scala.collection.mutable
       val rowsArr = withEmbLazy.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2), embAt(r, 3)))
@@ -1793,8 +1785,8 @@ object Similarity {
           }
         }
       }
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("query_id", "pos", "neighbor_id", "mmr_score")
+      return DriverCutoff.twinFrame(embs.sparkSession, out.toSeq,
+        "query_id", "pos", "neighbor_id", "mmr_score")
     }
     val withEmb = withEmbLazy.localCheckpoint()
     val sims = withEmb.as("a")
@@ -1874,54 +1866,53 @@ object Similarity {
     // java.lang.Double ordering, floor(d2·1e6) radii. Byte-equal;
     // Round12Spec pins the boundary. Above the budget the k-pass
     // broadcast-argmax scan runs unchanged (the 100 TB shape).
-    val corpus = embs.select(col("vec_id"), col("embedding"))
-    val nRows = corpus.count()
-    val dim = corpus.limit(1).collect().headOption
-      .map(_.getSeq[Float](1).length).getOrElse(0)
-    if (nRows * (8L + 4L * dim) <= driverCutoff) {
-      val vecs = corpus.collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1)
-      val picks =
-        scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Long])]()
-      if (vecs.nonEmpty) {
-        val selected = scala.collection.mutable.Set[Long](vecs.head._1)
-        picks += ((1L, vecs.head._1, None))
-        var newest = vecs.head._2
-        val minD2 = Array.fill(vecs.length)(Double.PositiveInfinity)
-        var rank = 2
-        while (rank <= k && selected.size < vecs.length) {
-          var bestIdx = -1
-          var i = 0
-          while (i < vecs.length) {
-            // distance to the NEWEST center only; min with the
-            // stored min-over-previous — same value as the full
-            // min the kernel recomputes (exact double min)
-            val v = vecs(i)._2
-            var d2 = 0.0
-            var j = 0
-            while (j < dim) {
-              val d = v(j).toDouble - newest(j).toDouble
-              d2 += d * d
-              j += 1
+    collectEmbsUnder(embs, driverCutoff) match {
+      case Some(collected) =>
+        // the dimension is the first collected row's, as the size probe
+        val dim = collected.headOption.map(_._2.numElements()).getOrElse(0)
+        val vecs = collected.sortBy(_._1)
+        val picks =
+          scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Long])]()
+        if (vecs.nonEmpty) {
+          val selected = scala.collection.mutable.Set[Long](vecs.head._1)
+          picks += ((1L, vecs.head._1, None))
+          var newest = vecs.head._2
+          val minD2 = Array.fill(vecs.length)(Double.PositiveInfinity)
+          var rank = 2
+          while (rank <= k && selected.size < vecs.length) {
+            var bestIdx = -1
+            var i = 0
+            while (i < vecs.length) {
+              // distance to the NEWEST center only; min with the
+              // stored min-over-previous — same value as the full
+              // min the kernel recomputes (exact double min)
+              val v = vecs(i)._2
+              var d2 = 0.0
+              var j = 0
+              while (j < dim) {
+                val d = v.getFloat(j).toDouble - newest.getFloat(j).toDouble
+                d2 += d * d
+                j += 1
+              }
+              if (d2 < minD2(i)) minD2(i) = d2
+              if (!selected.contains(vecs(i)._1) &&
+                  (bestIdx < 0 ||
+                    java.lang.Double.compare(minD2(i), minD2(bestIdx)) > 0))
+                bestIdx = i // ties keep the earlier (smaller) vec_id
+              i += 1
             }
-            if (d2 < minD2(i)) minD2(i) = d2
-            if (!selected.contains(vecs(i)._1) &&
-                (bestIdx < 0 ||
-                  java.lang.Double.compare(minD2(i), minD2(bestIdx)) > 0))
-              bestIdx = i // ties keep the earlier (smaller) vec_id
-            i += 1
+            val (id, v) = vecs(bestIdx)
+            selected += id
+            picks += ((rank.toLong, id,
+              Some(math.floor(minD2(bestIdx) * 1e6).toLong)))
+            newest = v
+            rank += 1
           }
-          val (id, v) = vecs(bestIdx)
-          selected += id
-          picks += ((rank.toLong, id,
-            Some(math.floor(minD2(bestIdx) * 1e6).toLong)))
-          newest = v
-          rank += 1
         }
-      }
-      return picks.toSeq.toDF("rank", "vec_id", "radius2_scaled")
+        return picks.toSeq.toDF("rank", "vec_id", "radius2_scaled")
+      case None => ()
     }
+    val corpus = embs.select(col("vec_id"), col("embedding"))
     // headOption, not head: an empty corpus returns the empty
     // selection; a corpus smaller than k returns the partial one
     val seedOpt = corpus.orderBy("vec_id").limit(1)

@@ -78,20 +78,6 @@ object TextAnalysis {
       array_max(array(scores: _*)).getField("score").as("confidence"))
   }
 
-  /** Exact n-gram Jaccard similarity for all document pairs within a
-    * `source` group (deterministic candidate set — the LSH paths use
-    * hash-dependent candidates instead). Distinct 3-gram shingle
-    * sets; |A n B| / |A u B|.
-    *
-    * Inverted-index plan, never a quadratic pair join: explode each
-    * doc's distinct shingle set to (source, shingle-hash, doc)
-    * postings, self-join the postings on the 8-byte hash (only pairs
-    * that SHARE a shingle are ever materialized), count common
-    * shingles per pair map-side, then |A u B| = |A| + |B| - |A n B|
-    * from per-doc set sizes. Payload through the shuffle is
-    * (source, hash, id) — the shingle strings never leave the scan
-    * stage. Pairs sharing zero shingles have jaccard 0 < minJaccard,
-    * so dropping them is exact. */
   /** Shingle document-frequency SPECTRUM: shingles rolled into
     * log₂(df) buckets with shingle counts, df mass, and occurrence
     * mass per bucket — the one-page answer to "how much cross-doc
@@ -132,6 +118,20 @@ object TextAnalysis {
       ngramJaccard(docs, minJaccard).localCheckpoint()
     }
 
+  /** Exact n-gram Jaccard similarity for all document pairs within a
+    * `source` group (deterministic candidate set — the LSH paths use
+    * hash-dependent candidates instead). Distinct 3-gram shingle
+    * sets; |A n B| / |A u B|.
+    *
+    * Inverted-index plan, never a quadratic pair join: explode each
+    * doc's distinct shingle set to (source, shingle-hash, doc)
+    * postings, self-join the postings on the 8-byte hash (only pairs
+    * that SHARE a shingle are ever materialized), count common
+    * shingles per pair map-side, then |A u B| = |A| + |B| - |A n B|
+    * from per-doc set sizes. Payload through the shuffle is
+    * (source, hash, id) — the shingle strings never leave the scan
+    * stage. Pairs sharing zero shingles have jaccard 0 < minJaccard,
+    * so dropping them is exact. */
   def ngramJaccard(docs: DataFrame, minJaccard: Double = 0.05): DataFrame = {
     require(minJaccard > 0, "minJaccard must be > 0: zero-overlap pairs " +
       "are never generated by the inverted index")
@@ -399,20 +399,6 @@ object TextAnalysis {
       .select("source", "doc1", "doc2", "jaccard")
   }
 
-  /** DF-capped n-gram Jaccard: the skew guard for adversarial
-    * corpora — a stopword shingle appearing in f docs would emit f²
-    * pairs; shingles with document frequency > `maxDocFreq` are cut,
-    * and Jaccard is DEFINED over the capped shingle universe (set
-    * sizes recomputed over kept shingles), so the result is still
-    * exact for that definition and cross-engine verifiable.
-    *
-    * Unlike the uncapped variant's posting self-join, the cap makes
-    * a GROUPED plan strictly better: aggregate postings to one doc
-    * list per (source, hash) — the cap bounds the list, so the pair
-    * fan-out per shingle is ≤ maxDocFreq²/2 and can be emitted by a
-    * plain generator (posexplode + slice of the sorted list) with no
-    * join and no window sort. One shuffle of the postings total; the
-    * per-doc kept-set sizes reuse that same (source, h) Exchange. */
   /** The df-capped 3-gram pair frame shared by [[ngramJaccardCapped]]
     * and [[containmentCapped]]: (source, doc1, doc2, n_common, n1,
     * n2) over the CAPPED posting lists — both consumers score the
@@ -458,6 +444,20 @@ object TextAnalysis {
         Map("doc_id" -> "doc2", "n_sh" -> "n2")), "doc2")
   }
 
+  /** DF-capped n-gram Jaccard: the skew guard for adversarial
+    * corpora — a stopword shingle appearing in f docs would emit f²
+    * pairs; shingles with document frequency > `maxDocFreq` are cut,
+    * and Jaccard is DEFINED over the capped shingle universe (set
+    * sizes recomputed over kept shingles), so the result is still
+    * exact for that definition and cross-engine verifiable.
+    *
+    * Unlike the uncapped variant's posting self-join, the cap makes
+    * a GROUPED plan strictly better: aggregate postings to one doc
+    * list per (source, hash) — the cap bounds the list, so the pair
+    * fan-out per shingle is ≤ maxDocFreq²/2 and can be emitted by a
+    * plain generator (posexplode + slice of the sorted list) with no
+    * join and no window sort. One shuffle of the postings total; the
+    * per-doc kept-set sizes reuse that same (source, h) Exchange. */
   def ngramJaccardCapped(docs: DataFrame, minJaccard: Double = 0.05,
                          maxDocFreq: Int = 100): DataFrame = {
     require(minJaccard > 0, "minJaccard must be > 0")
@@ -1188,19 +1188,6 @@ object TextAnalysis {
       .filter(col("kw_rank") <= k)
   }
 
-  /** Subword pair mining — the counting round at the heart of BPE
-    * vocabulary learning: adjacent character-pair frequencies over
-    * ascii word occurrences, top-k by count. One merge iteration of
-    * the tokenizer-training loop, at corpus scale.
-    *
-    * Plan: a narrow generator (`sequence` + `substring` transform,
-    * whole-stage codegen'd — no UDF) explodes each word into its
-    * len-1 pairs; the count aggregates map-side partially (the key
-    * space is ≤ 36² for ascii alnum), and the top-k is a
-    * TakeOrdered — no global sort, no driver loop. Non-ascii words
-    * are excluded by contract: BPE byte/char conventions differ
-    * across unicode normal forms, and the op pins the portable
-    * subset. */
   /** Cross-document boilerplate detection: the n-grams shared by the
     * most documents are boilerplate (headers, footers, license
     * blurbs); each document then reports what fraction of its n-gram
@@ -1514,6 +1501,19 @@ object TextAnalysis {
     merges.toSeq.toDF("merge_rank", "left_sym", "right_sym", "pair_count")
   }
 
+  /** Subword pair mining — the counting round at the heart of BPE
+    * vocabulary learning: adjacent character-pair frequencies over
+    * ascii word occurrences, top-k by count. One merge iteration of
+    * the tokenizer-training loop, at corpus scale.
+    *
+    * Plan: a narrow generator (`sequence` + `substring` transform,
+    * whole-stage codegen'd — no UDF) explodes each word into its
+    * len-1 pairs; the count aggregates map-side partially (the key
+    * space is ≤ 36² for ascii alnum), and the top-k is a
+    * TakeOrdered — no global sort, no driver loop. Non-ascii words
+    * are excluded by contract: BPE byte/char conventions differ
+    * across unicode normal forms, and the op pins the portable
+    * subset. */
   def bpePairs(docs: DataFrame, k: Int = 100): DataFrame = {
     val words = docs.select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 2 && col("w").rlike("^[a-z0-9]+$"))

@@ -127,6 +127,26 @@ class InventorySpec extends AnyFunSuite {
       "route through DriverCutoff.collectUnder:\n" + offenders.mkString("\n"))
   }
 
+  test("no scaladoc block is followed directly by another") {
+    // a /** … */ block with only blank lines before the next /**
+    // documents nothing: the definition below carries the second
+    import scala.jdk.CollectionConverters._
+    val orphan = "(?s)/\\*\\*(?>.*?\\*/)\\s*(?=/\\*\\*)".r
+    assert(orphan.findFirstIn("/** a */\n\n  /** b */\n  def f = 1").nonEmpty)
+    assert(orphan.findFirstIn("/** a */\n  def f = 1\n  /** b */").isEmpty)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val offenders = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        orphan.findAllMatchIn(src).map(m =>
+          s"$f:${src.substring(0, m.start).count(_ == '\n') + 1}")
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty,
+      "move each block onto the definition it describes:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("the main source defines exactly four programs") {
     // each `def main` named by its file's package and the object
     // declared last before it: a probe program that no harness runs
