@@ -938,6 +938,43 @@ case class MoneyScaledExpr(child: Expression, scale: Int,
     copy(child = c)
 }
 
+/** One 22-bit limb of a BIGINT: the per-row half of the exact sum
+  * ([[GraftFunctions.exact_sum]]). With M = 2^22 - 1, limb 0 is
+  * `v & M`, limb 1 `(v >> 22) & M` and limb 2 the signed rest
+  * `v >> 44`, so v = l0 + l1·2^22 + l2·2^44 exactly. Limbs 0 and 1
+  * lie in [0, 2^22) and limb 2 in [-2^19, 2^19), so a BIGINT sum of
+  * any limb cannot overflow below 2^41 rows. */
+case class LongLimbExpr(child: Expression, limb: Int)
+    extends UnaryExpression {
+  require(limb >= 0 && limb <= 2, s"no limb $limb of a BIGINT")
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == LongType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"exact_sum input must be BIGINT, got ${child.dataType.sql}")
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "long_limb"
+  private def shift = LongLimbExpr.Bits * limb
+  override protected def nullSafeEval(input: Any): Any = {
+    val v = input.asInstanceOf[Long] >> shift
+    if (limb == 2) v else v & LongLimbExpr.Mask
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      if (limb == 2) s"($c >> $shift)"
+      else s"(($c >> $shift) & ${LongLimbExpr.Mask}L)")
+  override protected def withNewChildInternal(c: Expression): LongLimbExpr =
+    copy(child = c)
+}
+
+object LongLimbExpr {
+  final val Bits = 22
+  final val Mask = (1L << Bits) - 1
+}
+
 /** Bloom-filter membership probe on a BIGINT key. The built sketch
   * rides inside the expression (serialized once per task, referenced
   * via `addReferenceObj` in generated code), so the probe is a single
@@ -1020,6 +1057,34 @@ object GraftFunctions {
     * (the exact money sum's per-row kernel). */
   def money_scaled(c: Column, scale: Int): Column =
     toCol(MoneyScaledExpr(toExpr(c), scale))
+
+  /** Exact aggregate sum of a BIGINT column whose values are the
+    * unscaled integers of decimals at `out.scale`, returned as
+    * `out`: the value and type of `sum(CAST(c AS DECIMAL(38,0)))`
+    * (scale 0) or of `sum(CAST(x AS DECIMAL(18,sc)))` when `c` is
+    * [[money_scaled]]`(x, sc)` and `out` is DECIMAL(28,sc).
+    *
+    * Each value splits into three 22-bit limbs ([[LongLimbExpr]]),
+    * each summed as a plain BIGINT `sum`: a codegen'd long add per
+    * row, where a DECIMAL sum buffer wider than 18 digits pays a
+    * BigDecimal add. The limb totals are recombined once per group,
+    * (s2·2^22 + s1)·2^22 + s0 in DECIMAL(38,0), then scaled and cast
+    * to `out`. Exact below 2^41 rows per group, where no limb sum can
+    * overflow; the recombined total stays below 2^104, inside
+    * DECIMAL(38,0). An all-NULL or empty group sums to NULL; a total
+    * beyond `out` is NULL with ANSI off and an `ArithmeticException`
+    * with ANSI on, as the cast to `out` decides. */
+  def exact_sum(c: Column, out: DecimalType = DecimalType(38, 0)): Column = {
+    import org.apache.spark.sql.functions.{lit, sum}
+    val wide = DecimalType(38, 0)
+    val Seq(s0, s1, s2) = (0 to 2).map(i =>
+      sum(toCol(LongLimbExpr(toExpr(c), i))).cast(wide))
+    val radix = lit(1L << LongLimbExpr.Bits)
+    val total = (s2 * radix + s1) * radix + s0
+    (if (out.scale == 0) total
+     else total * lit(java.math.BigDecimal.ONE.movePointLeft(out.scale)))
+      .cast(out)
+  }
 
   /** Bloom membership probe of a BIGINT key column (codegen'd). */
   def bloom_might_contain(

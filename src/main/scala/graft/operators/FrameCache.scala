@@ -93,7 +93,11 @@ object FrameCache {
     * frame); those blocks are dead once the final frame
     * materializes, so they are unpersisted here rather than pinned
     * for the cache's lifetime — RDD ids are monotone, so the final
-    * checkpoint is exactly the max created persistent id. */
+    * checkpoint is exactly the max created persistent id.
+    *
+    * A `build` that throws leaves nothing persisted: the RDDs it
+    * created, less those of entries registered meanwhile, are
+    * unpersisted before the exception propagates. */
   def cached(spark: SparkSession, key: String,
              keepOnlyLast: Boolean = false)
             (build: => DataFrame): DataFrame = synchronized {
@@ -104,13 +108,22 @@ object FrameCache {
       case stale =>
         stale.foreach { e => entries.remove(key); drop(spark, e) }
         val before = spark.sparkContext.getPersistentRDDs.keySet
-        val df = build
         // a nested cached() build (triangle corners → co-sourcing
         // edges) registers its own entry during ours: its blocks
         // are NOT this entry's to track or prune
-        val owned = entries.values.flatMap(_.rddIds).toSet
-        var created = spark.sparkContext.getPersistentRDDs.keySet
-          .diff(before).toSet.diff(owned)
+        def createdSince = spark.sparkContext.getPersistentRDDs.keySet
+          .diff(before).toSet.diff(entries.values.flatMap(_.rddIds).toSet)
+        val df = try build catch {
+          case t: Throwable =>
+            // a build that throws (a convergence bound, a twin's
+            // assert) owns the frames it checkpointed: no entry will
+            // name them, so free them here
+            val live = spark.sparkContext.getPersistentRDDs
+            createdSince.foreach(id =>
+              live.get(id).foreach(_.unpersist(blocking = false)))
+            throw t
+        }
+        var created = createdSince
         if (keepOnlyLast && created.size > 1) {
           val keep = created.max
           val live = spark.sparkContext.getPersistentRDDs

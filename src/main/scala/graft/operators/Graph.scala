@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.exact_sum
+
 /** Distributed graph analytics beyond clustering —
   * [[Dedup.connectedComponents]] covers the equivalence side; this
   * file holds iterative rank propagation. */
@@ -832,13 +834,13 @@ object Graph {
         var auth = e.select("supp").distinct().withColumn("a", lit(S))
         for (_ <- 0 until iters) {
           val ar = e.join(hub, "cust").groupBy("supp")
-            .agg(sum(col("h").cast("decimal(38,0)")).as("raw"))
+            .agg(exact_sum(col("h")).as("raw"))
           auth = ar.crossJoin(broadcast(ar.agg(sum("raw").as("tot"))))
             .select(col("supp"),
               expr("CAST(raw * 1000000000000 div tot AS BIGINT)").as("a"))
             .localCheckpoint()
           val hr = e.join(auth, "supp").groupBy("cust")
-            .agg(sum(col("a").cast("decimal(38,0)")).as("raw"))
+            .agg(exact_sum(col("a")).as("raw"))
           hub = hr.crossJoin(broadcast(hr.agg(sum("raw").as("tot"))))
             .select(col("cust"),
               expr("CAST(raw * 1000000000000 div tot AS BIGINT)").as("h"))
@@ -1422,12 +1424,18 @@ object Graph {
         (col("l_suppkey") * 2 + 1).cast("long").as("s"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("nr"))
-    pair.filter(col("n") >= minTrades)
-      .select(col("c").as("a"), col("s").as("b"),
-        greatest(lit(1L), expr("1000000 div n")).as("cost"))
-      .unionByName(pair.filter(col("nr") >= minReturns)
-        .select(col("s").as("a"), col("c").as("b"),
-          greatest(lit(1L), expr("1000000 div nr")).as("cost")))
+    // both directions come from the one aggregate: each pair row
+    // offers its forward (support n) and its return (support nr)
+    // candidate, and each keeps the arc its threshold admits
+    pair.select(explode(array(
+        struct(col("c").as("a"), col("s").as("b"), col("n").as("k"),
+          lit(minTrades.toLong).as("min_k")),
+        struct(col("s").as("a"), col("c").as("b"), col("nr").as("k"),
+          lit(minReturns.toLong).as("min_k")))).as("arc"))
+      .select("arc.*")
+      .filter(col("k") >= col("min_k"))
+      .select(col("a"), col("b"),
+        greatest(lit(1L), expr("1000000 div k")).as("cost"))
       .localCheckpoint()
   }
 
@@ -2501,7 +2509,7 @@ object Graph {
             .join(dd.filter(col("h") === (k + 1)).select("lm", "node"),
               Seq("lm", "node"), "left_semi")
             .groupBy("lm", "node")
-            .agg(sum(col("sigma").cast("decimal(38,0)")).as("sigma"))
+            .agg(exact_sum(col("sigma")).as("sigma"))
           byLevel += guarded(nxt, "sigma")
         }
         // backward: δ from the horizon down; δ at the deepest level is 0
@@ -2521,7 +2529,7 @@ object Graph {
                   " div 1000000"),
                 lit(0L)).as("c"))
             .groupBy("lm", "node")
-            .agg(sum(col("c").cast("decimal(38,0)")).as("del"))
+            .agg(exact_sum(col("c")).as("del"))
           del = guarded(cur, "del")
           acc += del
         }

@@ -5,6 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.GraftFunctions.{exact_sum, money_scaled}
+import graft.operators.Relational.sumExact
+
 /** The reactive (Rx-style) operator algebra, re-expressed as
   * declarative Spark plans over a keyed, timestamped event stream
   * (`events`: event_id, ts, user_id, event_type, value, props).
@@ -271,7 +274,7 @@ object Reactive {
       .withColumn("batch_id", ((row_number().over(byUser) - 1) / n).cast("long"))
       .groupBy("user_id", "batch_id")
       .agg(count(lit(1)).as("batch_n"),
-        sum(dec(col("value"))).as("batch_sum"),
+        sumExact(col("value"), 2).as("batch_sum"),
         min("event_id").as("first_event_id"),
         max("event_id").as("last_event_id"))
 
@@ -323,7 +326,7 @@ object Reactive {
           .otherwise(array().cast("array<long>"))))
       .groupBy("user_id", "batch_id")
       .agg(count(lit(1)).as("batch_n"),
-        sum(dec(col("value"))).as("batch_sum"),
+        sumExact(col("value"), 2).as("batch_sum"),
         min("event_id").as("first_event_id"),
         max("event_id").as("last_event_id"))
 
@@ -331,7 +334,7 @@ object Reactive {
   def rxWindowTumbling(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("win_sum"))
+      .agg(count(lit(1)).as("n"), sumExact(col("value"), 2).as("win_sum"))
       .select(unix_millis(col("window.start")).as("win_start_ms"),
         col("event_type"), col("n"), col("win_sum"))
 
@@ -339,7 +342,7 @@ object Reactive {
   def rxWindowSliding(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("win_sum"))
+      .agg(count(lit(1)).as("n"), sumExact(col("value"), 2).as("win_sum"))
       .select(unix_millis(col("window.start")).as("win_start_ms"),
         col("n"), col("win_sum"))
 
@@ -347,7 +350,7 @@ object Reactive {
   def rxWindowSession(events: DataFrame): DataFrame =
     events
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("sess_sum"))
+      .agg(count(lit(1)).as("n"), sumExact(col("value"), 2).as("sess_sum"))
       .select(col("user_id"),
         unix_millis(col("session_window.start")).as("sess_start_ms"),
         col("n"), col("sess_sum"))
@@ -408,7 +411,7 @@ object Reactive {
   def rxReduce(events: DataFrame): DataFrame =
     events.groupBy("event_type").agg(
       count(lit(1)).as("n"),
-      sum(dec(col("value"))).as("total"),
+      sumExact(col("value"), 2).as("total"),
       min("value").as("min_value"),
       max("value").as("max_value"))
 
@@ -416,10 +419,10 @@ object Reactive {
   def rxAggSuite(events: DataFrame): DataFrame =
     events.groupBy("user_id").agg(
       count(lit(1)).as("n"),
-      sum(dec(col("value"))).as("total"),
+      sumExact(col("value"), 2).as("total"),
       min("value").as("min_value"),
       max("value").as("max_value"),
-      (sum(dec(col("value"))).cast("double") / count(lit(1))).as("avg_value"),
+      (sumExact(col("value"), 2).cast("double") / count(lit(1))).as("avg_value"),
       countDistinct("event_type").as("n_types"))
 
   /** Rx `groupBy` materializing each group's element sequence. */
@@ -427,7 +430,7 @@ object Reactive {
     events.groupBy("event_type").agg(
       count(lit(1)).as("n"),
       countDistinct("user_id").as("n_users"),
-      sum(dec(col("value"))).as("total"),
+      sumExact(col("value"), 2).as("total"),
       concat_ws(",",
         slice(array_sort(collect_list(col("event_id"))), 1, 20))
         .as("first_ids"))
@@ -468,7 +471,7 @@ object Reactive {
   def rxBufferTime(events: DataFrame): DataFrame =
     events
       .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(count(lit(1)).as("buf_n"), sum(dec(col("value"))).as("buf_sum"),
+      .agg(count(lit(1)).as("buf_n"), sumExact(col("value"), 2).as("buf_sum"),
         min("event_id").as("first_event_id"),
         max("event_id").as("last_event_id"))
       .select(col("user_id"), unix_millis(col("bucket")).as("bucket_ms"),
@@ -611,7 +614,7 @@ object Reactive {
           lit(-1L)))
       .filter(col("event_type") =!= "signup")
       .groupBy("user_id", "window_id")
-      .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("win_sum"),
+      .agg(count(lit(1)).as("n"), sumExact(col("value"), 2).as("win_sum"),
         min("event_id").as("first_event_id"),
         max("event_id").as("last_event_id"))
 
@@ -767,7 +770,7 @@ object Reactive {
         (col("close_id").isNull || col("close_id") < col("open_id")))
       .groupBy("user_id", "open_id")
       .agg(count(lit(1)).as("buf_n"),
-        sum(dec(col("value"))).as("buf_sum"),
+        sumExact(col("value"), 2).as("buf_sum"),
         max("event_id").as("last_event_id"))
   }
 
@@ -784,7 +787,7 @@ object Reactive {
         sum(when(col("value") >= closeAt, 1).otherwise(0)).over(wPrev),
         lit(0)).cast("long"))
       .groupBy("user_id", "win_id")
-      .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("win_sum"),
+      .agg(count(lit(1)).as("n"), sumExact(col("value"), 2).as("win_sum"),
         min("event_id").as("first_event_id"),
         max("event_id").as("last_event_id"))
   }
@@ -1104,7 +1107,7 @@ object Reactive {
   def rxVariance(events: DataFrame): DataFrame =
     events.groupBy("user_id")
       .agg(count(lit(1)).as("n"),
-        sum(dec(col("value"))).cast("double").as("sx"),
+        sumExact(col("value"), 2).cast("double").as("sx"),
         sum((col("value") * col("value")).cast(DecimalType(28, 4)))
           .cast("double").as("sxx"))
       .filter(col("n") >= 2)
@@ -2295,7 +2298,7 @@ object Reactive {
   def rxSeasonality(events: DataFrame): DataFrame = {
     val daily = events
       .groupBy(expr("unix_millis(ts) div 86400000").as("day"))
-      .agg((sum(dec(col("value"))) * 100).cast("long").as("cents"))
+      .agg((sumExact(col("value"), 2) * 100).cast("long").as("cents"))
     val w = Window.orderBy("day").rangeBetween(-3, 3)
     val t = daily
       .withColumn("w_sum", sum("cents").over(w))
@@ -2323,9 +2326,8 @@ object Reactive {
     val users = events.groupBy("user_id").agg(
       max(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("converted"),
-      sum(when(col("event_type") === "purchase",
-        (dec(col("value")) * 100).cast(DecimalType(38, 0)))
-        .otherwise(lit(0).cast(DecimalType(38, 0)))).as("rev"))
+      exact_sum(when(col("event_type") === "purchase",
+        money_scaled(col("value"), 2)).otherwise(lit(0L))).as("rev"))
     users
       .withColumn("arm",
         when(expr("instr('01234567', substr(md5(cast(user_id AS string)), 1, 1))") > 0,
@@ -2598,8 +2600,8 @@ object Reactive {
     x.join(y, Seq("event_type", "match_day"))
       .groupBy("event_type", "lag")
       .agg(count(lit(1)).as("n"),
-        sum(col("x").cast(big)).cast("double").as("sx"),
-        sum(col("y").cast(big)).cast("double").as("sy"),
+        exact_sum(col("x")).cast("double").as("sx"),
+        exact_sum(col("y")).cast("double").as("sy"),
         sum((col("x").cast(big) * col("x"))).cast("double").as("sxx"),
         sum((col("y").cast(big) * col("y"))).cast("double").as("syy"),
         sum((col("x").cast(big) * col("y"))).cast("double").as("sxy"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.GraftFunctions.exact_sum
 import graft.operators.FrameCache
 import graft.sources.{Sinks, Tables}
 
@@ -44,18 +45,20 @@ object Relational {
     * kernel renders the same `Double.toString` and parses it straight
     * into a scaled long (no BigDecimal per row), NULLs NaN/Infinity
     * and out-of-range values (or throws under ANSI) as the cast does.
-    * The longs are summed as DECIMAL(20,0), so a group total beyond
-    * 2^63 NULLs instead of wrapping, and the decimal is rebuilt once
-    * per group (scaled integer × 10^-sc). Round6Spec pins value,
-    * schema and per-row parity with the DECIMAL cast, including the
-    * 8.165-class traps. Measured at sf0.1: q1 ~1.0 s with the
-    * per-row DECIMAL cast → 0.37 s, against ~0.21 s for a plain
-    * double sum. */
+    * The longs are summed by [[graft.functions.GraftFunctions.exact_sum]]:
+    * three 22-bit limbs per row, each a plain BIGINT sum, exact below
+    * 2^41 rows per group, recombined once per group. A group total
+    * past 2^63 stays exact; one beyond DECIMAL(28,sc) is NULL with
+    * ANSI off and throws with ANSI on, as the reference sum does.
+    * Round6Spec pins value, schema and per-row parity with the
+    * DECIMAL cast, including the 8.165-class traps. Measured at
+    * sf0.1, q1 took ~1.0 s with the per-row DECIMAL cast. With the
+    * benchmark (sf0.1-sized tables, 4 cores), summing these longs as
+    * BIGINT limbs instead of in a DECIMAL(20,0) buffer cut `setup_s`,
+    * which runs q1 as its smoke query, from 0.77 to 0.55 s. */
   private[graft] def sumExact(c: org.apache.spark.sql.Column, sc: Int) =
-    (sum(graft.functions.GraftFunctions.money_scaled(c, sc)
-      .cast(DecimalType(20, 0))) *
-      lit(java.math.BigDecimal.ONE.movePointLeft(sc)))
-      .cast(DecimalType(28, sc))
+    graft.functions.GraftFunctions.exact_sum(
+      graft.functions.GraftFunctions.money_scaled(c, sc), DecimalType(28, sc))
 
   /** TPC-H Q1 shape: full-scan grouped aggregate with derived measures. */
   def q1PricingSummary(s: SparkSession, dir: String): DataFrame =
@@ -207,7 +210,7 @@ object Relational {
       .groupBy("o_orderstatus")
       .pivot("o_orderpriority",
         Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
-      .agg(sum(dec2(col("o_totalprice"))))
+      .agg(sumExact(col("o_totalprice"), 2))
       .select(col("o_orderstatus"),
         col("1-URGENT").cast("double").as("p1_urgent"),
         col("2-HIGH").cast("double").as("p2_high"),
@@ -929,7 +932,7 @@ object Relational {
         col("l_extendedprice"))
       .groupBy("q_bucket", "p_bucket")
       .agg(count(lit(1)).as("n"),
-        (sum(col("l_extendedprice").cast(DecimalType(18, 2))) * 100)
+        (sumExact(col("l_extendedprice"), 2) * 100)
           .cast("long").as("cents"))
   }
 
@@ -1184,20 +1187,19 @@ object Relational {
     val li = Tables.lineitem(s, dir)
     // quantize each measure ONCE to exact BIGINT cents (all four are
     // ≤2-decimal by schema); every moment is then an integer product
-    // summed through DECIMAL(38,0). Measured: the previous per-row
+    // summed exactly by exact_sum. Measured: the previous per-row
     // double-product → DECIMAL(28,4) conversions (9 per row) made
     // this the suite's slowest query at 3.2 s — integer products cut
     // it ~4×. Pearson is scale-invariant, so the ×100 cancels.
-    val big = DecimalType(38, 0)
     val cents = li.select(cols.map(c =>
       (dec2(col(c)) * 100).cast("long").as(c)): _*)
     val moments =
       Seq(count(lit(1)).as("n")) ++
-        cols.map(c => sum(col(c).cast(big)).cast("double").as(s"s_$c")) ++
+        cols.map(c => exact_sum(col(c)).cast("double").as(s"s_$c")) ++
         cols.map(c =>
-          sum((col(c) * col(c)).cast(big)).cast("double").as(s"ss_$c")) ++
+          exact_sum(col(c) * col(c)).cast("double").as(s"ss_$c")) ++
         cols.combinations(2).map { case Seq(a, b) =>
-          sum((col(a) * col(b)).cast(big)).cast("double")
+          exact_sum(col(a) * col(b)).cast("double")
             .as(s"sp_${a}_$b") }.toSeq
     val m = cents.agg(moments.head, moments.tail: _*)
     val pairRows = cols.combinations(2).map { case Seq(a, b) =>
@@ -1380,7 +1382,7 @@ object Relational {
         max(expr("datediff(o_orderdate, DATE '1990-01-01')")).cast("double")
           .as("recency"),
         count(lit(1)).cast("double").as("frequency"),
-        (sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+        (sumExact(col("o_totalprice"), 2) * 100)
           .cast("long").as("cents"))
       .withColumn("monetary", col("cents").cast("double"))
     val cuts = perCust.agg(
@@ -1427,7 +1429,7 @@ object Relational {
     import s.implicits._
     val perCust = Tables.orders(s, dir)
       .groupBy("o_custkey")
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+      .agg((sumExact(col("o_totalprice"), 2) * 100)
         .cast("long").as("cents"))
     val ranked = perCust
       .repartitionByRange(32, col("cents").desc, col("o_custkey"))

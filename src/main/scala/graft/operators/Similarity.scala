@@ -459,21 +459,21 @@ object Similarity {
     * BIGINT components (a raw double sum is partitioning-dependent),
     * then mean and sigma come from ONE fixed IEEE sequence each
     * (sqrt is correctly rounded, unlike log/exp — the same contract
-    * as qCorrMatrix); sums ride DECIMAL(38,0) so corpus size cannot
-    * overflow. Constant dimensions whiten to 0 by definition.
+    * as qCorrMatrix); sums are exact DECIMAL(38,0) totals
+    * ([[GraftFunctions.exact_sum]]) so corpus size cannot overflow.
+    * Constant dimensions whiten to 0 by definition.
     *
     * Shape at scale: the moment pass partial-aggregates to dim rows
     * (≤ the embedding width — broadcast by construction); assignment
     * is a narrow map. Two corpus scans total (moments, then apply) —
     * at 100 TB persist the source once if the scan dominates. */
   def whitenEmbeddings(embs: DataFrame): DataFrame = {
-    val big = DecimalType(38, 0)
     val q = embs.select(col("vec_id"),
         posexplode(col("embedding")).as(Seq("dim", "x")))
       .withColumn("qd", floor(col("x").cast("double") * 1e6).cast("long"))
     val stats = q.groupBy("dim").agg(
-      sum(col("qd").cast(big)).as("s"),
-      sum((col("qd") * col("qd")).cast(big)).as("ss"),
+      GraftFunctions.exact_sum(col("qd")).as("s"),
+      GraftFunctions.exact_sum(col("qd") * col("qd")).as("ss"),
       count(lit(1)).as("n"))
     q.join(broadcast(stats), "dim")
       .withColumn("mu", col("s").cast("double") / col("n") / 1e6)
@@ -924,12 +924,11 @@ object Similarity {
       } catch { case _: ArithmeticException => () }
       case _ => ()
     }
-    val big = DecimalType(38, 0)
     val stats = embs
       .select(posexplode(col("embedding")).as(Seq("dim", "x")))
       .withColumn("qd", floor(col("x").cast("double") * 1e6).cast("long"))
       .groupBy("dim")
-      .agg(sum(col("qd").cast(big)).as("s"), count(lit(1)).as("n"))
+      .agg(GraftFunctions.exact_sum(col("qd")).as("s"), count(lit(1)).as("n"))
       .orderBy("dim").collect()
     val mu = stats.map(r =>
       r.getDecimal(1).doubleValue() / r.getLong(2) / 1e6)
@@ -938,7 +937,7 @@ object Similarity {
       val w = embs
         .select(posexplode(GraftFunctions
           .power_contrib(col("embedding"), mu, v)).as(Seq("dim", "c")))
-        .groupBy("dim").agg(sum(col("c").cast(big)).as("w"))
+        .groupBy("dim").agg(GraftFunctions.exact_sum(col("c")).as("w"))
         .orderBy("dim").collect()
         .map(_.getDecimal(1).doubleValue() / 1e6)
       var ss = 0.0

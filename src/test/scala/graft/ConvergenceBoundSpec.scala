@@ -184,4 +184,22 @@ class ConvergenceBoundSpec extends AnyFunSuite {
     throwsOwn("landmarkDistKeys did not converge", pairRows)(
       harmonic(bound + 1))
   }
+
+  test("a loop that throws inside a FrameCache build leaves no frame " +
+      "persisted") {
+    val (li, ord, _, _) = keyChain(bound + 1)
+    def harmonic(maxIter: Int) = Graph.harmonicKeysTrade(li, ord,
+      minTrades = 3, landmarks = bound + 2, maxIter = maxIter,
+      driverCutoff = 0L)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    FrameCache.invalidateAll(spark)
+    // the shared arc frame is now cached; the bounded run below
+    // rebuilds only the landmark distances, checkpointing each round
+    harmonic(60).collect()
+    val before = persisted
+    intercept[IllegalStateException](harmonic(bound).collect())
+    val leaked = persisted -- before
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+    FrameCache.invalidateAll(spark)
+  }
 }

@@ -127,6 +127,82 @@ class InventorySpec extends AnyFunSuite {
       "route through DriverCutoff.collectUnder:\n" + offenders.mkString("\n"))
   }
 
+  /** `(line, argument)` of every aggregate `sum(…)` in `src` whose
+    * argument casts to DECIMAL (`.cast(big)`, a `decimal` type or SQL
+    * cast, the `dec`/`dec2`/`dec4` helpers). A windowed sum (followed
+    * by `.over(`) is not an aggregate and is skipped, as are comments. */
+  private def decimalSums(src: String): Seq[(Int, String)] = {
+    val code = """/\*(?s:.*?)\*/|(?<![:\w])//[^\n]*""".r
+      .replaceAllIn(src, m => m.matched.filter(_ == '\n'))
+    val decimal = """\.cast\(big\)|(?i:decimal)|\bdec[24]?\(""".r
+    """\bsum\(""".r.findAllMatchIn(code).flatMap { m =>
+      var (i, depth) = (m.end, 1)
+      while (depth > 0 && i < code.length) {
+        if (code(i) == '(') depth += 1 else if (code(i) == ')') depth -= 1
+        i += 1
+      }
+      val arg = code.substring(m.end, i - 1)
+      val windowed = """^\s*\.over\(""".r.findFirstIn(code.substring(i)).nonEmpty
+      if (windowed || decimal.findFirstIn(arg).isEmpty) None
+      else Some((code.substring(0, m.start).count(_ == '\n') + 1,
+        arg.replaceAll("""\s+""", " ")))
+    }.toSeq
+  }
+
+  test("operators sum a DECIMAL cast only through exact_sum or at an " +
+      "allowlisted wide-row site") {
+    // a DECIMAL sum buffer wider than 18 digits pays a BigDecimal add
+    // per row; a long (or money_scaled) input sums exactly as BIGINT
+    // limbs through GraftFunctions.exact_sum. Only a sum whose per-row
+    // value can exceed a long keeps its DECIMAL buffer.
+    val allowed = Map(
+      "Reactive.scala" -> """(col("value") * col("value")).cast(DecimalType(28, 4))""" ->
+        ("rxVariance Σx²: a DOUBLE square cast to DECIMAL(28,4), whose " +
+          "range exceeds money_scaled's DECIMAL(18,4)"),
+      "Reactive.scala" -> """col("g").cast(DecimalType(38, 0)) * col("g")""" ->
+        "rxCadence Σg²: the square of a millisecond gap can exceed a long",
+      "Reactive.scala" -> """dec(col("value")) * (col("next_ms") - col("ts_ms"))""" ->
+        "rxTwap Σvalue·Δt: cents times a millisecond span can exceed a long",
+      "Reactive.scala" -> """(col("x").cast(big) * col("x"))""" ->
+        "rxAcf Σx²: the square of a daily cent total can exceed a long",
+      "Reactive.scala" -> """(col("y").cast(big) * col("y"))""" ->
+        "rxAcf Σy²: the square of a daily cent total can exceed a long",
+      "Reactive.scala" -> """(col("x").cast(big) * col("y"))""" ->
+        "rxAcf Σxy: a product of daily cent totals can exceed a long",
+      "Relational.scala" -> """expr("CAST(rev AS DECIMAL(38,0)) * rev")""" ->
+        "Σrev²: the square of a supplier's cent revenue can exceed a long",
+      "Similarity.scala" -> """(col("s").cast(big) * col("s"))""" ->
+        ("dimProfile Σs²: the square of a 1e-6-quantized component is " +
+          "a per-row DECIMAL product"),
+      "Similarity.scala" -> """(col("xs").cast(big) * col("xs"))""" ->
+        ("dimAssignment Σxs²: the square of a 1e-6-quantized component " +
+          "is a per-row DECIMAL product"))
+    assert(decimalSums("sum(col(\"x\").cast(big)).as(\"s\")").nonEmpty)
+    assert(decimalSums("sum(dec(col(\"v\"))).as(\"s\")").nonEmpty)
+    assert(decimalSums("sum(expr(\"CAST(r AS DECIMAL(38,0))\"))").nonEmpty)
+    assert(decimalSums("sum(col(\"x\")).cast(big)").isEmpty)
+    assert(decimalSums("sum(dec(col(\"v\")))\n  .over(w)").isEmpty)
+    assert(decimalSums("// sum(dec(col(\"v\")))\n").isEmpty)
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    val walk = java.nio.file.Files.list(dir)
+    val files = try walk.iterator().asScala.toList finally walk.close()
+    val found = files.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val name = f.getFileName.toString
+      decimalSums(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+        .map { case (line, arg) => (name, line, arg) }
+    }
+    val offenders = found.filterNot { case (f, _, arg) =>
+      allowed.contains(f -> arg) }
+    assert(offenders.isEmpty,
+      "sum through GraftFunctions.exact_sum (Relational.sumExact for a " +
+        "DOUBLE money measure), or allowlist a wide-row site with its " +
+        "reason:\n" + offenders.map { case (f, l, a) => s"$f:$l: sum($a)" }
+        .mkString("\n"))
+    val stale = allowed.keySet -- found.map { case (f, _, a) => f -> a }
+    assert(stale.isEmpty, s"allowlisted sites no longer in the source: $stale")
+  }
+
   test("no scaladoc block is followed directly by another") {
     // a /** … */ block with only blank lines before the next /**
     // documents nothing: the definition below carries the second

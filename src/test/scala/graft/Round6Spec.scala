@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.Cast
-import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.MoneyScaledExpr
+import graft.functions.{LongLimbExpr, MoneyScaledExpr}
+import graft.functions.GraftFunctions.exact_sum
 import graft.operators._
 import graft.sources.Tables
 
@@ -28,15 +30,30 @@ class Round6Spec extends AnyFunSuite {
   /** `df` with every [[Relational.sumExact]] in its plan replaced by
     * the DECIMAL reference `sum(c.cast(DecimalType(18, sc)))` over
     * the same input column: the per-row decimal cast and a
-    * BigDecimal sum buffer. */
+    * BigDecimal sum buffer. sumExact plans as an
+    * [[graft.functions.GraftFunctions.exact_sum]] of
+    * `money_scaled(c, sc)`: three BIGINT sums of the same value's
+    * limbs, recombined under one cast to DECIMAL(28,sc). That cast,
+    * the outermost decimal cast over the limbs, is what is replaced. */
   private def withDecimalSums(df: DataFrame): DataFrame =
     GraftColumnBridge.ofRows(spark,
       df.queryExecution.analyzed.transformAllExpressions {
         case c: Cast if c.dataType.isInstanceOf[DecimalType] &&
-            c.child.exists(_.isInstanceOf[MoneyScaledExpr]) =>
-          val m = c.child.collectFirst { case m: MoneyScaledExpr => m }.get
+            c.child.exists(_.isInstanceOf[LongLimbExpr]) =>
+          val limbs = c.child.collect { case l: LongLimbExpr => l }
+          assert(limbs.map(_.limb).sorted === Seq(0, 1, 2) &&
+            limbs.map(_.child).distinct.size === 1, c)
+          val m = limbs.head.child match { case m: MoneyScaledExpr => m }
+          assert(c.dataType === DecimalType(28, m.scale), c)
           Sum(Cast(m.child, DecimalType(18, m.scale))).toAggregateExpression()
       })
+
+  /** Every aggregate buffer in `df`'s optimized plan. */
+  private def sumBuffers(df: DataFrame): Seq[DataType] =
+    df.queryExecution.optimizedPlan.collect { case a: Aggregate =>
+      a.aggregateExpressions.flatMap(_.collect {
+        case e: AggregateExpression => e.aggregateFunction })
+    }.flatten.flatMap(_.aggBufferAttributes).map(_.dataType)
 
   test("money sums: q1/q5/q6/q9/q18 equal the DECIMAL-cast reference " +
     "in value and schema") {
@@ -59,6 +76,12 @@ class Round6Spec extends AnyFunSuite {
       Relational.q18LargeOrders(spark, sf, minQty = 80.0) -> Nil)
     def sumsScaled(d: DataFrame) = d.queryExecution.analyzed.exists(
       _.expressions.exists(_.exists(_.isInstanceOf[MoneyScaledExpr])))
+    // q1's aggregate holds BIGINT limb sums and its count, and no
+    // DECIMAL buffer; the reference holds the DECIMAL ones
+    val q1 = queries.head._1
+    assert(sumBuffers(q1).nonEmpty && sumBuffers(q1).forall(_ == LongType),
+      sumBuffers(q1))
+    assert(sumBuffers(withDecimalSums(q1)).exists(_.isInstanceOf[DecimalType]))
     for ((df, money) <- queries) {
       val ref = withDecimalSums(df)
       assert(sumsScaled(df) && !sumsScaled(ref))
@@ -153,6 +176,126 @@ class Round6Spec extends AnyFunSuite {
     assert(graft.functions.Kernels.moneyScaled(-8.165, 2) === -817L)
     assert(math.floor(8.165 * 100 + 0.5).toLong === 816L,
       "the trap must actually trap the naive shortcut")
+  }
+
+  /** `(g, v)` rows as a frame with a nullable BIGINT `v`. */
+  private def longs(rows: Seq[(Int, java.lang.Long)]): DataFrame = {
+    import spark.implicits._
+    rows.map { case (g, v) => (g, Option(v).map(_.longValue)) }.toDF("g", "v")
+  }
+
+  private def rowsByG(df: DataFrame) = df.orderBy("g").collect().toSeq
+
+  test("exact_sum ≡ sum(CAST(v AS DECIMAL(38,0))) on mixed signs, limb " +
+    "edges and group totals past 2^63") {
+    val rng = new scala.util.Random(7)
+    val edges = Seq(0L, 1L, -1L, (1L << 22) - 1, 1L << 22, -(1L << 22),
+      (1L << 44) - 1, 1L << 44, -(1L << 44), -(1L << 44) - 1,
+      Long.MaxValue, Long.MinValue, Long.MaxValue - 1, Long.MinValue + 1)
+    val groups: Seq[Seq[Long]] = Seq(
+      Seq.fill(40)(Long.MaxValue),              // +3.7e20: past 2^63
+      Seq.fill(40)(Long.MinValue),              // -3.7e20
+      Seq.fill(500)(rng.nextLong()),            // mixed signs, full range
+      Seq.fill(500)(rng.nextInt(2001) - 1000L), // mixed signs, small
+      Seq.tabulate(41)(i => if (i % 2 == 0) Long.MaxValue else Long.MinValue),
+      edges, edges.map(e => -(e + 1)))          // every edge's complement
+    val rows = groups.zipWithIndex.flatMap { case (vs, g) =>
+      vs.map(v => (g, java.lang.Long.valueOf(v))) }
+    val df = longs(rng.shuffle(rows))
+    val fast = df.groupBy("g").agg(exact_sum(col("v")).as("s"))
+    val ref = df.groupBy("g")
+      .agg(sum(col("v").cast(DecimalType(38, 0))).as("s"))
+    assert(fast.schema === ref.schema)
+    val got = rowsByG(fast)
+    assert(got === rowsByG(ref))
+    val two63 = java.math.BigInteger.ONE.shiftLeft(63)
+    assert(got.count(_.getDecimal(1).toBigInteger.abs.compareTo(two63) > 0)
+      === 2, "the totals must actually pass 2^63")
+    assert(sumBuffers(fast).forall(_ == LongType))
+    // ungrouped: the whole frame
+    assert(df.agg(exact_sum(col("v"))).collect() ===
+      df.agg(sum(col("v").cast(DecimalType(38, 0)))).collect())
+  }
+
+  test("sumExact ≡ the DECIMAL(18,sc) reference on mixed signs and " +
+    "group totals past 2^63, at scales 2, 4 and 6") {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    for (sc <- Seq(2, 4, 6)) {
+      // the largest magnitudes DECIMAL(18,sc) holds, so 40 rows of
+      // them sum past 2^63 in scaled units
+      val top = 9.0 * math.pow(10, 17 - sc)
+      val groups: Seq[Seq[Double]] = Seq(
+        Seq.fill(40)(top), Seq.fill(40)(-top),
+        Seq.fill(300)((rng.nextDouble() - 0.5) * 2 * top),
+        Seq.fill(300)((rng.nextDouble() - 0.5) * math.pow(10, rng.nextInt(6))))
+      val df = groups.zipWithIndex
+        .flatMap { case (vs, g) => vs.map(v => (g, v)) }.toDF("g", "v")
+      val fast = df.groupBy("g").agg(Relational.sumExact(col("v"), sc).as("s"))
+      val ref = df.groupBy("g")
+        .agg(sum(col("v").cast(DecimalType(18, sc))).as("s"))
+      assert(fast.schema === ref.schema, s"scale $sc")
+      assert(fast.schema("s").dataType === DecimalType(28, sc))
+      val got = rowsByG(fast)
+      assert(got === rowsByG(ref), s"scale $sc")
+      assert(got === rowsByG(withDecimalSums(fast)), s"scale $sc")
+      val past = got.head.getDecimal(1).movePointRight(sc).toBigInteger
+      assert(past.compareTo(java.math.BigInteger.ONE.shiftLeft(63)) > 0)
+    }
+  }
+
+  test("exact_sum and sumExact: an all-NULL group and empty input sum " +
+    "to NULL, as the DECIMAL reference does") {
+    import spark.implicits._
+    val nulls = longs(Seq((0, null), (0, null), (1, 5L), (1, null), (2, -3L)))
+    def bothLong(d: DataFrame) = (
+      d.groupBy("g").agg(exact_sum(col("v")).as("s")),
+      d.groupBy("g").agg(sum(col("v").cast(DecimalType(38, 0))).as("s")))
+    val (fast, ref) = bothLong(nulls)
+    assert(rowsByG(fast) === rowsByG(ref))
+    assert(rowsByG(fast).map(r => Option(r.getDecimal(1)).map(_.longValue)) ===
+      Seq(None, Some(5L), Some(-3L)))
+    // NaN and NULL doubles both drop out of a money sum
+    val money = Seq[(Int, Option[Double])]((0, None), (0, Some(Double.NaN)),
+      (1, Some(1.25)), (1, None)).toDF("g", "v")
+    val mFast = money.groupBy("g").agg(Relational.sumExact(col("v"), 2).as("s"))
+    val mRef = money.groupBy("g")
+      .agg(sum(col("v").cast(DecimalType(18, 2))).as("s"))
+    assert(rowsByG(mFast) === rowsByG(mRef))
+    assert(rowsByG(mFast).map(_.isNullAt(1)) === Seq(true, false))
+    // empty input: no group, or the one NULL row of a global aggregate
+    val empty = nulls.filter(lit(false))
+    val (eFast, eRef) = bothLong(empty)
+    assert(eFast.collect().isEmpty && eRef.collect().isEmpty)
+    assert(eFast.schema === eRef.schema)
+    val global = Seq(
+      empty.agg(exact_sum(col("v"))),
+      empty.agg(sum(col("v").cast(DecimalType(38, 0)))),
+      money.filter(lit(false)).agg(Relational.sumExact(col("v"), 2)),
+      money.filter(lit(false)).agg(sum(col("v").cast(DecimalType(18, 2)))))
+    for (d <- global) assert(d.collect().toSeq.map(_.isNullAt(0)) === Seq(true))
+  }
+
+  test("exact_sum: a total beyond the output type NULLs with ANSI off and " +
+    "throws with ANSI on, as the cast does") {
+    // 20 × (2^63 - 1) ≈ 1.8e20 does not fit DECIMAL(20,0)
+    val df = longs(Seq.fill(20)((0, java.lang.Long.valueOf(Long.MaxValue))))
+    val narrow = DecimalType(20, 0)
+    def total(fast: Boolean) = df.agg(
+        if (fast) exact_sum(col("v"), narrow)
+        else sum(col("v").cast(DecimalType(38, 0))).cast(narrow))
+      .collect().toSeq.map(r => Option(r.getDecimal(0)))
+    withConf("spark.sql.ansi.enabled", on = false) {
+      assert(total(fast = true) === Seq(None))
+      assert(total(fast = false) === Seq(None))
+    }
+    withConf("spark.sql.ansi.enabled", on = true) {
+      for (fast <- Seq(true, false)) {
+        val e = intercept[Exception](total(fast))
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[ArithmeticException]), s"fast=$fast")
+      }
+    }
   }
 
   test("robustScale: approx-percentile scale path parity with the exact route") {
